@@ -14,12 +14,17 @@ Scale notes (100 TB):
   except surrogate-key assignment, which uses a range-partition +
   per-partition-offset scheme instead of a single-partition global window;
 - dimension joins (nation/region) are explicit broadcasts;
+- the multi-sink write materializes its input once and runs the seven
+  sink writes concurrently off that one checkpoint;
 - UUIDs are deterministic (functions/ids.py) so re-runs are idempotent and
   speculative task retries are safe.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -287,7 +292,8 @@ def fan_out_registration(reg: DataFrame) -> dict[str, DataFrame]:
     patient_identifier, client→patient mapping; /root/reference/
     README.md:7-17). Every frame is a narrow projection of the same
     upstream — callers materialize `reg` ONCE (see write_multi_sink) so
-    the fan-out costs one scan, not seven."""
+    the fan-out costs one scan, not seven, and the frames can be written
+    concurrently off that one checkpoint."""
     return {
         "person": reg.select(
             "client_id",
@@ -338,16 +344,33 @@ def write_multi_sink(
 ) -> dict[str, str]:
     """S5 sink half: materialize the registration build once
     (localCheckpoint — same exactly-once rationale as
-    assign_surrogate_keys), then write each fan-out frame under
-    ``base_path/<table>``. Against MySQL the same frames feed
-    sources/jdbc.py::write_jdbc_append instead. Returns table → path."""
+    assign_surrogate_keys), then write every fan-out frame under
+    ``base_path/<table>`` concurrently, one thread per frame. Each write is
+    a short job over the few checkpoint partitions, so run one after
+    another they leave most cores idle; overlapped, each job's tail
+    back-fills the others'. Against MySQL the same frames feed
+    sources/jdbc.py::write_jdbc_append instead. Returns table → path.
+
+    The save jobs run under the caller's job group and description
+    (``inheritable_thread_target`` copies them into each thread). The
+    first failure, in table order, is re-raised once every write has
+    returned, so no write is still running when the call fails."""
     reg = reg.localCheckpoint(eager=True)
-    paths = {}
-    for name, frame in fan_out_registration(reg).items():
+    frames = fan_out_registration(reg)
+
+    def write(name: str) -> str:
         path = f"{base_path}/{name}"
-        frame.write.format(fmt).mode("overwrite").save(path)
-        paths[name] = path
-    return paths
+        frames[name].write.format(fmt).mode("overwrite").save(path)
+        return path
+
+    # Wrap once per write: each wrap copies the caller's local properties,
+    # and threads sharing one copy would see each other's SQL execution id.
+    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(reg.sparkSession)(write), name)
+            for name in frames
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 def idempotent_new_rows(
@@ -355,9 +378,15 @@ def idempotent_new_rows(
 ) -> DataFrame:
     """J5: idempotent re-run support — migrate only clients not already in
     the destination (anti-join probe, SURVEY.md §2.3). Running the migration
-    twice therefore inserts zero new rows."""
+    twice therefore inserts zero new rows.
+
+    The destination keys are not deduplicated first: a ``left_anti`` join
+    only tests whether a match exists, so a key held twice removes its
+    source row exactly as a key held once does, and a dedup would only add
+    an aggregate job on the build side. Source rows with a NULL key match
+    nothing and are kept."""
     keys = [key] if isinstance(key, str) else key
-    return source.join(existing.select(*keys).dropDuplicates(keys), keys, "left_anti")
+    return source.join(existing.select(*keys), keys, "left_anti")
 
 
 def merge_upsert(

@@ -39,7 +39,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS``, else the
+    local core count (the cores this process may run on) — at cluster
     scale you would size this to data volume instead; AQE coalesces
     downward at runtime either way.
     """
@@ -56,7 +57,7 @@ def get_spark(
     )
     if shuffle_partitions is None:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus_env) if cpus_env else 32
+        shuffle_partitions = int(cpus_env) if cpus_env else len(os.sched_getaffinity(0))
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -123,7 +123,7 @@ def test_normalized_binding_survives_optimizer(spark):
 
 def test_interpolate_segment_binding_survives_optimizer(spark):
     """Plan pin (r11 ADVICE): interpolate_linear's per-segment length
-    binding must keep inline `size(sequence(` occurrences at <= 2 in the
+    binding must keep inline `size(sequence(` occurrences at <= 3 in the
     optimized plan (one once-per-segment binding + the two-part
     max_buckets guard — the r11 fix took the TWO per-bucket inline
     occurrences out of the inner lambda: the pre-fix plan carries 4, see

@@ -29,9 +29,13 @@ def _reg(spark):
 
 
 def test_multi_sink_writes_all_tables(spark, tmp_path):
+    """Every table is written to its own path with exactly its fan-out
+    frame's rows, so concurrent writes cannot swap, truncate or drop a
+    table."""
     reg = _reg(spark)
     n = reg.count()
     paths = write_multi_sink(reg, str(tmp_path))
+    frames = fan_out_registration(reg)
     assert set(paths) == {
         "person",
         "person_name",
@@ -42,10 +46,50 @@ def test_multi_sink_writes_all_tables(spark, tmp_path):
         "mapping",
     }
     for name, path in paths.items():
+        assert path == f"{tmp_path}/{name}"
         df = spark.read.parquet(path)
         assert "uuid" in df.columns or name == "person"  # person carries person_uuid as uuid
         expected = 2 * n if name == "person_attribute" else n
         assert df.count() == expected, name
+        assert df.columns == frames[name].columns, name
+        assert df.exceptAll(frames[name]).count() == 0, name
+        assert frames[name].exceptAll(df).count() == 0, name
+
+
+def _settled_tracker(spark):
+    """The status tracker once the listener bus has delivered every
+    event, so it lists every job that has ended."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return sc.statusTracker()
+
+
+def test_multi_sink_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The concurrent sink writes run in pool threads; each must still
+    carry the caller's job group, or job-group attribution and
+    cancellation miss them. The checkpoint plus seven saves is at least
+    eight jobs, and no job of the call may fall outside the group."""
+    reg = _reg(spark)
+    sc = spark.sparkContext
+    # the tracker keeps only the newest jobs, so compare ids, not sets
+    last_before = max(_settled_tracker(spark).getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup("multi-sink-group-test", "write_multi_sink job group")
+    try:
+        write_multi_sink(reg, str(tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = _settled_tracker(spark)
+    grouped = tracker.getJobIdsForGroup("multi-sink-group-test")
+    assert len(grouped) >= 8
+    assert min(grouped) > last_before
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > last_before] == []
+
+
+def test_multi_sink_write_failure_is_raised(spark, tmp_path):
+    """A failing write surfaces from the call instead of dying in its
+    pool thread."""
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND"):
+        write_multi_sink(_reg(spark), str(tmp_path), fmt="no_such_format")
 
 
 def test_fan_out_frames_share_client_key(spark):
@@ -74,6 +118,28 @@ def test_surrogate_keys_idempotent_rerun(spark):
     half = first.filter("c_custkey % 2 = 0").select("c_custkey")
     rest = idempotent_new_rows(c, half, "c_custkey")
     assert rest.count() == c.filter("c_custkey % 2 != 0").count()
+
+
+def test_idempotent_new_rows_with_duplicate_destination_keys(spark):
+    """A destination key held twice removes its source row exactly as a
+    key held once does; every other source row, NULL keys included, is
+    kept exactly once. Pins the anti-join's semantics without a dedup of
+    the destination keys."""
+    source = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (None, "e")],
+        "client_id int, payload string",
+    )
+    existing = spark.createDataFrame(
+        [(2, "x"), (2, "y"), (3, "z"), (9, "w"), (None, "v")],
+        "client_id int, other string",
+    )
+    out = idempotent_new_rows(source, existing, "client_id")
+    assert out.columns == ["client_id", "payload"]
+    assert sorted(out.collect(), key=lambda r: r["payload"]) == [
+        (1, "a"),
+        (4, "d"),
+        (None, "e"),
+    ]
 
 
 def test_jdbc_scan_options_partitioned():
