@@ -17,9 +17,9 @@ Shuffle budget at 100 TB (the design constraint):
    raw text — the shuffle carries 32 bytes per row, not the document).
 3. Near-dup candidates reuse the LSH banding join (operators/dedup.py) —
    bounded by bucket sizes, never all-pairs — and only over rows that
-   survived 1–2. Cluster merge is the iterative min-label propagation
-   (operators/graph.py), O(|pairs|) per round; pair graphs after exact
-   dedup are sparse, so rounds ≈ small cluster diameter.
+   survived 1–2. Cluster merge is connected components
+   (operators/graph.py); pair graphs after exact dedup are sparse, so
+   they usually fit its driver union-find tier.
 4. Split assignment is content-addressed (operators/sampling.py
    ``hash_split``): row-local, reproducible across runs/partitionings.
 

@@ -349,7 +349,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     min_shared: int = 2,
     max_df: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """X2b: n-gram Jaccard similarity via an inverted index — shuffle on the
     shingle (the classic "document join" plan): explode distinct shingles,
@@ -364,9 +363,9 @@ def ngram_jaccard_pairs(
     ubiquitous shingles carry ~no Jaccard signal anyway). Note this makes
     ``inter_cnt`` a lower bound when the cap fires; union sizes stay exact.
 
-    ``materialize`` (default on) localCheckpoints the exploded inverted
-    index, which four plan branches consume (sizes, doc-freq, both join
-    sides) — without it the shingle explode runs four times.
+    The exploded inverted index is localCheckpointed: four plan branches
+    consume it (sizes, doc-freq, both join sides) — without it the
+    shingle explode runs four times.
     """
     # per-doc distinct-shingle counts are ROW-LOCAL (size of the distinct
     # shingle array) — computing them as a groupBy over the exploded index
@@ -383,8 +382,7 @@ def ngram_jaccard_pairs(
         F.col(key_col).alias("key"),
         F.explode(F.array_distinct(_shingles(F.col(text_col), shingle_n))).alias("shingle"),
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = sh.localCheckpoint(eager=True)
     if max_df is not None:
         dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
         sh = (
@@ -421,7 +419,6 @@ def containment_pairs(
     shingle_n: int = 3,
     min_shared: int = 2,
     max_df: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """X3d: ASYMMETRIC shingle containment — (key_a, key_b, inter_cnt,
     n_a) for every ordered candidate pair, where ``inter_cnt / n_a`` is
@@ -456,8 +453,7 @@ def containment_pairs(
             "shingle"
         ),
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = sh.localCheckpoint(eager=True)
     if max_df is not None:
         dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
         sh = sh.join(dfreq.filter(F.col("_df") <= max_df), "shingle", "inner").drop(
@@ -627,7 +623,6 @@ def repeated_span_stats(
     span_tokens: int = 5,
     min_docs: int = 2,
     flag_pct: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Cross-document repeated-SPAN audit — the exact-substring dedup
     signal of Lee et al., "Deduplicating Training Data Makes Language
@@ -657,10 +652,10 @@ def repeated_span_stats(
     contributes M rows, never M² (contrast pair-emitting dedup — this
     op reads coverage per doc, not links between docs).
 
-    ``materialize`` (default on) localCheckpoints the exploded
-    occurrence stream, which BOTH the document-frequency agg and the
-    join-back consume — without it the corpus scan + shingle explode
-    run twice (the `containment_pairs` rule).
+    The exploded occurrence stream is localCheckpointed: BOTH the
+    document-frequency agg and the join-back consume it — without it
+    the corpus scan + shingle explode run twice (the
+    `containment_pairs` rule).
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
     base = df.select(
@@ -685,8 +680,7 @@ def repeated_span_stats(
             )
         ).alias("_s"),
     ).select("key", "n_tokens", F.col("_s.start").alias("start"), F.col("_s.shingle").alias("shingle"))
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = sh.localCheckpoint(eager=True)
     rep = (
         sh.groupBy("shingle")
         .agg(F.count_distinct("key").alias("_dc"))
@@ -736,7 +730,6 @@ def paragraph_dedup(
     text_col: str = "text",
     para_tokens: int = 10,
     max_paras: int = 4096,
-    materialize: bool = True,
 ) -> DataFrame:
     """Paragraph-level exact dedup — the CCNet preprocessing step
     (Wenzek et al., LREC 2020): split each document into paragraphs,
@@ -764,9 +757,8 @@ def paragraph_dedup(
     `dedup_exact_keep_first`); the join-back keys on the near-unique
     aggregated side; the reassembly is one shuffle on the doc key.
     No pair materialization anywhere — cost is linear in paragraphs.
-    ``materialize`` (default on) localCheckpoints the exploded
-    paragraph stream its two consumers share, so the corpus scan +
-    explode run once.
+    The exploded paragraph stream its two consumers share is
+    localCheckpointed, so the corpus scan + explode run once.
 
     ``key_col`` must be an integral type: the packed first-occurrence
     address is ``key·max_paras + pos``, and Spark's implicit
@@ -803,11 +795,10 @@ def paragraph_dedup(
         ).alias("para"),
         (F.col("key") * max_paras + F.col("pos")).cast("long").alias("occ"),
     )
-    if materialize:
-        # both the first-occurrence agg and the join-back consume `paras`;
-        # without this the corpus scan + explode run twice (the
-        # `containment_pairs`/`repeated_span_stats` multi-consumer rule)
-        paras = paras.localCheckpoint(eager=True)
+    # both the first-occurrence agg and the join-back consume `paras`;
+    # without this the corpus scan + explode run twice (the
+    # `containment_pairs`/`repeated_span_stats` multi-consumer rule)
+    paras = paras.localCheckpoint(eager=True)
     firsts = paras.groupBy("para").agg(F.min("occ").alias("first_occ"))
     tagged = paras.join(firsts, "para").withColumn(
         "kept", F.col("occ") == F.col("first_occ")
@@ -985,7 +976,6 @@ def span_rewrite(
     span_tokens: int = 5,
     min_docs: int = 2,
     occ_stride: int = 1 << 20,
-    materialize: bool = True,
 ) -> DataFrame:
     """The ACTION half of `repeated_span_stats` (r10 verdict gap): rewrite
     every document with cross-document repeated spans EXCISED, keeping
@@ -1012,9 +1002,8 @@ def span_rewrite(
     doc-keyed distinct; the token stream left-anti joins the removal
     set on (doc, pos) and ONE doc-keyed agg reassembles. Linear in
     occurrences — a shingle in M docs costs M rows, never M^2.
-    ``materialize`` localCheckpoints the occurrence stream consumed by
-    both the vocab agg and the join-back (the `containment_pairs`
-    rule)."""
+    The occurrence stream consumed by both the vocab agg and the
+    join-back is localCheckpointed (the `containment_pairs` rule)."""
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
     base = df.select(
         F.col(key_col).alias("key"),
@@ -1047,8 +1036,7 @@ def span_rewrite(
             .alias("occ"),
         )
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = sh.localCheckpoint(eager=True)
     rep = (
         sh.groupBy("shingle")
         .agg(

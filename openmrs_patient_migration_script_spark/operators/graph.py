@@ -1,23 +1,24 @@
 """Iterative graph operators — connected components for dedup clustering.
 
 Near-dup pipelines emit PAIRS (fuzzy/minhash/jaccard candidates); merging
-pairs into duplicate CLUSTERS is a connected-components problem. This is
-the engine's iterative-algorithm surface: a driver-side convergence loop
-over DataFrame ops, with the two patterns iterative Spark lives or dies by:
+pairs into duplicate CLUSTERS is a connected-components problem.
+`connected_components` is the one components operator: it symmetrizes
+the edge list once, counts it once, and takes the first size tier that
+fits — driver union-find for tiny graphs, the two-pass partition
+contraction funnel (one executor task) for graphs up to
+``local_threshold`` rows, and above that the Small-Star/Large-Star
+alternating rounds (Kiveris et al., "Connected Components in MapReduce
+and Beyond"), which converge in O(log n) rounds on any topology. Every
+tier returns the same labels: cluster id = min member key.
+
+The iterative operators here share the two patterns iterative Spark
+lives or dies by:
 
 - **lineage truncation**: each iteration localCheckpoints its result —
   without it the plan doubles every iteration and the job dies on
   analysis/stack depth long before it dies on data;
-- **convergence by aggregate**: the loop exits on a changed-row count,
-  one tiny action per iteration.
-
-Min-label propagation converges in O(graph diameter) iterations — fine
-for dedup graphs (dense little clusters, tiny diameter). For web-scale
-graphs with long chains, `connected_components_star` (r3) implements the
-Small-Star/Large-Star alternating algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond"): O(log n) rounds on any topology,
-property-tested against union-find including a 400-node path the
-min-label round budget cannot cover.
+- **convergence by aggregate**: the loop exits on a changed-row count
+  or an edge-set signature, one tiny action per iteration.
 """
 
 from __future__ import annotations
@@ -180,9 +181,9 @@ def contract_components(edges: DataFrame) -> DataFrame:
     (now node-sized) star set finishes the graph in ONE executor task —
     the `treeAggregate` funnel shape, replacing the driver-collect path
     and its driver-memory bound with a task-memory bound. Graphs whose
-    star set exceeds one task still win: the global star-contraction /
-    min-label rounds run on the contracted edges instead of the raw
-    pair list. Caller contract: 2 key columns, self-loops/nulls already
+    star set exceeds one task still win: the global Small-Star/Large-Star
+    rounds run on the contracted edges instead of the raw pair list.
+    Caller contract: 2 key columns, self-loops/nulls already
     filtered, key dtype in `_CONTRACT_KEY_TYPES`.
     """
     return edges.mapInPandas(_contract_partition_fn, edges.schema)
@@ -194,50 +195,45 @@ def connected_components(
     dst: str = "key_b",
     max_iter: int = 25,
     local_threshold: int = 10_000_000,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Cluster id (= min member key) per node of the undirected pair graph.
 
-    Returns (node, cluster) for every node that appears in an edge.
-    Each iteration: one shuffle join (neighbor labels) + one aggregation
-    (min per node); work per round is O(|E|), rounds = graph diameter.
+    Returns (node, cluster) for every node that appears in an edge with
+    a non-NULL other endpoint; edges with a NULL endpoint are dropped
+    (NULL is not a node, so it links nothing). Self-loop-only nodes are
+    their own singleton cluster.
 
-    **Adaptive funnel path** (r9, the r8 driver-union-find path
-    generalized to partition-local-then-global): a near-dup pair graph
-    is usually a sliver of the corpus (pairs exist only where documents
-    nearly collide), while the iterative loop pays several full Spark
-    jobs *per round*. When the edge list is at most ``local_threshold``
-    rows, it is solved by TWO `contract_components` passes — every
-    partition contracts to its local star set in parallel (zero
-    shuffle), then one repartition(1) task merges the node-sized star
-    sets into global components — the same data-size-gated decision AQE
-    makes when it swaps a shuffle join for a broadcast join, but bounded
-    by one TASK's memory instead of the driver's, and never moving rows
-    off the executors. TINY graphs (<= `_DRIVER_TIER` symmetrized rows)
-    keep the r8 driver union-find: the funnel's fixed overhead (a
-    Python-worker round trip + two extra jobs) exceeds a few-thousand-row
-    collect (measured on corpus_prep's pair graph). Graphs above the
-    threshold take the distributed loop, with one contraction prepass
-    shrinking its input first — at 100 TB all tiers are live, chosen per
-    job by the observed edge count, and all produce identical labels.
-    The default boundary is 10M sym rows (r10, raised from 1M): the
-    64x funnel probe priced both sides (min-of-2, idle box) — the
-    funnel is the best-or-equal path at 4.3M sym rows (4.4 vs 5.3 s
-    pristine) and wins ~2x at 8.6M (5.7 vs 11.0 s rounds), losing only
-    at 17M (11.7 vs 9.7 s) where the one-task finish becomes the
-    bottleneck; the boundary sits inside the measured bracket, on the
-    known-win side — SCALING.md `## funnel 64x probe`. A 10M-row star
-    set is a few hundred MB of numpy in the finishing task, inside any
-    executor profile.
-    Pass ``local_threshold=0`` to force a loop with no Python stage
-    (tests pin all paths agree) — it is forwarded as
-    ``contract_threshold`` to the star path too, so the guarantee holds
-    for both algorithms; exotic key dtypes (non-int, non-string) fall
-    back to the driver union-find at any size.
+    One front door, size-tiered: the edges are symmetrized and
+    checkpointed once, counted once, and the first tier that fits runs:
+
+    - **driver union-find** (<= `_DRIVER_TIER` symmetrized rows, or any
+      size up to ``local_threshold`` for key dtypes outside
+      `_CONTRACT_KEY_TYPES`): one collect, no further Spark job. The
+      funnel's fixed overhead (a Python-worker round trip + two extra
+      jobs) exceeds a few-thousand-row collect (measured on
+      corpus_prep's pair graph).
+    - **contraction funnel** (<= ``local_threshold`` rows): two
+      `contract_components` passes — every partition contracts to its
+      local star set in parallel (zero shuffle), then one
+      repartition(1) task merges the node-sized star sets into global
+      components. Bounded by one TASK's memory instead of the driver's.
+      The 10M default sits inside the bracket where the funnel was
+      measured best-or-equal (SCALING.md `## funnel 64x probe`: 4.4 vs
+      5.3 s at 4.3M sym rows, ~2x faster at 8.6M, slower only at 17M
+      where the one-task finish becomes the bottleneck). That probe
+      priced the funnel against the min-label loop that the rounds
+      below have since replaced; the boundary was not re-measured.
+    - **Small-Star/Large-Star rounds** (above ``local_threshold``):
+      contractable keys are first contracted partition-wise (zero
+      shuffle) so the rounds iterate over ~node-sized star edges
+      instead of the raw pair list; O(log n) rounds on any topology,
+      each two groupBy-min shuffles plus a signature job. ``max_iter``
+      bounds the rounds.
+
+    Pass ``local_threshold=0`` to force the rounds with no Python stage
+    (the tests pin that every tier agrees).
     """
-    if algorithm not in ("minlabel", "star"):
-        raise ValueError(f"algorithm must be 'minlabel' or 'star', got {algorithm!r}")
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     sym = sym.unionByName(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
@@ -248,141 +244,36 @@ def connected_components(
             if contractable and n_sym > _DRIVER_TIER:
                 return _funnel_components(sym)
             return _local_components(sym)
-    if algorithm == "star":
-        # O(log n)-round star contraction for high-diameter graphs; the
-        # min-label loop below is cheaper per round on the small-diameter
-        # cluster graphs dedup produces
-        return connected_components_star(
-            edges, src, dst, max_iter=max_iter,
-            contract_threshold=local_threshold,
-        )
-    if local_threshold and contractable:
-        # above-threshold graphs still take the zero-shuffle contraction
-        # prepass: the loop then iterates over ~node-sized star edges
-        # instead of the raw pair list (local_threshold=0 keeps the
-        # pristine loop for the agreement tests). Self-loops are filtered
-        # FIRST — contract_components' caller contract — because a node
-        # whose only edge is a self-loop emits no star edge and would
-        # silently vanish from the labels; such nodes are re-attached as
-        # self-edges below so the loop keeps them as singletons.
-        # the star set has TWO consumers below (the re-symmetrized union
-        # and the dropped-node anti-join) — checkpoint the node-sized
-        # output so the Python contraction stage runs exactly once
-        stars = contract_components(
-            sym.filter(F.col("a") != F.col("b"))
-        ).localCheckpoint(eager=True)
-        resym = (
-            stars.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("a"), F.col("b")),
-                        F.struct(
-                            F.col("b").alias("a"), F.col("a").alias("b")
-                        ),
-                    )
-                ).alias("_e")
-            )
-            .select("_e.a", "_e.b")
-        )
-        # nodes the prepass dropped (self-loop-only) come back as
-        # self-edges. Only self-loop rows can drop, so the left side is
-        # the FILTERED self-loop slice (predicate-pushed over the
-        # checkpoint scan — near-zero rows on real pair graphs), never a
-        # distinct over the raw sym (a first draft paid a full
-        # edge-list-sized shuffle here; caught by the 64x funnel probe)
-        dropped = (
-            sym.filter(F.col("a") == F.col("b"))
-            .select("a")
-            .distinct()
-            .join(resym.select("a"), "a", "left_anti")
-            .select("a", F.col("a").alias("b"))
-        )
-        sym = resym.unionByName(dropped).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .localCheckpoint(eager=True)
+    return _star_components(
+        sym, max_iter, contract=bool(local_threshold) and contractable
     )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["a"] == labels["node"])
-            .select(F.col("b").alias("node"), "cluster")
-            .groupBy("node")
-            .agg(F.min("cluster").alias("nbr_cluster"))
-        )
-        # the convergence count RIDES the checkpoint job via observe()
-        # (CollectMetrics is a pass-through on the same plan) — one job
-        # per round instead of checkpoint + a separate count() scan
-        obs = Observation()
-        upd = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.col("cluster").alias("old_cluster"),
-                F.least(
-                    F.col("cluster"), F.coalesce("nbr_cluster", F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("cluster") != F.col("old_cluster")).cast("long")
-                ).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["chg"] or 0)
-        labels = upd.select("node", "cluster")
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means some
-        # component's diameter exceeds the round budget — returning the
-        # partial labels would silently split that component (dedup would
-        # keep several "representatives" of one duplicate cluster)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_star (O(log n) rounds) for "
-            "high-diameter graphs"
-        )
-    return labels
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "key_a",
-    dst: str = "key_b",
-    max_iter: int = 20,
-    contract_threshold: int = 10_000_000,
-) -> DataFrame:
-    """Connected components via the alternating Large-Star / Small-Star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the high-diameter path `connected_components`' docstring
-    points at: min-label propagation needs O(diameter) rounds (a
-    400-node chain = 400 rounds), star contraction converges in
-    O(log n) rounds on ANY topology.
+def _with_centers(labels: DataFrame, sym: DataFrame) -> DataFrame:
+    """Complete star-edge (node, cluster) labels with the centers: nodes
+    that ARE their component's min emit no star edge, so they are
+    re-attached from the node universe of the symmetrized input with an
+    anti-join. The universe includes self-loop-only nodes (they appear
+    in `sym` but never in a star edge), which label as singletons."""
+    all_nodes = sym.select(F.col("a").alias("node")).distinct()
+    centers = all_nodes.join(
+        labels.select("node"), "node", "left_anti"
+    ).withColumn("cluster", F.col("node"))
+    return labels.unionByName(centers)
+
+
+def _star_components(sym: DataFrame, max_iter: int, contract: bool) -> DataFrame:
+    """Alternating Large-Star / Small-Star rounds over an (already
+    symmetrized + checkpointed) edge frame — the above-threshold tier of
+    `connected_components`.
 
     Large-star: every node links its LARGER neighbors to the minimum of
     its closed neighborhood; small-star: every node links its
-    smaller-or-equal neighbors (and itself) to that minimum. Each round
-    is two groupBy-min shuffles over the edge list; at convergence the
-    edge set is a union of stars centered at component minima, read off
-    directly as (node, cluster) labels. Same contract as
-    `connected_components`: cluster id = min member key; property-tested
-    against union-find, plus the long-chain case the min-label loop's
-    round budget cannot cover.
-
-    **r9 contraction funnel**: edge sets at most ``contract_threshold``
-    rows skip the global rounds entirely — two `contract_components`
-    passes (partition-parallel, then one repartition(1) task) produce
-    the same star edges the loop converges to, replacing ~log(n) rounds
-    of 4 shuffles + a signature job each with ONE job. Larger graphs run
-    the rounds on a contraction-shrunk (~node-sized) edge set instead of
-    the raw pair list. ``contract_threshold=0`` forces the pristine
-    no-Python-stage loop (the property tests pin both paths agree, and
-    exotic key dtypes take it automatically).
+    smaller-or-equal neighbors (and itself) to that minimum. At
+    convergence the edge set is a union of stars centered at component
+    minima, read off directly as (node, cluster) labels. ``contract``
+    first shrinks each partition to its local star set
+    (`contract_components`, zero shuffle).
     """
     def checkpoint_with_sig(df: DataFrame) -> tuple[DataFrame, tuple]:
         # checkpoint, then one synchronous signature agg on the
@@ -390,13 +281,14 @@ def connected_components_star(
         # observe()-rides-the-checkpoint variant was tried and REVERTED:
         # Observation.get waits on the async listener bus, and in a
         # long-lived session this loop's ~8 gets stalled for seconds
-        # each (bench: 4.2 s → 9.8 s). The smaller BFS/min-label loops
-        # keep observe(); here the explicit cheap job wins.
+        # each (bench: 4.2 s → 9.8 s). The smaller BFS loops keep
+        # observe(); here the explicit cheap job wins.
         # bit_xor, not sum: a sum of 64-bit hashes relies on silent long
         # wraparound, which ANSI mode (the driver's session) turns into
         # ARITHMETIC_OVERFLOW (caught by tests/test_ansi_parity.py). XOR
         # is order-insensitive and can't overflow; duplicate-pair
-        # cancellation is moot because e is distinct.
+        # cancellation is moot because every round's output is distinct
+        # (a duplicated input edge changes the count instead).
         out = df.localCheckpoint(eager=True)
         row = out.agg(
             F.count(F.lit(1)).alias("n"),
@@ -404,46 +296,15 @@ def connected_components_star(
         ).collect()[0]
         return out, (row["n"], row["h"])
 
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e, sig = checkpoint_with_sig(
-        raw.filter(F.col("u") != F.col("v")).distinct()
+    # one orientation of every undirected edge, self-loops dropped (the
+    # `contract_components` caller contract; self-loop-only nodes come
+    # back as centers)
+    e = sym.filter(F.col("a") < F.col("b")).select(
+        F.col("a").alias("u"), F.col("b").alias("v")
     )
-    # the node universe only matters for the final center labels; derive
-    # it LAZILY off the already-checkpointed initial edge set — a second
-    # eager checkpoint here paid a whole extra job per call for a frame
-    # read exactly once. Self-loop-only nodes are in the universe too
-    # (they label as their own singleton, matching the min-label loop):
-    # the u = v slice re-reads the raw input once, with the equality
-    # filter pushed to the scan — near-zero rows on real pair graphs.
-    e0 = e
-    all_nodes = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .unionByName(
-            raw.filter(F.col("u") == F.col("v")).select(
-                F.col("u").alias("node")
-            )
-        )
-        .distinct()
-    )
-    if contract_threshold and dict(e.dtypes)["u"] in _CONTRACT_KEY_TYPES:
-        if sig[0] <= contract_threshold:
-            # the funnel IS the converged star set: read labels off it
-            # directly and skip the rounds (see docstring)
-            final = (
-                contract_components(contract_components(e).repartition(1))
-                .localCheckpoint(eager=True)
-            )
-            labels = final.select(
-                F.col("u").alias("node"), F.col("v").alias("cluster")
-            )
-            centers = all_nodes.join(
-                labels.select("node"), "node", "left_anti"
-            ).withColumn("cluster", F.col("node"))
-            return labels.unionByName(centers)
-        # too big for one finishing task: still contract partition-wise
-        # (zero shuffle) so the rounds iterate over ~node-sized stars
-        e, sig = checkpoint_with_sig(contract_components(e))
+    if contract:
+        e = contract_components(e)
+    e, sig = checkpoint_with_sig(e)
 
     def large_star(df: DataFrame) -> DataFrame:
         sym = df.unionByName(
@@ -491,14 +352,8 @@ def connected_components_star(
             f"star contraction did not converge in {max_iter} rounds "
             "(O(log n) expected — check for edge-set oscillation)"
         )
-    # at convergence e is star edges (node -> component min); nodes that
-    # ARE their component's min have no outgoing edge — label them as
-    # their own cluster via the node universe captured up front
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster"))
-    centers = all_nodes.join(
-        labels.select(F.col("node")), "node", "left_anti"
-    ).withColumn("cluster", F.col("node"))
-    return labels.unionByName(centers)
+    return _with_centers(labels, sym)
 
 
 def triangle_count(
@@ -875,30 +730,20 @@ def _funnel_components(sym: DataFrame) -> DataFrame:
     `_local_components`: pass 1 contracts every partition in parallel
     with zero shuffle; repartition(1) funnels the node-sized star sets
     into one task whose second pass merges them into global components.
-    Labels match the loop and the driver path exactly (cluster = min
+    Labels match the rounds and the driver path exactly (cluster = min
     member key).
-
-    Centers (nodes that ARE their component's min) emit no star edge, so
-    they are re-attached from the node universe with an anti-join — off
-    the checkpointed input, which also keeps self-loop-only nodes in the
-    output exactly as the min-label loop does (they appear in `sym` but
-    never in a star edge).
     """
     final = (
         contract_components(contract_components(sym).repartition(1))
         .localCheckpoint(eager=True)
     )
     labels = final.select(F.col("a").alias("node"), F.col("b").alias("cluster"))
-    all_nodes = sym.select(F.col("a").alias("node")).distinct()
-    centers = all_nodes.join(
-        labels.select("node"), "node", "left_anti"
-    ).withColumn("cluster", F.col("node"))
-    return labels.unionByName(centers)
+    return _with_centers(labels, sym)
 
 
 def _local_components(sym: DataFrame) -> DataFrame:
     """Driver-side union-find over a collected (already symmetrized) edge
-    list. Labels match the distributed loop exactly: cluster = min member.
+    list. Labels match the other tiers exactly: cluster = min member.
 
     Fetches with ONE collect() job, not toLocalIterator(): the caller's
     size gate already bounds the edge list (≤ local_threshold rows, tens

@@ -345,12 +345,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair candidates → duplicate clusters via iterative min-label
-    propagation (operators/graph.py::connected_components) over the
-    dedup_fuzzy pair graph. The engine's iterative-algorithm surface:
-    per-round shuffle join + min-agg, localCheckpoint lineage truncation,
-    convergence on a changed-row count. Oracle = transitive closure via a
-    DuckDB recursive CTE."""
+    """Pair candidates → duplicate clusters via connected components
+    (operators/graph.py::connected_components) over the dedup_fuzzy pair
+    graph, on whichever size tier the operator picks (the driver
+    union-find at test scale). Oracle = transitive closure via a DuckDB
+    recursive CTE."""
     from openmrs_patient_migration_script_spark.operators.graph import (
         connected_components,
     )
@@ -386,21 +385,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X9b: the same pair graph as `dedup_clusters`, labeled by the
-    alternating Small-Star/Large-Star contraction
-    (operators/graph.py::connected_components_star — Kiveris et al.):
-    O(log n) rounds on ANY topology, vs the min-label loop's O(diameter).
-    Declared separately so the high-diameter algorithm is itself
-    oracle-graded (identical transitive-closure oracle — the two
-    algorithms must agree on every cluster label), not just
-    property-tested. At 100 TB this is the path for web-scale link graphs
-    where chain diameters defeat a round-per-hop loop."""
+    """X9b: the same pair graph as `dedup_clusters`, forced onto
+    `connected_components`' Small-Star/Large-Star rounds
+    (``local_threshold=0`` — Kiveris et al.), the tier that graphs above
+    the funnel threshold take: O(log n) rounds on ANY topology. Declared
+    separately so the rounds are themselves oracle-graded (identical
+    transitive-closure oracle — every tier must agree on every cluster
+    label), not just property-tested; at test scale the default tiers
+    would route this graph to the driver union-find."""
     from openmrs_patient_migration_script_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     pairs = dedup_fuzzy(spark, sf_dir)
-    return connected_components_star(pairs)
+    return connected_components(pairs, local_threshold=0)
 
 
 def _labelprop_oracle(n_iter: int = 3) -> str:

@@ -164,13 +164,41 @@ def test_connected_components_planted_clusters(spark):
     got = {r["node"]: r["cluster"] for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 10}
 
-    # the distributed loop (forced via local_threshold=0) must agree with
-    # the adaptive union-find path exactly
+    # the Small-Star/Large-Star rounds (forced via local_threshold=0)
+    # must agree with the adaptive union-find path exactly
     looped = {
         r["node"]: r["cluster"]
         for r in connected_components(edges, local_threshold=0).collect()
     }
     assert looped == got
+
+
+def test_connected_components_drops_null_endpoint_edges(spark, monkeypatch):
+    """An edge with a NULL endpoint links nothing: NULL is not a node.
+    Node 3 reaches the graph only through NULL, so it drops out, and 2
+    and 3 are NOT merged through the NULL. Every tier — driver
+    union-find, contraction funnel (driver tier patched to 0) and the
+    forced Small-Star/Large-Star rounds — returns the same labels."""
+    from openmrs_patient_migration_script_spark.operators import graph
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (4, 5)], "key_a long, key_b long"
+    )
+    want = {1: 1, 2: 1, 4: 4, 5: 4}
+
+    def labels(**kw):
+        return {
+            r["node"]: r["cluster"]
+            for r in connected_components(edges, **kw).collect()
+        }
+
+    assert labels() == want
+    assert labels(local_threshold=0) == want
+    monkeypatch.setattr(graph, "_DRIVER_TIER", 0)
+    assert labels() == want
 
 
 def test_contract_components_preserves_components(spark):
@@ -202,14 +230,13 @@ def test_contract_components_preserves_components(spark):
 def test_connected_components_string_keys_funnel(spark, monkeypatch):
     """String node keys ride the numpy contraction (np.unique sorts
     object arrays by code point == Spark's UTF8_BINARY min) — funnel,
-    driver tier, loop, and star paths must agree. The driver tier is
-    monkeypatched to 0 so the tiny fixture actually exercises the
-    funnel in `connected_components` (default tiers route it to the
-    driver union-find)."""
+    driver tier, and the star rounds (plain and on contracted edges)
+    must agree. The driver tier is monkeypatched to 0 so the tiny
+    fixture actually exercises the funnel (default tiers route it to
+    the driver union-find)."""
     from openmrs_patient_migration_script_spark.operators import graph
     from openmrs_patient_migration_script_spark.operators.graph import (
         connected_components,
-        connected_components_star,
     )
 
     edges = spark.createDataFrame(
@@ -220,7 +247,7 @@ def test_connected_components_string_keys_funnel(spark, monkeypatch):
     for df in (
         connected_components(edges),
         connected_components(edges, local_threshold=0),
-        connected_components_star(edges),
+        connected_components(edges, local_threshold=1),
     ):
         assert {r["node"]: r["cluster"] for r in df.collect()} == want
     monkeypatch.setattr(graph, "_DRIVER_TIER", 0)
@@ -230,10 +257,10 @@ def test_connected_components_string_keys_funnel(spark, monkeypatch):
 
 @pytest.mark.slow
 def test_connected_components_self_loop_only_node_kept(spark, monkeypatch):
-    """A node whose only edge is a self-loop has no star edge, but the
-    min-label loop keeps it as its own singleton cluster — the funnel's
-    center re-attachment must match (driver tier patched to 0 so the
-    tiny fixture takes the funnel), and so must the driver tier."""
+    """A node whose only edge is a self-loop has no star edge, but it is
+    its own singleton cluster — the driver tier, the funnel's center
+    re-attachment (driver tier patched to 0 so the tiny fixture takes
+    the funnel) and both forms of the star rounds must all keep it."""
     from openmrs_patient_migration_script_spark.operators import graph
     from openmrs_patient_migration_script_spark.operators.graph import (
         connected_components,
@@ -256,7 +283,7 @@ def test_connected_components_self_loop_only_node_kept(spark, monkeypatch):
     }
     assert funneled == want
     # local_threshold=1 pushes the 4-row sym ABOVE the funnel tier, so
-    # the min-label loop runs with the contraction PREPASS — the branch
+    # the star rounds run on the contraction-shrunk edges — the branch
     # that must self-loop-filter before contracting and re-attach the
     # dropped node (r9 advice: it silently vanished otherwise)
     prepassed = {
@@ -264,16 +291,6 @@ def test_connected_components_self_loop_only_node_kept(spark, monkeypatch):
         for r in connected_components(edges, local_threshold=1).collect()
     }
     assert prepassed == want
-    # star path, both the funnel branch and the pristine rounds: the
-    # node universe must include self-loop-only nodes
-    for ct in (1_000_000, 0):
-        starred = {
-            r["node"]: r["cluster"]
-            for r in graph.connected_components_star(
-                edges, contract_threshold=ct
-            ).collect()
-        }
-        assert starred == want, f"contract_threshold={ct}"
 
 
 def test_salted_topk_matches_plain_window(spark):

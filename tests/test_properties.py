@@ -565,9 +565,10 @@ def test_banded_join_fractional_band_matches_reference(spark, lticks, rticks):
 )
 def test_star_components_match_union_find(spark, edge_list):
     """Alternating Large-Star/Small-Star == plain union-find on random
-    graphs (same min-member cluster-id contract as the min-label loop)."""
+    graphs (same min-member cluster-id contract as the other tiers)."""
+    from openmrs_patient_migration_script_spark.operators import graph
     from openmrs_patient_migration_script_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     edges = [(a, b) for a, b in edge_list if a != b]
@@ -598,26 +599,33 @@ def test_star_components_match_union_find(spark, edge_list):
         for n in members:
             want[n] = m
 
-    # default (contraction funnel) AND the pristine star loop must both
-    # match the reference — contract_threshold=0 forces the rounds
-    got = {r.node: r.cluster for r in connected_components_star(df).collect()}
+    # the contraction funnel (driver tier patched to 0), the plain star
+    # rounds (local_threshold=0) AND the rounds over partition-contracted
+    # edges (local_threshold=1) must all match the reference
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_DRIVER_TIER", 0)
+        got = {r.node: r.cluster for r in connected_components(df).collect()}
     assert got == want
     loop = {
         r.node: r.cluster
-        for r in connected_components_star(df, contract_threshold=0).collect()
+        for r in connected_components(df, local_threshold=0).collect()
     }
     assert loop == want
+    contracted = {
+        r.node: r.cluster
+        for r in connected_components(df, local_threshold=1).collect()
+    }
+    assert contracted == want
 
 
 def test_star_components_long_chain_converges_fast(spark):
-    """A 400-node path graph: min-label needs 400 rounds (its default
-    budget raises), star contraction converges in O(log n) — this is the
-    high-diameter case graph.py routes to this variant. Forced past the
-    r9 contraction funnel (contract_threshold=0) so the ROUNDS stay
-    covered; the funnel path is exercised by the property test above
-    and the dedicated contraction tests."""
+    """A 400-node path graph: min-label propagation would need 400
+    rounds, star contraction converges in O(log n) — the high-diameter
+    case above the funnel threshold. Forced past the driver and funnel
+    tiers (local_threshold=0) so the ROUNDS stay covered; the funnel
+    is exercised by the dedicated contraction tests."""
     from openmrs_patient_migration_script_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     n = 400
@@ -626,20 +634,20 @@ def test_star_components_long_chain_converges_fast(spark):
     )
     got = {
         r.node: r.cluster
-        for r in connected_components_star(
-            df, max_iter=12, contract_threshold=0
+        for r in connected_components(
+            df, max_iter=12, local_threshold=0
         ).collect()
     }
     assert got == {i: 0 for i in range(n)}
 
 
 def test_star_loop_on_contracted_edges_long_chain(spark):
-    """The big-graph branch (edges > contract_threshold): the star
-    rounds run on the partition-contracted edge set. A chain split
-    across partitions contracts to per-partition stars that the rounds
-    must still merge globally."""
+    """The big-graph branch (edges > local_threshold): the star rounds
+    run on the partition-contracted edge set. A chain split across
+    partitions contracts to per-partition stars that the rounds must
+    still merge globally."""
     from openmrs_patient_migration_script_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     n = 400
@@ -648,8 +656,8 @@ def test_star_loop_on_contracted_edges_long_chain(spark):
     ).repartition(8)
     got = {
         r.node: r.cluster
-        for r in connected_components_star(
-            df, max_iter=12, contract_threshold=1
+        for r in connected_components(
+            df, max_iter=12, local_threshold=1
         ).collect()
     }
     assert got == {i: 0 for i in range(n)}

@@ -234,10 +234,10 @@ def _triangles_shape(c_k):
 
 def _star_shape(c_k):
     from openmrs_patient_migration_script_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
-    return connected_components_star(_fuzzy_edges(c_k))
+    return connected_components(_fuzzy_edges(c_k), local_threshold=0)
 
 
 def _pagerank_shape(c_k):
@@ -1219,8 +1219,8 @@ def main() -> None:
         "levers (AQE skew split, HLL swap for exact distincts, salting)",
         "are documented in the operator docstrings and SHUFFLE.md.",
     ]
-    # Preserve the separately-generated 64x section (scale_probe_64x.py)
-    # across regens — this tool only re-times the 1x/4x/16x table.
+    # Preserve the recorded 64x sections across regens — this tool
+    # only re-times the 1x/4x/16x table.
     out_path = Path("SCALING.md")
     extra = ""
     if out_path.exists():
