@@ -11,7 +11,7 @@ Scale design: every variant avoids the naive all-pairs comparison —
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -141,13 +141,22 @@ def _shingles(text_col, n: int = 3):
     return F.filter(out, lambda x: x.isNotNull())
 
 
+def md5_pair(c: Column) -> tuple[Column, Column]:
+    """The declared MinHash double-hash base: the first and second 32-bit
+    halves of ``md5(c)`` as longs — one md5 per shingle, reproduced
+    exactly by the DuckDB oracles of the declared MinHash queries."""
+    return (
+        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
+        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     key_col: str,
     text_col: str,
     num_hashes: int = 16,
     shingle_n: int = 3,
-    hash_fn=None,
     double_hash=None,
 ) -> DataFrame:
     """X3 stage 1: per-document MinHash signature.
@@ -156,12 +165,12 @@ def minhash_signatures(
     seed_i))`` per doc for each of the ``num_hashes`` seeds in ONE groupBy
     (single shuffle). No MLlib, no UDFs — all JVM built-ins.
 
-    ``hash_fn(col, seed_int) -> Column`` defaults to seeded ``xxhash64``
-    (cheapest — the 100 TB choice). ``double_hash(col) -> (h1, h2)``
-    instead derives all ``num_hashes`` functions from ONE base hash via
-    Kirsch-Mitzenmacher double hashing (``h1 + i*h2 mod 2^32``) — the
-    declared query uses an md5-based pair DuckDB reproduces exactly,
-    paying one md5 per shingle instead of sixteen.
+    The default hash family is seeded ``xxhash64`` (cheapest — the
+    100 TB choice). ``double_hash(col) -> (h1, h2)`` instead derives all
+    ``num_hashes`` functions from ONE base hash via Kirsch-Mitzenmacher
+    double hashing (``h1 + i*h2 mod 2^32``) — the declared queries pass
+    `md5_pair`, which DuckDB reproduces exactly, paying one md5 per
+    shingle instead of sixteen.
     """
     sh = df.select(
         F.col(key_col).alias("key"),
@@ -176,10 +185,8 @@ def minhash_signatures(
             for i in range(num_hashes)
         ]
     else:
-        if hash_fn is None:
-            hash_fn = lambda c, i: F.xxhash64(c, F.lit(i))  # noqa: E731
         aggs = [
-            F.min(hash_fn(F.col("shingle"), i)).alias(f"mh_{i}")
+            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
             for i in range(num_hashes)
         ]
     return sh.groupBy("key").agg(*aggs)
@@ -222,7 +229,6 @@ def minhash_candidate_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     materialize: bool = True,
-    hash_fn=None,
     double_hash=None,
     hash_buckets: bool = True,
 ) -> DataFrame:
@@ -245,7 +251,7 @@ def minhash_candidate_pairs(
         )
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(
-        df, key_col, text_col, num_hashes, shingle_n, hash_fn, double_hash
+        df, key_col, text_col, num_hashes, shingle_n, double_hash
     )
     if materialize:
         sig = sig.localCheckpoint(eager=True)
@@ -268,7 +274,6 @@ def minhash_pairs_against(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    hash_fn=None,
     double_hash=None,
     hash_buckets: bool = True,
     index_signatures: DataFrame | None = None,
@@ -295,7 +300,7 @@ def minhash_pairs_against(
     signed with different params, which would silently produce empty
     band joins). With it set, ``index_df`` may be None. The caller owns
     the hash-family contract: signatures persisted under one
-    hash_fn/double_hash/shingle_n must be probed with the same family.
+    double_hash/shingle_n must be probed with the same family.
 
     Scale: the join shuffles on (band, bucket) like the self-join; the
     index side's bucket table is signature-sized (#docs × bands rows),
@@ -323,11 +328,10 @@ def minhash_pairs_against(
         raise ValueError("provide index_df or index_signatures")
     else:
         sig_i = minhash_signatures(
-            index_df, key_col, text_col, num_hashes, shingle_n, hash_fn,
-            double_hash,
+            index_df, key_col, text_col, num_hashes, shingle_n, double_hash
         )
     sig_b = minhash_signatures(
-        batch_df, key_col, text_col, num_hashes, shingle_n, hash_fn, double_hash
+        batch_df, key_col, text_col, num_hashes, shingle_n, double_hash
     )
     bi = _band_buckets(sig_i, num_hashes, bands, hash_buckets).select(
         F.col("key").alias("index_key"), "band", "bucket"

@@ -19,9 +19,15 @@ lives or dies by:
   analysis/stack depth long before it dies on data;
 - **convergence by aggregate**: the loop exits on a changed-row count
   or an edge-set signature, one tiny action per iteration.
+
+Every undirected operator starts from the same canonical simple graph
+(`_simple_edges`), and every broadcast hint goes through one gate
+(`broadcast_fits`, a row ceiling and a byte budget).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -44,15 +50,19 @@ _CONTRACT_KEY_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
 #: labels; the driver tier stays comfortably inside driver memory.
 _DRIVER_TIER = 50_000
 
-#: byte budget for one gate-hinted broadcast relation (r12-opt, guide
-#: §3.1: the small side must actually FIT — a flat 5M-ROW gate lets a
-#: wide-keyed table imply a multi-hundred-MB broadcast near the gate,
-#: aggressive for default driver/executor memory). 128 MiB keeps the
-#: classic two-long edge/degree tables at their measured 5M-row gate
-#: (16 B/row -> the row threshold still binds first) while wide rows
-#: (string keys, multi-column label frames) gate proportionally lower.
-#: Parameterised for cluster runs (size to executor memory / concurrent
-#: broadcasts); the local default keeps bench plans byte-identical.
+#: row ceiling of the broadcast gate: the measured 5M edge/node gate
+#: every graph operator shares (a two-long edge table is ~80 MB there).
+_BC_MAX_ROWS = 5_000_000
+
+#: byte budget for one gate-hinted broadcast relation (guide §3.1: the
+#: small side must actually FIT — a flat 5M-ROW gate lets a wide-keyed
+#: table imply a multi-hundred-MB broadcast near the gate, aggressive
+#: for default Spark memory settings). 128 MiB keeps the classic
+#: two-long edge/degree tables at the row gate (16 B/row -> the row
+#: ceiling still binds first) while wide rows (string keys,
+#: multi-column label frames) gate proportionally lower. A deployment
+#: sizes it to executor memory / concurrent broadcasts through the
+#: environment override `broadcast_fits` reads.
 _BC_MAX_BYTES_DEFAULT = 128 * 1024 * 1024
 
 #: Catalyst defaultSize per column type (the planner's own estimate
@@ -76,32 +86,39 @@ def _est_row_bytes(df: DataFrame, extra_bytes: int = 0) -> int:
     return max(total, 1)
 
 
-def broadcast_fits(
-    n_rows: int,
-    df: DataFrame,
-    row_threshold: int,
-    extra_bytes: int = 0,
-    max_bytes: int | None = None,
-) -> bool:
-    """The shared broadcast-gate decision (r12-opt): TRUE iff the
-    bounded side fits BOTH the caller's row threshold (the measured 5M
-    edge/node gate every graph operator exposes) AND the byte budget
-    ``rows x estimated-row-width <= max_bytes`` (``df`` models the
-    widest frame the gate will hint; env `SPARK_GRAFT_BROADCAST_MAX_BYTES`
-    overrides the 128 MiB default for cluster memory geometry). Above
-    either bound the caller falls back to its keyed-shuffle form
-    unchanged — the gate is hint-only, never semantic."""
-    import os
-
-    if max_bytes is None:
-        max_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_BROADCAST_MAX_BYTES", _BC_MAX_BYTES_DEFAULT
-            )
-        )
-    return n_rows <= min(
-        row_threshold, max_bytes // _est_row_bytes(df, extra_bytes)
+def broadcast_fits(n_rows: int, df: DataFrame, extra_bytes: int = 0) -> bool:
+    """The graph layer's one broadcast-gate decision: TRUE iff the
+    bounded side fits BOTH the row ceiling ``_BC_MAX_ROWS`` AND the byte
+    budget ``rows x estimated-row-width`` (``df`` models the widest frame
+    the gate will hint; the environment variable read below overrides
+    the 128 MiB default for cluster memory geometry). Above either bound
+    the caller falls back to its keyed-shuffle form unchanged — the gate
+    is hint-only, never semantic."""
+    max_bytes = int(
+        os.environ.get("SPARK_GRAFT_BROADCAST_MAX_BYTES", _BC_MAX_BYTES_DEFAULT)
     )
+    return n_rows <= min(
+        _BC_MAX_ROWS, max_bytes // _est_row_bytes(df, extra_bytes)
+    )
+
+
+def _simple_edges(
+    edges: DataFrame, src: str, dst: str, canonical: bool = False
+) -> DataFrame:
+    """The canonical simple graph every undirected operator starts from:
+    a lazy (u, v) frame with u < v, self-loops dropped and duplicates
+    removed. least/greatest folds (a, b) and (b, a) into one row BEFORE
+    the distinct — a plain distinct keeps both orientations, and the
+    caller's symmetrization then doubles every incident degree, wedge
+    and triangle. ``canonical=True`` skips the distinct (one exchange)
+    for pair lists the caller certifies are already unique per unordered
+    pair (the operators' ``assume_canonical``); orientation and
+    self-loop handling stay."""
+    e = edges.select(
+        F.least(F.col(src), F.col(dst)).alias("u"),
+        F.greatest(F.col(src), F.col(dst)).alias("v"),
+    ).filter(F.col("u") != F.col("v"))
+    return e if canonical else e.distinct()
 
 
 def _contract_partition_fn(batches):
@@ -357,10 +374,7 @@ def _star_components(sym: DataFrame, max_iter: int, contract: bool) -> DataFrame
 
 
 def triangle_count(
-    edges: DataFrame,
-    src: str = "key_a",
-    dst: str = "key_b",
-    broadcast_threshold: int = 5_000_000,
+    edges: DataFrame, src: str = "key_a", dst: str = "key_b"
 ) -> DataFrame:
     """Global triangle count of the undirected pair graph, as a one-row
     (n_triangles) DataFrame — the density probe of a dedup candidate
@@ -377,33 +391,19 @@ def triangle_count(
     the count needs no dedup. Two shuffle joins + one global count; the
     degree prepass is one groupBy.
     """
-    # canonicalize orientation BEFORE distinct: an input carrying both
-    # (a,b) and (b,a) is one undirected edge, but a plain distinct keeps
-    # both rows, symmetrization then duplicates them, and every incident
-    # wedge/triangle is overcounted. least/greatest folds the pair to a
-    # single canonical row first.
     # e feeds sym (itself consumed by deg and both orientation joins) and
     # oriented feeds THREE join sides — without checkpoints every consumer
     # replays the whole upstream pair-generation pipeline (observed: a
     # 25-shuffle plan for this count and 68 for the per-node coefficient
     # over the basket graph). Two small materializations collapse that.
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # broadcast gate (r11-opt): degree and oriented tables are bounded
-    # by the canonical edge count — one sync count over the fresh
-    # checkpoint decides, every wedge join broadcasts its bounded side
-    # under the gate, falls back to keyed shuffles above it (the
-    # `edge_support` rule; r12: byte-derived via `broadcast_fits`)
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
+    # broadcast gate: degree and oriented tables are bounded by the
+    # canonical edge count — one sync count over the fresh checkpoint
+    # decides, every wedge join broadcasts its bounded side under the
+    # gate, falls back to keyed shuffles above it (the `edge_support` rule)
     bc = (
         F.broadcast
-        if broadcast_fits(e.count(), e, broadcast_threshold, extra_bytes=8)
+        if broadcast_fits(e.count(), e, extra_bytes=8)
         else (lambda d: d)
     )
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -436,7 +436,6 @@ def pagerank(
     damping_pct: int = 85,
     scale: int = 10**9,
     seeds: DataFrame | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Fixed-point PageRank over the undirected pair graph — node
     centrality for duplicate-cluster triage (in a dedup candidate graph,
@@ -464,15 +463,14 @@ def pagerank(
     iteration re-adds the exact (100-d)·base floor.
 
     Plan shape per iteration: the rank map is NODE-sized, so it
-    BROADCASTS into the edge join under ``broadcast_threshold`` (the
-    `modularity`/`louvain` 5M gate, decided once from the checkpointed
-    degree count — r11-opt: the big symmetrized edge list never
-    shuffles for the join; above the gate it falls back to the
-    node-keyed shuffle), leaving ONE shuffle per iteration: the
-    aggregation that folds the node universe in via SEED ROWS (every
-    node contributes a zero-inflow row carrying its outdeg, so nodes
-    with no inflow keep the teleport floor WITHOUT a third
-    per-iteration join back onto the degree frame).
+    BROADCASTS into the edge join under `broadcast_fits` (the shared
+    gate, decided once from the checkpointed degree count — r11-opt:
+    the big symmetrized edge list never shuffles for the join; above
+    the gate it falls back to the node-keyed shuffle), leaving ONE
+    shuffle per iteration: the aggregation that folds the node universe
+    in via SEED ROWS (every node contributes a zero-inflow row carrying
+    its outdeg, so nodes with no inflow keep the teleport floor WITHOUT
+    a third per-iteration join back onto the degree frame).
     A cluster run pins one partitioning and reuses it; lineage is
     truncated per round with localCheckpoint (the module-docstring
     contract for every iterative loop here). The symmetrized graph has
@@ -492,14 +490,7 @@ def pagerank(
     """
     if not (0 < damping_pct < 100):
         raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _simple_edges(edges, src, dst)
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
@@ -569,11 +560,11 @@ def pagerank(
         F.col("fl"),
         F.lit(0).cast("long").alias("c"),
     ).localCheckpoint(eager=True)
-    # r12: byte-derived gate — the hinted side is the rank map
-    # (node, outdeg, r: key + 16 B), modeled off the seed-row frame
+    # the hinted side is the rank map (node, outdeg, r: key + 16 B),
+    # modeled off the seed-row frame
     bc = (
         (lambda d: F.broadcast(d))
-        if broadcast_fits(n_nodes, seed_rows, broadcast_threshold)
+        if broadcast_fits(n_nodes, seed_rows)
         else (lambda d: d)
     )
     for i in range(n_iter):
@@ -617,8 +608,6 @@ def label_propagation(
     src: str = "key_a",
     dst: str = "key_b",
     n_iter: int = 3,
-    broadcast_threshold: int = 5_000_000,
-    materialize_every: int = 8,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Fixed-round synchronous label propagation (Raghavan et al., 2007)
@@ -645,10 +634,10 @@ def label_propagation(
     Scale & plan shape, per round (r11 — the r10 verdict's "cut the LPA
     block" item; output labels are BIT-IDENTICAL to the r10 form, only
     the physical plan changed): the label map is NODE-sized and
-    checkpointed, so it BROADCASTS into the edge join under the same
-    5M-row size gate `modularity` uses (the gate count is a local-block
-    read — labels are checkpointed every round) — the big symmetrized
-    edge list never shuffles for the join. The vote stream then
+    checkpointed, so it BROADCASTS into the edge join under the shared
+    `broadcast_fits` gate (the gate count is a local-block read of the
+    checkpointed initial map) — the big symmetrized edge list never
+    shuffles for the join. The vote stream then
     repartitions ONCE on the node key, which satisfies
     ClusteredDistribution for BOTH downstream aggregations (hash(node)
     clusters (node, label) too), so the old per-round exchange pair —
@@ -660,25 +649,21 @@ def label_propagation(
     (+ its gate-count and broadcast-collect jobs) was pure job-latency
     tax at 3 rounds (whole declared query: 3.71 -> 2.57 s min-of-3 idle
     at sf0.1, 1.44x, labels bit-identical). Deep ladders still truncate
-    lineage every ``materialize_every`` rounds (codegen/planning depth
-    grows per round — the module-docstring contract, now amortized);
+    lineage every 8 rounds (codegen/planning depth grows per round —
+    the module-docstring contract, now amortized);
     the FINAL map is NOT checkpointed — measured +0.6 s of pure
     RDD-materialization tax on the declared query, and the multi-read
     consumers materialize for themselves (`modularity` eagerly
     localCheckpoints its labels input as its own documented
     precondition; single-read consumers never needed it). Above the
-    gate the join falls back to the node-keyed shuffle form. ``assume_canonical`` skips the
-    canonicalize distinct (one exchange) — the `edge_support` contract:
-    pass it only for pair lists already unique per unordered pair
-    (single-pass blocked joins like `dedup_fuzzy` are, by
-    construction); orientation and self-loop handling stay.
+    gate the join falls back to the node-keyed shuffle form.
+    ``assume_canonical`` skips the canonicalize distinct (one exchange)
+    — the `edge_support` contract: pass it only for pair lists already
+    unique per unordered pair (single-pass blocked joins like
+    `dedup_fuzzy` are, by construction); orientation and self-loop
+    handling stay.
     """
-    e = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u"),
-        F.greatest(F.col(src), F.col(dst)).alias("v"),
-    ).filter(F.col("u") != F.col("v"))
-    if not assume_canonical:
-        e = e.distinct()
+    e = _simple_edges(edges, src, dst, canonical=assume_canonical)
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
@@ -688,14 +673,12 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    bcast = broadcast_fits(
-        labels.count(), labels, broadcast_threshold
-    )  # node count is
-    # round-invariant, so one gate decision covers every round (a
-    # local-block count over the checkpoint — the r8 rule: observe()'s
-    # listener-bus get stalls in long-lived sessions, sync aggs on
-    # checkpointed frames are milliseconds); r12: byte-derived gate,
-    # the hinted side is the (node, label) map this frame models
+    # node count is round-invariant, so one gate decision covers every
+    # round (a local-block count over the checkpoint — the r8 rule:
+    # observe()'s listener-bus get stalls in long-lived applications, sync
+    # aggs on checkpointed frames are milliseconds); the hinted side is
+    # the (node, label) map this frame models
+    bcast = broadcast_fits(labels.count(), labels)
     for r in range(1, n_iter + 1):
         lab_u = labels.select(F.col("node").alias("u"), "label")
         if bcast:
@@ -719,7 +702,7 @@ def label_propagation(
                 ),
             ).alias("label")
         )
-        if r % materialize_every == 0 and r != n_iter:
+        if r % 8 == 0 and r != n_iter:
             labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
@@ -791,7 +774,6 @@ def common_neighbors(
     dst: str = "key_b",
     max_degree: int | None = 1000,
     n_edges: int | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """X9e: common-neighbor link prediction over an undirected pair graph
     — for every NON-edge pair at distance 2, how many neighbors the two
@@ -816,15 +798,7 @@ def common_neighbors(
     # sides; deg feeds the cap filter and both degree attachments — the
     # triangle-family checkpoint rule applies (12-shuffle replay observed
     # without it)
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     # broadcast gate (r11-opt, the `edge_support` rule): under the gate
     # the wedge join's probe side (the adjacency, 2·|E| rows), the
     # anti-join's edge set and both degree attaches broadcast; above it
@@ -837,7 +811,7 @@ def common_neighbors(
         n_edges = e.count()  # sync over checkpoint blocks
     bc = (
         F.broadcast
-        if broadcast_fits(n_edges, e, broadcast_threshold, extra_bytes=8)
+        if broadcast_fits(n_edges, e, extra_bytes=8)
         else (lambda d: d)
     )
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -908,15 +882,8 @@ def degree_assortativity(
         group_corr,
     )
 
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # sym feeds deg AND the ends join
-    )
+    # sym feeds deg AND the ends join
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count("*").alias("_d")).localCheckpoint(
         eager=True
@@ -939,10 +906,7 @@ def degree_assortativity(
 
 
 def clustering_coefficient(
-    edges: DataFrame,
-    src: str = "key_a",
-    dst: str = "key_b",
-    broadcast_threshold: int = 5_000_000,
+    edges: DataFrame, src: str = "key_a", dst: str = "key_b"
 ) -> DataFrame:
     """Per-node local clustering coefficient — `triangle_count`'s density
     probe RESOLVED to nodes: cc(v) = 2·T(v) / (d(v)·(d(v)−1)), how close
@@ -963,22 +927,13 @@ def clustering_coefficient(
     # same multi-consumer checkpoints as triangle_count (see there):
     # without them the edge-generation pipeline replays per consumer —
     # observed as a 68-shuffle plan on the basket graph
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # broadcast gate (r11-opt): the `edge_support`/`triangle_count` rule —
-    # one sync count over the fresh checkpoint, bounded join sides
-    # broadcast under the gate, keyed shuffles above it (r12:
-    # byte-derived via `broadcast_fits`)
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
+    # broadcast gate: the `edge_support`/`triangle_count` rule — one sync
+    # count over the fresh checkpoint, bounded join sides broadcast under
+    # the gate, keyed shuffles above it
     bc = (
         F.broadcast
-        if broadcast_fits(e.count(), e, broadcast_threshold, extra_bytes=8)
+        if broadcast_fits(e.count(), e, extra_bytes=8)
         else (lambda d: d)
     )
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1037,7 +992,6 @@ def k_core(
     dst: str = "key_b",
     n_rounds: int = 6,
     assume_canonical: bool = False,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """k-core of the undirected pair graph via ``n_rounds`` of parallel
     peeling (Matula & Beck's algorithm, synchronous form): each round
@@ -1057,25 +1011,20 @@ def k_core(
     Plan shape per round: one degree agg (node-keyed, map-side combine)
     + two semi joins of the edge list against the surviving node set.
     The surviving-node set is node-sized, so both semi joins BROADCAST
-    it under ``broadcast_threshold`` on the round's symmetrized edge
-    count (the `modularity`/`louvain` 5M gate — r11-opt: the gate reads
-    the per-round count the fixpoint early-stop already pays for, and
-    under it the edge list never shuffles for the semis; above it the
-    node-keyed shuffle form returns). O(|E|) per round, lineage
-    truncated per round (the module contract for iterative loops).
+    it under `broadcast_fits` on the round's symmetrized edge count
+    (the shared gate — r11-opt: the gate reads the per-round count the
+    fixpoint early-stop already pays for, and under it the edge list
+    never shuffles for the semis; above it the node-keyed shuffle form
+    returns). O(|E|) per round, lineage truncated per round (the module
+    contract for iterative loops).
     """
-    # canonicalize BEFORE symmetrizing (the triangle_count rule): a pair
+    # canonicalize BEFORE symmetrizing (`_simple_edges`): a pair
     # reported in both orientations or repeated would double a node's
     # degree and fabricate cores; self-loops likewise add 2 to deg(u).
     # ``assume_canonical`` skips the dedup for input the caller certifies
     # is already (u < v, self-loop-free, duplicate-free) — the
     # `edge_support` contract; `coreness` canonicalizes once and reuses.
-    canon = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u"),
-        F.greatest(F.col(src), F.col(dst)).alias("v"),
-    ).filter(F.col("u") != F.col("v"))
-    if not assume_canonical:
-        canon = canon.dropDuplicates(["u", "v"])
+    canon = _simple_edges(edges, src, dst, canonical=assume_canonical)
     # eager checkpoints: each round's edge list has TWO consumers (the
     # degree agg and the semi joins) — lazy would let them recompute the
     # upstream independently (the repo-wide multi-consumer rule); a
@@ -1092,11 +1041,11 @@ def k_core(
     # stalling for seconds each in long-lived sessions
     n_prev = sym.count()
     for _ in range(n_rounds):
-        # r12: byte-derived gate — the hinted `keep` set is one key
-        # column; n_prev (symmetrized edge rows) bounds its size
+        # the hinted `keep` set is one key column; n_prev (symmetrized
+        # edge rows) bounds its size
         bc = (
             (lambda d: F.broadcast(d))
-            if broadcast_fits(n_prev, sym.select("u"), broadcast_threshold)
+            if broadcast_fits(n_prev, sym.select("u"))
             else (lambda d: d)
         )
         keep = (
@@ -1148,12 +1097,8 @@ def coreness(
     # same simple graph — re-deduplicating it per k paid max_k distinct
     # exchanges for identical bytes
     canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias(src),
-            F.greatest(F.col(src), F.col(dst)).alias(dst),
-        )
-        .filter(F.col(src) != F.col(dst))
-        .dropDuplicates([src, dst])
+        _simple_edges(edges, src, dst)
+        .select(F.col("u").alias(src), F.col("v").alias(dst))
         .localCheckpoint(eager=True)
     )
     base = k_core(
@@ -1235,7 +1180,6 @@ def bfs_hops(
     src: str = "key_a",
     dst: str = "key_b",
     node_col: str = "node",
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """X9j (r6): bounded breadth-first search — (node, hop) with hop =
     the minimum number of edges from ANY source node, for nodes within
@@ -1261,12 +1205,12 @@ def bfs_hops(
     visited×edges (the frontier, not the accumulated set, probes the
     edge list); the visited anti-join is node-keyed. The frontier and
     visited sets are node-sized, so BOTH joins broadcast their bounded
-    side under ``broadcast_threshold`` on the symmetrized edge count
-    (the `modularity`/`louvain` 5M gate, a local-block count over the
-    fresh checkpoint — r11-opt: the edge list never shuffles under the
-    gate; above it the node-keyed shuffle form returns). ``max_hops``
-    bounds rounds; the early-exit empty check is an observe() metric on
-    the round's own checkpoint job — no extra driver action."""
+    side under `broadcast_fits` on the symmetrized edge count (the
+    shared gate, a local-block count over the fresh checkpoint —
+    r11-opt: the edge list never shuffles under the gate; above it the
+    node-keyed shuffle form returns). ``max_hops`` bounds rounds; the
+    early-exit empty check is an observe() metric on the round's own
+    checkpoint job — no extra Spark action."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
     )
@@ -1282,10 +1226,10 @@ def bfs_hops(
     frontier = visited.select(node_col)
     bc = (
         (lambda d: F.broadcast(d))
-        # local-block read; r12: byte-derived — the hinted frontier /
-        # visited sets are node-sized (key + hop int), bounded by the
-        # symmetrized edge count this gate reads
-        if broadcast_fits(sym.count(), visited, broadcast_threshold)
+        # local-block read; the hinted frontier / visited sets are
+        # node-sized (key + hop int), bounded by the symmetrized edge
+        # count this gate reads
+        if broadcast_fits(sym.count(), visited)
         else (lambda d: d)
     )
     for h in range(1, max_hops + 1):
@@ -1317,9 +1261,7 @@ def modularity(
     labels: DataFrame,
     src: str = "key_a",
     dst: str = "key_b",
-    broadcast_threshold: int = 5_000_000,
     assume_canonical: bool = False,
-    assume_materialized: bool = False,
 ) -> DataFrame:
     """X9l (r6): exact Newman-Girvan modularity of a community
     assignment — the CERTIFICATION metric for `label_propagation` (and
@@ -1360,10 +1302,10 @@ def modularity(
     communities were fit on).
 
     Scale: the node→community map attaches to the edge list via two
-    joins that BROADCAST when the map is at most ``broadcast_threshold``
-    rows (r10, after the r9 plan audit found them running as
-    SortMergeJoins: the map is node-sized while the edge list is the
-    big side — on the fixture that shuffle dominated the whole query).
+    joins that BROADCAST when the map passes `broadcast_fits` (r10,
+    after the r9 plan audit found them running as SortMergeJoins: the
+    map is node-sized while the edge list is the big side — on the
+    fixture that shuffle dominated the whole query).
     A labels side of 5M (node, community) longs is ~100-200 MB
     broadcast — comfortably inside executor memory on any 100 TB-class
     cluster profile; above the gate the joins fall back to node-keyed
@@ -1391,34 +1333,20 @@ def modularity(
     sizes are known."""
     # ``assume_canonical``: skip the canonicalize+checkpoint when the
     # caller certifies (src < dst, self-loop-free, distinct, already
-    # materialized) — the `edge_support` contract. ``assume_materialized``
-    # skips the label checkpoint for inputs the caller already
-    # checkpointed. Both exist for per-round audit consumers (`louvain`
-    # calls this up to 2*n_passes times per query — r11 measured the
-    # redundant re-canonicalize/re-checkpoint at ~2 jobs per audit).
+    # materialized) — the `edge_support` contract.
     if assume_canonical:
         canon = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     else:
-        canon = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("u"),
-                F.greatest(F.col(src), F.col(dst)).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)  # feeds m, degrees, intra counts
-        )
-    lab = labels.select("node", "community")
-    if not assume_materialized:
-        lab = lab.localCheckpoint(eager=True)
+        # feeds m, degrees, intra counts
+        canon = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
+    lab = labels.select("node", "community").localCheckpoint(eager=True)
     m_df = canon.agg(F.count(F.lit(1)).cast("long").alias("m"))
 
     la = lab.select(F.col("node").alias("u"), F.col("community").alias("ca"))
     lb = lab.select(F.col("node").alias("v"), F.col("community").alias("cb"))
-    if broadcast_fits(lab.count(), lab, broadcast_threshold):
+    if broadcast_fits(lab.count(), lab):
         # the map is checkpointed, so its count is a local-block read;
         # the hint swaps both big-side SMJs for broadcast hash joins
-        # (r12: byte-derived off the (node, community) map's width)
         la, lb = F.broadcast(la), F.broadcast(lb)
     # r11-opt: degree_sum and intra_edges fuse into ONE edge-side join
     # pass + ONE community-keyed aggregation. Each canonical edge with
@@ -1495,7 +1423,6 @@ def sssp_bounded(
     dst: str = "key_b",
     weight: str = "w",
     node_col: str = "node",
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """X9m (r6): bounded single-source(-set) shortest paths — min total
     WEIGHT from any source over paths of at most ``max_hops`` edges
@@ -1514,12 +1441,11 @@ def sssp_bounded(
     declared query derives integer weights ≥ 1).
 
     Scale, per round: the tentative-distance table is reached-node-
-    sized, so it BROADCASTS into the edge join under
-    ``broadcast_threshold`` (the `modularity`/`louvain` 5M gate —
-    r11-opt: the gate count is the row count the fixpoint signature
-    already collects per round, so it costs nothing; the big
-    symmetrized edge list never shuffles for the join, and above the
-    gate the node-keyed shuffle form returns) + one node-keyed min agg
+    sized, so it BROADCASTS into the edge join under `broadcast_fits`
+    (the shared gate — r11-opt: the gate count is the row count the
+    fixpoint signature already collects per round, so it costs nothing;
+    the big symmetrized edge list never shuffles for the join, and above
+    the gate the node-keyed shuffle form returns) + one node-keyed min agg
     — shuffles carry reached-nodes + their adjacency, never paths (the
     oracle's path-enumeration form is the REPLAY, not the plan).
     Rounds are bounded by ``max_hops``; lineage
@@ -1569,9 +1495,9 @@ def sssp_bounded(
     for _ in range(max_hops):
         bdist = (
             F.broadcast(dist)
-            # r12: byte-derived — the hinted side is the tentative
-            # distance map itself (key + long)
-            if broadcast_fits(n_prev, dist, broadcast_threshold)
+            # the hinted side is the tentative distance map itself
+            # (key + long)
+            if broadcast_fits(n_prev, dist)
             else dist
         )
         relaxed = bdist.join(sym, bdist[node_col] == sym["u"]).select(
@@ -1604,7 +1530,6 @@ def edge_support(
     restore_zero: bool = True,
     assume_canonical: bool = False,
     n_edges: int | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """X9s (r9): per-EDGE triangle support — for every undirected edge
     (a, b), how many common neighbors its endpoints share, i.e. how many
@@ -1643,16 +1568,16 @@ def edge_support(
     restore joins and 9 distincts saved across a truss decomposition.
 
     Broadcast gate (r11-opt): degree tables are node-sized and the
-    oriented edge list is edge-sized; when the canonical edge count is
-    at most ``broadcast_threshold`` (known from the caller via
-    ``n_edges``, or a sync count over the fresh checkpoint otherwise),
-    every wedge-machinery join broadcasts its bounded side — the
+    oriented edge list is edge-sized; when the canonical edge count
+    passes `broadcast_fits` (known from the caller via ``n_edges``, or a
+    sync count over the fresh checkpoint otherwise), every
+    wedge-machinery join broadcasts its bounded side — the
     orientation's two degree attaches, the wedge join's probe side, the
     closing join's edge side, and the zero-restore left join. Under the
     gate the whole support pass keeps ONE exchange (the per-edge count
     agg); above it every join falls back to keyed shuffles unchanged
-    (the `modularity`/`louvain` 5M-gate pattern). In the
-    assume-canonical form the gate stays off unless the caller supplies
+    (the shared-gate pattern). In the assume-canonical form the gate
+    stays off unless the caller supplies
     ``n_edges`` — there is no checkpoint to count cheaply.
     """
     if assume_canonical:
@@ -1662,19 +1587,12 @@ def edge_support(
             if n_edges is None:
                 n_edges = e.count()  # sync over checkpoint blocks
     else:
-        e = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("u"),
-                F.greatest(F.col(src), F.col(dst)).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)  # feeds sym and the restore join
-        )
+        # feeds sym and the restore join
+        e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
         if n_edges is None:
             n_edges = e.count()  # sync over checkpoint blocks
     under_gate = n_edges is not None and broadcast_fits(
-        n_edges, e, broadcast_threshold, extra_bytes=8
+        n_edges, e, extra_bytes=8
     )
     bc = F.broadcast if under_gate else (lambda d: d)
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1748,7 +1666,6 @@ def ktruss(
     n_rounds: int = 3,
     assume_canonical: bool = False,
     n_edges_in: int | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """k-truss of the undirected pair graph via ``n_rounds`` of parallel
     SUPPORT peeling — the edge-level analogue of `k_core`'s degree
@@ -1798,12 +1715,8 @@ def ktruss(
     e = edges
     if not assume_canonical:
         e = (
-            e.select(
-                F.least(F.col(src), F.col(dst)).alias(src),
-                F.greatest(F.col(src), F.col(dst)).alias(dst),
-            )
-            .filter(F.col(src) != F.col(dst))
-            .distinct()
+            _simple_edges(e, src, dst)
+            .select(F.col("u").alias(src), F.col("v").alias(dst))
             .localCheckpoint(eager=True)
         )
         n_edges_in = e.count()
@@ -1818,7 +1731,6 @@ def ktruss(
             e, src=src, dst=dst, restore_zero=False, assume_canonical=True,
             n_edges=n_in,  # r11-opt: rides the existing per-round survivor
             # count, so the broadcast gate costs no extra job
-            broadcast_threshold=broadcast_threshold,
         ).localCheckpoint(eager=True)
         n_surv = sup.filter(F.col("support") >= k - 2).count()
         if n_in is not None and n_surv == n_in:
@@ -1858,7 +1770,6 @@ def truss_decomposition(
     src: str = "key_a",
     dst: str = "key_b",
     n_rounds: int = 3,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Full truss decomposition up to ``max_k``: per EDGE the largest k
     such that the edge survives the k-truss peel — the edge-level twin
@@ -1881,12 +1792,8 @@ def truss_decomposition(
     simple graph; trussness = 2 + #{k in 3..max_k: edge in the k-truss
     after ``n_rounds`` peels}."""
     canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias(src),
-            F.greatest(F.col(src), F.col(dst)).alias(dst),
-        )
-        .filter(F.col(src) != F.col(dst))
-        .distinct()
+        _simple_edges(edges, src, dst)
+        .select(F.col("u").alias(src), F.col("v").alias(dst))
         .localCheckpoint(eager=True)  # base table + every membership join
     )
     n_surv = canon.count()
@@ -1897,17 +1804,16 @@ def truss_decomposition(
             ktruss(
                 surv, k=k, src=src, dst=dst, n_rounds=n_rounds,
                 assume_canonical=True, n_edges_in=n_surv,
-                broadcast_threshold=broadcast_threshold,
             )
             .select(src, dst)
             .localCheckpoint(eager=True)  # next peel + the membership join
         )
         n_surv = surv.count()
         member = surv.withColumn("_m", F.lit(1))
-        if broadcast_fits(n_surv, member, broadcast_threshold):
+        if broadcast_fits(n_surv, member):
             # survivor sets are edge-bounded; the membership fold-back
-            # broadcasts under the `edge_support` gate (r11-opt; r12:
-            # byte-derived off the member frame's width)
+            # broadcasts under the `edge_support` gate (modeled off the
+            # member frame's width)
             member = F.broadcast(member)
         result = result.join(member, [src, dst], "left").select(
             src,
@@ -1928,18 +1834,15 @@ def louvain(
     src: str = "key_a",
     dst: str = "key_b",
     return_ledger: bool = False,
-    rounds_per_pass: int = 2,
-
-    broadcast_threshold: int = 5_000_000,
 ):
     """X9n (r11): Louvain community detection (Blondel et al. 2008) —
     the standard MODULARITY-OPTIMIZING algorithm, closing the gap next
     to LPA (`label_propagation`, which optimizes nothing) and the
     `modularity` metric (which only measures). Each PASS is Blondel's
-    phase 1 as ``rounds_per_pass`` synchronous guarded local-move
-    ROUNDS (from singleton super-node communities) followed by
-    community contraction; pass and round counts are FIXED so an
-    unrolled SQL oracle replays every decision. Returns
+    phase 1 as two synchronous guarded local-move ROUNDS (from
+    singleton super-node communities) followed by community
+    contraction; pass and round counts are FIXED so an unrolled SQL
+    oracle replays every decision. Returns
     (node, community) over the ORIGINAL node ids; with
     ``return_ledger=True`` also the per-pass [(pass, q_num_sum,
     accepted)] audit trail.
@@ -2003,9 +1906,8 @@ def louvain(
     to 1 row/node pre-exchange; round 1's singleton start needs no
     kic join/groupBy at all — (i, nb) is unique), and one level-graph
     q audit. Every node-sized attach (labels, degrees) broadcasts
-    under ``broadcast_threshold`` (the `modularity` 5M gate, r12
-    byte-derived via `broadcast_fits`; above it the joins fall back to
-    keyed shuffles). Contraction shrinks the graph geometrically on
+    under the shared `broadcast_fits` gate (above it the joins fall
+    back to keyed shuffles). Contraction shrinks the graph geometrically on
     community-structured inputs, so pass 1 dominates. Bounded driver
     scalars only, ONE collect per round (r12-opt): the q-guard union
     also returns the moved count, the intra cross weight and the
@@ -2022,15 +1924,7 @@ def louvain(
     Lineage is checkpoint-truncated per pass.
     """
     dec = "decimal(38,0)"
-    ocanon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ocanon = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     out_schema = "node long, community long"
     # r12-opt: m is NOT a standalone count job — level 1 has no self
     # loops, so sum(k) over the pass-1 degree frame is exactly 2m and
@@ -2200,12 +2094,9 @@ def louvain(
                 F.col("u").alias("node"), F.col("u").alias("community")
             )
         # the label map is supernode-sized; under the gate every
-        # node-keyed attach broadcasts (the `modularity` 5M gate; r12:
-        # byte-derived — the widest hinted frame is the 4-column label
-        # map, deg's schema + two extra key-sized columns)
-        under_gate = broadcast_fits(
-            n_nodes, deg, broadcast_threshold, extra_bytes=24
-        )
+        # node-keyed attach broadcasts (the widest hinted frame is the
+        # 4-column label map, deg's schema + two extra key-sized columns)
+        under_gate = broadcast_fits(n_nodes, deg, extra_bytes=24)
         bc = (
             (lambda d: F.broadcast(d)) if under_gate else (lambda d: d)
         )
@@ -2219,7 +2110,7 @@ def louvain(
         pass_moved = False
         last_ein = 0  # intra cross weight of the last ACCEPTED labels
         next_nodes = n_nodes  # community count of the last ACCEPTED labels
-        for _r in range(rounds_per_pass):
+        for _r in range(2):
             from pyspark.sql.window import Window as _W
 
             if _r == 0:

@@ -207,7 +207,7 @@ def _chunked_history_fold(seq, state_zero, step, out_elem_type, chunk=_FOLD_CHUN
     chunk's inner fold seeds from the carried state — the step
     expressions see the same inputs in the same order, so every emitted
     value is IDENTICAL to the monolithic fold (pinned in
-    tests/test_r11_optimizations.py).
+    tests/test_timeseries.py).
 
     ``state_zero``: ordered (name, Column) seeds for the state fields
     — scalar OR array-typed (`holt_winters_additive` carries its
@@ -500,7 +500,6 @@ def seasonal_decompose(
     value_col: str,
     window_ms: int = 43_200_000,
     scale: int = 10**6,
-    materialize_detrended: bool = True,
     emit_scaled: bool = False,
 ) -> DataFrame:
     """Classic seasonal-means decomposition per key:
@@ -550,13 +549,12 @@ def seasonal_decompose(
         .withColumn("_trend6", F.expr("(2 * _s + _n) div (2 * _n)"))
         .withColumn("_d", F.col("_vs") - F.col("_trend6"))
     )
-    if materialize_detrended:
-        # det feeds BOTH the seasonal profile and the final join; without a
-        # checkpoint Spark replays the corpus scan + RANGE-window shuffle
-        # once per consumer (verified in the plan: two Scan/Exchange/Window
-        # chains). Materializing once follows the `tf_idf` precedent —
-        # trade one executor-local write for half the scan/shuffle volume.
-        det = det.localCheckpoint(eager=True)
+    # det feeds BOTH the seasonal profile and the final join; without a
+    # checkpoint Spark replays the corpus scan + RANGE-window shuffle
+    # once per consumer (verified in the plan: two Scan/Exchange/Window
+    # chains). Materializing once follows the `tf_idf` precedent —
+    # trade one executor-local write for half the scan/shuffle volume.
+    det = det.localCheckpoint(eager=True)
     seas = (
         det.groupBy(key_col, "_hod")
         .agg(F.sum("_d").alias("_sd"), F.count("*").alias("_cn"))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from openmrs_patient_migration_script_spark.operators.corpus import prepare_corpus
+from openmrs_patient_migration_script_spark.operators.dedup import md5_pair
 from openmrs_patient_migration_script_spark.operators.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -139,13 +140,7 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end. Uses the md5 double-hash + raw-struct-bucket LSH form so
     the oracle replays the banding join exactly; production callers keep
     `prepare_corpus`'s cheaper xxhash64 defaults."""
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     return prepare_corpus(
         docs,
         min_quality=_MIN_QUALITY,
@@ -227,10 +222,6 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(
         (F.col("quality_score") >= _MIN_QUALITY)
         & (F.col("n_tokens") >= _MIN_TOKENS)
-    )
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
     )
     final = prepare_corpus(
         docs,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.operators.dedup import (
     fuzzy_dedup_pairs,
+    md5_pair,
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -231,10 +232,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-xxhash64 cost; production keeps the defaults (seeded xxhash64 +
     hashed buckets — cheaper shuffle keys)."""
     d = load_table(spark, sf_dir, "documents")
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     return minhash_candidate_pairs(
         d, "doc_id", "text", num_hashes=16, bands=4,
         double_hash=md5_pair, hash_buckets=False,
@@ -969,10 +966,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     index = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
     return minhash_pairs_against(
@@ -1667,10 +1660,6 @@ def dedup_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     sig = minhash_signatures(
         d, "doc_id", "text", num_hashes=16, double_hash=md5_pair
     ).localCheckpoint(eager=True)  # feeds band join + coordinate compare
@@ -1840,10 +1829,6 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     sig = minhash_signatures(
         d, "doc_id", "text", num_hashes=16, double_hash=md5_pair
     ).localCheckpoint(eager=True)  # one signature build feeds all configs

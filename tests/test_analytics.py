@@ -1535,11 +1535,12 @@ def test_sprt_planted_crossing_and_continue(spark, tmp_path):
     assert a1.n_total == 10 and a1.s_total == 0
 
 
-def test_modularity_broadcasts_label_attach_joins(spark):
+def test_modularity_broadcasts_label_attach_joins(spark, monkeypatch):
     """r10: the node->community map must attach to the edge list via
     BroadcastHashJoins under the size gate (the r9 plan audit found them
     as SortMergeJoins with the edge list as the big side), and fall back
     to shuffle joins when the gate is 0 — labels identical either way."""
+    from openmrs_patient_migration_script_spark.operators import graph
     from openmrs_patient_migration_script_spark.operators.graph import modularity
 
     edges = spark.createDataFrame(
@@ -1551,6 +1552,7 @@ def test_modularity_broadcasts_label_attach_joins(spark):
     fast = modularity(edges, labels)
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2
-    slow = modularity(edges, labels, broadcast_threshold=0)
+    monkeypatch.setattr(graph, "_BC_MAX_ROWS", 0)
+    slow = modularity(edges, labels)
     as_rows = lambda d: {tuple(r) for r in d.collect()}  # noqa: E731
     assert as_rows(fast) == as_rows(slow)

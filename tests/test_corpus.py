@@ -5,9 +5,8 @@ remove exactly its target, and the split assignment must be deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from openmrs_patient_migration_script_spark.operators.corpus import prepare_corpus
+from openmrs_patient_migration_script_spark.operators.dedup import md5_pair
 
 BASE = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -29,16 +28,9 @@ def _docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def _md5_pair(c):
-    return (
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
-
-
 def test_pipeline_removes_each_planted_defect(spark):
     out = prepare_corpus(
-        _docs(spark), double_hash=_md5_pair, hash_buckets=False
+        _docs(spark), double_hash=md5_pair, hash_buckets=False
     ).collect()
     kept = {r.key for r in out}
     # doc 4: quality-filtered; doc 2: exact dup of 1; doc 3: near-dup
@@ -50,9 +42,9 @@ def test_pipeline_removes_each_planted_defect(spark):
 
 def test_pipeline_is_deterministic_across_runs(spark):
     a = sorted(map(tuple, prepare_corpus(
-        _docs(spark), double_hash=_md5_pair, hash_buckets=False).collect()))
+        _docs(spark), double_hash=md5_pair, hash_buckets=False).collect()))
     b = sorted(map(tuple, prepare_corpus(
-        _docs(spark).repartition(5), double_hash=_md5_pair, hash_buckets=False
+        _docs(spark).repartition(5), double_hash=md5_pair, hash_buckets=False
     ).collect()))
     assert a == b
 

@@ -1054,3 +1054,282 @@ def test_span_rewrite_excises_planted_shared_passage(spark):
     assert out[3] == (8, 0, "p q r s t u v w")
     assert out[4] == (2, 0, "tiny doc")
     assert out[5] == (6, 6, "")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_ktruss_early_stop_matches_deep_round_count(spark):
+    """The stride fixture converges in <= 3 peels; 30 rounds must return
+    the identical support table (early-stop = pure memoization)."""
+    from openmrs_patient_migration_script_spark.operators.graph import ktruss
+
+    edges = [(u, u + d) for u in range(1, 60) for d in (1, 2, 3)]
+    df = spark.createDataFrame(edges, "key_a long, key_b long")
+    a = _rows(ktruss(df, k=4, n_rounds=3))
+    b = _rows(ktruss(df, k=4, n_rounds=30))
+    assert a == b and len(a) > 0
+
+
+def test_k_core_early_stop_matches_deep_round_count(spark):
+    """A 5-clique with a pendant chain: the chain peels in 2 rounds and
+    the clique survives; 60 rounds must equal 6."""
+    from openmrs_patient_migration_script_spark.operators.graph import k_core
+
+    clique = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
+    chain = [(5, 10), (10, 11), (11, 12)]
+    df = spark.createDataFrame(clique + chain, "key_a long, key_b long")
+    a = _rows(k_core(df, k=2, n_rounds=6))
+    b = _rows(k_core(df, k=2, n_rounds=60))
+    assert a == b
+    assert {r[0] for r in a} == {1, 2, 3, 4, 5}
+
+
+def test_k_core_assume_canonical_matches_default(spark):
+    from openmrs_patient_migration_script_spark.operators.graph import k_core
+
+    canon = [(1, 2), (1, 3), (2, 3), (3, 4)]
+    df = spark.createDataFrame(canon, "key_a long, key_b long")
+    messy = spark.createDataFrame(
+        canon + [(2, 1), (3, 1), (4, 4)], "key_a long, key_b long"
+    )
+    assert _rows(
+        k_core(df, k=2, n_rounds=4, assume_canonical=True)
+    ) == _rows(k_core(messy, k=2, n_rounds=4))
+
+
+def test_sssp_early_stop_matches_deep_hop_count(spark):
+    """A 4-node path converges in 3 relaxations; 30 hops must return the
+    identical distance table."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        sssp_bounded,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 2, 5), (2, 3, 1), (3, 4, 2), (1, 3, 10)],
+        "key_a long, key_b long, w long",
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    a = _rows(sssp_bounded(df, seeds, max_hops=3))
+    b = _rows(sssp_bounded(df, seeds, max_hops=30))
+    assert a == b
+    got = dict(a)
+    assert got == {1: 0, 2: 5, 3: 6, 4: 8}
+
+
+def test_louvain_no_broadcast_gate_matches_default(spark, monkeypatch):
+    """`_BC_MAX_ROWS` 0 forces the shuffle-join fallback on every
+    node-sized attach; labels and ledger must be bit-identical."""
+    from openmrs_patient_migration_script_spark.operators import graph
+    from openmrs_patient_migration_script_spark.operators.graph import louvain
+
+    edges = (
+        [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+        + [(a, b) for a in range(5, 9) for b in range(a + 1, 9)]
+        + [(4, 5)]
+    )
+    df = spark.createDataFrame(edges, "key_a long, key_b long")
+    out_b, led_b = louvain(df, n_passes=3, return_ledger=True)
+    monkeypatch.setattr(graph, "_BC_MAX_ROWS", 0)
+    out_s, led_s = louvain(df, n_passes=3, return_ledger=True)
+    assert _rows(out_b) == _rows(out_s)
+    assert led_b == led_s == [(1, 162, True), (2, 286, True), (3, 286, True)]
+
+
+def test_wedge_family_broadcast_gate_is_result_invisible(spark, monkeypatch):
+    """The r11 wedge-machinery broadcast gate (edge_support /
+    triangle_count / clustering_coefficient / common_neighbors /
+    truss_decomposition / ktruss): `_BC_MAX_ROWS` 0 (never broadcast,
+    the pure shuffle-join regime) must return bit-identical tables to the
+    default gated path on a mixed-density fixture."""
+    from openmrs_patient_migration_script_spark.operators import graph
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        clustering_coefficient,
+        common_neighbors,
+        edge_support,
+        ktruss,
+        triangle_count,
+        truss_decomposition,
+    )
+
+    edges = [(u, u + d) for u in range(1, 40) for d in (1, 2, 3)]
+    edges += [(u, 2 * u) for u in range(1, 20)]
+    df = spark.createDataFrame(edges, "key_a long, key_b long")
+    for op, kw in [
+        (edge_support, {}),
+        (triangle_count, {}),
+        (clustering_coefficient, {}),
+        (common_neighbors, {"max_degree": None}),
+        (truss_decomposition, {"max_k": 4, "n_rounds": 2}),
+        (ktruss, {"k": 4, "n_rounds": 2}),
+    ]:
+        gated = _rows(op(df, **kw))
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_BC_MAX_ROWS", 0)
+            shuffled = _rows(op(df, **kw))
+        assert gated == shuffled and len(gated) > 0, op.__name__
+
+
+def test_edge_support_gate_broadcasts_under_and_shuffles_over(spark, monkeypatch):
+    """Plan pin: under the gate the wedge joins are BroadcastHashJoin;
+    with `_BC_MAX_ROWS` 0 the same joins carry Exchange hashpartitioning."""
+    from openmrs_patient_migration_script_spark.operators import graph
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        edge_support,
+    )
+
+    edges = [(u, u + d) for u in range(1, 30) for d in (1, 2)]
+    df = spark.createDataFrame(edges, "key_a long, key_b long")
+    plan_on = edge_support(df)._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(graph, "_BC_MAX_ROWS", 0)
+    plan_off = (
+        edge_support(df)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastHashJoin" in plan_on
+    assert "SortMergeJoin" in plan_off or "ShuffledHashJoin" in plan_off
+
+
+def test_iterative_family_broadcast_gate_is_result_invisible(spark, monkeypatch):
+    """The r11 iterative-loop broadcast gate (pagerank / sssp_bounded /
+    bfs_hops / k_core / label_propagation): `_BC_MAX_ROWS` 0 (never
+    broadcast, the pure shuffle-join regime) must return bit-identical tables to the
+    default gated path on a mixed-density fixture with seeds."""
+    from openmrs_patient_migration_script_spark.operators import graph
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        bfs_hops,
+        k_core,
+        label_propagation,
+        pagerank,
+        sssp_bounded,
+    )
+
+    edges = [(u, u + d) for u in range(1, 40) for d in (1, 2, 3)]
+    edges += [(u, 2 * u) for u in range(1, 20)]
+    df = spark.createDataFrame(edges, "key_a long, key_b long")
+    wdf = df.withColumn(
+        "w", (F.col("key_a") + F.col("key_b")) % 5 + F.lit(1)
+    )
+    seeds = df.select(F.col("key_a").alias("node")).filter(
+        F.col("node") % 7 == 0
+    )
+    for name, run in [
+        ("pagerank", lambda: pagerank(df, n_iter=3)),
+        ("ppr", lambda: pagerank(df, n_iter=3, seeds=seeds)),
+        ("sssp", lambda: sssp_bounded(wdf, seeds, max_hops=3)),
+        ("bfs", lambda: bfs_hops(df, seeds, max_hops=3)),
+        ("k_core", lambda: k_core(df, k=3, n_rounds=4)),
+        ("lpa", lambda: label_propagation(df, n_iter=3)),
+    ]:
+        gated = _rows(run())
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_BC_MAX_ROWS", 0)
+            shuffled = _rows(run())
+        assert gated == shuffled and len(gated) > 0, name
+
+
+def test_modularity_fused_agg_matches_manual_recompute(spark):
+    """The r11 fused degree/intra aggregation in `modularity`: one
+    explode-based community agg must equal a hand-computed per-community
+    (n_nodes, degree_sum, intra_edges) on a planted two-community
+    fixture with a bridge edge."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        modularity,
+    )
+
+    # K4 on {1..4}, K3 on {10..12}, bridge 4-10
+    block = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    block += [(a, b) for a in range(10, 13) for b in range(a + 1, 13)]
+    block += [(4, 10)]
+    edges = spark.createDataFrame(block, "key_a long, key_b long")
+    labels = spark.createDataFrame(
+        [(n, 1) for n in range(1, 5)] + [(n, 2) for n in range(10, 13)],
+        "node long, community long",
+    )
+    got = {
+        r["community"]: (r["n_nodes"], r["degree_sum"], r["intra_edges"])
+        for r in modularity(edges, labels).collect()
+    }
+    # m=10; community 1: 4 nodes, degrees 3+3+3+4=13, intra=6 (K4);
+    # community 2: 3 nodes, degrees 3+2+2=7, intra=3 (K3)
+    assert got == {1: (4, 13, 6), 2: (3, 7, 3)}
+
+
+def test_broadcast_fits_row_gate_binds_for_edge_sized_rows(spark):
+    """Two-long edge/degree tables: 16 B/row + 8 B extra -> the 128 MiB
+    byte budget admits ~5.6M rows, so the measured 5M ROW gate still
+    decides (byte budget must not shift the classic regime)."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        broadcast_fits,
+    )
+
+    edge = spark.createDataFrame([], "u long, v long")
+    assert broadcast_fits(5_000_000, edge, extra_bytes=8)
+    assert not broadcast_fits(5_000_001, edge, extra_bytes=8)
+
+
+def test_broadcast_fits_wide_rows_gate_lower(spark):
+    """Wide rows gate proportionally lower than the row threshold: ten
+    string columns model ~200 B/row, so 5M rows (~1 GB) must NOT pass
+    the 128 MiB budget even though the row threshold would admit them."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        _est_row_bytes,
+        broadcast_fits,
+    )
+
+    wide = spark.createDataFrame(
+        [], ", ".join(f"c{i} string" for i in range(10))
+    )
+    width = _est_row_bytes(wide)
+    assert width >= 200
+    budget_rows = (128 * 1024 * 1024) // width
+    assert not broadcast_fits(5_000_000, wide)
+    assert broadcast_fits(budget_rows, wide)
+    assert not broadcast_fits(budget_rows + 1, wide)
+
+
+def test_broadcast_fits_env_override(spark, monkeypatch):
+    """SPARK_GRAFT_BROADCAST_MAX_BYTES re-derives the gate for cluster
+    memory geometry, in both directions."""
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        broadcast_fits,
+    )
+
+    edge = spark.createDataFrame([], "u long, v long")  # 16 B/row modeled
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_BYTES", str(16 * 100))
+    assert broadcast_fits(100, edge)
+    assert not broadcast_fits(101, edge)
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_BYTES", str(16 * 1024))
+    assert broadcast_fits(101, edge)
+
+
+def test_wide_row_gate_is_result_invisible(spark):
+    """End-to-end: a wide string-keyed pair graph takes the shuffle
+    regime under the byte gate (width pushes it under), and a forced
+    low byte budget returns bit-identical tables to the default path."""
+    import os
+
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        edge_support,
+    )
+
+    edges = [
+        (f"node-{u:04d}-{'x' * 40}", f"node-{u + d:04d}-{'x' * 40}")
+        for u in range(1, 30)
+        for d in (1, 2)
+    ]
+    df = spark.createDataFrame(edges, "key_a string, key_b string")
+    default = _rows(edge_support(df))
+    old = os.environ.get("SPARK_GRAFT_BROADCAST_MAX_BYTES")
+    os.environ["SPARK_GRAFT_BROADCAST_MAX_BYTES"] = "1"
+    try:
+        narrow_budget = _rows(edge_support(df))
+    finally:
+        if old is None:
+            del os.environ["SPARK_GRAFT_BROADCAST_MAX_BYTES"]
+        else:
+            os.environ["SPARK_GRAFT_BROADCAST_MAX_BYTES"] = old
+    assert default == narrow_budget and len(default) > 0

@@ -761,3 +761,30 @@ def test_volume_anomaly_planted_half_day(spark, tmp_path):
     flagged = {(r.event_type, r.d.isoformat()) for r in out if r.is_anomaly}
     assert flagged == {("view", "2024-05-08")}, flagged
     assert len(out) == 20  # full ledger: 2 streams x 10 days
+
+
+def test_inclusion_audit_exact_counts(spark):
+    """The lazy one-action form reports the same exact counts the
+    checkpointed form did (3 contained of 4 distinct child keys; NULLs
+    excluded on both sides)."""
+    from openmrs_patient_migration_script_spark.operators.quality import (
+        inclusion_audit,
+    )
+
+    child = spark.createDataFrame(
+        [(1,), (1,), (2,), (3,), (9,), (None,)], "k long"
+    )
+    parent = spark.createDataFrame(
+        [(1,), (2,), (3,), (4,), (None,)], "p long"
+    )
+    row = inclusion_audit(child, "k", parent, "p", "c->p").collect()[0]
+    assert (
+        row["n_child_distinct"],
+        row["n_parent_distinct"],
+        row["n_contained"],
+        row["is_inclusion"],
+    ) == (4, 4, 3, False)
+    full = inclusion_audit(
+        child.filter("k < 9"), "k", parent, "p", "ok"
+    ).collect()[0]
+    assert full["is_inclusion"] is True

@@ -899,3 +899,104 @@ def test_dedup_embedding_lsh_superset_of_threshold_pairs(spark, tmp_path):
     assert lsh == exact
     # every planted twin qualifies
     assert {(i, i + _EMB_TWIN_OFFSET) for i in range(40)} <= exact
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_knn_graph_materialized_flag_is_result_invisible(spark):
+    from openmrs_patient_migration_script_spark.operators.similarity import (
+        cosine_pairs_lsh,
+        knn_graph,
+    )
+
+    import math
+
+    vecs = [
+        (i, [math.cos(i * 0.7 + d) for d in range(8)]) for i in range(12)
+    ]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    cand = cosine_pairs_lsh(
+        emb, threshold=-1.0, num_planes=2, num_tables=4, hash_mode="md5"
+    ).localCheckpoint(eager=True)
+    a = _rows(knn_graph(emb, k=3, candidates=cand))
+    b = _rows(knn_graph(emb, k=3, candidates=cand, candidates_materialized=True))
+    assert a == b and len(a) > 0
+
+
+def test_mmr_candidates_passthrough_is_result_invisible(spark):
+    """The r11 shared-scoring-pass rewrite of `sim_mmr_diversity`:
+    mmr_rerank fed a precomputed (checkpointed) exact candidate table
+    must equal mmr_rerank computing the same table internally."""
+    import math
+
+    from openmrs_patient_migration_script_spark.operators.similarity import (
+        cosine_topk_vectorized,
+        mmr_rerank,
+    )
+
+    vecs = [
+        (i, [math.cos(i * 0.9 + d * 0.3) for d in range(6)])
+        for i in range(30)
+    ]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    queries = emb.filter(F.col("vec_id") % 9 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cands = cosine_topk_vectorized(emb, queries, k=8).localCheckpoint(
+        eager=True
+    )
+    a = _rows(mmr_rerank(emb, queries, k_candidates=8, k_select=4))
+    b = _rows(
+        mmr_rerank(emb, queries, k_candidates=8, k_select=4, candidates=cands)
+    )
+    assert a == b and len(a) > 0
+
+
+def test_normalized_binding_matches_naive_division(spark):
+    """The r11 one-element-binding rewrite of `normalized()`: binding the
+    norm once per row must emit the exact doubles of the naive
+    transform(v, x -> x / n) form (same IEEE divisions, only the
+    evaluation count changes)."""
+    from openmrs_patient_migration_script_spark.operators.similarity import (
+        _as_double,
+        normalized,
+    )
+
+    vecs = [
+        (i, [((i * 7 + d * 3) % 13) - 6.0 for d in range(16)])
+        for i in range(1, 200)
+    ]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    v = _as_double(F.col("embedding"))
+    n = F.sqrt(
+        F.aggregate(
+            F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x
+        )
+    )
+    naive = df.select("vec_id", F.transform(v, lambda x: x / n).alias("nv"))
+    opt = df.select("vec_id", normalized(F.col("embedding")).alias("nv"))
+    assert _rows(opt) == _rows(naive)
+
+
+def test_normalized_binding_survives_optimizer(spark):
+    """Plan pin (r11 ADVICE): the optimized plan must still carry the
+    one-element-array binding wrapper around the division lambda — if a
+    Catalyst rule ever collapses element_at(transform(array(n), ...), 1)
+    back into an inline lambda, the O(d) norm fold re-inlines into the
+    per-element body (O(d²) per row) with no value change."""
+    from openmrs_patient_migration_script_spark.operators.similarity import (
+        normalized,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 2.0])], "id long, v array<double>"
+    )
+    plan = (
+        df.select(normalized(F.col("v")).alias("nv"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "element_at(transform(array(" in plan, plan

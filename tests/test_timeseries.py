@@ -6,6 +6,8 @@ from datetime import datetime
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from openmrs_patient_migration_script_spark.operators.timeseries import resample_ffill
 
 
@@ -478,3 +480,175 @@ def test_cross_corr_planted_lead_lag(spark, tmp_path):
     for lag, r in out.items():
         if lag != 2 and r.n_days >= 3:
             assert r.xcorr < 1.0, f"lag {lag} unexpectedly perfect"
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_interpolate_segment_binding_matches_inline_form(spark):
+    """The r11 hoist of interpolate_linear's per-segment length: grid
+    values must equal the pre-hoist inline-size(sequence(...)) form
+    bit-for-bit (identical int64 numerators, one double division)."""
+    from pyspark.sql import functions as F2
+
+    from openmrs_patient_migration_script_spark.operators.timeseries import (
+        interpolate_linear,
+    )
+
+    rows = []
+    for key in (1, 2):
+        for h, val in [(0, 10.0), (5, 4.5), (6, -2.25), (13, 100.0)]:
+            rows.append((key, f"2024-03-01 0{h}:17:00" if h < 10
+                         else f"2024-03-01 {h}:17:00", val + key))
+    df = spark.createDataFrame(rows, "user_id long, ts string, value double")
+    df = df.select("user_id", F2.to_timestamp("ts").alias("ts"), "value")
+    got = interpolate_linear(df, "user_id", "ts", "value")
+    interval = "interval 1 hour"
+    obs = df.groupBy(
+        F2.col("user_id").alias("key"),
+        F2.date_trunc("hour", F2.col("ts")).alias("bucket"),
+    ).agg(
+        F2.sum(F2.round(F2.col("value") * F2.lit(1_000_000)).cast("long")).alias("vs")
+    )
+    per_key = obs.groupBy("key").agg(
+        F2.sort_array(F2.collect_list(F2.struct("bucket", "vs"))).alias("obs_arr")
+    )
+    inline = F2.expr(
+        f"""
+        flatten(transform(obs_arr, (o, i) ->
+          CASE WHEN try_element_at(obs_arr, i + 2) IS NULL THEN
+            array(struct(o.bucket AS bucket,
+                         cast(o.vs AS double) / 1000000.0D AS value_interp,
+                         true AS observed))
+          ELSE
+            transform(
+              sequence(o.bucket,
+                       try_element_at(obs_arr, i + 2).bucket - {interval},
+                       {interval}),
+              (b, j) -> struct(
+                b AS bucket,
+                cast(o.vs * (size(sequence(o.bucket,
+                                           try_element_at(obs_arr, i + 2).bucket,
+                                           {interval})) - 1 - j)
+                     + try_element_at(obs_arr, i + 2).vs * j AS double)
+                / (cast(size(sequence(o.bucket,
+                                      try_element_at(obs_arr, i + 2).bucket,
+                                      {interval})) - 1 AS double) * 1000000.0D)
+                AS value_interp,
+                j = 0 AS observed))
+          END))
+        """
+    )
+    expected = per_key.select("key", F2.explode(inline).alias("g")).select(
+        "key", "g.bucket", "g.value_interp", "g.observed"
+    )
+    assert _rows(got) == _rows(expected)
+    # the 06:17 -> 13:17 gap spans 7 buckets: interpolation really ramps
+    interp_vals = [r for r in got.collect() if not r["observed"]]
+    assert len(interp_vals) > 0
+
+
+def test_chunked_history_fold_matches_monolithic_fold(spark):
+    """The r11 chunked rewrite of the sequential history folds: folding
+    in fixed-size chunks with carried state must emit the exact values
+    (and order) of the monolithic aggregate — across chunk boundaries,
+    with a partial final chunk, and through the NULL-seeded first step.
+    Exercised with chunk=7 (many boundaries) and the ewma step."""
+    from openmrs_patient_migration_script_spark.operators.timeseries import (
+        _chunked_history_fold,
+    )
+
+    a = 0.5
+    n = 39  # 5 full chunks of 7 + a partial chunk of 4
+    df = spark.range(1, n + 1).select(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col("id").alias("o"),
+                    ((F.col("id") * 13 % 29) / 3.0).alias("v"),
+                )
+            )
+        ).alias("seq")
+    )
+
+    def step(acc, x):
+        nxt = F.when(acc["prev"].isNull(), x["v"]).otherwise(
+            F.lit(a) * x["v"] + F.lit(1.0 - a) * acc["prev"]
+        )
+        return F.struct(
+            F.concat(acc["arr"], F.array(nxt)).alias("arr"),
+            nxt.alias("prev"),
+        )
+
+    mono = F.aggregate(
+        F.col("seq"),
+        F.struct(
+            F.array().cast("array<double>").alias("arr"),
+            F.lit(None).cast("double").alias("prev"),
+        ),
+        step,
+        lambda acc: acc["arr"],
+    )
+    chunked = _chunked_history_fold(
+        F.col("seq"),
+        [("prev", F.lit(None).cast("double"))],
+        step,
+        "double",
+        chunk=7,
+    )
+    row = df.select(mono.alias("m"), chunked.alias("c")).collect()[0]
+    assert row["m"] == row["c"] and len(row["m"]) == n
+
+
+def test_chunked_fold_operators_cross_default_chunk_boundary(spark):
+    """Operator-level pin: a key longer than the default 512-chunk must
+    still satisfy the recurrences exactly (spot-checked against a pure
+    Python replay of ewma and cusum)."""
+    from openmrs_patient_migration_script_spark.operators.timeseries import (
+        cusum,
+        ewma,
+    )
+
+    n = 1200
+    vals = [((i * 13) % 29) / 3.0 for i in range(1, n + 1)]
+    df = spark.createDataFrame(
+        [(1, i + 1, v) for i, v in enumerate(vals)], "k long, o long, v double"
+    )
+    got = {r["o"]: r["ewma"] for r in ewma(df, "k", ["o"], "v").collect()}
+    s = None
+    for i, v in enumerate(vals):
+        s = v if s is None else 0.5 * v + 0.5 * s
+        assert got[i + 1] == s  # bit-exact: same IEEE op order
+    got_c = {
+        r["o"]: (r["cusum_hi"], r["cusum_lo"])
+        for r in cusum(
+            df, "k", ["o"], "v", target=4.0, slack=0.5, threshold=9.0
+        ).collect()
+    }
+    sh = sl = 0
+    for i, v in enumerate(vals):
+        vs = round(v * 1_000_000)
+        sh = max(0, sh + (vs - 4_500_000))
+        sl = max(0, sl + (3_500_000 - vs))
+        assert got_c[i + 1] == (sh / 1e6, sl / 1e6)
+
+
+def test_interpolate_segment_binding_survives_optimizer(spark):
+    """Plan pin (r11 ADVICE): interpolate_linear's per-segment length
+    binding must keep inline `size(sequence(` occurrences at <= 3 in the
+    optimized plan (one once-per-segment binding + the two-part
+    max_buckets guard — the r11 fix took the TWO per-bucket inline
+    occurrences out of the inner lambda: the pre-fix plan carries 4, see
+    plans/r11/ts_interpolate_{before,after}.txt)."""
+    from openmrs_patient_migration_script_spark.operators.timeseries import (
+        interpolate_linear,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "2031-01-01 00:00:00", 1.0), (1, "2031-01-01 02:00:00", 5.0)],
+        "series_id long, ts string, val double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    out = interpolate_linear(df, "series_id", "ts", "val")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("size(sequence(") <= 3, plan

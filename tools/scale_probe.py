@@ -732,15 +732,11 @@ def _band_sweep_shape(docs, k: int):
     proportional to the data, matching every other similarity shape."""
     from openmrs_patient_migration_script_spark.operators.dedup import (
         _band_buckets,
+        md5_pair,
         minhash_signatures,
     )
 
     d_k = _tagged_doc_copies(docs, k)
-
-    md5_pair = lambda c: (  # noqa: E731
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long"),
-        F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long"),
-    )
     sig = minhash_signatures(
         d_k, "doc_id", "text", num_hashes=16, double_hash=md5_pair
     ).localCheckpoint(eager=True)
