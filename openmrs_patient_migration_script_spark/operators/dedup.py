@@ -28,7 +28,7 @@ def require_integral_key(df: DataFrame, key_col: str, op: str) -> None:
             f"{op}: key column {key_col!r} must be an integral type "
             f"(got {dtype}) — its value is packed into integer "
             "arithmetic, and a non-integral key would go NULL silently; "
-            "pre-map string keys to longs (etl.surrogate_keys)"
+            "pre-map string keys to longs (etl.assign_surrogate_keys)"
         )
 
 
@@ -346,105 +346,34 @@ def minhash_pairs_against(
     )
 
 
-def ngram_jaccard_pairs(
+def _shingle_overlap(
     df: DataFrame,
     key_col: str,
     text_col: str,
-    shingle_n: int = 3,
-    min_shared: int = 2,
-    max_df: int | None = 1000,
+    shingle_n: int,
+    min_shared: int,
+    max_df: int | None,
 ) -> DataFrame:
-    """X2b: n-gram Jaccard similarity via an inverted index — shuffle on the
-    shingle (the classic "document join" plan): explode distinct shingles,
-    self-join on shingle to count intersections, then compute union sizes
-    from per-doc counts. Integer outputs (inter/union) keep the oracle
-    byte-exact; jaccard = inter/union is derivable.
+    """The shingle inverted index both overlap operators share — shuffle
+    on the shingle (the classic "document join" plan): explode distinct
+    shingles, self-join on shingle to count intersections, attach both
+    per-doc sizes. Returns (key_lo, key_hi, inter_cnt, n_lo, n_hi), one
+    row per unordered pair (key_lo < key_hi) sharing >= ``min_shared``
+    shingles.
 
     Skew guard: a shingle appearing in ``df`` documents produces an O(df²)
     bucket in the self-join — one hot shingle (a boilerplate phrase) would
     dominate the whole job. ``max_df`` drops shingles whose document
     frequency exceeds the cap before the join (standard prefix-filtering:
-    ubiquitous shingles carry ~no Jaccard signal anyway). Note this makes
-    ``inter_cnt`` a lower bound when the cap fires; union sizes stay exact.
+    ubiquitous shingles carry ~no overlap signal anyway). This makes
+    ``inter_cnt`` a lower bound when the cap fires; sizes stay exact.
 
-    The exploded inverted index is localCheckpointed: four plan branches
-    consume it (sizes, doc-freq, both join sides) — without it the
-    shingle explode runs four times.
-    """
-    # per-doc distinct-shingle counts are ROW-LOCAL (size of the distinct
-    # shingle array) — computing them as a groupBy over the exploded index
-    # (as r2 did) pays a full shuffle + hash agg for numbers every row
-    # already knows; the recomputed shingle HOF is cheaper than the
-    # exchange and drops one consumer off the checkpointed index
-    sizes = df.select(
-        F.col(key_col).alias("key"),
-        F.size(F.array_distinct(_shingles(F.col(text_col), shingle_n)))
-        .cast("long")
-        .alias("n_sh"),
-    )
-    sh = df.select(
-        F.col(key_col).alias("key"),
-        F.explode(F.array_distinct(_shingles(F.col(text_col), shingle_n))).alias("shingle"),
-    )
-    sh = sh.localCheckpoint(eager=True)
-    if max_df is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        sh = (
-            sh.join(dfreq.filter(F.col("_df") <= max_df), "shingle", "inner")
-            .drop("_df")
-        )
-    a = sh.select(F.col("key").alias("key_a"), "shingle")
-    b = sh.select(F.col("key").alias("key_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("key_a") < F.col("key_b"))
-        .groupBy("key_a", "key_b")
-        .agg(F.count("*").alias("inter_cnt"))
-        .filter(F.col("inter_cnt") >= min_shared)
-    )
-    sa = sizes.select(F.col("key").alias("key_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("key").alias("key_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "key_a")
-        .join(sb, "key_b")
-        .select(
-            "key_a",
-            "key_b",
-            "inter_cnt",
-            (F.col("n_a") + F.col("n_b") - F.col("inter_cnt")).alias("union_cnt"),
-        )
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    min_shared: int = 2,
-    max_df: int | None = 1000,
-) -> DataFrame:
-    """X3d: ASYMMETRIC shingle containment — (key_a, key_b, inter_cnt,
-    n_a) for every ordered candidate pair, where ``inter_cnt / n_a`` is
-    the fraction of a's shingles that also appear in b. Jaccard misses
-    the quote-inclusion case that matters most for training-data dedup:
-    a short document wholly embedded in a long one has tiny
-    union-normalized similarity but containment ≈ 1. This is the
-    Broder resemblance/containment split — same inverted index, the
-    normalizer is the CONTAINED side's size instead of the union.
-
-    Plan shape is `ngram_jaccard_pairs`' document join (shuffle on the
-    shingle, ``max_df`` prefix-filter kills O(df²) hot-shingle buckets);
-    the two orientations of each unordered pair are emitted by a
-    row-local array explode AFTER the pair agg — both sizes are already
-    on the row, so direction costs zero extra shuffles. Integer outputs
-    keep the oracle byte-exact; callers threshold ``inter_cnt * 100 >=
-    pct * n_a`` in integers.
-
-    Caveat shared with the Jaccard form: when the ``max_df`` cap fires,
-    ``inter_cnt`` (and so containment) is a lower bound; sizes stay
-    exact.
-    """
+    The exploded index is localCheckpointed for its consumers (doc-freq
+    and both join sides): without it the shingle explode runs once per
+    consumer — the multi-consumer rule the stream operators below cite."""
+    # per-doc sizes are ROW-LOCAL (size of the distinct shingle array):
+    # recomputing the shingle HOF is cheaper than a shuffle + hash agg
+    # over the exploded index, and keeps one consumer off the checkpoint
     sizes = df.select(
         F.col(key_col).alias("key"),
         F.size(F.array_distinct(_shingles(F.col(text_col), shingle_n)))
@@ -474,7 +403,67 @@ def containment_pairs(
     )
     slo = sizes.select(F.col("key").alias("key_lo"), F.col("n_sh").alias("n_lo"))
     shi = sizes.select(F.col("key").alias("key_hi"), F.col("n_sh").alias("n_hi"))
-    both = inter.join(slo, "key_lo").join(shi, "key_hi")
+    return inter.join(slo, "key_lo").join(shi, "key_hi")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    key_col: str,
+    text_col: str,
+    shingle_n: int = 3,
+    min_shared: int = 2,
+    max_df: int | None = 1000,
+) -> DataFrame:
+    """X2b: n-gram Jaccard similarity via an inverted index — shuffle on the
+    shingle (the classic "document join" plan): explode distinct shingles,
+    self-join on shingle to count intersections, then compute union sizes
+    from per-doc counts. Integer outputs (inter/union) keep the oracle
+    byte-exact; jaccard = inter/union is derivable.
+
+    Skew guard: ``max_df`` drops shingles whose document frequency
+    exceeds the cap before the self-join (`_shingle_overlap`, which
+    also localCheckpoints the exploded index). This makes ``inter_cnt``
+    a lower bound when the cap fires; union sizes stay exact.
+    """
+    both = _shingle_overlap(df, key_col, text_col, shingle_n, min_shared, max_df)
+    return both.select(
+        F.col("key_lo").alias("key_a"),
+        F.col("key_hi").alias("key_b"),
+        "inter_cnt",
+        (F.col("n_lo") + F.col("n_hi") - F.col("inter_cnt")).alias("union_cnt"),
+    )
+
+
+def containment_pairs(
+    df: DataFrame,
+    key_col: str,
+    text_col: str,
+    shingle_n: int = 3,
+    min_shared: int = 2,
+    max_df: int | None = 1000,
+) -> DataFrame:
+    """X3d: ASYMMETRIC shingle containment — (key_a, key_b, inter_cnt,
+    n_a) for every ordered candidate pair, where ``inter_cnt / n_a`` is
+    the fraction of a's shingles that also appear in b. Jaccard misses
+    the quote-inclusion case that matters most for training-data dedup:
+    a short document wholly embedded in a long one has tiny
+    union-normalized similarity but containment ≈ 1. This is the
+    Broder resemblance/containment split — same inverted index, the
+    normalizer is the CONTAINED side's size instead of the union.
+
+    Plan shape is `_shingle_overlap`'s document join (shuffle on the
+    shingle, ``max_df`` prefix-filter kills O(df²) hot-shingle buckets);
+    the two orientations of each unordered pair are emitted by a
+    row-local array explode AFTER the pair agg — both sizes are already
+    on the row, so direction costs zero extra shuffles. Integer outputs
+    keep the oracle byte-exact; callers threshold ``inter_cnt * 100 >=
+    pct * n_a`` in integers.
+
+    Caveat shared with the Jaccard form: when the ``max_df`` cap fires,
+    ``inter_cnt`` (and so containment) is a lower bound; sizes stay
+    exact.
+    """
+    both = _shingle_overlap(df, key_col, text_col, shingle_n, min_shared, max_df)
     # row-local orientation fan-out: (lo contained-in hi) and (hi in lo)
     return both.select(
         F.explode(
@@ -620,6 +609,55 @@ def hamming_distance(a, b, bits: int = 32):
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _kgram_occurrences(
+    df: DataFrame,
+    key_col: str,
+    text_col: str,
+    k: int,
+    checkpoint_tokens: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The positional k-gram stream both span operators share, returning
+    ``(tokens, occurrences)``: ``tokens`` is (key, _t, n_tokens) with
+    empty tokens dropped, and ``occurrences`` is (key, n_tokens, start,
+    shingle), one row per 1-based k-gram start of every document with
+    at least ``k`` tokens. The explode is row-local.
+    ``checkpoint_tokens`` materializes ``tokens`` first, for a caller
+    that reads it again."""
+    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
+    tokens = df.select(
+        F.col(key_col).alias("key"),
+        toks.alias("_t"),
+        F.size(toks).cast("long").alias("n_tokens"),
+    )
+    if checkpoint_tokens:
+        tokens = tokens.localCheckpoint(eager=True)
+    occurrences = (
+        tokens.filter(F.col("n_tokens") >= k)
+        .select(
+            "key",
+            "n_tokens",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.col("n_tokens") - F.lit(k - 1)),
+                    lambda i: F.struct(
+                        i.cast("long").alias("start"),
+                        F.array_join(F.slice(F.col("_t"), i, k), " ").alias(
+                            "shingle"
+                        ),
+                    ),
+                )
+            ).alias("_s"),
+        )
+        .select(
+            "key",
+            "n_tokens",
+            F.col("_s.start").alias("start"),
+            F.col("_s.shingle").alias("shingle"),
+        )
+    )
+    return tokens, occurrences
+
+
 def repeated_span_stats(
     df: DataFrame,
     key_col: str = "doc_id",
@@ -659,31 +697,9 @@ def repeated_span_stats(
     The exploded occurrence stream is localCheckpointed: BOTH the
     document-frequency agg and the join-back consume it — without it
     the corpus scan + shingle explode run twice (the
-    `containment_pairs` rule).
+    `_shingle_overlap` rule).
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
-    base = df.select(
-        F.col(key_col).alias("key"),
-        toks.alias("_t"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    ).filter(F.col("n_tokens") >= span_tokens)
-    sh = base.select(
-        "key",
-        "n_tokens",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.col("n_tokens") - F.lit(span_tokens - 1)
-                ),
-                lambda i: F.struct(
-                    i.cast("long").alias("start"),
-                    F.array_join(
-                        F.slice(F.col("_t"), i, span_tokens), " "
-                    ).alias("shingle"),
-                ),
-            )
-        ).alias("_s"),
-    ).select("key", "n_tokens", F.col("_s.start").alias("start"), F.col("_s.shingle").alias("shingle"))
+    _, sh = _kgram_occurrences(df, key_col, text_col, span_tokens)
     sh = sh.localCheckpoint(eager=True)
     rep = (
         sh.groupBy("shingle")
@@ -770,7 +786,7 @@ def paragraph_dedup(
     EVERY row — ``kept`` would be NULL everywhere and all paragraphs
     silently dropped. Fail loud instead (the bloom_semi_join guard
     pattern); callers with string keys pre-map them to longs
-    (`etl.surrogate_keys` is the standard bridge).
+    (`etl.assign_surrogate_keys` is the standard bridge).
     """
     require_integral_key(df, key_col, "paragraph_dedup")
     toks = F.split(F.col(text_col), " ")
@@ -801,7 +817,7 @@ def paragraph_dedup(
     )
     # both the first-occurrence agg and the join-back consume `paras`;
     # without this the corpus scan + explode run twice (the
-    # `containment_pairs`/`repeated_span_stats` multi-consumer rule)
+    # `_shingle_overlap`/`repeated_span_stats` multi-consumer rule)
     paras = paras.localCheckpoint(eager=True)
     firsts = paras.groupBy("para").agg(F.min("occ").alias("first_occ"))
     tagged = paras.join(firsts, "para").withColumn(
@@ -1007,38 +1023,30 @@ def span_rewrite(
     set on (doc, pos) and ONE doc-keyed agg reassembles. Linear in
     occurrences — a shingle in M docs costs M rows, never M^2.
     The occurrence stream consumed by both the vocab agg and the
-    join-back is localCheckpointed (the `containment_pairs` rule)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
-    base = df.select(
-        F.col(key_col).alias("key"),
-        toks.alias("_t"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    ).localCheckpoint(eager=True)  # shingle stream + token stream + output spine
+    join-back is localCheckpointed (the `_shingle_overlap` rule).
+
+    Like `paragraph_dedup`, ``key_col`` must be an integral type (a
+    string key would turn every ``occ`` NULL and remove nothing), and a
+    document of ``occ_stride`` or more tokens fails the job in-plan
+    instead of aliasing its positions into the next key's range."""
+    require_integral_key(df, key_col, "span_rewrite")
     k = span_tokens
-    sh = (
-        base.filter(F.col("n_tokens") >= k)
-        .select(
-            "key",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("n_tokens") - F.lit(k - 1)),
-                    lambda i: F.struct(
-                        i.cast("long").alias("start"),
-                        F.array_join(F.slice(F.col("_t"), i, k), " ").alias(
-                            "shingle"
-                        ),
-                    ),
-                )
-            ).alias("_s"),
-        )
-        .select(
-            "key",
-            F.col("_s.start").alias("start"),
-            F.col("_s.shingle").alias("shingle"),
-            (F.col("key") * F.lit(occ_stride) + F.col("_s.start"))
-            .cast("long")
-            .alias("occ"),
-        )
+    # base feeds the shingle stream, the token stream and the output spine
+    base, sh = _kgram_occurrences(df, key_col, text_col, k, checkpoint_tokens=True)
+    guard = F.assert_true(
+        F.col("n_tokens") < occ_stride,
+        F.lit(f"span_rewrite: document has >= occ_stride={occ_stride} tokens"),
+    )
+    # assert_true is NULL whenever the check passes: the filter keeps
+    # every row and only fails the job loudly on a violation (the
+    # paragraph_dedup guard pattern)
+    sh = sh.where(guard.isNull()).select(
+        "key",
+        "start",
+        "shingle",
+        (F.col("key") * F.lit(occ_stride) + F.col("start"))
+        .cast("long")
+        .alias("occ"),
     )
     sh = sh.localCheckpoint(eager=True)
     rep = (

@@ -373,6 +373,55 @@ def _star_components(sym: DataFrame, max_iter: int, contract: bool) -> DataFrame
     return _with_centers(labels, sym)
 
 
+def _closed_triangles(
+    e: DataFrame, bc, checkpoint_degrees: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The triangle family's one degree-oriented wedge join over a
+    canonical simple graph ``e`` (u < v), returning ``(closed, deg)``:
+    one row per triangle with its three corners (u, mid, w), and the
+    (n, d) degree table.
+
+    Every edge is oriented from its lower-(degree, id) endpoint to the
+    higher, so each node's out-neighborhood is O(sqrt(|E|)) on any graph
+    (arboricity bound) and the wedge join's fan-out is bounded by that,
+    not by the hottest node's full degree. Wedges (u→mid→w) equi-join
+    back to oriented edges (u→w); each triangle has exactly one
+    orientation-consistent wedge, so no dedup is needed. ``bc`` is the
+    caller's broadcast gate, applied to every bounded join side.
+
+    The orientation is materialized once for its three join consumers
+    (the wedge stream side and two builds): Spark 4.1 never
+    ReuseExchanges the chained broadcast builds, so an un-checkpointed
+    orientation replays sym -> deg -> filter once per build.
+    ``checkpoint_degrees`` also materializes ``deg``, for a caller that
+    joins it again."""
+    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    deg = sym.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed("u", "n")
+    if checkpoint_degrees:
+        deg = deg.localCheckpoint(eager=True)
+    # orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
+    oriented = (
+        sym.join(bc(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))), "u")
+        .join(bc(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))), "v")
+        .filter(
+            (F.col("du") < F.col("dv"))
+            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+        )
+        .select("u", "v")
+        .localCheckpoint(eager=True)
+    )
+    wedges = oriented.alias("e1").join(
+        bc(oriented.alias("e2")), F.col("e1.v") == F.col("e2.u")
+    ).select(
+        F.col("e1.u").alias("u"), F.col("e1.v").alias("mid"),
+        F.col("e2.v").alias("w"),
+    )
+    closed = wedges.join(
+        bc(oriented.select(F.col("u"), F.col("v").alias("w"))), ["u", "w"]
+    )
+    return closed, deg
+
+
 def triangle_count(
     edges: DataFrame, src: str = "key_a", dst: str = "key_b"
 ) -> DataFrame:
@@ -381,15 +430,11 @@ def triangle_count(
     graph (triangle-rich blocks = near-clique duplicate groups that
     cluster cleanly; triangle-free sprawl = chained false positives).
 
-    Plan: the standard two-join MapReduce counting scheme, with the
-    degree orientation that makes it scale — every edge is oriented from
-    its lower-(degree, id) endpoint to the higher, so each node's
-    out-neighborhood is O(sqrt(|E|)) on any graph (arboricity bound) and
-    the wedge join's fan-out is bounded by that, not by the hottest
-    node's full degree. Wedges (u→v→w) equi-join back to oriented edges
-    (u→w); each triangle has exactly one orientation-consistent wedge, so
-    the count needs no dedup. Two shuffle joins + one global count; the
-    degree prepass is one groupBy.
+    Plan: the standard two-join MapReduce counting scheme with the
+    degree orientation that makes it scale (`_closed_triangles`: wedge
+    fan-out bounded by arboricity, exactly one orientation-consistent
+    wedge per triangle, so the count needs no dedup). Two shuffle joins
+    + one global count; the degree prepass is one groupBy.
     """
     # e feeds sym (itself consumed by deg and both orientation joins) and
     # oriented feeds THREE join sides — without checkpoints every consumer
@@ -406,25 +451,7 @@ def triangle_count(
         if broadcast_fits(e.count(), e, extra_bytes=8)
         else (lambda d: d)
     )
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed("u", "n")
-    # orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
-    oriented = (
-        sym.join(bc(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))), "u")
-        .join(bc(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))), "v")
-        .filter(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    wedges = oriented.alias("e1").join(
-        bc(oriented.alias("e2")), F.col("e1.v") == F.col("e2.u")
-    ).select(F.col("e1.u").alias("u"), F.col("e2.v").alias("w"))
-    closed = wedges.join(
-        bc(oriented.select(F.col("u"), F.col("v").alias("w"))), ["u", "w"]
-    )
+    closed, _ = _closed_triangles(e, bc)
     return closed.agg(F.count("*").alias("n_triangles"))
 
 
@@ -916,11 +943,11 @@ def clustering_coefficient(
     neighbors share nothing) node by node, where the global count only
     averages the two stories.
 
-    Same degree-oriented wedge machinery as `triangle_count` (fan-out
-    bounded by arboricity, one orientation-consistent wedge per
-    triangle) with the wedge MIDPOINT carried through the closing join,
-    so each closed triangle explodes row-locally into its three corners
-    and per-node incidence is one hash agg. Degrees and incidences are
+    Same degree-oriented wedge join as `triangle_count`
+    (`_closed_triangles`: fan-out bounded by arboricity, one
+    orientation-consistent wedge per triangle): each closed triangle
+    explodes row-locally into its three corners (u, mid, w) and per-node
+    incidence is one hash agg. Degrees and incidences are
     exact integers; the coefficient is one 6dp-rounded double division.
     Nodes with degree < 2 drop (undefined); triangle-free nodes emit 0.
     """
@@ -936,30 +963,7 @@ def clustering_coefficient(
         if broadcast_fits(e.count(), e, extra_bytes=8)
         else (lambda d: d)
     )
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = (
-        sym.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed("u", "n")
-        .localCheckpoint(eager=True)
-    )
-    oriented = (
-        sym.join(bc(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))), "u")
-        .join(bc(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))), "v")
-        .filter(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    wedges = oriented.alias("e1").join(
-        bc(oriented.alias("e2")), F.col("e1.v") == F.col("e2.u")
-    ).select(
-        F.col("e1.u").alias("u"), F.col("e1.v").alias("mid"),
-        F.col("e2.v").alias("w"),
-    )
-    closed = wedges.join(
-        bc(oriented.select(F.col("u"), F.col("v").alias("w"))), ["u", "w"]
-    )
+    closed, deg = _closed_triangles(e, bc, checkpoint_degrees=True)
     incid = (
         closed.select(
             F.explode(F.array(F.col("u"), F.col("mid"), F.col("w"))).alias("n")
@@ -1541,7 +1545,7 @@ def edge_support(
     comparator hit fabricates — the first pairs a human reviews before
     trusting a merge.
 
-    Plan: `triangle_count`'s degree-oriented wedge machinery with each
+    Plan: the degree-oriented wedge join (`_closed_triangles`) with each
     closed triangle EXPLODED row-locally to its three value-canonical
     edges and counted per edge — support-0 edges restored by a left join
     back to the edge list. The orientation bounds every node's wedge
@@ -1595,48 +1599,21 @@ def edge_support(
         n_edges, e, extra_bytes=8
     )
     bc = F.broadcast if under_gate else (lambda d: d)
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed("u", "n")
-    oriented = (
-        sym.join(bc(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))), "u")
-        .join(bc(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))), "v")
-        .filter(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
-    )
-    # materialize the orientation ONCE for its three join consumers (the
-    # wedge stream side + two broadcast builds). In the shuffle regime
-    # this was always the triangle-family rule; r12-opt extends it to the
-    # broadcast regime too: Spark 4.1 measurably never ReuseExchanges the
-    # chained broadcast builds, so an un-checkpointed oriented replays the
-    # full sym->deg->filter pipeline (with its own nested deg broadcast
-    # builds) once per build — 2 extra map passes over the edge list per
-    # support pass at cluster scale, for the price of one checkpoint
-    # action the gate regime now shares with the shuffle regime.
-    oriented = oriented.localCheckpoint(eager=True)
-    wedges = oriented.alias("e1").join(
-        bc(oriented.alias("e2")), F.col("e1.v") == F.col("e2.u")
-    ).select(
-        F.col("e1.u").alias("a"), F.col("e1.v").alias("b"),
-        F.col("e2.v").alias("c"),
-    )
-    closed = wedges.join(
-        bc(oriented.select(F.col("u").alias("a"), F.col("v").alias("c"))),
-        ["a", "c"],
-    )
+    closed, _ = _closed_triangles(e, bc)
     tri_edges = closed.select(
         F.explode(
             F.array(
                 F.struct(
-                    F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+                    F.least("u", "mid").alias("u"),
+                    F.greatest("u", "mid").alias("v"),
                 ),
                 F.struct(
-                    F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")
+                    F.least("mid", "w").alias("u"),
+                    F.greatest("mid", "w").alias("v"),
                 ),
                 F.struct(
-                    F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
+                    F.least("u", "w").alias("u"),
+                    F.greatest("u", "w").alias("v"),
                 ),
             )
         ).alias("_e")

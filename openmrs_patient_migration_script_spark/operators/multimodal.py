@@ -101,26 +101,8 @@ def _decode_wav(content: bytes) -> dict:
 
 
 def _decode_bmp(content: bytes) -> dict:
-    import numpy as np
-
-    data_offset = int.from_bytes(content[10:14], "little")
-    width = int.from_bytes(content[18:22], "little", signed=True)
-    height_raw = int.from_bytes(content[22:26], "little", signed=True)
-    bpp = int.from_bytes(content[28:30], "little")
-    compression = int.from_bytes(content[30:34], "little")
-    if compression != 0 or bpp not in (24, 32):
-        raise NotImplementedError(
-            f"only uncompressed 24/32-bpp BMP (got bpp={bpp}, "
-            f"compression={compression})"
-        )
-    height = abs(height_raw)
-    bytes_pp = bpp // 8
-    stride = ((width * bytes_pp + 3) // 4) * 4
-    px = np.frombuffer(
-        content, dtype=np.uint8, count=stride * height, offset=data_offset
-    ).reshape(height, stride)[:, : width * bytes_pp]
-    if bpp == 32:  # drop the alpha channel from the intensity mean
-        px = px.reshape(height, width, 4)[:, :, :3]
+    px = _bmp_pixels(content)
+    height, width = px.shape[:2]
     return {
         "width": width,
         "height": height,
@@ -421,8 +403,9 @@ _PHASH_SCHEMA = StructType(
 
 
 def _bmp_pixels(content: bytes):
-    """Decoded pixel array (H x W x C uint8) of an uncompressed 24/32-bpp
-    BMP — the pixel-level sibling of _decode_bmp's summary dict."""
+    """Decoded pixel array (H x W x 3 uint8, alpha dropped) of an
+    uncompressed 24/32-bpp BMP — the one BMP header parse, which
+    _decode_bmp summarizes."""
     import numpy as np
 
     data_offset = int.from_bytes(content[10:14], "little")

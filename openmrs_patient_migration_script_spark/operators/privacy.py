@@ -431,6 +431,38 @@ def dp_noisy_mean(
     )
 
 
+def _grid_counts(
+    df: DataFrame,
+    value_cents: F.Column,
+    lo_cents: int,
+    width_cents: int,
+    n_buckets: int,
+) -> DataFrame:
+    """(bucket, _c) over the FULL fixed grid of ``n_buckets`` buckets of
+    ``width_cents`` from ``lo_cents``: values clamp into the grid (one
+    record moves exactly one count by one), ``_c`` is NULL for an empty
+    bucket. One hash agg over the clamped bucket id (the shuffle carries
+    at most ``n_buckets`` rows), then a grid left-join (both sides
+    bucket-sized). Bucketing uses floor(double) division — exact below
+    2^53 cents (~$90T), asserted nowhere because the clamp bounds the
+    operand by construction."""
+    hi = lo_cents + width_cents * n_buckets - 1
+    x = F.least(
+        F.greatest(value_cents.cast("long"), F.lit(lo_cents).cast("long")),
+        F.lit(hi).cast("long"),
+    )
+    bucket = F.floor((x - F.lit(lo_cents)) / F.lit(width_cents)).cast("long")
+    counts = (
+        df.select(bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("_c"))
+    )
+    grid = df.sparkSession.range(n_buckets).select(
+        F.col("id").cast("long").alias("bucket")
+    )
+    return grid.join(counts, "bucket", "left")
+
+
 def dp_histogram(
     df: DataFrame,
     value_cents,
@@ -459,31 +491,14 @@ def dp_histogram(
     one count-release budget, not n_buckets of them. Rotate the salt
     only when a new budget is spent.
 
-    Plan: one hash agg over the clamped bucket id (the shuffle carries
-    at most ``n_buckets`` rows), a grid left-join (both sides
-    bucket-sized), row-local addressed noise. Bucketing uses
-    floor(double) division — exact below 2^53 cents (~$90T), asserted
-    nowhere because the clamp bounds the operand by construction.
+    Plan: the clamped grid counts (`_grid_counts`: one bucket-sized
+    hash agg and a grid left-join), then row-local addressed noise.
     Returns (bucket, bin_lo_cents, noisy_count) — n_buckets rows
     always, even on an empty input (a pure-noise release is the
     correct DP answer for empty data)."""
-    hi = lo_cents + width_cents * n_buckets - 1
-    x = F.least(
-        F.greatest(value_cents.cast("long"), F.lit(lo_cents).cast("long")),
-        F.lit(hi).cast("long"),
-    )
-    bucket = F.floor((x - F.lit(lo_cents)) / F.lit(width_cents)).cast("long")
-    counts = (
-        df.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-    )
-    grid = df.sparkSession.range(n_buckets).select(
-        F.col("id").cast("long").alias("bucket")
-    )
     noise = _binomial_noise(_dp_key_str(["bucket"]), salt, repeats)
     return (
-        grid.join(counts, "bucket", "left")
+        _grid_counts(df, value_cents, lo_cents, width_cents, n_buckets)
         .select(
             "bucket",
             (F.lit(lo_cents) + F.col("bucket") * F.lit(width_cents))
@@ -541,27 +556,13 @@ def dp_quantile(
     percentile."""
     from pyspark.sql.window import Window as W
 
-    hi = lo_cents + width_cents * n_buckets - 1
-    x = F.least(
-        F.greatest(value_cents.cast("long"), F.lit(lo_cents).cast("long")),
-        F.lit(hi).cast("long"),
-    )
-    bucket = F.floor((x - F.lit(lo_cents)) / F.lit(width_cents)).cast("long")
-    counts = (
-        df.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-    )
-    grid = df.sparkSession.range(n_buckets).select(
-        F.col("id").cast("long").alias("bucket")
-    )
     wcum = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
     wall = W.orderBy("bucket").rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
     )
     dec = "decimal(38,0)"
     base = (
-        grid.join(counts, "bucket", "left")
+        _grid_counts(df, value_cents, lo_cents, width_cents, n_buckets)
         .select(
             "bucket", F.coalesce(F.col("_c"), F.lit(0)).cast("long").alias("c")
         )

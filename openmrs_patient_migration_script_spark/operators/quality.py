@@ -183,6 +183,43 @@ def incremental_extract(
     )
 
 
+def _two_period_bins(
+    df: DataFrame,
+    value_col: str,
+    ref_pred: Column,
+    lo: float,
+    width: float,
+    n_bins: int,
+) -> DataFrame:
+    """(bin, c_ref, c_cur) over EVERY bin of the fixed domain
+    ``-1..n_bins`` (underflow + overflow bins clamp the value), wholly
+    empty bins included with zero counts. One conditional-aggregation
+    pass counts both periods (the A8 FILTER shape — no second scan for
+    the second period); the domain is a tiny generated frame
+    (n_bins + 2 rows) left-joined against the counts."""
+    bin_col = F.least(
+        F.greatest(
+            F.floor((F.col(value_col) - lo) / width).cast("long"), F.lit(-1)
+        ),
+        F.lit(n_bins).cast("long"),
+    )
+    binned = df.select(bin_col.alias("bin"), ref_pred.alias("is_ref"))
+    g = binned.groupBy("bin").agg(
+        F.count(F.when(F.col("is_ref"), 1)).alias("c_ref"),
+        F.count(F.when(~F.col("is_ref"), 1)).alias("c_cur"),
+    )
+    domain = df.sparkSession.range(1).select(
+        F.explode(
+            F.sequence(F.lit(-1).cast("long"), F.lit(n_bins).cast("long"))
+        ).alias("bin")
+    )
+    return domain.join(g, "bin", "left").select(
+        "bin",
+        F.coalesce(F.col("c_ref"), F.lit(0)).cast("long").alias("c_ref"),
+        F.coalesce(F.col("c_cur"), F.lit(0)).cast("long").alias("c_cur"),
+    )
+
+
 def distribution_psi(
     df: DataFrame,
     value_col: str,
@@ -198,43 +235,18 @@ def distribution_psi(
     reading (<0.1 stable, 0.1-0.25 drifting, >0.25 shifted).
 
     One conditional-aggregation pass computes both periods' bin counts
-    (the A8 FILTER shape — no second scan for the second period); bin
-    proportions are Laplace-smoothed by +0.5 per bin over a fixed
-    ``n_bins + 2`` denominator (underflow + overflow bins) so empty bins
-    never hit ln(0). Every bin of the fixed domain ``-1..n_bins`` is
-    emitted — including wholly-empty ones: with smoothing, an empty bin
-    still contributes a nonzero psi_term whenever t_ref != t_cur
-    (p = 0.5/(t_ref + 0.5·(n_bins+2)) differs from the q analogue), so
-    dropping unoccupied bins would understate the summed PSI (round-3
-    advisor finding). The domain is a tiny generated frame (n_bins + 2
-    rows) left-joined against the counts — no extra scan of the data.
-    Totals come back as a one-row broadcast (the scalar-subquery shape
-    `dq_freshness` uses); the PSI term itself is row-local arithmetic
-    over the tiny aggregated frame."""
-    bin_col = F.least(
-        F.greatest(
-            F.floor((F.col(value_col) - lo) / width).cast("long"), F.lit(-1)
-        ),
-        F.lit(n_bins).cast("long"),
-    )
-    binned = df.select(bin_col.alias("bin"), ref_pred.alias("is_ref"))
-    g = binned.groupBy("bin").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("c_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("c_cur"),
-    )
-    domain = df.sparkSession.range(1).select(
-        F.explode(F.sequence(F.lit(-1).cast("long"), F.lit(n_bins).cast("long"))).alias(
-            "bin"
-        )
-    )
-    full = (
-        domain.join(g, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce(F.col("c_ref"), F.lit(0)).alias("c_ref"),
-            F.coalesce(F.col("c_cur"), F.lit(0)).alias("c_cur"),
-        )
-    )
+    (`_two_period_bins`); bin proportions are Laplace-smoothed by +0.5
+    per bin over a fixed ``n_bins + 2`` denominator (underflow +
+    overflow bins) so empty bins never hit ln(0). Every bin of the fixed
+    domain ``-1..n_bins`` is emitted — including wholly-empty ones: with
+    smoothing, an empty bin still contributes a nonzero psi_term
+    whenever t_ref != t_cur (p = 0.5/(t_ref + 0.5·(n_bins+2)) differs
+    from the q analogue), so dropping unoccupied bins would understate
+    the summed PSI (round-3 advisor finding). Totals come back as a
+    one-row broadcast (the scalar-subquery shape `dq_freshness` uses);
+    the PSI term itself is row-local arithmetic over the tiny aggregated
+    frame."""
+    full = _two_period_bins(df, value_col, ref_pred, lo, width, n_bins)
     totals = full.agg(
         F.sum("c_ref").alias("t_ref"), F.sum("c_cur").alias("t_cur")
     )
@@ -685,33 +697,11 @@ def ks_drift(
     n_bins+2 count rows; the cumulative window orders those BOUNDED
     domain rows only (metadata, not data — the `events_cumulative_users`
     rule), totals broadcast back as a one-row frame."""
-    bin_col = F.least(
-        F.greatest(
-            F.floor((F.col(value_col) - lo) / width).cast("long"), F.lit(-1)
-        ),
-        F.lit(n_bins).cast("long"),
-    )
-    binned = df.select(bin_col.alias("bin"), ref_pred.alias("is_ref"))
-    g = binned.groupBy("bin").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("c_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("c_cur"),
-    )
-    domain = df.sparkSession.range(1).select(
-        F.explode(
-            F.sequence(F.lit(-1).cast("long"), F.lit(n_bins).cast("long"))
-        ).alias("bin")
-    )
-    full = (
-        domain.join(g, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce(F.col("c_ref"), F.lit(0)).cast("long").alias("c_ref"),
-            F.coalesce(F.col("c_cur"), F.lit(0)).cast("long").alias("c_cur"),
-        )
-        # feeds the cumulative window AND the totals: checkpoint the
-        # n_bins+2 bounded rows so the data-sized count scan runs once
-        .localCheckpoint(eager=True)
-    )
+    # feeds the cumulative window AND the totals: checkpoint the
+    # n_bins+2 bounded rows so the data-sized count scan runs once
+    full = _two_period_bins(
+        df, value_col, ref_pred, lo, width, n_bins
+    ).localCheckpoint(eager=True)
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = full.select(
         "bin",

@@ -858,6 +858,32 @@ def cosine_pairs_lsh(
     return exact_rerank_pairs(corpus, cand, threshold, id_col, vec_col)
 
 
+def _seed_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, n: int, op: str, what: str
+):
+    """The seeded quantizers' one deterministic sample: the ``n``
+    corpus vectors with the lowest ``hash_bucket(id)`` (ties by id),
+    collected to the driver as a float64 matrix. Reproducible across
+    runs and partitionings, unlike ``sample``/``limit`` on an unordered
+    frame. An empty corpus raises ``ValueError`` naming ``op``: there is
+    nothing to seed ``what`` from."""
+    import numpy as np
+
+    from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket
+
+    seeds = (
+        corpus.select(
+            id_col, vec_col, hash_bucket(F.col(id_col), 1_000_000).alias("_b")
+        )
+        .orderBy("_b", id_col)
+        .limit(n)
+        .collect()
+    )
+    if not seeds:
+        raise ValueError(f"{op}: empty corpus — cannot seed {what}")
+    return np.array([r[vec_col] for r in seeds], dtype=np.float64)
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -903,27 +929,14 @@ def ivf_topk(
         StructType,
     )
 
-    from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket
-
     if centroids is not None:
         # trained quantizer (kmeans_fit) — n_cells comes from the model
         cent = np.array(centroids, dtype=np.float64)
         n_cells = len(cent)
     else:
-        seeds = (
-            corpus.select(
-                id_col, vec_col, hash_bucket(F.col(id_col), 1_000_000).alias("_b")
-            )
-            .orderBy("_b", id_col)
-            .limit(n_cells)
-            .collect()
+        cent = _seed_sample(
+            corpus, id_col, vec_col, n_cells, "ivf_topk", "IVF centroids"
         )
-        if not seeds:
-            raise ValueError(
-                "ivf_topk: empty corpus — the IVF coarse quantizer cannot "
-                "seed centroids from zero vectors"
-            )
-        cent = np.array([r[vec_col] for r in seeds], dtype=np.float64)
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
 
     q_rows = queries.select(query_id_col, vec_col).collect()
@@ -1039,21 +1052,7 @@ def kmeans_fit(
         StructType,
     )
 
-    from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket
-
-    seeds = (
-        corpus.select(
-            id_col, vec_col, hash_bucket(F.col(id_col), 1_000_000).alias("_b")
-        )
-        .orderBy("_b", id_col)
-        .limit(n_cells)
-        .collect()
-    )
-    if not seeds:
-        raise ValueError(
-            "kmeans_fit: empty corpus — cannot seed centroids from zero vectors"
-        )
-    cent = np.array([r[vec_col] for r in seeds], dtype=np.float64)
+    cent = _seed_sample(corpus, id_col, vec_col, n_cells, "kmeans_fit", "centroids")
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
     dim = cent.shape[1]
 
@@ -1274,19 +1273,7 @@ def pq_topk(
         StructType,
     )
 
-    from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket
-
-    seeds = (
-        corpus.select(
-            id_col, vec_col, hash_bucket(F.col(id_col), 1_000_000).alias("_b")
-        )
-        .orderBy("_b", id_col)
-        .limit(n_codes)
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("pq_topk: empty corpus — cannot seed codebooks")
-    seed_mat = np.array([r[vec_col] for r in seeds], dtype=np.float64)
+    seed_mat = _seed_sample(corpus, id_col, vec_col, n_codes, "pq_topk", "codebooks")
     dim = seed_mat.shape[1]
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} must divide into {n_subspaces} subspaces")
@@ -1447,21 +1434,9 @@ def semantic_dedup(
         StructType,
     )
 
-    from openmrs_patient_migration_script_spark.operators.sampling import (
-        hash_bucket,
+    S = _seed_sample(
+        corpus, id_col, vec_col, n_clusters, "semantic_dedup", "clusters"
     )
-
-    seeds = (
-        corpus.select(
-            id_col, vec_col, hash_bucket(F.col(id_col), 1_000_000).alias("_b")
-        )
-        .orderBy("_b", id_col)
-        .limit(n_clusters)
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("semantic_dedup: empty corpus — cannot seed clusters")
-    S = np.array([r[vec_col] for r in seeds], dtype=np.float64)
     S = S / np.linalg.norm(S, axis=1, keepdims=True)
     t_int = int(round(threshold * 1e6))
     id_type = corpus.schema[id_col].dataType

@@ -683,6 +683,7 @@ def test_integral_key_guards_fail_loud_on_string_keys(spark):
 
     from openmrs_patient_migration_script_spark.operators.dedup import (
         paragraph_dedup,
+        span_rewrite,
     )
     from openmrs_patient_migration_script_spark.operators.sampling import (
         weighted_sample,
@@ -694,6 +695,8 @@ def test_integral_key_guards_fail_loud_on_string_keys(spark):
     )
     with pytest.raises(ValueError, match="integral"):
         paragraph_dedup(docs, key_col="doc_id")
+    with pytest.raises(ValueError, match="integral"):
+        span_rewrite(docs, key_col="doc_id")
     items = spark.createDataFrame([("k-1", 3), ("k-2", 5)], ["key", "w"])
     with pytest.raises(ValueError, match="integral"):
         weighted_sample(items, "key", F.col("w"), k=1)
@@ -1054,6 +1057,91 @@ def test_span_rewrite_excises_planted_shared_passage(spark):
     assert out[3] == (8, 0, "p q r s t u v w")
     assert out[4] == (2, 0, "tiny doc")
     assert out[5] == (6, 6, "")
+
+
+def test_span_rewrite_occ_stride_bound_fails_loud(spark):
+    """`span_rewrite` packs ``key * occ_stride + start``: a document of
+    ``occ_stride`` or more tokens would alias its positions into the
+    next key's range, so it fails the job instead; one token fewer
+    passes."""
+    from openmrs_patient_migration_script_spark.operators.dedup import (
+        span_rewrite,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g"), (2, "a b c d e f g")], "doc_id long, text string"
+    )
+    out = span_rewrite(df, "doc_id", "text", span_tokens=5, occ_stride=8)
+    assert {r["key"]: r["n_removed"] for r in out.collect()} == {1: 0, 2: 7}
+    with pytest.raises(Exception, match="occ_stride"):
+        span_rewrite(df, "doc_id", "text", span_tokens=5, occ_stride=7).collect()
+
+
+def test_triangle_family_counts_agree_with_brute_force(spark):
+    """`triangle_count`, `edge_support` and `clustering_coefficient` share
+    one wedge join: on a fixed graph (K4, a triangle sharing a K4 edge,
+    a 4-cycle, a pendant edge, plus a duplicate, a reversed duplicate and
+    a self-loop) 3 x the count, the summed edge support and the summed
+    per-node incidence all equal 3 x a brute-force Python count."""
+    from itertools import combinations
+
+    from openmrs_patient_migration_script_spark.operators.graph import (
+        clustering_coefficient,
+        edge_support,
+        triangle_count,
+    )
+
+    raw = [(a, b) for a, b in combinations(range(1, 5), 2)]
+    raw += [(1, 5), (2, 5), (10, 11), (11, 12), (12, 13), (13, 10), (13, 20)]
+    raw += [(2, 1), (1, 2), (7, 7)]
+    simple = {(min(a, b), max(a, b)) for a, b in raw if a != b}
+    nodes = sorted({n for e in simple for n in e})
+    brute = sum(
+        1
+        for a, b, c in combinations(nodes, 3)
+        if {(a, b), (a, c), (b, c)} <= simple
+    )
+    assert brute == 5  # four in K4, one through the shared edge (1, 2)
+    edges = spark.createDataFrame(raw, "key_a long, key_b long")
+    n_tri = triangle_count(edges).collect()[0]["n_triangles"]
+    support = sum(r["support"] for r in edge_support(edges).collect())
+    incid = sum(r["n_triangles"] for r in clustering_coefficient(edges).collect())
+    assert 3 * n_tri == support == incid == 3 * brute
+
+
+def test_jaccard_and_containment_agree_on_shared_overlap(spark):
+    """`ngram_jaccard_pairs` and `containment_pairs` read one inverted
+    index: every pair both report has the same ``inter_cnt``, the
+    containment sizes rebuild Jaccard's ``union_cnt = n_a + n_b -
+    inter_cnt``, and the reported pairs are the same unordered set."""
+    from openmrs_patient_migration_script_spark.operators.dedup import (
+        containment_pairs,
+    )
+
+    rows = [
+        (1, "a b c d e f g h"),
+        (2, "a b c d e f x y"),
+        (3, "q r a b c d e s t u v"),
+        (4, "a b c d"),
+        (5, "m n o p q r s"),
+        (6, "m n o p z z z z z"),
+    ]
+    df = _docs(spark, rows)
+    jac = {
+        (r.key_a, r.key_b): (r.inter_cnt, r.union_cnt)
+        for r in ngram_jaccard_pairs(df, "key", "text", min_shared=1).collect()
+    }
+    con = {
+        (r.key_a, r.key_b): (r.inter_cnt, r.n_a)
+        for r in containment_pairs(df, "key", "text", min_shared=1).collect()
+    }
+    assert len(jac) >= 4
+    assert {(min(p), max(p)) for p in con} == set(jac)
+    for (a, b), (inter, union) in jac.items():
+        inter_ab, n_a = con[(a, b)]
+        inter_ba, n_b = con[(b, a)]
+        assert inter_ab == inter_ba == inter
+        assert union == n_a + n_b - inter
 
 
 def _rows(df):

@@ -6,10 +6,12 @@ shows up as a test failure, not as a slow cluster job."""
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
 from openmrs_patient_migration_script_spark.plans import QUERIES
+from tools.explain_all import node_list
 
 SF = "/root/testdata/sf0.001"
 
@@ -935,3 +937,51 @@ def test_r10_truss_and_ann_plan_shapes(spark):
     ann = plan_of(spark, "sim_knn_graph_ann")
     assert "WindowGroupLimit" in ann  # k pruned below the full sort
     assert "CartesianProduct" not in ann
+
+
+#: every declared query that calls an operator built on a shared private
+#: kernel (graph._closed_triangles, dedup._shingle_overlap,
+#: dedup._kgram_occurrences, similarity._seed_sample,
+#: privacy._grid_counts, quality._two_period_bins)
+SHARED_KERNEL_QUERIES = [
+    "graph_triangles",
+    "graph_clustering_coeff",
+    "graph_edge_support",
+    "graph_ktruss",
+    "graph_truss_decomposition",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_repeated_spans",
+    "dedup_span_rewrite",
+    "sim_ann_ivf",
+    "sim_ivf_recall",
+    "cluster_kmeans",
+    "sim_ann_pq",
+    "sim_pq_recall",
+    "dedup_semantic",
+    "privacy_dp_histogram",
+    "privacy_dp_quantile",
+    "dq_drift_psi",
+    "dq_drift_ks",
+]
+
+
+def _plans_md() -> dict[str, list[str]]:
+    """query -> operator sequence, from the committed PLANS.md table
+    (written by tools/explain_all.py at the same scale factor)."""
+    text = (Path(__file__).resolve().parent.parent / "PLANS.md").read_text()
+    rows = {}
+    for line in text.splitlines():
+        m = re.match(r"^\| `([^`]+)` \| [^|]+ \| [^|]+ \| (.+) \|$", line)
+        if m:
+            rows[m.group(1)] = m.group(2).split(" → ")
+    return rows
+
+
+@pytest.mark.parametrize("name", SHARED_KERNEL_QUERIES)
+def test_shared_kernel_plans_match_plans_md(spark, name):
+    """The operator sequence of every query that runs a shared kernel is
+    the one PLANS.md records: a change to a kernel that moves a join,
+    shuffle or checkpoint in any caller's plan fails here (regenerate
+    PLANS.md with tools/explain_all.py when the move is intended)."""
+    assert node_list(spark, QUERIES[name](spark, SF)) == _plans_md()[name]
