@@ -141,6 +141,25 @@ def _shingles(text_col, n: int = 3):
     return F.filter(out, lambda x: x.isNotNull())
 
 
+def shingles_sql(src: str = "documents") -> str:
+    """DuckDB twin of the distinct `_shingles` (n = 3) of ``src.text``: the
+    CTEs ``toks`` (doc_id, tok, pos — the split on single spaces, empty
+    tokens kept as ``F.split`` keeps them) and ``sh`` (doc_id, shingle —
+    each document's distinct word 3-grams, a positional self-join of
+    ``toks``)."""
+    return f"""toks AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
+             generate_subscripts(string_split(text, ' '), 1) AS pos
+      FROM {src}
+    ),
+    sh AS (
+      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
+      FROM toks a
+      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
+    )"""
+
+
 def md5_pair(c: Column) -> tuple[Column, Column]:
     """The declared MinHash double-hash base: the first and second 32-bit
     halves of ``md5(c)`` as longs — one md5 per shingle, reproduced
@@ -192,6 +211,24 @@ def minhash_signatures(
     return sh.groupBy("key").agg(*aggs)
 
 
+def minhash_signatures_sql() -> str:
+    """DuckDB twin of ``minhash_signatures(num_hashes=16,
+    double_hash=md5_pair)`` over the ``sh`` CTE of `shingles_sql`: the CTEs
+    ``h`` (doc_id, h1, h2 — the `md5_pair` halves of each shingle) and
+    ``sig`` (doc_id, i, mh — the signature in long form, mh = ``mh_{i}``)."""
+    return f"""h AS (
+      SELECT doc_id,
+             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
+             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
+      FROM sh
+    ),
+    sig AS (
+      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
+      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
+      GROUP BY doc_id, i
+    )"""
+
+
 def _band_buckets(
     sig: DataFrame, num_hashes: int, bands: int, hash_buckets: bool
 ) -> DataFrame:
@@ -219,6 +256,20 @@ def _band_buckets(
     return sig.select(
         "key", F.explode(F.array(*band_cols)).alias("bb")
     ).select("key", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def band_buckets_sql(bands: int, suffix: str = "") -> str:
+    """DuckDB twin of ``_band_buckets(sig, 16, bands, hash_buckets=False)``
+    over the ``sig`` CTE of `minhash_signatures_sql`: the CTE
+    ``bands{suffix}`` (doc_id, band, sig_str), where sig_str joins the
+    band's signature slice with commas — two docs share a sig_str exactly
+    when they share the struct bucket."""
+    rows_per_band = 16 // bands
+    return f"""bands{suffix} AS (
+      SELECT doc_id, i // {rows_per_band} AS band,
+             string_agg(mh::VARCHAR, ',' ORDER BY i) AS sig_str
+      FROM sig GROUP BY doc_id, i // {rows_per_band}
+    )"""
 
 
 def minhash_candidate_pairs(

@@ -258,6 +258,33 @@ def srp_hashed(
     return df.select(key_col, vec_col).mapInPandas(hash_batches, out_schema)
 
 
+def srp_hashed_sql(num_planes: int, num_tables: int, suffix: str = "") -> str:
+    """DuckDB twin of ``srp_hashed(hash_mode="md5")`` over ``vec`` (vec_id,
+    v — a 64-dimensional DOUBLE[], the embeddings' width): the CTEs
+    ``planes{suffix}`` (p, d, w — the ``srp_weights(hash_mode="md5")``
+    matrix as rows), ``dots{suffix}`` (vec_id, p, s — each projection) and
+    ``buckets{suffix}`` (vec_id, tbl, bkt — ``_tbl``/``_bkt``). Every caller
+    joins ``buckets`` to itself or to its probes, so it is materialized
+    once."""
+    m = num_planes
+    return f"""planes{suffix} AS (
+      SELECT p.p, d.d,
+        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
+             THEN 1.0 ELSE -1.0 END AS w
+      FROM (SELECT unnest(generate_series(0, {m * num_tables - 1})) AS p) p
+      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
+    ),
+    dots{suffix} AS (
+      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
+      FROM vec, planes{suffix} pl GROUP BY vec_id, pl.p
+    ),
+    buckets{suffix} AS MATERIALIZED (
+      SELECT vec_id, p // {m} AS tbl,
+             sum(((s >= 0)::INT) << (p % {m}))::INT AS bkt
+      FROM dots{suffix} GROUP BY vec_id, p // {m}
+    )"""
+
+
 def ann_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,

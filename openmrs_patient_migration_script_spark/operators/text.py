@@ -15,9 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# small fixed stopword list — shared with the DuckDB oracles, so keep in sync
-# with plans/text_queries.py if edited.
+# small fixed stopword list; the DuckDB oracles read it as STOPWORDS_SQL and
+# through quality_exprs_sql, so an edit here reaches both engines.
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "in", "to", "is")
+STOPWORDS_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 # deterministic language marker map for the n-gram/marker-token heuristic.
 # On real corpora these would be per-language frequency-ranked token lists;
@@ -55,7 +56,6 @@ def tf_idf(
     key_col: str = "doc_id",
     text_col: str = "text",
     n_docs: int | None = None,
-    materialize_tf: bool = False,
 ) -> DataFrame:
     """X6: TF-IDF per (doc, token) — pure DataFrame ops.
 
@@ -65,9 +65,8 @@ def tf_idf(
     to the vocabulary (map-side partial combine → the shuffle carries ~the
     vocab, not the corpus) and is **broadcast** back onto the tf table —
     the big tf table itself never reshuffles (a per-token window would
-    shuffle all of tf on a skewed key). Two lineage uses of tf remain:
-    pass ``materialize_tf=True`` to localCheckpoint it (one scan total);
-    the default leaves the plan pure and pays one extra columnar scan.
+    shuffle all of tf on a skewed key). tf feeds both the df aggregation
+    and the join, so it is localCheckpointed once (one corpus scan).
 
     ``n_docs``: pass the corpus size when known (for a unique-keyed table
     a parquet metadata count is ~free); default derives it in-plan via a
@@ -78,8 +77,7 @@ def tf_idf(
         .groupBy(key_col, "token")
         .agg(F.count("*").alias("tf"))
     )
-    if materialize_tf:
-        tf = tf.localCheckpoint(eager=True)
+    tf = tf.localCheckpoint(eager=True)
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     joined = tf.join(F.broadcast(dfreq), "token")
     if n_docs is None:
@@ -125,7 +123,7 @@ def keywords_topk(
     plus ONE window shuffle of the (doc, token) pairs on the
     well-distributed doc key, where WindowGroupLimit prunes every
     partition to ``k`` rows before the exchange."""
-    scored = tf_idf(df, key_col, text_col, n_docs=n_docs, materialize_tf=True)
+    scored = tf_idf(df, key_col, text_col, n_docs=n_docs)
     w = Window.partitionBy(key_col).orderBy(
         F.round(F.col("tfidf") * 1e6).cast("long").desc(),
         F.col("df").asc(),
@@ -219,6 +217,26 @@ def quality_exprs(text_col) -> dict[str, F.Column]:
     }
 
 
+def quality_exprs_sql() -> dict[str, str]:
+    """DuckDB twin of `quality_exprs` over the column ``text``: the same
+    keys, as SQL expressions."""
+    toks = "string_split(lower(text), ' ')"
+    n_tokens = f"len(list_filter({toks}, t -> t <> ''))"
+    stop_ratio = (
+        f"round(len(list_filter({toks}, t -> list_contains({STOPWORDS_SQL}, t)))"
+        f" / {n_tokens}, 6)"
+    )
+    return {
+        "n_tokens": n_tokens,
+        "n_chars": "length(text)",
+        "mean_tok_len": f"round(length(replace(text, ' ', '')) / {n_tokens}, 6)",
+        "stopword_ratio": stop_ratio,
+        "punct_ratio": "round(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))"
+        " / length(text), 6)",
+        "quality_score": f"round(least({n_tokens} / 100.0, 1.0) * (1.0 - {stop_ratio}), 6)",
+    }
+
+
 def quality_metrics(df: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-doc quality signals for corpus filtering: token count, mean token
     length, stopword ratio, punctuation ratio, and a composite score in
@@ -292,6 +310,26 @@ def langid_exprs(
     for lang in reversed(langs[:-1]):
         pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
     return scores, pred
+
+
+def langid_exprs_sql() -> tuple[str, str]:
+    """DuckDB twin of `langid_exprs` + `langid_argmax` over the column
+    ``text``: (the select-list of ``score_{lang}`` columns, the argmax CASE
+    over those columns with the alphabetical tie-break)."""
+    langs = sorted(LANG_MARKERS)
+    scores = ",\n             ".join(
+        "len(list_filter(string_split(lower(text), ' '), "
+        f"""t -> list_contains([{", ".join(f"'{m}'" for m in LANG_MARKERS[lang])}], t)))"""
+        f" AS score_{lang}"
+        for lang in langs
+    )
+    greatest = "greatest(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
+    case = (
+        "CASE "
+        + " ".join(f"WHEN score_{lang} = {greatest} THEN '{lang}'" for lang in langs[:-1])
+        + f" ELSE '{langs[-1]}' END"
+    )
+    return scores, case
 
 
 def doc_fingerprint(
@@ -499,7 +537,7 @@ def pmi_collocations(
     PLANS.md. Pass ``materialize_counts=True`` to localCheckpoint both
     count tables: 2 corpus scans total, the right call on a real
     cluster (kept off by default so the declared oracle-checked form
-    stays a pure plan, same trade as ``tf_idf``'s ``materialize_tf``).
+    stays a pure plan).
 
     Determinism: pmi is a fixed row-local double expression over exact
     long counts (single division chain, no reassociative float agg), so
@@ -933,7 +971,7 @@ def tfidf_cosine_pairs(
     replayed identically by the oracle. Scale: posting-list self-join
     shuffles on token (bounded df² fan-out per token), the pair agg
     shuffles on the pair key; both partial-combine."""
-    scored = tf_idf(df, key_col, text_col, n_docs=n_docs, materialize_tf=True)
+    scored = tf_idf(df, key_col, text_col, n_docs=n_docs)
     w = (
         scored.filter(F.col("df") <= max_df)
         .select(

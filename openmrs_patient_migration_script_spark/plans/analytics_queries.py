@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.functions.numeric import dec_to_long
 
+from openmrs_patient_migration_script_spark.operators.dedup import shingles_sql
 from openmrs_patient_migration_script_spark.operators.sampling import (
     stratified_hash_sample,
 )
@@ -346,23 +347,13 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_decontaminate",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
              ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS bkt
       FROM documents
     ),
-    toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM b
-    ),
-    sh AS (
-      SELECT DISTINCT t1.doc_id, t1.tok || ' ' || t2.tok || ' ' || t3.tok AS shingle
-      FROM toks t1
-      JOIN toks t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-      JOIN toks t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-    ),
+    {shingles_sql("b")},
     ev AS (
       SELECT DISTINCT shingle FROM sh JOIN b USING (doc_id) WHERE b.bkt >= 900
     )

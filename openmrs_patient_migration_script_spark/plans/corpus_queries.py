@@ -14,54 +14,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from openmrs_patient_migration_script_spark.operators.corpus import prepare_corpus
-from openmrs_patient_migration_script_spark.operators.dedup import md5_pair
+from openmrs_patient_migration_script_spark.operators.dedup import (
+    band_buckets_sql,
+    md5_pair,
+    minhash_signatures_sql,
+    shingles_sql,
+)
 from openmrs_patient_migration_script_spark.operators.text import (
-    LANG_MARKERS,
     STOPWORDS,
+    STOPWORDS_SQL,
+    langid_exprs_sql,
+    quality_exprs_sql,
 )
 from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.plans.registry import ORACLES, query
 from openmrs_patient_migration_script_spark.sources import load_table
 
-_STOPLIST = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 _MIN_QUALITY = 0.2
 _MIN_TOKENS = 12
 
+_QUALITY = quality_exprs_sql()
+_SCORES, _CASE = langid_exprs_sql()
 
-def _langid_case() -> tuple[str, str]:
-    """(score select-list, argmax CASE) fragments shared with text_langid."""
-    langs = sorted(LANG_MARKERS)
-    scores = ",\n             ".join(
-        "len(list_filter(string_split(lower(text), ' '), "
-        f"""t -> list_contains([{", ".join(f"'{m}'" for m in LANG_MARKERS[lang])}], t)))"""
-        f" AS score_{lang}"
-        for lang in langs
-    )
-    greatest = "greatest(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
-    case = (
-        "CASE "
-        + " ".join(
-            f"WHEN score_{lang} = {greatest} THEN '{lang}'" for lang in langs[:-1]
-        )
-        + f" ELSE '{langs[-1]}' END"
-    )
-    return scores, case
-
-
-_SCORES, _CASE = _langid_case()
-
-_CORPUS_PREP_ORACLE = f"""
+# The corpus_prep stage chain up to the near-dup cluster labels `comp`,
+# shared by the corpus_prep and corpus_dedup_funnel oracles.
+_PREP_CTES = f"""
     WITH RECURSIVE scored AS (
       SELECT doc_id, text,
-             len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
-               AS n_tokens,
-             round(least(len(list_filter(string_split(lower(text), ' '),
-                                         t -> t <> '')) / 100.0, 1.0)
-                   * (1.0 - round(len(list_filter(string_split(lower(text), ' '),
-                                  t -> list_contains({_STOPLIST}, t)))
-                      / len(list_filter(string_split(lower(text), ' '),
-                                        t -> t <> '')), 6)), 6) AS quality_score,
+             {_QUALITY["n_tokens"]} AS n_tokens,
+             {_QUALITY["quality_score"]} AS quality_score,
              {_SCORES}
       FROM documents
     ),
@@ -77,33 +59,9 @@ _CORPUS_PREP_ORACLE = f"""
         FROM enriched
       ) WHERE rn = 1
     ),
-    toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM exact
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
-      GROUP BY doc_id, i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band,
-             string_agg(mh::VARCHAR, ',' ORDER BY i) AS sig_str
-      FROM sig GROUP BY doc_id, i // 4
-    ),
+    {shingles_sql("exact")},
+    {minhash_signatures_sql()},
+    {band_buckets_sql(4)},
     pairs AS (
       SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
       FROM bands a
@@ -119,18 +77,24 @@ _CORPUS_PREP_ORACLE = f"""
       UNION
       SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
     ),
-    comp AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)
-    SELECT e.doc_id AS key, e.predicted_lang, e.quality_score,
-           CASE WHEN b < 900 THEN 'train'
-                WHEN b < 950 THEN 'val'
-                ELSE 'test' END AS split
+    comp AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)"""
+
+# the survivors: exact-dedup rows that are their near-dup cluster's minimum
+# (or in no cluster), with the split bucket b
+_SURVIVORS = """
     FROM (
       SELECT exact.*,
              ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS b
       FROM exact
     ) e
     LEFT JOIN comp ON comp.node = e.doc_id
-    WHERE comp.node IS NULL OR comp.cluster = e.doc_id
+    WHERE comp.node IS NULL OR comp.cluster = e.doc_id"""
+
+_CORPUS_PREP_ORACLE = f"""{_PREP_CTES}
+    SELECT e.doc_id AS key, e.predicted_lang, e.quality_score,
+           CASE WHEN b < 900 THEN 'train'
+                WHEN b < 950 THEN 'val'
+                ELSE 'test' END AS split{_SURVIVORS}
 """
 
 
@@ -150,22 +114,12 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The funnel oracle reuses the corpus_prep CTE chain verbatim (split at
-# its final SELECT) and reads one count off each stage — every CTE is
-# still referenced exactly once, so DuckDB's per-reference CTE inlining
-# cannot re-expand the recursive closure (the graph_kcore oracle trap).
-_PREP_PREFIX = _CORPUS_PREP_ORACLE[: _CORPUS_PREP_ORACLE.rindex("SELECT e.doc_id")]
-_FUNNEL_ORACLE = (
-    _PREP_PREFIX
-    + """kept AS (
-      SELECT e.doc_id
-      FROM (
-        SELECT exact.*,
-               ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS b
-        FROM exact
-      ) e
-      LEFT JOIN comp ON comp.node = e.doc_id
-      WHERE comp.node IS NULL OR comp.cluster = e.doc_id
+# Every CTE is referenced exactly once, so DuckDB's per-reference CTE
+# inlining cannot re-expand the recursive closure (the graph_kcore oracle
+# trap).
+_FUNNEL_ORACLE = f"""{_PREP_CTES},
+    kept AS (
+      SELECT e.doc_id{_SURVIVORS}
     )
     SELECT 0 AS stage_idx, 'raw' AS stage,
            (SELECT count(*) FROM documents)::BIGINT AS n_docs
@@ -176,14 +130,6 @@ _FUNNEL_ORACLE = (
     UNION ALL
     SELECT 3, 'neardup_deduped', (SELECT count(*) FROM kept)::BIGINT
     """
-)
-
-# the CTE prefix ends "...comp AS (SELECT ...)\n" followed by the final
-# SELECT we cut off — re-add the comma the cut removed
-_FUNNEL_ORACLE = _FUNNEL_ORACLE.replace(
-    "comp AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)\n",
-    "comp AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node),\n",
-)
 
 
 @query("corpus_dedup_funnel", oracle=_FUNNEL_ORACLE)
@@ -252,21 +198,16 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
-
-
 @query(
     "corpus_curriculum",
     oracle=f"""
     WITH scored AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '),
-                             t -> t <> '')) AS n_tokens,
-             ((len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+             {_QUALITY["n_tokens"]} AS n_tokens,
+             (({_QUALITY["n_tokens"]}
                - len(list_filter(string_split(lower(text), ' '),
-                                 t -> list_contains({_STOP_SQL}, t)))) * 100)
-             // greatest(len(list_filter(string_split(lower(text), ' '),
-                                         t -> t <> '')), 1) AS q
+                                 t -> list_contains({STOPWORDS_SQL}, t)))) * 100)
+             // greatest({_QUALITY["n_tokens"]}, 1) AS q
       FROM documents
     ),
     hist AS (

@@ -17,12 +17,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.operators.dedup import (
+    band_buckets_sql,
     fuzzy_dedup_pairs,
     md5_pair,
     minhash_candidate_pairs,
+    minhash_signatures_sql,
     ngram_jaccard_pairs,
+    shingles_sql,
     simhash,
 )
+from openmrs_patient_migration_script_spark.operators.similarity import srp_hashed_sql
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
 
@@ -75,18 +79,7 @@ _CONTAIN_PCT = 80  # emit pairs where >= 80% of a's shingles appear in b
 @query(
     "dedup_containment",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
+    WITH {shingles_sql()},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     dfq AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle),
     shf AS (
@@ -143,18 +136,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
+    WITH {shingles_sql()},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     dfq AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle),
     shf AS (
@@ -188,34 +170,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
-      GROUP BY doc_id, i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band,
-             string_agg(mh::VARCHAR, ',' ORDER BY i) AS sig_str
-      FROM sig GROUP BY doc_id, i // 4
-    )
+    oracle=f"""
+    WITH {shingles_sql()},
+    {minhash_signatures_sql()},
+    {band_buckets_sql(4)}
     SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
     FROM bands a
     JOIN bands b ON a.band = b.band AND a.sig_str = b.sig_str
@@ -917,34 +875,10 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_incremental",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
-      GROUP BY doc_id, i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band,
-             string_agg(mh::VARCHAR, ',' ORDER BY i) AS sig_str
-      FROM sig GROUP BY doc_id, i // 4
-    )
+    oracle=f"""
+    WITH {shingles_sql()},
+    {minhash_signatures_sql()},
+    {band_buckets_sql(4)}
     SELECT DISTINCT b.doc_id AS batch_key, a.doc_id AS index_key
     FROM bands b
     JOIN bands a ON b.band = a.band AND b.sig_str = a.sig_str
@@ -1577,34 +1511,10 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_quality",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
-      GROUP BY doc_id, i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band,
-             string_agg(mh::VARCHAR, ',' ORDER BY i) AS sig_str
-      FROM sig GROUP BY doc_id, i // 4
-    ),
+    oracle=f"""
+    WITH {shingles_sql()},
+    {minhash_signatures_sql()},
+    {band_buckets_sql(4)},
     pairs AS (
       SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
       FROM bands a
@@ -1743,35 +1653,14 @@ _BAND_SWEEP = [(2, 8, 0.917004), (4, 4, 0.707107), (8, 2, 0.353553), (16, 1, 0.0
 @query(
     "dedup_minhash_band_sweep",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS h2
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i, min((h1 + i * h2) % 4294967296) AS mh
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) seeds
-      GROUP BY doc_id, i
-    ),
-    cfg AS (SELECT unnest([{", ".join(str(b) for b, _, _ in _BAND_SWEEP)}])
-              AS bands),
-    bb AS (
-      SELECT c.bands, s.doc_id, s.i // (16 // c.bands) AS band,
-             string_agg(s.mh::VARCHAR, ',' ORDER BY s.i) AS sig_str
-      FROM sig s CROSS JOIN cfg c
-      GROUP BY 1, 2, 3
+    WITH {shingles_sql()},
+    {minhash_signatures_sql()},
+    {", ".join(band_buckets_sql(b, suffix=f"_{b}") for b, _, _ in _BAND_SWEEP)},
+    bb AS MATERIALIZED (
+      {" UNION ALL ".join(
+          f"SELECT {b} AS bands, doc_id, band, sig_str FROM bands_{b}"
+          for b, _, _ in _BAND_SWEEP
+      )}
     ),
     occ AS (
       SELECT bands, band, sig_str, count(*)::BIGINT AS sz
@@ -2290,23 +2179,7 @@ _EMB_LSH_M, _EMB_LSH_L = 8, 8
       FROM base
     ),
     vec AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
-    planes AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {_EMB_LSH_M * _EMB_LSH_L - 1}))
-              AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
-    dots AS (
-      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-      FROM vec, planes pl GROUP BY vec_id, pl.p
-    ),
-    buckets AS (
-      SELECT vec_id, p // {_EMB_LSH_M} AS tbl,
-             sum(((s >= 0)::INT) << (p % {_EMB_LSH_M})) AS bkt
-      FROM dots GROUP BY vec_id, p // {_EMB_LSH_M}
-    ),
+    {srp_hashed_sql(_EMB_LSH_M, _EMB_LSH_L)},
     cand AS (
       SELECT DISTINCT a.vec_id AS key_a, b.vec_id AS key_b
       FROM buckets a JOIN buckets b USING (tbl, bkt)
@@ -2596,18 +2469,7 @@ def graph_components_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_pair_evidence",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    ),
+    WITH {shingles_sql()},
     dfq AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle),
     shf AS (
       SELECT sh.doc_id, sh.shingle FROM sh JOIN dfq USING (shingle)

@@ -5,6 +5,14 @@ ANSI-SQL string DuckDB runs against the same parquet tables. A query
 registered with ``oracle=None`` gets the driver's weaker rows-only check
 (reserved for non-SQL-expressible operators).
 
+An oracle fragment that replays an engine kernel is not written here: it
+comes from the ``*_sql`` twin beside that kernel — ``shingles_sql``,
+``minhash_signatures_sql`` and ``band_buckets_sql`` (operators/dedup.py),
+``srp_hashed_sql`` (operators/similarity.py), ``quality_exprs_sql``,
+``langid_exprs_sql`` and ``STOPWORDS_SQL`` (operators/text.py),
+``deterministic_uuid_sql`` (functions/ids.py) — so a change to a kernel
+and to its SQL form is made in one file.
+
 Float policy: any column produced by reassociative float aggregation (SUM /
 AVG over doubles) is ``round()``-ed identically on both sides — Spark's
 partial-aggregation order is nondeterministic across partitions, so raw

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from openmrs_patient_migration_script_spark.operators.similarity import (
     ann_topk_lsh,
     cosine_topk,
+    srp_hashed_sql,
 )
 from openmrs_patient_migration_script_spark.plans.registry import ORACLES, query
 from openmrs_patient_migration_script_spark.sources import load_table
@@ -79,23 +80,8 @@ _LSH_M, _LSH_L = 3, 8
 @query(
     "sim_ann_lsh",
     oracle=f"""
-    WITH planes AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {_LSH_M * _LSH_L - 1})) AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
-    vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    dots AS (
-      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-      FROM vec, planes pl GROUP BY vec_id, pl.p
-    ),
-    buckets AS (
-      SELECT vec_id, p // {_LSH_M} AS tbl,
-             sum(((s >= 0)::INT) << (p % {_LSH_M})) AS bkt
-      FROM dots GROUP BY vec_id, p // {_LSH_M}
-    ),
+    WITH vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {srp_hashed_sql(_LSH_M, _LSH_L)},
     cand AS (
       SELECT DISTINCT q.vec_id AS query_id, b.vec_id
       FROM buckets q JOIN buckets b USING (tbl, bkt)
@@ -838,23 +824,8 @@ def _recall_oracle(exact_sql: str, ann_sql: str) -> str:
         FROM scored_exact
       ) WHERE rn <= {_K}
     ),
-    planes AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {_LSH_M * _LSH_L - 1})) AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
     vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    dots AS (
-      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-      FROM vec, planes pl GROUP BY vec_id, pl.p
-    ),
-    buckets AS (
-      SELECT vec_id, p // {_LSH_M} AS tbl,
-             sum(((s >= 0)::INT) << (p % {_LSH_M})) AS bkt
-      FROM dots GROUP BY vec_id, p // {_LSH_M}
-    ),
+    {srp_hashed_sql(_LSH_M, _LSH_L)},
     cand AS (
       SELECT DISTINCT qb.vec_id AS query_id, b.vec_id
       FROM buckets qb JOIN buckets b USING (tbl, bkt)
@@ -1580,23 +1551,8 @@ _MP_M, _MP_L = 3, 4
 @query(
     "sim_ann_multiprobe",
     oracle=f"""
-    WITH planes AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {_MP_M * _MP_L - 1})) AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
-    vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    dots AS (
-      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-      FROM vec, planes pl GROUP BY vec_id, pl.p
-    ),
-    buckets AS (
-      SELECT vec_id, p // {_MP_M} AS tbl,
-             sum(((s >= 0)::INT) << (p % {_MP_M}))::INT AS bkt
-      FROM dots GROUP BY vec_id, p // {_MP_M}
-    ),
+    WITH vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {srp_hashed_sql(_MP_M, _MP_L)},
     qprobes AS (
       SELECT vec_id, tbl,
              CASE WHEN pr = 0 THEN bkt
@@ -1657,24 +1613,8 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_LSH_M, _KNN_LSH_L = 4, 8
 
 _KNN_ANN_ORACLE = f"""
-    WITH planes AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {_KNN_LSH_M * _KNN_LSH_L - 1}))
-              AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
-    vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    dots AS (
-      SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-      FROM vec, planes pl GROUP BY vec_id, pl.p
-    ),
-    buckets AS (
-      SELECT vec_id, p // {_KNN_LSH_M} AS tbl,
-             sum(((s >= 0)::INT) << (p % {_KNN_LSH_M})) AS bkt
-      FROM dots GROUP BY vec_id, p // {_KNN_LSH_M}
-    ),
+    WITH vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    {srp_hashed_sql(_KNN_LSH_M, _KNN_LSH_L)},
     cand AS (
       SELECT DISTINCT a.vec_id AS key_a, b.vec_id AS key_b
       FROM buckets a JOIN buckets b USING (tbl, bkt)
@@ -1789,21 +1729,7 @@ def _knn_sweep_oracle() -> str:
     for m, L in _KNN_SWEEP_CFGS:
         tag = f"m{m}l{L}"
         sql += f""",
-    planes_{tag} AS (
-      SELECT p.p, d.d,
-        CASE WHEN ('0x' || substr(md5(p.p || ':' || d.d), 1, 2))::INT % 2 = 0
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM (SELECT unnest(generate_series(0, {m * L - 1})) AS p) p
-      CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
-    ),
-    buckets_{tag} AS MATERIALIZED (
-      SELECT vec_id, p // {m} AS tbl,
-             sum(((s >= 0)::INT) << (p % {m})) AS bkt
-      FROM (
-        SELECT vec_id, pl.p, sum(v[pl.d + 1] * pl.w) AS s
-        FROM vec, planes_{tag} pl GROUP BY vec_id, pl.p
-      ) GROUP BY vec_id, p // {m}
-    ),
+    {srp_hashed_sql(m, L, suffix=f"_{tag}")},
     cand_{tag} AS MATERIALIZED (
       SELECT DISTINCT a.vec_id AS key_a, b.vec_id AS key_b
       FROM buckets_{tag} a JOIN buckets_{tag} b USING (tbl, bkt)

@@ -12,12 +12,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from openmrs_patient_migration_script_spark.operators.dedup import shingles_sql
 from openmrs_patient_migration_script_spark.operators.text import (
     LANG_MARKERS,
-    STOPWORDS,
+    STOPWORDS_SQL,
     doc_fingerprint,
+    langid_exprs_sql,
     language_id,
     ngram_counts,
+    quality_exprs_sql,
     quality_metrics,
     repetition_metrics,
     tf_idf,
@@ -25,8 +28,6 @@ from openmrs_patient_migration_script_spark.operators.text import (
 )
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
-
-_SQL_STOPLIST = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 
 @query(
@@ -67,7 +68,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet metadata-only count; tf is checkpointed so the corpus is
     scanned exactly once."""
     docs = load_table(spark, sf_dir, "documents")
-    return tf_idf(docs, n_docs=docs.count(), materialize_tf=True)
+    return tf_idf(docs, n_docs=docs.count())
 
 
 @query(
@@ -162,27 +163,14 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_metrics(load_table(spark, sf_dir, "documents"))
 
 
+_QUALITY = quality_exprs_sql()
+
+
 @query(
     "text_quality",
     oracle=f"""
     SELECT doc_id,
-           len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n_tokens,
-           length(text) AS n_chars,
-           round(length(replace(text, ' ', ''))
-                 / len(list_filter(string_split(lower(text), ' '), t -> t <> '')), 6)
-             AS mean_tok_len,
-           round(len(list_filter(string_split(lower(text), ' '),
-                                 t -> list_contains({_SQL_STOPLIST}, t)))
-                 / len(list_filter(string_split(lower(text), ' '), t -> t <> '')), 6)
-             AS stopword_ratio,
-           round(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))
-                 / length(text), 6) AS punct_ratio,
-           round(least(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
-                       / 100.0, 1.0)
-                 * (1.0 - round(len(list_filter(string_split(lower(text), ' '),
-                                t -> list_contains({_SQL_STOPLIST}, t)))
-                    / len(list_filter(string_split(lower(text), ' '), t -> t <> '')), 6)),
-                 6) AS quality_score
+           {", ".join(f"{e} AS {name}" for name, e in _QUALITY.items())}
     FROM documents
     """,
 )
@@ -193,31 +181,20 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_metrics(load_table(spark, sf_dir, "documents"))
 
 
-def _langid_oracle() -> str:
-    langs = sorted(LANG_MARKERS)
-    score_exprs = ",\n           ".join(
-        "len(list_filter(string_split(lower(text), ' '), "
-        f"""t -> list_contains([{", ".join(f"'{m}'" for m in LANG_MARKERS[lang])}], t)))"""
-        f" AS score_{lang}"
-        for lang in langs
-    )
-    greatest = "greatest(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
-    case = "CASE " + " ".join(
-        f"WHEN score_{lang} = {greatest} THEN '{lang}'" for lang in langs[:-1]
-    ) + f" ELSE '{langs[-1]}' END"
-    return f"""
+_LANGID_SCORES, _LANGID_ARGMAX = langid_exprs_sql()
+_LANGID_ORACLE = f"""
     WITH scored AS (
       SELECT doc_id,
-           {score_exprs}
+           {_LANGID_SCORES}
       FROM documents
     )
-    SELECT doc_id, {", ".join(f"score_{lang}" for lang in langs)},
-           {case} AS predicted_lang
+    SELECT doc_id, {", ".join(f"score_{lang}" for lang in sorted(LANG_MARKERS))},
+           {_LANGID_ARGMAX} AS predicted_lang
     FROM scored
     """
 
 
-@query("text_langid", oracle=_langid_oracle())
+@query("text_langid", oracle=_LANGID_ORACLE)
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via marker-token scoring: per-lang score + argmax with
     alphabetical tie-break. The oracle verifies the scoring/argmax
@@ -228,19 +205,8 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_fingerprint",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ),
-    sh AS (
-      SELECT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-      FROM toks a
-      JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-    )
+    oracle=f"""
+    WITH {shingles_sql()}
     SELECT doc_id, min(md5(shingle)) AS fingerprint,
            count(DISTINCT shingle) AS n_shingles
     FROM sh GROUP BY doc_id
@@ -390,15 +356,8 @@ def text_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH per_doc AS (
       SELECT lang,
-             len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
-               AS n_tokens,
-             round(least(len(list_filter(string_split(lower(text), ' '),
-                                         t -> t <> '')) / 100.0, 1.0)
-                   * (1.0 - round(len(list_filter(string_split(lower(text), ' '),
-                                  t -> list_contains({_SQL_STOPLIST}, t)))
-                      / len(list_filter(string_split(lower(text), ' '),
-                                        t -> t <> '')), 6)),
-                   6) AS quality_score
+             {_QUALITY["n_tokens"]} AS n_tokens,
+             {_QUALITY["quality_score"]} AS quality_score
       FROM documents
     )
     SELECT lang, count(*) AS n_docs,
@@ -480,7 +439,7 @@ def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                       0)::BIGINT AS sum_word_len,
              len(list_filter(toks, x -> regexp_matches(x, '^[a-z]+$')))
                AS n_alpha_words,
-             len(list_intersect(list_distinct(toks), {_SQL_STOPLIST}))
+             len(list_intersect(list_distinct(toks), {STOPWORDS_SQL}))
                AS n_distinct_stopwords
       FROM t
     )
@@ -1606,7 +1565,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_langid_audit",
     oracle=f"""
     WITH pred AS (
-      SELECT doc_id, predicted_lang FROM ({_langid_oracle()}) p
+      SELECT doc_id, predicted_lang FROM ({_LANGID_ORACLE}) p
     )
     SELECT d.lang AS actual_lang, p.predicted_lang,
            count(*)::BIGINT AS n_docs

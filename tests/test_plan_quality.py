@@ -11,24 +11,13 @@ from pathlib import Path
 import pytest
 
 from openmrs_patient_migration_script_spark.plans import QUERIES
-from tools.explain_all import node_list
+from tools.explain_all import formatted_plan, plan_nodes, plans_md
 
 SF = "/root/testdata/sf0.001"
 
 
 def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
-def nodes(plan: str) -> list[str]:
-    out = []
-    for line in plan.splitlines():
-        m = re.match(r"^\(\d+\) (\S+)", line.strip())
-        if m:
-            out.append(m.group(1))
-    return out
+    return formatted_plan(spark, QUERIES[name](spark, SF))
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -66,7 +55,7 @@ def test_sim_cosine_topk_no_cartesian(spark):
 
 def test_join_asof_single_shuffle_single_window(spark):
     plan = plan_of(spark, "join_asof")
-    ns = nodes(plan)
+    ns = plan_nodes(plan)
     shuffles = [n for n in ns if n == "Exchange"]
     windows = [n for n in ns if n == "Window"]
     assert len(shuffles) == 1, ns
@@ -76,7 +65,7 @@ def test_join_asof_single_shuffle_single_window(spark):
 def test_etl_registration_zero_shuffles(spark):
     """The flagship is a scan-project pipeline: its only exchange is the
     nation broadcast — any plain shuffle Exchange is a regression."""
-    ns = nodes(plan_of(spark, "etl_registration"))
+    ns = plan_nodes(plan_of(spark, "etl_registration"))
     assert "Exchange" not in ns, ns
     assert "BroadcastHashJoin" in ns
 
@@ -119,11 +108,8 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
             spark.table("buck.orders_b").o_custkey
             == spark.table("buck.customer_b").c_custkey,
         )
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = joined._jdf.queryExecution().explainString(mode)
-        ns = nodes(plan)
+        plan = formatted_plan(spark, joined)
+        ns = plan_nodes(plan)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in ns, ns  # bucketing removed both shuffles
         assert joined.count() > 0
@@ -146,10 +132,7 @@ def test_partitioned_write_enables_partition_pruning(spark, tmp_path):
     events.write.partitionBy("day").mode("overwrite").parquet(path)
     first_day = events.agg(F.min("day")).collect()[0][0]
     scan = spark.read.parquet(path).filter(F.col("day") == first_day)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = scan._jdf.queryExecution().explainString(mode)
+    plan = formatted_plan(spark, scan)
     assert "PartitionFilters: [" in plan
     assert f"isnotnull(day" in plan or "day" in plan.split("PartitionFilters")[1][:200]
     assert scan.count() == events.filter(F.col("day") == first_day).count()
@@ -159,7 +142,7 @@ def test_funnel_stacked_windows_share_one_exchange(spark):
     # three window mins on the same user_id partitioning must plan exactly
     # one Exchange before the final (tiny) aggregation pair
     plan = plan_of(spark, "funnel_events")
-    n = nodes(plan)
+    n = plan_nodes(plan)
     assert n.count("Window") == 3, n
     pre_agg = n[: n.index("HashAggregate")] if "HashAggregate" in n else n
     assert pre_agg.count("Exchange") == 1, pre_agg
@@ -172,7 +155,7 @@ def test_retention_signup_dim_is_broadcast(spark):
 
 
 def test_sample_hash_has_no_shuffle(spark):
-    n = nodes(plan_of(spark, "sample_hash"))
+    n = plan_nodes(plan_of(spark, "sample_hash"))
     assert "Exchange" not in n, n
 
 
@@ -180,7 +163,7 @@ def test_ivf_probe_join_is_broadcast_no_corpus_shuffle(spark):
     plan = plan_of(spark, "sim_ann_ivf")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    n = nodes(plan)
+    n = plan_nodes(plan)
     # the only Exchange allowed is the top-k ranking window's (plus AQE
     # bookkeeping); the corpus-side candidate pruning must not shuffle
     win = n.index("Window") if "Window" in n else len(n)
@@ -190,20 +173,20 @@ def test_ivf_probe_join_is_broadcast_no_corpus_shuffle(spark):
 def test_pseudonymize_is_pure_projection(spark):
     """De-identification is row-local: any Exchange means the scrub started
     shuffling 100 TB of patient rows for no reason."""
-    ns = nodes(plan_of(spark, "etl_pseudonymize"))
+    ns = plan_nodes(plan_of(spark, "etl_pseudonymize"))
     assert "Exchange" not in ns, ns
     assert not any("Join" in n for n in ns), ns
 
 
 def test_pii_scrub_is_pure_projection(spark):
-    ns = nodes(plan_of(spark, "text_pii_scrub"))
+    ns = plan_nodes(plan_of(spark, "text_pii_scrub"))
     assert "Exchange" not in ns, ns
 
 
 def test_kanon_audit_partial_aggregates(spark):
     """One shuffle carrying only distinct quasi-identifier tuples: partial
     HashAggregate must sit below the single Exchange."""
-    ns = nodes(plan_of(spark, "privacy_kanon"))
+    ns = plan_nodes(plan_of(spark, "privacy_kanon"))
     assert ns.count("Exchange") == 1, ns
     assert ns.count("HashAggregate") == 2, ns
 
@@ -221,7 +204,7 @@ def test_global_sort_is_range_partitioned(spark):
     never a single-partition global sort."""
     plan = plan_of(spark, "sort_global")
     assert "rangepartitioning" in plan
-    ns = nodes(plan_of(spark, "sort_global"))
+    ns = plan_nodes(plan_of(spark, "sort_global"))
     assert "Sort" in ns, ns
 
 
@@ -236,7 +219,7 @@ def test_exists_subquery_decorrelates_to_semi_join(spark):
 def test_scalar_subquery_decorrelates_to_one_agg_join(spark):
     """Correlated scalar subquery = one aggregation + one equi-join, not a
     rescan per outer row."""
-    ns = nodes(plan_of(spark, "sql_scalar_subquery"))
+    ns = plan_nodes(plan_of(spark, "sql_scalar_subquery"))
     assert sum(1 for n in ns if "HashAggregate" in n) == 2, ns  # partial+final
     assert any("Join" in n for n in ns), ns
     assert "CartesianProduct" not in ns
@@ -331,7 +314,7 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
     """The LATERAL LIMIT subquery must rewrite to a pre-shuffle
     WindowGroupLimit + hash join; a nested-loop join here is the O(n*m)
     per-row rescan that cannot survive scale."""
-    ns = nodes(plan_of(spark, "sql_lateral_topk"))
+    ns = plan_nodes(plan_of(spark, "sql_lateral_topk"))
     assert "BroadcastNestedLoopJoin" not in ns, ns
     assert "CartesianProduct" not in ns, ns
     assert any("WindowGroupLimit" in n for n in ns), ns
@@ -341,7 +324,7 @@ def test_recursive_cte_aggregates_facts_once(spark):
     """The recursion builds the 84-row calendar spine; the fact table must
     contribute exactly one partial+final aggregation pair (one Exchange),
     never one scan per recursion step."""
-    ns = nodes(plan_of(spark, "sql_recursive_cte"))
+    ns = plan_nodes(plan_of(spark, "sql_recursive_cte"))
     assert sum(1 for n in ns if n.startswith("Scan")) <= 1, ns
     assert ns.count("Exchange") <= 2, ns
 
@@ -357,7 +340,7 @@ def test_salted_join_stays_hash_join_with_salt_explosion(spark):
     """The salted join must remain an equi hash join on (key, salt) with
     the small side exploded (Generate) — a nested-loop or cartesian here
     would mean the salt column broke the equi-join condition."""
-    ns = nodes(plan_of(spark, "join_salted"))
+    ns = plan_nodes(plan_of(spark, "join_salted"))
     assert "BroadcastNestedLoopJoin" not in ns and "CartesianProduct" not in ns, ns
     assert "Generate" in ns, ns  # per-salt replication of the small side
     assert any("HashJoin" in n or n == "SortMergeJoin" for n in ns), ns
@@ -367,7 +350,7 @@ def test_embed_centroids_explodes_before_shuffle(spark):
     """The vector mean must posexplode BEFORE the exchange so the shuffle
     carries (label, dim, value) rows with map-side partial aggregation —
     never whole embedding arrays."""
-    ns = nodes(plan_of(spark, "embed_centroids"))
+    ns = plan_nodes(plan_of(spark, "embed_centroids"))
     gen = ns.index("Generate")
     ex = ns.index("Exchange")
     assert gen < ex, ns
@@ -413,10 +396,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
         li = load_table(spark, SF, "lineitem")
         part = load_table(spark, SF, "part").filter(F.col("p_brand") == "Brand#23")
         j = li.join(part, li.l_partkey == part.p_partkey)
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = j._jdf.queryExecution().explainString(mode)
+        plan = formatted_plan(spark, j)
         assert "might_contain" in plan, plan[:2000]
         assert "bloom_filter_agg" in plan, plan[:2000]
         # the membership probe must sit on the fact side BELOW the join,
@@ -451,8 +431,7 @@ def test_banded_join_rewrites_nested_loop_to_hash_join(spark):
     import pyspark.sql.functions as F
 
     naive = s.join(c, F.abs(c.c_acctbal - s.s_acctbal) <= 5.0)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    naive_plan = naive._jdf.queryExecution().explainString(mode)
+    naive_plan = formatted_plan(spark, naive)
     assert "BroadcastNestedLoopJoin" in naive_plan
 
 
@@ -461,7 +440,7 @@ def test_events_transitions_window_then_bounded_agg(spark):
     tiny Exchange for the (|types|^2-bounded) transition agg — partial
     aggregation must sit below it so the second shuffle stays bounded."""
     plan = plan_of(spark, "events_transitions")
-    n_ex = sum(1 for n in nodes(plan) if n.startswith("Exchange"))
+    n_ex = sum(1 for n in plan_nodes(plan) if n.startswith("Exchange"))
     assert n_ex == 2, plan
     assert "partial_count" in plan or "HashAggregate" in plan
 
@@ -479,7 +458,7 @@ def test_surrogate_keys_one_shuffle_no_checkpoint(spark):
     window's hash partitioning — no range-repartition shuffle and no
     localCheckpoint boundary (`Scan ExistingRDD`) may reappear. The r2
     design paid all three."""
-    ns = nodes(plan_of(spark, "etl_surrogate_keys"))
+    ns = plan_nodes(plan_of(spark, "etl_surrogate_keys"))
     assert ns.count("Exchange") == 1, ns
     assert "ScanExistingRDD" not in [n.replace(" ", "") for n in ns], ns
 
@@ -489,7 +468,7 @@ def test_dedup_embedding_single_grid_shuffle(spark):
     one grouped-map Pandas stage; any second Exchange or a MapInPandas
     over a collected closure is a regression toward r2's driver-side
     corpus collect."""
-    ns = nodes(plan_of(spark, "dedup_embedding"))
+    ns = plan_nodes(plan_of(spark, "dedup_embedding"))
     assert ns.count("Exchange") == 1, ns
     assert any("FlatMapGroupsInPandas" in n for n in ns), ns
 
@@ -507,7 +486,7 @@ def test_interval_overlap_join_is_hash_join_not_nested_loop(spark):
         "ShuffledHashJoin" in plan
     )
     # pair-level output: no aggregate node at all (dedup-free by design)
-    assert not any("Aggregate" in n for n in nodes(plan)), nodes(plan)
+    assert not any("Aggregate" in n for n in plan_nodes(plan)), plan_nodes(plan)
 
 
 def test_bitmap_distinct_avoids_expand(spark):
@@ -516,7 +495,7 @@ def test_bitmap_distinct_avoids_expand(spark):
     bitmaps aggregate in bounded state; only bitmap/popcount aggregates
     and their exchanges may appear."""
     plan = plan_of(spark, "agg_bitmap_distinct")
-    ns = nodes(plan)
+    ns = plan_nodes(plan)
     assert "Expand" not in ns, ns
     assert ns.count("Exchange") <= 3, ns
 
@@ -527,7 +506,7 @@ def test_sketch_rollups_shuffle_sketch_state_only(spark):
     shuffle, no sort-based fallback; the merge step must consume the
     sketch column, not re-scan raw data (exactly one table scan)."""
     for name in ("sketch_distinct_rollup", "sketch_quantile_rollup"):
-        ns = nodes(plan_of(spark, name))
+        ns = plan_nodes(plan_of(spark, name))
         assert ns.count("Exchange") == 2, (name, ns)
         assert ns.count("Scan") == 1, (name, ns)
         assert "SortAggregate" not in ns, (name, ns)
@@ -549,7 +528,7 @@ def test_basket_pairs_two_exchanges(spark):
     pair counts — the self-join form's extra distinct/window Exchanges
     (5 total) must not creep back; no window node at all (the basket
     guard is a row-local size check on the gathered array)."""
-    ns = nodes(plan_of(spark, "affinity_basket_pairs"))
+    ns = plan_nodes(plan_of(spark, "affinity_basket_pairs"))
     assert ns.count("Exchange") == 2, ns
     assert "Window" not in ns, ns
 
@@ -557,7 +536,7 @@ def test_basket_pairs_two_exchanges(spark):
 def test_ewma_single_exchange_fold(spark):
     """ts_ewma: ONE Exchange (the per-key gather) and a row-local fold —
     any second shuffle or a Python stage is a regression."""
-    ns = nodes(plan_of(spark, "ts_ewma"))
+    ns = plan_nodes(plan_of(spark, "ts_ewma"))
     assert ns.count("Exchange") == 1, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
 
@@ -566,7 +545,7 @@ def test_golden_record_is_reduction_not_window(spark):
     """etl_golden_record: survivor election must stay a max_by REDUCTION
     (partial-combinable aggregate) — a Window/row_number form would sort
     every cluster member through a per-cluster window."""
-    ns = nodes(plan_of(spark, "etl_golden_record"))
+    ns = plan_nodes(plan_of(spark, "etl_golden_record"))
     assert "Window" not in ns, ns
     assert any("Aggregate" in n for n in ns), ns
 
@@ -575,7 +554,7 @@ def test_cdc_apply_is_reduction_plus_one_join(spark):
     """etl_cdc_apply: last-change-wins must stay a max_by REDUCTION (no
     per-key Window sort) and the apply exactly one join — two Exchanges
     total (change reduce + co-partitioned full outer)."""
-    ns = nodes(plan_of(spark, "etl_cdc_apply"))
+    ns = plan_nodes(plan_of(spark, "etl_cdc_apply"))
     assert "Window" not in ns, ns
     assert ns.count("Exchange") == 2, ns
 
@@ -584,7 +563,7 @@ def test_asof_forward_single_shuffle_carry(spark):
     """join_asof_forward: the reverse-order carry must keep the one-
     Exchange union+window shape — a pair-materializing range join would
     add a second Exchange and a Join node."""
-    ns = nodes(plan_of(spark, "join_asof_forward"))
+    ns = plan_nodes(plan_of(spark, "join_asof_forward"))
     assert ns.count("Exchange") == 1, ns
     assert ns.count("Window") == 1, ns
     assert not any("Join" in n for n in ns), ns
@@ -593,14 +572,14 @@ def test_asof_forward_single_shuffle_carry(spark):
 def test_custom_source_scan_is_shuffle_free(spark):
     """source_custom_extract: a connector read is a BatchScan + Project —
     any Exchange means the read path grew a shuffle it never needs."""
-    ns = nodes(plan_of(spark, "source_custom_extract"))
+    ns = plan_nodes(plan_of(spark, "source_custom_extract"))
     assert ns.count("Exchange") == 0, ns
 
 
 def test_cluster_assign_zero_shuffle_projection(spark):
     """cluster_assign: model inference is a MapInPandas projection over
     the scan — zero Exchanges; aggregation belongs to consumers."""
-    ns = nodes(plan_of(spark, "cluster_assign"))
+    ns = plan_nodes(plan_of(spark, "cluster_assign"))
     assert ns.count("Exchange") == 0, ns
     assert any("MapInPandas" in n for n in ns), ns
 
@@ -608,7 +587,7 @@ def test_cluster_assign_zero_shuffle_projection(spark):
 def test_regression_single_exchange_reduction(spark):
     """agg_regression: OLS must stay ONE hash aggregation over exact
     sufficient statistics — one Exchange, no Window, no Python stage."""
-    ns = nodes(plan_of(spark, "agg_regression"))
+    ns = plan_nodes(plan_of(spark, "agg_regression"))
     assert ns.count("Exchange") == 1, ns
     assert "Window" not in ns, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
@@ -618,7 +597,7 @@ def test_sessionize_one_exchange_chained_windows(spark):
     """events_sessionize: the lag flag and both running carries must
     chain over a SINGLE (user_id) Exchange+Sort — a second Exchange
     means session_start regressed to a (key, session) shuffle."""
-    ns = nodes(plan_of(spark, "events_sessionize"))
+    ns = plan_nodes(plan_of(spark, "events_sessionize"))
     assert ns.count("Exchange") == 1, ns
     assert ns.count("Sort") == 1, ns
     assert not any("Join" in n for n in ns), ns
@@ -628,7 +607,7 @@ def test_twap_window_and_agg_share_one_exchange(spark):
     """ts_twap: the lead() window and the per-key sum must reuse one
     (user_id) hash partitioning — a second Exchange means the agg
     stopped exploiting the window's clustering."""
-    ns = nodes(plan_of(spark, "ts_twap"))
+    ns = plan_nodes(plan_of(spark, "ts_twap"))
     assert ns.count("Exchange") == 1, ns
     assert not any("Join" in n for n in ns), ns
 
@@ -639,7 +618,7 @@ def test_asof_nearest_one_exchange_one_window(spark):
     last() and following-frame first() into one Window node. A Join node
     would mean the plan regressed to the pair-materializing oracle
     shape."""
-    ns = nodes(plan_of(spark, "join_asof_nearest"))
+    ns = plan_nodes(plan_of(spark, "join_asof_nearest"))
     assert ns.count("Exchange") == 1, ns
     assert not any("Join" in n for n in ns), ns
 
@@ -650,7 +629,7 @@ def test_pmi_broadcasts_counts_no_sortmerge(spark):
     joins are BroadcastHashJoins, and the BNL occurrences are the
     one-row crossJoin shape."""
     plan = plan_of(spark, "text_pmi")
-    ns = nodes(plan)
+    ns = plan_nodes(plan)
     assert "SortMergeJoin" not in ns and "ShuffledHashJoin" not in ns, ns
     assert ns.count("BroadcastHashJoin") == 2, ns
     assert "CartesianProduct" not in ns, ns
@@ -661,7 +640,7 @@ def test_bm25_no_doc_keyed_join(spark):
     join is the |Q|-row doc-frequency broadcast plus the one-row stats
     crossJoin; a SortMergeJoin would mean the tf⋈dl big-big join came
     back."""
-    ns = nodes(plan_of(spark, "text_bm25"))
+    ns = plan_nodes(plan_of(spark, "text_bm25"))
     assert "SortMergeJoin" not in ns and "ShuffledHashJoin" not in ns, ns
     assert ns.count("BroadcastHashJoin") == 1, ns
 
@@ -671,7 +650,7 @@ def test_surprisal_vocab_broadcast_no_sortmerge(spark):
     per-doc agg) — the per-type surprisal table comes back as a
     BroadcastHashJoin; a SortMergeJoin means the corpus re-shuffled on
     the token key (skew-prone, vocab-power-law hot keys)."""
-    ns = nodes(plan_of(spark, "text_surprisal"))
+    ns = plan_nodes(plan_of(spark, "text_surprisal"))
     assert "SortMergeJoin" not in ns and "ShuffledHashJoin" not in ns, ns
     assert ns.count("BroadcastHashJoin") == 1, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
@@ -682,7 +661,7 @@ def test_pagerank_no_cartesian_no_python(spark):
     no cartesian products, no Python stages; the iteration boundary
     Scans are the localCheckpoint RDDs, not re-reads of parquet."""
     plan = plan_of(spark, "graph_pagerank")
-    ns = nodes(plan)
+    ns = plan_nodes(plan)
     assert "CartesianProduct" not in ns and "BroadcastNestedLoopJoin" not in ns, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
     assert plan.count("Scan parquet") == 0, "iterations must run off checkpoints"
@@ -693,7 +672,7 @@ def test_classifier_score_single_exchange_no_joins(spark):
     expression — the plan must contain NO join of any kind and exactly
     one Exchange (the per-doc aggregation). A join appearing here means
     the weight table regressed to a materialized lookup."""
-    ns = nodes(plan_of(spark, "text_classifier_score"))
+    ns = plan_nodes(plan_of(spark, "text_classifier_score"))
     assert not any("Join" in n for n in ns), ns
     assert ns.count("Exchange") == 1, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
@@ -704,7 +683,7 @@ def test_anomaly_mad_all_stages_keyed_no_cartesian(spark):
     user_id (locally the tiny median tables broadcast; at scale AQE
     keeps them shuffle joins on the SAME key — either way no cross-key
     traffic). Nested-loop or cartesian shapes are a regression."""
-    ns = nodes(plan_of(spark, "dq_anomaly_mad"))
+    ns = plan_nodes(plan_of(spark, "dq_anomaly_mad"))
     assert "CartesianProduct" not in ns and "BroadcastNestedLoopJoin" not in ns, ns
     assert not any("Python" in n or "Pandas" in n for n in ns), ns
 
@@ -714,7 +693,7 @@ def test_corpus_mixture_broadcast_factors_single_count_exchange(spark):
     # a broadcast; the only Exchange is the strata-count aggregation (the
     # counts table itself is checkpointed so its lineage can't replay the
     # corpus scan per consumer)
-    n = nodes(plan_of(spark, "corpus_mixture"))
+    n = plan_nodes(plan_of(spark, "corpus_mixture"))
     assert "SortMergeJoin" not in n, n
     assert "BroadcastHashJoin" in n, n
     assert "Generate" in n, n  # the row-local epoch explosion
@@ -723,7 +702,7 @@ def test_corpus_mixture_broadcast_factors_single_count_exchange(spark):
 
 def test_ts_holt_linear_one_exchange_no_window(spark):
     # the fold is in-row: one gather shuffle, no window machinery
-    n = nodes(plan_of(spark, "ts_holt_linear"))
+    n = plan_nodes(plan_of(spark, "ts_holt_linear"))
     assert n.count("Exchange") == 1, n
     assert "Window" not in n, n
 
@@ -732,7 +711,7 @@ def test_ts_seasonal_range_window_materializes_once(spark):
     # det (scan + RANGE window) feeds two consumers; the checkpoint means
     # the visible plan holds NO Window node and exactly one tiny Exchange
     # (the user x 24 seasonal profile), which then joins back broadcast
-    n = nodes(plan_of(spark, "ts_seasonal"))
+    n = plan_nodes(plan_of(spark, "ts_seasonal"))
     assert "Window" not in n, n
     assert n.count("Exchange") == 1, n
     assert "BroadcastHashJoin" in n and "SortMergeJoin" not in n, n
@@ -742,7 +721,7 @@ def test_text_keywords_window_group_limit_prunes_to_k(spark):
     # the per-doc top-k rank must prune partitions BEFORE the exchange
     # (WindowGroupLimit both sides of the shuffle) and the df join stays
     # broadcast
-    n = nodes(plan_of(spark, "text_keywords"))
+    n = plan_nodes(plan_of(spark, "text_keywords"))
     assert n.count("WindowGroupLimit") == 2, n
     assert "BroadcastHashJoin" in n and "SortMergeJoin" not in n, n
 
@@ -750,7 +729,7 @@ def test_text_keywords_window_group_limit_prunes_to_k(spark):
 def test_l_diversity_audit_is_expand_free(spark):
     # single-column count_distinct plans as a two-phase agg, not the
     # row-multiplying Expand the multi-distinct profile pays
-    n = nodes(plan_of(spark, "privacy_l_diversity"))
+    n = plan_nodes(plan_of(spark, "privacy_l_diversity"))
     assert "Expand" not in n, n
     assert n.count("Exchange") == 2, n
 
@@ -758,7 +737,7 @@ def test_l_diversity_audit_is_expand_free(spark):
 def test_scd2_build_shares_one_exchange_across_window_passes(spark):
     # lag-dedup, lead-stitch and version ordinal all ride one (key, ts)
     # sort: exactly one Exchange, one Sort in the whole build
-    n = nodes(plan_of(spark, "etl_scd2_build"))
+    n = plan_nodes(plan_of(spark, "etl_scd2_build"))
     assert n.count("Exchange") == 1, n
     assert n.count("Sort") == 1, n
 
@@ -768,9 +747,9 @@ def test_graph_wedge_pipelines_materialize_shared_frames(spark):
     # checkpoints the pair-generation pipeline replayed per consumer
     # (observed: 68 Exchanges for the per-node coefficient). Pin the
     # collapsed shape.
-    n = nodes(plan_of(spark, "graph_clustering_coeff"))
+    n = plan_nodes(plan_of(spark, "graph_clustering_coeff"))
     assert n.count("Exchange") <= 8, n.count("Exchange")
-    n2 = nodes(plan_of(spark, "graph_triangles"))
+    n2 = plan_nodes(plan_of(spark, "graph_triangles"))
     assert n2.count("Exchange") <= 4, n2.count("Exchange")
 
 
@@ -813,7 +792,7 @@ def test_bloom_semi_filter_is_preshuffle(spark):
     """The bloom membership test must sit under the fact side's exchange
     in the optimized plan — a Filter on the scan side, not post-join."""
     plan = plan_of(spark, "join_bloom_semi")
-    ns = nodes(plan)
+    ns = plan_nodes(plan)
     assert "Exchange" in ns or "BroadcastExchange" in ns
     # the literal bitmap test shows up as element_at(...) inside a Filter
     assert "element_at" in plan and "Filter" in ns
@@ -913,7 +892,7 @@ def test_mann_whitney_window_is_vocab_sized(spark):
     a global row-window over events would be the single-partition-sort
     anti-pattern the query exists to avoid."""
     plan = plan_of(spark, "ab_mann_whitney")
-    order = nodes(plan)
+    order = plan_nodes(plan)
     assert order.count("Window") == 1
     # the aggregation to distinct values (keys [value]) must exist and
     # feed the window: a raw-row ranking plan would have no groupBy
@@ -966,10 +945,13 @@ SHARED_KERNEL_QUERIES = [
 ]
 
 
+PLANS_MD = Path(__file__).resolve().parent.parent / "PLANS.md"
+
+
 def _plans_md() -> dict[str, list[str]]:
     """query -> operator sequence, from the committed PLANS.md table
     (written by tools/explain_all.py at the same scale factor)."""
-    text = (Path(__file__).resolve().parent.parent / "PLANS.md").read_text()
+    text = PLANS_MD.read_text()
     rows = {}
     for line in text.splitlines():
         m = re.match(r"^\| `([^`]+)` \| [^|]+ \| [^|]+ \| (.+) \|$", line)
@@ -984,4 +966,13 @@ def test_shared_kernel_plans_match_plans_md(spark, name):
     the one PLANS.md records: a change to a kernel that moves a join,
     shuffle or checkpoint in any caller's plan fails here (regenerate
     PLANS.md with tools/explain_all.py when the move is intended)."""
-    assert node_list(spark, QUERIES[name](spark, SF)) == _plans_md()[name]
+    assert plan_nodes(plan_of(spark, name)) == _plans_md()[name]
+
+
+@pytest.mark.slow
+def test_plans_md_is_current(spark):
+    """The whole committed PLANS.md is what tools/explain_all.py writes at
+    the same scale factor: a plan change in any declared query fails here
+    until PLANS.md is regenerated. Slow (about 3 min) because building
+    the queries runs their eager checkpoints."""
+    assert plans_md(spark, SF).splitlines() == PLANS_MD.read_text().splitlines()

@@ -1,0 +1,192 @@
+"""Each engine kernel's DuckDB twin (the ``*_sql`` builder beside it, which
+the declared oracles are built from) against the Spark kernel itself, on
+hand-made inputs the fixture corpus does not contain: short documents,
+repeated shingles, double and edge spaces, empty and NULL text."""
+
+from __future__ import annotations
+
+import duckdb
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from openmrs_patient_migration_script_spark.operators.dedup import (
+    _band_buckets,
+    _shingles,
+    band_buckets_sql,
+    md5_pair,
+    minhash_signatures,
+    minhash_signatures_sql,
+    shingles_sql,
+)
+from openmrs_patient_migration_script_spark.operators.similarity import (
+    srp_hashed,
+    srp_hashed_sql,
+    srp_weights,
+)
+from openmrs_patient_migration_script_spark.operators.text import (
+    LANG_MARKERS,
+    langid_exprs,
+    langid_exprs_sql,
+    quality_exprs,
+    quality_exprs_sql,
+)
+from openmrs_patient_migration_script_spark.plans import (
+    dedup_queries,
+    similarity_queries,
+)
+
+DOCS = [
+    (1, "a b"),  # fewer tokens than a shingle
+    (2, "x y z x y z x y z"),  # every shingle repeated
+    (3, "p  q r s"),  # double space: an empty token
+    (4, ""),
+    (5, None),
+    (6, " the fast hash join "),  # leading and trailing space
+    (7, "one two three four five six seven eight"),
+    (8, "one two three four five six seven nine"),  # near-duplicate of 7
+    (9, "The Sort, a MERGE of data!"),  # case and punctuation
+]
+
+#: every (planes, tables) configuration a declared oracle hashes with
+SRP_CONFIGS = sorted(
+    {
+        (similarity_queries._LSH_M, similarity_queries._LSH_L),
+        (similarity_queries._MP_M, similarity_queries._MP_L),
+        (similarity_queries._KNN_LSH_M, similarity_queries._KNN_LSH_L),
+        (dedup_queries._EMB_LSH_M, dedup_queries._EMB_LSH_L),
+        *similarity_queries._KNN_SWEEP_CFGS,
+    }
+)
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.createDataFrame(DOCS, "doc_id long, text string")
+
+
+@pytest.fixture(scope="module")
+def duck_docs():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", DOCS)
+    yield con
+    con.close()
+
+
+def test_shingles_sql_matches_shingles(docs, duck_docs):
+    spark_sh = {
+        (r["doc_id"], r["shingle"])
+        for r in docs.select(
+            "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("shingle")
+        ).collect()
+    }
+    duck_sh = set(
+        duck_docs.execute(f"WITH {shingles_sql()} SELECT doc_id, shingle FROM sh").fetchall()
+    )
+    assert duck_sh == spark_sh and spark_sh
+
+
+#: every band count a declared oracle keys the 16-hash signature with
+BAND_COUNTS = sorted({4, *(b for b, _, _ in dedup_queries._BAND_SWEEP)})
+
+
+@pytest.mark.parametrize("bands", BAND_COUNTS)
+def test_minhash_sql_matches_band_buckets(docs, duck_docs, bands):
+    sig = minhash_signatures(docs, "doc_id", "text", 16, double_hash=md5_pair)
+    spark_keys = {
+        (r["key"], r["band"], ",".join(str(v) for v in r["bucket"]))
+        for r in _band_buckets(sig, 16, bands, hash_buckets=False).collect()
+    }
+    duck_keys = set(
+        duck_docs.execute(
+            f"""WITH {shingles_sql()},
+            {minhash_signatures_sql()},
+            {band_buckets_sql(bands, suffix=f"_{bands}")}
+            SELECT doc_id, band, sig_str FROM bands_{bands}"""
+        ).fetchall()
+    )
+    assert duck_keys == spark_keys and spark_keys
+
+
+@pytest.mark.parametrize("m,L", SRP_CONFIGS)
+def test_srp_hashed_sql_matches_srp_kernels(spark, m, L):
+    dim = 64
+    # integer components: every projection is exact on both engines, so
+    # a sign decision never depends on summation order
+    vecs = np.random.default_rng(m * 100 + L).integers(-5, 6, (12, dim))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE vec (vec_id BIGINT, v DOUBLE[])")
+    con.executemany("INSERT INTO vec VALUES (?, ?)", rows)
+    planes = np.zeros((m * L, dim))
+    for p, d, w in con.execute(
+        f"WITH {srp_hashed_sql(m, L)} SELECT p, d, w FROM planes"
+    ).fetchall():
+        planes[p, d] = w
+    assert (planes == srp_weights(spark, dim, m, L, hash_mode="md5")).all()
+
+    duck_bkts = set(
+        con.execute(
+            f"WITH {srp_hashed_sql(m, L)} SELECT vec_id, tbl, bkt FROM buckets"
+        ).fetchall()
+    )
+    con.close()
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    spark_bkts = {
+        (r["vec_id"], r["_tbl"], r["_bkt"])
+        for r in srp_hashed(emb, "vec_id", m, L, hash_mode="md5").collect()
+    }
+    assert duck_bkts == spark_bkts and len(spark_bkts) == len(rows) * L
+
+
+def _quality_rows(docs, duck_docs):
+    exprs = quality_exprs(F.col("text"))
+    sql = quality_exprs_sql()
+    assert list(sql) == list(exprs)
+    spark_rows = docs.select(
+        "doc_id", *[c.alias(name) for name, c in exprs.items()]
+    ).collect()
+    duck_rows = duck_docs.execute(
+        "SELECT doc_id, "
+        + ", ".join(f"{e} AS {name}" for name, e in sql.items())
+        + " FROM documents"
+    ).fetchall()
+    return {r[0]: tuple(r) for r in spark_rows}, {r[0]: r for r in duck_rows}
+
+
+def _langid_rows(docs, duck_docs):
+    langs = sorted(LANG_MARKERS)
+    scores, pred = langid_exprs(F.col("text"))
+    spark_rows = docs.select(
+        "doc_id", *[scores[lang] for lang in langs], pred
+    ).collect()
+    score_list, argmax = langid_exprs_sql()
+    duck_rows = duck_docs.execute(
+        f"""SELECT doc_id, {", ".join(f"score_{lang}" for lang in langs)},
+               {argmax}
+        FROM (SELECT doc_id, {score_list} FROM documents)"""
+    ).fetchall()
+    return {r[0]: tuple(r) for r in spark_rows}, {r[0]: r for r in duck_rows}
+
+
+NULL_DOC = 5
+
+
+@pytest.mark.parametrize("rows", [_quality_rows, _langid_rows])
+def test_text_twins_match_kernels(docs, duck_docs, rows):
+    spark_rows, duck_rows = rows(docs, duck_docs)
+    del spark_rows[NULL_DOC], duck_rows[NULL_DOC]  # pinned below
+    assert duck_rows == spark_rows
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="with ANSI off, Spark's size(NULL) is -1 (spark.sql.legacy."
+    "sizeOfNull), so the kernels give NULL text n_tokens -1, stopword_ratio "
+    "1.0 and language scores -1; DuckDB's len(NULL) is NULL",
+)
+@pytest.mark.parametrize("rows", [_quality_rows, _langid_rows])
+def test_text_twins_match_kernels_on_null_text(docs, duck_docs, rows):
+    spark_rows, duck_rows = rows(docs, duck_docs)
+    assert duck_rows[NULL_DOC] == spark_rows[NULL_DOC]

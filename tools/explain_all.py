@@ -17,9 +17,14 @@ from openmrs_patient_migration_script_spark.plans import ORACLES, QUERIES  # noq
 from openmrs_patient_migration_script_spark.session import get_spark  # noqa: E402
 
 
-def node_list(spark, df) -> list[str]:
+def formatted_plan(spark, df) -> str:
+    """The optimized physical plan of ``df`` in Spark's formatted explain mode."""
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def plan_nodes(plan: str) -> list[str]:
+    """The operator names of a formatted plan, in its numbered order."""
     out = []
     for line in plan.splitlines():
         m = re.match(r"^\(\d+\) (\S+)", line.strip())
@@ -31,6 +36,12 @@ def node_list(spark, df) -> list[str]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("explain-all", shuffle_partitions=8)
+    Path("PLANS.md").write_text(plans_md(spark, sf_dir))
+    print(f"wrote PLANS.md ({len(QUERIES)} queries)")
+
+
+def plans_md(spark, sf_dir: str) -> str:
+    """The PLANS.md text: one row per declared query at ``sf_dir``."""
     lines = [
         "# Physical plans (generated by tools/explain_all.py)",
         "",
@@ -44,15 +55,14 @@ def main() -> None:
     ]
     for name in sorted(QUERIES):
         try:
-            ns = node_list(spark, QUERIES[name](spark, sf_dir))
+            ns = plan_nodes(formatted_plan(spark, QUERIES[name](spark, sf_dir)))
             shuffles = sum(1 for n in ns if n == "Exchange")
             compact = " → ".join(ns)
             kind = "hash" if name in ORACLES else "rows-only"
             lines.append(f"| `{name}` | {kind} | {shuffles} | {compact} |")
         except Exception as e:  # pragma: no cover - diagnostic tool
             lines.append(f"| `{name}` | — | — | ERROR: {e} |")
-    Path("PLANS.md").write_text("\n".join(lines) + "\n")
-    print(f"wrote PLANS.md ({len(QUERIES)} queries)")
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
