@@ -17,9 +17,8 @@ widened into a general analytics engine per SURVEY.md:
 - time-series regularization (gap-filling resample + forward fill),
 - a Structured Streaming surface over event tables,
 - JDBC source/sink parity (runtime-tested against embedded Derby),
-- storage layout & maintenance (small-file compaction, partitioned writes
-  with dynamic partition pruning, range/Z-order clustering for row-group
-  skipping).
+- storage layout & maintenance (small-file compaction, range clustering
+  for row-group skipping).
 
 Everything is built on public PySpark 4.x APIs only; no code is taken from
 the reference (its implementation file is absent from the snapshot anyway —

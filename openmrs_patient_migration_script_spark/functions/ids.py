@@ -5,8 +5,8 @@ The reference generates a fresh random ``CHAR(38)`` UUID per inserted row
 task retries and speculative execution would mint different values for the
 same logical row, re-runs are not idempotent, and differential testing is
 impossible. Engine policy (SURVEY.md §1.2, §4): UUIDs are **derived
-deterministically from the natural key** by default; ``random_uuid`` is kept
-only as a parity mode.
+deterministically from the natural key**; a caller who truly wants the
+reference's random UUIDs can use Spark's own ``uuid()``.
 """
 
 from __future__ import annotations
@@ -48,12 +48,6 @@ def deterministic_uuid_sql(cols_sql: str, namespace: str = "") -> str:
         f"substring({h}, 1, 8), substring({h}, 9, 4), substring({h}, 13, 4), "
         f"substring({h}, 17, 4), substring({h}, 21, 12))"
     )
-
-
-def random_uuid() -> Column:
-    """Reference-parity mode: nondeterministic per-row UUID
-    (/root/reference/README.md:19). Not used in declared queries."""
-    return F.expr("uuid()")
 
 
 # OpenMRS's patient-identifier check-digit scheme (public

@@ -41,8 +41,8 @@ def vectorized_quality_score(text: pd.Series) -> pd.Series:
     expression-level quality score, numerically aligned with
     operators/text.py::quality_exprs token for token — same STOPWORDS,
     same lowercasing, same empty-token filtering, and the same edge
-    semantics (NULL text → 0.0, token-less text → NULL) — so tests can
-    compare the two paths value-for-value on any corpus."""
+    semantics (NULL or token-less text → NULL) — so tests can compare the
+    two paths value-for-value on any corpus."""
     toks = text.fillna("").str.lower().str.split(" ").map(
         lambda ts: [t for t in ts if t]
     )
@@ -50,8 +50,7 @@ def vectorized_quality_score(text: pd.Series) -> pd.Series:
     stop_cnt = toks.map(lambda ts: sum(t in _STOPSET for t in ts))
     stop_ratio = (stop_cnt / n).round(6)
     score = ((n / 100.0).clip(upper=1.0) * (1.0 - stop_ratio)).round(6)
-    score[n == 0] = float("nan")  # no tokens → NULL, like the builtin
-    score[text.isna()] = 0.0  # builtin yields 0.0 for NULL text
+    score[n == 0] = float("nan")  # NULL or no tokens → NULL, like the builtin
     return score
 
 
@@ -85,16 +84,8 @@ class ChunkSpans:
             yield start, min(size, len(toks) - start), piece
 
 
-def register_python_exts(spark) -> None:
-    """Register the UDTF + UDFs for SQL use (idempotent)."""
-    spark.udtf.register("chunk_spans", ChunkSpans)
-    spark.udf.register("vectorized_quality_score", vectorized_quality_score)
-    spark.udf.register("weighted_mean", weighted_mean)
-
-
 __all__ = [
     "ChunkSpans",
-    "register_python_exts",
     "vectorized_quality_score",
     "weighted_mean",
 ]

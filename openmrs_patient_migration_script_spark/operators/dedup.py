@@ -655,11 +655,6 @@ def simhash(
     return per_bit.select("key", fp.alias("simhash"))
 
 
-def hamming_distance(a, b, bits: int = 32):
-    """Popcount of XOR via bit_count (Spark 3.3+)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def _kgram_occurrences(
     df: DataFrame,
     key_col: str,

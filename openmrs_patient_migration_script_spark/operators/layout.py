@@ -2,26 +2,20 @@
 engine.
 
 A long-lived table's read performance is mostly decided *before* any query
-runs, by three layout properties this module manages:
+runs, by two layout properties this module manages:
 
 1. **File sizing** (``compact_table``): streaming ingest and fine-grained
    partitioned writes leave thousands of tiny files per partition; at
    100 TB the driver-side file listing and per-file open cost dominate the
    scan. Compaction bin-packs a table back to ~``target_file_bytes`` files.
-2. **Partition layout** (``write_partitioned``): directory partitioning on
-   a low-cardinality predicate column (date, region) turns matching
-   ``WHERE`` clauses into partition pruning — files outside the predicate
-   are never listed, let alone read — and joins against a filtered dim into
-   *dynamic* partition pruning (Catalyst builds the partition filter from
-   the dim side at runtime). tests/test_layout.py pins both plans.
-3. **Row-group clustering** (``cluster_by_range``): parquet stores per
+2. **Row-group clustering** (``cluster_by_range``): parquet stores per
    row-group min/max stats; readers skip row groups whose [min, max] band
    misses the predicate. Stats only help if each file covers a *narrow*
    band — global range partitioning + an intra-partition sort gives every
-   file a tight, nearly disjoint key range (a 1-D Z-order). The pyarrow
-   footer check in tests proves the bands tightened.
+   file a tight, nearly disjoint key range. The pyarrow footer check in
+   tests (``rowgroup_bands``) proves the bands tightened.
 
-All three are plain DataFrame writes — no custom file formats, no sidecar
+Both are plain DataFrame writes — no custom file formats, no sidecar
 metadata — so they compose with every source in ``sources/``.
 
 The reference migrates into MySQL (/root/reference/README.md:7-17) and has
@@ -35,26 +29,6 @@ import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write ``df`` as a directory-partitioned parquet table.
-
-    ``partition_cols`` should be low-cardinality predicate columns (a date
-    bucket, a region) — every distinct combination becomes a directory, and
-    100k+ directories of tiny files is the anti-pattern ``compact_table``
-    exists to fix. ``max_records_per_file`` caps file size without an extra
-    shuffle (the writer rolls files as it goes).
-    """
-    w = df.write
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -158,59 +132,6 @@ def cluster_by_range(
     one file's [min, max] band after clustering.
     """
     return df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-
-
-def zorder_by(
-    df: DataFrame, col_a: str, col_b: str, n_files: int, bits: int = 8
-) -> DataFrame:
-    """Two-dimensional clustering via a Morton (Z-order) curve.
-
-    ``cluster_by_range`` gives perfect bands on its *leading* column and
-    none on any other; a table queried by both ``(customer)`` and
-    ``(order value)`` needs each file to cover a small *rectangle* in the
-    2-D key space. Z-ordering gets there by interleaving the bits of the
-    two keys and range-clustering on the interleaved value — files then
-    hold contiguous runs of the space-filling curve, so per-file min/max
-    stats are tight in BOTH dimensions (quadratically worse than perfect
-    per dimension, instead of one perfect + one useless).
-
-    Each key is first scaled to ``bits`` bits against its observed min/max
-    (one 2-row aggregate job — the same pre-pass ``repartitionByRange``'s
-    sampler already pays). Interleaving is pure JVM arithmetic
-    (``shiftleft``/``bitwiseOR``) unrolled ``bits`` times into one
-    codegen'd expression — no UDF, no extra shuffle beyond the one
-    clustering exchange every layout rewrite pays anyway.
-    """
-    from pyspark.sql import functions as F
-
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).first()
-    if lo_a is None or lo_b is None:  # empty table or all-NULL key column
-        return df  # nothing to cluster; a no-op beats float(None) crashing
-    max_code = (1 << bits) - 1
-
-    def scaled(c, lo, hi):
-        span = max(float(hi) - float(lo), 1e-12)
-        return F.least(
-            F.lit(max_code),
-            ((F.col(c).cast("double") - float(lo)) / span * max_code).cast("long"),
-        )
-
-    a, b = scaled(col_a, lo_a, hi_a), scaled(col_b, lo_b, hi_b)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        bit_a = F.shiftright(a, i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(b, i).bitwiseAND(F.lit(1))
-        z = z.bitwiseOR(F.shiftleft(bit_a, 2 * i + 1)).bitwiseOR(
-            F.shiftleft(bit_b, 2 * i)
-        )
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
 
 
 def rowgroup_bands(path: str, column: str) -> list[tuple[object, object]]:

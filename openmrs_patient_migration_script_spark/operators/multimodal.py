@@ -319,37 +319,6 @@ def frame_sample(media: DataFrame) -> DataFrame:
     return media.mapInPandas(sample, schema=_FRAME_SCHEMA)
 
 
-def resize_images(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize plan: computes the target geometry from the (fake-)decoded
-    dims and passes the payload through unchanged — a real implementation
-    would re-encode bytes in the same UDF body. Keeps the binary column's
-    schema stable so downstream stages are unaffected."""
-    schema = StructType(
-        media.schema.fields
-        + [
-            StructField("target_width", IntegerType()),
-            StructField("target_height", IntegerType()),
-        ]
-    )
-
-    def resize(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            dims = [fake_decode(bytes(c)) for c in pdf["content"]]
-            scale = [
-                min(1.0, max_side / max(d["width"], d["height"])) for d in dims
-            ]
-            out = pdf.copy()
-            out["target_width"] = [
-                max(1, int(d["width"] * s)) for d, s in zip(dims, scale)
-            ]
-            out["target_height"] = [
-                max(1, int(d["height"] * s)) for d, s in zip(dims, scale)
-            ]
-            yield out
-
-    return media.mapInPandas(resize, schema=schema)
-
-
 _AUDIO_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -447,8 +416,7 @@ def ahash_bmp(content: bytes, bits: int = 60) -> int:
     within a few bits. Uses the first ``bits`` of the 64 blocks
     (row-major) so the fingerprint drops straight into the 60-bit
     banded Hamming search. (Named for the first format it decoded;
-    dispatches on magic bytes — `ahash_image` is the format-neutral
-    alias.)"""
+    it dispatches on magic bytes.)"""
     import numpy as np
 
     g = _image_pixels(content).mean(axis=2)
@@ -467,9 +435,6 @@ def ahash_bmp(content: bytes, bits: int = 60) -> int:
     for b in flat > m:
         out = (out << 1) | int(b)
     return out
-
-
-ahash_image = ahash_bmp
 
 
 def fake_phash(content: bytes, bits: int = 60) -> int:

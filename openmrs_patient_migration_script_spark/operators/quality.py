@@ -547,33 +547,6 @@ def quarantine_rows(
     )
 
 
-def observed_write(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, Column],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> dict:
-    """One-pass write WITH audit metrics — Spark's Observation API: the
-    named aggregate expressions ride the write job itself, so the
-    pipeline gets its row counts / null counts / sums for the audit
-    ledger WITHOUT a second scan of what it just wrote. At 100 TB the
-    difference between this and write-then-recount is a full re-read of
-    the output.
-
-    Returns the observed metric dict. Metrics must be aggregate
-    expressions (count/sum/min/max/...); they see exactly the rows the
-    sink received, so a quarantine filter upstream is reflected — the
-    returned numbers ARE the shipped data's numbers, not the input's.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    out.write.format(fmt).mode(mode).save(path)
-    return obs.get
-
-
 def blocking_quality(
     a: DataFrame,
     b: DataFrame,

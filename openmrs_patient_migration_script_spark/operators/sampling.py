@@ -24,14 +24,17 @@ from pyspark.sql import functions as F
 
 def hash_bucket(key: Column, buckets: int = 1000) -> Column:
     """Stable per-row bucket in [0, buckets): first 8 md5 hex chars → int.
-
-    Identical in DuckDB as ``('0x' || substr(md5(k::VARCHAR),1,8))::BIGINT
-    % buckets`` — used by the oracles and by split assignment in tests.
+    NULL keys give NULL. Its DuckDB form is :func:`hash_bucket_sql`.
     """
     return (
         F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long")
         % buckets
     )
+
+
+def hash_bucket_sql(key_sql: str, buckets: int) -> str:
+    """DuckDB twin of ``hash_bucket`` over the SQL expression ``key_sql``."""
+    return f"('0x' || substr(md5({key_sql}::VARCHAR), 1, 8))::BIGINT % {buckets}"
 
 
 def stratified_hash_sample(

@@ -110,50 +110,17 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(vec_col, num_planes: int = 8, plane_offset: int = 0):
-    """Sign-random-projection bucket id in [0, 2^num_planes).
-
-    Plane p's weight for dimension d is ±1 from the parity of
-    ``xxhash64(p, d)`` — deterministic across runs/engines, no stored model.
-    bit_p = 1 iff Σ_d w_pd · x_d >= 0. ``plane_offset`` selects a disjoint
-    plane family so multiple hash tables are independent.
-    """
-    bits = []
-    for p in range(plane_offset, plane_offset + num_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(vec_col) - 1),
-                    lambda d: F.when(
-                        F.pmod(F.xxhash64(F.lit(p), d), 2) == 0, F.lit(1.0)
-                    ).otherwise(F.lit(-1.0)),
-                ),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        bits.append(
-            F.when(proj >= 0, F.lit(1 << (p - plane_offset))).otherwise(F.lit(0))
-        )
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket.cast("int")
-
-
 _SRP_WEIGHTS_CACHE: dict[tuple[int, int, int], object] = {}
 
 
 def srp_weights(
     spark, dim: int, num_planes: int, num_tables: int, hash_mode: str = "xxhash64"
 ):
-    """The ±1 hyperplane matrix ((num_planes·num_tables) × dim) exactly as
-    `lsh_bucket` derives it — parity of JVM ``xxhash64(p, d)`` — computed
-    once via a tiny (p, d) grid job and returned as numpy. Equivalence
-    with the HOF form is pinned in tests (0 bucket mismatches across the
-    fixture); the matrix is plane-count-sized (KBs), safe to ship in task
+    """The ±1 hyperplane matrix ((num_planes·num_tables) × dim): plane p's
+    weight for dimension d is the parity of JVM ``xxhash64(p, d)`` —
+    deterministic across runs, no stored model — computed once via a tiny
+    (p, d) grid job and returned as numpy. The matrix is plane-count-sized
+    (KBs), safe to ship in task
     closures — it is a MODEL constant, not data, and since xxhash64 is
     session-independent the matrix is memoized per (dim, m, L) so repeat
     calls (corpus + query side of the same search, re-runs in a bench
@@ -218,8 +185,8 @@ def srp_hashed(
     """(key, _tbl, _bkt) multi-table SRP bucket rows — one numpy matmul
     per Arrow batch against the broadcast weight matrix, replacing r2's
     per-plane interpreted HOF fold (m·L·d lambda evals per row; measured
-    ~4x slower end-to-end on sim_ann_lsh at sf0.1). Buckets are identical
-    to `lsh_bucket`'s modulo sub-ulp projections at the sign boundary."""
+    ~4x slower end-to-end on sim_ann_lsh at sf0.1). Table t's bucket sets
+    bit p iff the vector's projection on plane t·m + p is >= 0."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType

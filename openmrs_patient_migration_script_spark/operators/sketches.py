@@ -1,77 +1,35 @@
-"""Mergeable-sketch rollups — incremental distinct counts, quantiles and
-set algebra at 100 TB.
-
-Three sketch families (all Apache DataSketches JVM built-ins in Spark 4,
-all persisted as ordinary binary columns):
-- HLL: per-slice distinct counts, union-mergeable to any coarser slice;
-- KLL (r3): per-slice quantile sketches — p50/p95/p99 over any date
-  range without a re-scan; rank-error bounded, merge-order randomized
-  (compaction), so the contract is rank accuracy, not bit identity;
-- Theta (r3): distinct counts WITH set algebra — union, intersection,
-  difference — the audience-overlap questions HLL cannot answer.
+"""Mergeable-sketch rollups — incremental distinct counts, quantiles,
+set algebra and frequencies at 100 TB.
 
 ``agg_distinct``'s exact two-phase distinct re-scans the fact table for
 every (slice, window) asked. The scale pattern is to pre-aggregate each
-narrow slice ONCE into a mergeable sketch (HyperLogLog here), persist the
-sketches (a few KB each), and answer any coarser slice by unioning
-sketches — no second pass over raw data, ever. This is how a 100 TB daily
-pipeline serves "distinct users over any date range" in milliseconds.
+narrow slice ONCE into a mergeable sketch, persist the sketches (a few KB
+each), and answer any coarser slice by merging sketches — no second pass
+over raw data, ever. This is how a 100 TB daily pipeline serves "distinct
+users over any date range" in milliseconds.
 
-Spark 4 ships the Apache DataSketches HLL family as JVM built-ins
-(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``), so the
-whole path is codegen'd — no UDFs, and the sketch column is an ordinary
-``binary`` that parquet/ORC round-trips.
+Sketch families (the DataSketches ones are JVM built-ins in Spark 4, so
+the whole path is codegen'd — no UDFs — and every sketch column is an
+ordinary ``binary`` that parquet/ORC round-trips):
+- Theta: distinct counts WITH set algebra — union, intersection,
+  difference — the audience-overlap questions an HLL sketch cannot
+  answer;
+- KLL: per-slice quantile sketches — p50/p95/p99 over any date range
+  without a re-scan; rank-error bounded, merge-order randomized
+  (compaction), so the contract is rank accuracy, not bit identity;
+- roaring bitmaps: EXACT distinct counts, merged by bucket-wise OR;
+- Count-Min: item frequencies, merged by cell-wise addition.
 
-Correctness contract (pinned in tests/test_analytics.py): the merged
-estimate and the one-pass estimate both sit within the configured
-precision's error bound of the true distinct count (they need not be
-bit-identical — union can promote a sketch's internal representation,
-e.g. sparse→dense, shifting the estimate by ulps within the bound), and
-sketches survive a parquet roundtrip unchanged — the persist-then-merge
-pattern the module exists for.
+Correctness contracts are pinned in tests/test_analytics.py: merged
+estimates sit within the configured precision's error bound of the true
+value, also after the sketches take a parquet roundtrip — the
+persist-then-merge pattern the module exists for.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def sketch_slices(
-    df: DataFrame,
-    slice_cols: list[str],
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
-    """One HLL sketch per slice: (slice_cols..., nd_sketch).
-
-    ``lg_k=12`` ⇒ ~1.6% relative standard error in ~4 KB per sketch; raise
-    it for tighter bounds, linearly more state. Partial-combinable hash
-    agg — one shuffle carrying sketches, not raw values.
-    """
-    return df.groupBy(*slice_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("nd_sketch")
-    )
-
-
-def rollup_sketches(
-    sketches: DataFrame,
-    keep_cols: list[str],
-    sketch_col: str = "nd_sketch",
-) -> DataFrame:
-    """Merge pre-built sketches up to a coarser slice: (keep_cols...,
-    distinct_estimate). Input is the *output* of :func:`sketch_slices` —
-    this never touches raw data, which is the entire point: the merge
-    shuffles KB-sized sketch state no matter how many raw rows each
-    sketch summarized."""
-    return (
-        sketches.groupBy(*keep_cols)
-        .agg(F.hll_union_agg(F.col(sketch_col)).alias("merged"))
-        .select(
-            *keep_cols,
-            F.hll_sketch_estimate("merged").cast("long").alias("distinct_estimate"),
-        )
-    )
 
 
 def quantile_sketch_slices(
@@ -81,8 +39,8 @@ def quantile_sketch_slices(
     k: int = 200,
 ) -> DataFrame:
     """One KLL quantile sketch per slice: (slice_cols..., q_sketch) —
-    the quantile counterpart of :func:`sketch_slices` (Spark 4.1 ships
-    the DataSketches KLL family as JVM built-ins).
+    the quantile counterpart of :func:`theta_sketch_slices` (Spark 4.1
+    ships the DataSketches KLL family as JVM built-ins).
 
     ``k=200`` ⇒ ~1.65% rank error in a few KB per sketch. The value
     column is cast to double (one typed family keeps the module simple —
@@ -144,9 +102,8 @@ def rollup_theta(
     lg_k: int = 12,
 ) -> DataFrame:
     """Merge pre-built theta sketches up to a coarser slice:
-    (keep_cols..., distinct_estimate) — the theta twin of
-    :func:`rollup_sketches`. Theta keeps the raw hash SET until ``2^lg_k``
-    entries (exact mode), so at slice cardinalities below the nominal k
+    (keep_cols..., distinct_estimate). Theta keeps the raw hash SET until
+    ``2^lg_k`` entries (exact mode), so at slice cardinalities below the nominal k
     the rolled-up estimate is not an estimate at all — it equals the true
     distinct count, which is what makes the declared query
     hash-checkable against an exact ``COUNT(DISTINCT)`` oracle.
@@ -200,18 +157,6 @@ def theta_algebra(
     )
 
 
-def theta_overlap(
-    sketches: DataFrame,
-    slice_col: str,
-    slice_a,
-    slice_b,
-    sketch_col: str = "t_sketch",
-) -> dict:
-    """Dict form of :func:`theta_algebra` for driver-side consumers."""
-    row = theta_algebra(sketches, slice_col, slice_a, slice_b, sketch_col).collect()[0]
-    return {k: int(row[k]) for k in row.asDict()}
-
-
 def bitmap_slices(
     df: DataFrame,
     slice_cols: list[str],
@@ -249,7 +194,7 @@ def rollup_bitmap_distinct(
     (keep_cols..., distinct_exact). Two hash aggs: bucket-wise OR (the
     mergeable step — idempotent, so overlapping finer slices never
     double-count), then a sum of per-bucket popcounts. EXACT at any
-    scale — no error bound to document, unlike the HLL/theta rollups."""
+    scale — no error bound to document, unlike the theta rollup."""
     return (
         bitmaps.groupBy(*keep_cols, "bucket")
         .agg(F.bitmap_or_agg(F.col("bm")).alias("merged"))
@@ -280,8 +225,8 @@ def cms_build(
     width: int = 1024,
 ) -> DataFrame:
     """Count-Min sketch of an item stream (Cormode & Muthukrishnan 2005)
-    — the mergeable FREQUENCY sketch completing the family: HLL/Theta
-    answer distinct, KLL answers quantiles, CMS answers "how many times
+    — the mergeable FREQUENCY sketch completing the family: Theta and
+    bitmaps answer distinct, KLL answers quantiles, CMS answers "how many times
     did X occur" over arbitrary re-aggregations with fixed state.
 
     Returns the sketch as (row, bucket, cnt) cells — at most

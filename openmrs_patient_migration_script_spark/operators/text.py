@@ -197,9 +197,11 @@ def quality_exprs(text_col) -> dict[str, F.Column]:
     expression level so composed pipelines (operators/corpus.py) can stack
     them onto an existing projection without a join."""
     toks = tokens(text_col)
-    n_tokens = F.size(toks)
+    # array_size, not size: with ANSI off size(NULL) is -1, and NULL text
+    # must give NULL signals, as the twin does
+    n_tokens = F.array_size(toks)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    stop_cnt = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
+    stop_cnt = F.array_size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     n_chars = F.length(text_col)
     punct_chars = F.length(F.regexp_replace(F.lower(text_col), "[a-z0-9 ]", ""))
     stop_ratio = F.round(stop_cnt / n_tokens, 6)
@@ -282,12 +284,13 @@ def language_id(
 def langid_argmax(score_cols: list[str], langs: list[str]) -> F.Column:
     """Argmax language from already-materialized score columns
     (alphabetical tie-break). Keep the scores in their OWN projection below
-    this expression — see language_id for why."""
+    this expression — see language_id for why. NULL text (every score
+    NULL) gives NULL."""
     best = F.greatest(*[F.col(c) for c in score_cols])
     pred = F.lit(langs[-1])
     for c, lang in list(zip(score_cols, langs))[-2::-1]:
         pred = F.when(F.col(c) == best, F.lit(lang)).otherwise(pred)
-    return pred
+    return F.when(best.isNotNull(), pred)
 
 
 def langid_exprs(
@@ -301,7 +304,7 @@ def langid_exprs(
 
     def marker_score(marker_list: tuple[str, ...]):
         arr = F.array(*[F.lit(x) for x in marker_list])
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
+        return F.array_size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
     scores = {lang: marker_score(markers[lang]) for lang in langs}
     best = F.greatest(*[scores[lang] for lang in langs])
@@ -309,7 +312,7 @@ def langid_exprs(
     # first lang (alphabetically) whose score equals the max wins
     for lang in reversed(langs[:-1]):
         pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
-    return scores, pred
+    return scores, F.when(best.isNotNull(), pred)
 
 
 def langid_exprs_sql() -> tuple[str, str]:
@@ -325,7 +328,7 @@ def langid_exprs_sql() -> tuple[str, str]:
     )
     greatest = "greatest(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
     case = (
-        "CASE "
+        f"CASE WHEN {greatest} IS NULL THEN NULL "
         + " ".join(f"WHEN score_{lang} = {greatest} THEN '{lang}'" for lang in langs[:-1])
         + f" ELSE '{langs[-1]}' END"
     )

@@ -14,6 +14,7 @@ from openmrs_patient_migration_script_spark.functions.numeric import dec_to_long
 
 from openmrs_patient_migration_script_spark.operators.dedup import shingles_sql
 from openmrs_patient_migration_script_spark.operators.sampling import (
+    hash_bucket_sql,
     stratified_hash_sample,
 )
 from openmrs_patient_migration_script_spark.plans.registry import query
@@ -27,11 +28,11 @@ SAMPLE_RATES: dict[str, int] = {"en": 500, "de": 250, "es": 250, "fr": 250, "zh"
 
 @query(
     "sample_hash",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, source, bucket
     FROM (
       SELECT doc_id, lang, source,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS bucket
+             {hash_bucket_sql("doc_id", 1000)} AS bucket
       FROM documents
     )
     WHERE bucket < CASE lang
@@ -168,14 +169,14 @@ def retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_split",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang,
            CASE WHEN b < 900 THEN 'train'
                 WHEN b < 950 THEN 'val'
                 ELSE 'test' END AS split
     FROM (
       SELECT doc_id, lang,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS b
+             {hash_bucket_sql("doc_id", 1000)} AS b
       FROM documents
     )
     """,
@@ -219,7 +220,7 @@ def sample_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_temperature",
-    oracle="""
+    oracle=f"""
     WITH counts AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
     z AS (SELECT sum(pow(n, 0.5)) AS z, sum(n) AS total FROM counts),
     fr AS (
@@ -229,7 +230,7 @@ def sample_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.doc_id, d.lang
     FROM documents d JOIN fr USING (lang)
-    WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 1000000
+    WHERE {hash_bucket_sql("d.doc_id", 1000000)}
           < CAST(round(f * 1000000, 0) AS BIGINT)
     """,
 )
@@ -288,7 +289,7 @@ def sample_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_mixture",
-    oracle="""
+    oracle=f"""
     WITH counts AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
     tot AS (SELECT sum(n) AS total FROM counts),
     f AS (
@@ -306,7 +307,7 @@ def sample_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     d AS (
       SELECT doc_id, lang,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000000
+             {hash_bucket_sql("doc_id", 1000000)}
                AS bkt
       FROM documents
     ),
@@ -350,7 +351,7 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS bkt
+             {hash_bucket_sql("doc_id", 1000)} AS bkt
       FROM documents
     ),
     {shingles_sql("b")},
@@ -1748,10 +1749,10 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_chisq",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT event_type,
-             ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT % 2 AS arm
+             {hash_bucket_sql("user_id", 2)} AS arm
       FROM events
     ),
     cells AS (SELECT event_type, arm, count(*) AS o FROM t GROUP BY 1, 2),
@@ -3665,7 +3666,7 @@ _SPRT_LO = -2944438979  # round(ln(beta/(1-alpha)) * 1e9): accept H0
     "ab_sequential_sprt",
     oracle=f"""
     WITH t AS (
-      SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT % 2 AS arm,
+      SELECT {hash_bucket_sql("user_id", 2)} AS arm,
              ts, event_id,
              (event_type = 'purchase')::INT AS succ
       FROM events

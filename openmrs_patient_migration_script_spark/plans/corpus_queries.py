@@ -20,6 +20,7 @@ from openmrs_patient_migration_script_spark.operators.dedup import (
     minhash_signatures_sql,
     shingles_sql,
 )
+from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket_sql
 from openmrs_patient_migration_script_spark.operators.text import (
     STOPWORDS,
     STOPWORDS_SQL,
@@ -81,10 +82,10 @@ _PREP_CTES = f"""
 
 # the survivors: exact-dedup rows that are their near-dup cluster's minimum
 # (or in no cluster), with the split bucket b
-_SURVIVORS = """
+_SURVIVORS = f"""
     FROM (
       SELECT exact.*,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000 AS b
+             {hash_bucket_sql("doc_id", 1000)} AS b
       FROM exact
     ) e
     LEFT JOIN comp ON comp.node = e.doc_id

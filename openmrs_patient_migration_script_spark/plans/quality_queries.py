@@ -15,6 +15,7 @@ from openmrs_patient_migration_script_spark.operators.quality import (
     referential_orphans,
     validate_rules,
 )
+from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket_sql
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
 
@@ -414,11 +415,11 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_table_diff",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT o_orderkey, o_orderstatus,
              cast(o_totalprice AS DECIMAL(18,2)) AS price, o_orderdate,
-             ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 8))::BIGINT % 1000
+             {hash_bucket_sql("o_orderkey", 1000)}
                AS bk
       FROM orders
     ),
@@ -775,11 +776,11 @@ def dq_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_migration_certificate",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT o_orderkey, o_orderstatus,
              cast(o_totalprice AS DECIMAL(18,2)) AS price, o_orderdate,
-             ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 8))::BIGINT % 1000
+             {hash_bucket_sql("o_orderkey", 1000)}
                AS bk
       FROM orders
     ),

@@ -10,6 +10,7 @@ comes from the ``*_sql`` twin beside that kernel — ``shingles_sql``,
 ``minhash_signatures_sql`` and ``band_buckets_sql`` (operators/dedup.py),
 ``srp_hashed_sql`` (operators/similarity.py), ``quality_exprs_sql``,
 ``langid_exprs_sql`` and ``STOPWORDS_SQL`` (operators/text.py),
+``hash_bucket_sql`` (operators/sampling.py),
 ``deterministic_uuid_sql`` (functions/ids.py) — so a change to a kernel
 and to its SQL form is made in one file.
 

@@ -1,9 +1,10 @@
 """Batch-parity forms of the streaming queries (SURVEY.md §2.10).
 
-Each declared query applies the SAME window/session/dedup expression as the
-`readStream` pipelines in streaming/pipelines.py, but on the batch events
-table — so the DuckDB oracle checks the window semantics exactly, and
-tests/test_streaming.py separately proves readStream produces the same rows.
+Each declared query applies a window/session/dedup expression to the batch
+events table, so the DuckDB oracle checks its semantics exactly. The
+tumbling window is also run as a `readStream` pipeline
+(streaming/pipelines.py::tumbling_counts), and tests/test_streaming.py
+proves it produces the same rows as the batch form.
 
 Window-semantics notes pinned by the oracles:
 - `F.window` buckets are epoch-aligned → `date_trunc` / `time_bucket` twins.
@@ -148,7 +149,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST4 (batch form): first event per (user, type) — deterministic
-    survivor; the streaming twin (`dedup_stream`) bounds its state with
+    survivor; a streaming form would bound its state with
     `dropDuplicatesWithinWatermark`."""
     from openmrs_patient_migration_script_spark.operators.dedup import (
         dedup_exact_keep_first,
@@ -171,8 +172,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST5 (batch form): per-user running totals via an Arrow-batched
-    `applyInPandas` grouped map — the batch twin of the GroupState pipeline
-    (`stateful_user_totals`). Deliberately the engine's ONE Pandas-UDF
+    `applyInPandas` grouped map — the batch shape of a GroupState
+    pipeline. Deliberately the engine's ONE Pandas-UDF
     declared query: it proves the escape-hatch surface (schema contract,
     grouped partitioning, Arrow batches) while the oracle pins its output
     to the exact SQL running-sum semantics."""
@@ -225,9 +226,9 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST6 (batch form): purchases joined to the views of the same user in
     the preceding hour — the stream-stream interval-join shape. In stream
-    mode (streaming/pipelines.py::interval_join_streams) the same condition
-    plus watermarks on BOTH sides lets Spark bound each side's join state
-    to the interval width instead of buffering the streams forever."""
+    mode the same condition plus watermarks on BOTH sides lets Spark bound
+    each side's join state to the interval width instead of buffering the
+    streams forever."""
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -257,12 +258,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST9 (batch form): exact distinct users per 1-hour window — the
-    streaming twin (`streaming/pipelines.py::distinct_users_windowed`)
-    chains TWO stateful operators (watermarked dropDuplicates on
-    (window, user) → windowed count), keeping state O(distinct keys in
-    flight) instead of buffering events; runtime parity pinned in
-    tests/test_streaming.py."""
+    """ST9 (batch form): exact distinct users per 1-hour window. A
+    streaming form chains TWO stateful operators (watermarked
+    dropDuplicates on (window, user) → windowed count), keeping state
+    O(distinct keys in flight) instead of buffering events."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"))

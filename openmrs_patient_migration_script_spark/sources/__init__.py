@@ -1,24 +1,3 @@
-from openmrs_patient_migration_script_spark.sources.files import (
-    read_csv,
-    read_json,
-    read_orc,
-    read_xml,
-    write_csv,
-    write_json,
-    write_orc,
-    write_xml,
-)
-from openmrs_patient_migration_script_spark.sources.parquet import load_table, load_tables
+from openmrs_patient_migration_script_spark.sources.parquet import load_table
 
-__all__ = [
-    "load_table",
-    "load_tables",
-    "read_csv",
-    "read_json",
-    "read_orc",
-    "read_xml",
-    "write_csv",
-    "write_json",
-    "write_orc",
-    "write_xml",
-]
+__all__ = ["load_table"]

@@ -248,9 +248,9 @@ class _DestinationStreamWriter(DataSourceStreamWriter):
     and checkpoint advance — Spark's at-least-once window) REWRITES the
     same manifest instead of adding a second one: the committed file set
     for a batch id is last-writer-wins and duplicates never become
-    visible. Exactly-once lands via idempotence, the same recipe as
-    streaming/pipelines.py::write_stream_idempotent, expressed in the
-    DataSource API."""
+    visible. Exactly-once lands via idempotence — the same recipe as
+    streaming/pipelines.py's ``_batch_id``-per-directory writers,
+    expressed in the DataSource API."""
 
     def __init__(self, options: dict):
         self.path = options["path"]

@@ -1,4 +1,4 @@
-"""JDBC source/sink parity (SURVEY.md §2.1 S1-S3) — the reference's actual
+"""JDBC source/sink parity (SURVEY.md §2.1 S1, S3) — the reference's actual
 deployment surface: read the legacy MySQL enrollment table, read destination
 state (existing ids, type lookups), append into the OpenMRS tables
 (/root/reference/README.md:5,7-17,27).
@@ -6,8 +6,7 @@ state (existing ids, type lookups), append into the OpenMRS tables
 The harness ships no MySQL server, so the runtime tests
 (tests/test_sinks_and_jdbc.py) exercise these wrappers end-to-end against
 embedded Derby — the JDBC database Spark itself ships in jars/ — covering
-the partitioned scan, the broadcast dim read, the append sink, and the
-idempotent re-run. The parquet loaders stand in everywhere else. The scale
+the partitioned scan, the append sink, and the idempotent re-run. The parquet loaders stand in everywhere else. The scale
 decisions are in the options they emit:
 
 - **S1 partitioned scan**: `partitionColumn/lowerBound/upperBound/
@@ -15,8 +14,6 @@ decisions are in the options they emit:
   without them Spark reads the whole table through a single task.
 - **pushdown**: pass a `(SELECT ...) AS t` subquery as ``table`` to ship
   projection/filter into the database instead of pulling all columns.
-- **S2 dimension read**: small lookups read unpartitioned and get a
-  `broadcast()` hint so dimension joins never shuffle the fact side.
 - **S3 append sink**: `batchsize` + MySQL's `rewriteBatchedStatements`
   collapse row-at-a-time INSERTs into multi-row packets; idempotent
   re-runs anti-join against destination keys BEFORE writing
@@ -27,7 +24,6 @@ decisions are in the options they emit:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _with_url_param(url: str, param: str, value: str) -> str:
@@ -118,18 +114,6 @@ def jdbc_append_options(
 def read_jdbc_partitioned(spark: SparkSession, **scan_kwargs) -> DataFrame:
     """S1: parallel range-partitioned JDBC scan (one task per id range)."""
     return spark.read.format("jdbc").options(**jdbc_scan_options(**scan_kwargs)).load()
-
-
-def read_jdbc_dim(
-    spark: SparkSession, url: str, table: str, driver: str | None = None
-) -> DataFrame:
-    """S2: small destination-state lookup, broadcast-hinted for map-side
-    dimension joins."""
-    return F.broadcast(
-        spark.read.format("jdbc")
-        .options(**jdbc_scan_options(url, table, driver=driver))
-        .load()
-    )
 
 
 def write_jdbc_append(df: DataFrame, **append_kwargs) -> None:

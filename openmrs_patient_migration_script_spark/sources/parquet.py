@@ -71,39 +71,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return reader.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several harness tables at once: ``t = load_tables(...); t['orders']``."""
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def load_evolved(
-    spark: SparkSession, path: str, target_schema=None
-) -> DataFrame:
-    """Read a parquet table whose files were written under SEVERAL schema
-    versions (columns added over time) — the schema-evolution read a
-    long-lived 100 TB table accumulates.
-
-    ``mergeSchema`` unions the per-file schemas at planning time: files
-    missing a newer column surface NULLs for it, and files carrying a
-    column the reader doesn't project still prune normally (column
-    pruning + pushdown are per-file, unaffected by the merge). The merge
-    pass reads FOOTERS of all files — a planning cost worth paying only
-    on evolved tables, which is why the default `load_table` path pins
-    one explicit schema instead.
-
-    ``target_schema``: optionally coerce the merged frame to a pinned
-    StructType afterwards (select + cast, fail-loud on a missing
-    column) — the stable-contract read for downstream plans that must
-    not drift when yet another column lands.
-    """
-    df = spark.read.option("mergeSchema", True).parquet(path)
-    if target_schema is not None:
-        missing = [f.name for f in target_schema.fields if f.name not in df.columns]
-        if missing:
-            raise ValueError(
-                f"evolved table at {path} lacks contract columns {missing}"
-            )
-        df = df.select(
-            *[F.col(f.name).cast(f.dataType) for f in target_schema.fields]
-        )
-    return df

@@ -1,2 +1,3 @@
-"""Structured Streaming surface (SURVEY.md §2.10): readStream pipelines
-whose transformations are shared with the batch-parity declared queries."""
+"""Structured Streaming surface (SURVEY.md §2.10): the readStream twin of
+the batch `stream_tumbling` query, and foreachBatch index maintenance for
+continuous dedup (streaming/pipelines.py)."""

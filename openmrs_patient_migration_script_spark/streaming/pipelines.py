@@ -1,16 +1,18 @@
-"""Structured Streaming surface (SURVEY.md §2.10 ST1-ST5).
+"""Structured Streaming surface (SURVEY.md §2.10).
 
 The reference is a one-shot batch script (/root/reference/README.md:52);
-this module is the engine's streaming extension over the `events` table.
-Every transformation here is *identical* to its batch twin in
-plans/streaming_queries.py — the same `F.window` / `F.session_window` /
-dedup expressions applied to a `readStream` DataFrame — which is what makes
-the batch DuckDB oracle a valid correctness check for the streaming logic.
+this module is the engine's streaming extension. Two kinds of pipeline:
 
-Late data: each aggregation carries ``withWatermark("ts", ...)`` so state
-is bounded — at 100 TB/day of events the watermark is what lets Spark
-evict window state instead of holding every key forever. Stateful per-key
-logic uses ``applyInPandasWithState`` (Arrow-batched, GroupState-backed).
+- ``read_events_stream`` + ``tumbling_counts`` (ST1): a `readStream` over
+  the `events` table whose window expression is *identical* to its batch
+  twin in plans/streaming_queries.py, which is what makes the batch DuckDB
+  oracle a valid correctness check for the streaming logic. The watermark
+  bounds window state, so Spark evicts it instead of holding every key.
+- ``foreachBatch`` index maintenance for continuous dedup
+  (``stream_ingest_dedup``, ST11 components, ST12 ANN buckets): each
+  micro-batch writes its own ``_batch_id``/``_index_v`` directory, so a
+  replayed batch rewrites identical bytes, and readers admit only
+  directories that carry a ``_SUCCESS`` marker.
 """
 
 from __future__ import annotations
@@ -18,15 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from openmrs_patient_migration_script_spark.schemas import events_read_schema
 from openmrs_patient_migration_script_spark.sources.parquet import parquet_ts_unit
@@ -87,662 +80,6 @@ def rank_topk_windows(window_counts: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """ST2: 1-hour windows sliding every 15 minutes (each event lands in 4)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def session_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """ST3: per-user sessions closed by a 30-minute inactivity gap."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
-        .select(F.col("w.start").alias("session_start"), "user_id", "n_events", "last_ts")
-    )
-
-
-def dedup_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """ST4: streaming dedup — one row per (user_id, event_type) with state
-    bounded by the watermark (a duplicate arriving later than the watermark
-    is dropped as late data rather than tracked forever)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
-
-
-_STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-_STATEFUL_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def stateful_user_totals(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """ST5: custom stateful per-key operator via applyInPandasWithState —
-    a running (count, sum) per user maintained in GroupState across
-    micro-batches; emits the updated totals each batch. The Pandas path is
-    Arrow-batched (never row-at-a-time Python)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        last_ts = None
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            m = pdf["ts"].max()
-            last_ts = m if last_ts is None else max(last_ts, m)
-        state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [last_ts],
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_STATEFUL_OUT,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_SESSION_STATE = StructType(
-    [
-        StructField("session_start", TimestampType()),
-        StructField("last_ts", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-_SESSION_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-
-def stateful_sessions_timeout(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = WATERMARK
-) -> DataFrame:
-    """ST5c (r4): CLOSED sessions via ``GroupStateTimeout.EventTimeTimeout``
-    — the state-expiry half of the GroupState API, which the other
-    stateful pipelines (NoTimeout) never exercise. Each key's open
-    session lives in state; a new event either extends it or (gap
-    exceeded) closes it; and when the WATERMARK passes
-    ``last_ts + gap`` the timeout callback fires with no data, emitting
-    the session and REMOVING the state — the mechanism that keeps
-    stateful session tracking at bounded memory over an unbounded
-    stream (idle keys cannot park state forever, unlike a NoTimeout
-    pipeline that grows with every key ever seen).
-
-    Emits one APPEND row per closed session (user_id, session_start,
-    session_end, n_events, sum_value) — the same aggregate shape as
-    `session_counts`' built-in session_window, pinned equal in tests.
-    In-batch rows are sorted by event time, so several sessions can
-    close inside one micro-batch; the timeout timestamp is clamped just
-    above the current watermark (setTimeoutTimestamp rejects values at
-    or below it when late data arrives after the gap already expired).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        def emit(sess):
-            start_ms, last_ms, n, total = sess
-            return {
-                "user_id": key[0],
-                "session_start": pd.Timestamp(start_ms, unit="ms"),
-                "session_end": pd.Timestamp(last_ms, unit="ms"),
-                "n_events": n,
-                "sum_value": total,
-            }
-
-        closed = []
-        if state.hasTimedOut:
-            start, last, n, total = state.get
-            closed.append(
-                emit(
-                    (
-                        int(start.timestamp() * 1000),
-                        int(last.timestamp() * 1000),
-                        n,
-                        total,
-                    )
-                )
-            )
-            state.remove()
-            yield pd.DataFrame(closed)
-            return
-
-        rows = pd.concat(list(pdfs)).sort_values("ts")
-        if state.exists:
-            s_start, s_last, n, total = state.get
-            cur = [int(s_start.timestamp() * 1000), int(s_last.timestamp() * 1000), n, total]
-        else:
-            cur = None
-        for ts, value in zip(rows["ts"], rows["value"]):
-            ts_ms = int(pd.Timestamp(ts).timestamp() * 1000)
-            if cur is not None and ts_ms - cur[1] >= gap_ms:
-                closed.append(emit(cur))
-                cur = None
-            if cur is None:
-                cur = [ts_ms, ts_ms, 0, 0.0]
-            cur[1] = max(cur[1], ts_ms)
-            cur[2] += 1
-            cur[3] += float(value)
-        state.update(
-            (
-                pd.Timestamp(cur[0], unit="ms"),
-                pd.Timestamp(cur[1], unit="ms"),
-                cur[2],
-                cur[3],
-            )
-        )
-        # fire when the watermark passes the gap after the last event;
-        # clamp above the current watermark for late stragglers
-        state.setTimeoutTimestamp(
-            max(cur[1] + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if closed:
-            yield pd.DataFrame(closed)
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_SESSION_OUT,
-            stateStructType=_SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def interval_join_streams(
-    purchases: DataFrame, views: DataFrame, watermark: str = WATERMARK
-) -> DataFrame:
-    """ST6: stream-stream interval join — purchases matched to same-user
-    views from the preceding hour.
-
-    Both sides carry watermarks and the join condition bounds view_ts
-    relative to purchase_ts from BOTH directions; that pair is what lets
-    Spark evict join state (a buffered view older than
-    watermark - 1 hour can never match a future purchase). Without the
-    time bounds a stream-stream inner join must buffer both streams
-    forever — the difference between bounded and unbounded state at
-    100 TB/day.
-    """
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    v = views.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id").alias("v_user_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    joined = p.join(
-        v,
-        (p.user_id == v.v_user_id)
-        & (v.view_ts >= p.purchase_ts - F.expr("INTERVAL 1 HOUR"))
-        & (v.view_ts <= p.purchase_ts),
-    )
-    return joined.select("purchase_id", "view_id", "user_id", "purchase_ts", "view_ts")
-
-
-def enrich_stream(events: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:
-    """ST7: stream-static enrichment join — each micro-batch of the event
-    stream joins the (bounded, batch) dimension table.
-
-    Unlike stream-stream joins this holds NO join state at all: the static
-    side is just re-planned per micro-batch, and with a broadcast-sized
-    dimension every batch is a map-side hash join (the plan the test
-    pins). The static side is re-resolved per batch, so a dimension
-    REWRITTEN in place (e.g. a compacted parquet dir) picks up new files
-    without a restart — the standard slowly-refreshing-lookup pattern; for
-    versioned dims a restart or Delta/Iceberg source gives snapshot
-    isolation. Left join keeps events whose key has no dimension row yet
-    (late-arriving dimension data must not drop facts)."""
-    return events.join(F.broadcast(dim), on, "left")
-
-
-def stateful_user_totals_tws(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """ST5b: the same running per-user totals on Spark 4's
-    transformWithStateInPandas — the successor API to
-    applyInPandasWithState: typed state handles (ValueState) instead of a
-    raw tuple, explicit init/close lifecycle, and RocksDB-backed state
-    (set spark.sql.streaming.stateStore.providerClass to the RocksDB
-    provider; required by TWS). NOTE: the TWS state protocol requires
-    google.protobuf at runtime — absent from this harness (r9 audit:
-    `pyspark.sql.streaming.proto.StateMessage_pb2` itself raises
-    ModuleNotFoundError('google'), so no amount of query-side gating can
-    run TWS here; the parity test certifies the skip against exactly
-    that import). applyInPandasWithState (ST5) is the tested path; the
-    test body runs automatically on any image that ships protobuf."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def write_stream_idempotent(
-    df: DataFrame, out_dir: str, checkpoint_dir: str, trigger_available_now: bool = True
-):
-    """Exactly-once file sink via the idempotent-``foreachBatch`` pattern.
-
-    Spark's foreachBatch gives at-least-once delivery: after a crash
-    between sink write and checkpoint commit, the SAME (batchId, data) is
-    replayed. Writing each micro-batch under ``_batch_id=<id>`` and
-    skipping ids that are already COMPLETE on disk makes the replay a
-    no-op, so the sink converges to exactly-once — the standard recipe
-    when the target isn't a transactional table format. (With
-    Delta/Iceberg the ``txnAppId``/``txnVersion`` options replace the
-    marker probe.)
-
-    Completeness means the ``_SUCCESS`` marker, not the directory: a
-    crash mid-write leaves the directory present but incomplete, and a
-    bare existence probe would freeze that half-written batch forever.
-    Incomplete directories are rewritten with mode=overwrite on replay.
-
-    Returns the started StreamingQuery; callers own awaitTermination.
-    """
-    import os
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(out_dir, f"_batch_id={batch_id}")
-        if os.path.exists(os.path.join(target, "_SUCCESS")):
-            return  # replayed batch → already durable AND complete
-        batch_df.write.mode("overwrite").parquet(target)
-
-    writer = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_EWMA_STATE = StructType([StructField("ewma", DoubleType())])
-_EWMA_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-
-
-def stateful_user_ewma(
-    events: DataFrame, alpha: float = 0.5, watermark: str = WATERMARK
-) -> DataFrame:
-    """ST5b: ORDER-SENSITIVE stateful recurrence — per-user EWMA carried
-    across micro-batches in GroupState (the streaming twin of the batch
-    `ts_ewma` fold, operators/timeseries.py::ewma).
-
-    The running-total ST5 shape is order-free (sums commute); a
-    recurrence is not — each batch's group rows are sorted by
-    (ts, event_id) before the fold, and the carried state is just the
-    last smoothed value (one double per key: bounded state however long
-    the stream runs). Emits one row per EVENT (the smoothed series, not
-    a per-key summary). The fold itself is a Python loop over the numpy
-    arrays of one group-batch — inherently sequential math, bounded by
-    the batch, never the stream.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    a = float(alpha)
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        prev = state.get[0] if state.exists else None
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        ids = batch["event_id"].to_numpy()
-        vals = batch["value"].to_numpy(dtype=float)
-        out = []
-        for v in vals:
-            prev = v if prev is None else a * v + (1.0 - a) * prev
-            out.append(prev)
-        state.update((float(prev),))
-        yield pd.DataFrame(
-            {"user_id": key[0], "event_id": ids, "ewma": out}
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_EWMA_OUT,
-            stateStructType=_EWMA_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_CUSUM_STATE = StructType(
-    [StructField("sh", LongType()), StructField("sl", LongType())]
-)
-_CUSUM_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("cusum_hi", DoubleType()),
-        StructField("cusum_lo", DoubleType()),
-        StructField("alarm", BooleanType()),
-    ]
-)
-
-
-def stateful_user_cusum(
-    events: DataFrame,
-    target: float = 50.0,
-    slack: float = 10.0,
-    threshold: float = 200.0,
-    scale: int = 1_000_000,
-    watermark: str = WATERMARK,
-) -> DataFrame:
-    """ST5c: streaming CUSUM drift detection — the batch `ts_cusum`
-    recurrence (operators/timeseries.py::cusum) carried across
-    micro-batches in GroupState, so a sustained mean shift raises its
-    alarm WHILE the stream runs instead of at the next batch audit.
-
-    Same order-sensitive discipline as `stateful_user_ewma` (sort each
-    group-batch by (ts, event_id) before folding) but with the all-int64
-    state the batch twin uses: two scaled longs per key — bounded state,
-    bit-exact against the batch fold (the parity test compares raw
-    doubles with NO tolerance, something the float EWMA state cannot
-    promise across replays at the ulp level... and this one can, because
-    integer adds/maxes have no rounding at all).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    t_hi = round((target + slack) * scale)
-    t_lo = round((target - slack) * scale)
-    h = round(threshold * scale)
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        sh, sl = state.get if state.exists else (0, 0)
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        ids = batch["event_id"].to_numpy()
-        vs = (batch["value"].to_numpy(dtype=float) * scale).round().astype("int64")
-        hi, lo, alarms = [], [], []
-        for v in vs:
-            sh = max(0, sh + (int(v) - t_hi))
-            sl = max(0, sl + (t_lo - int(v)))
-            hi.append(sh / scale)
-            lo.append(sl / scale)
-            alarms.append(sh > h or sl > h)
-        state.update((int(sh), int(sl)))
-        yield pd.DataFrame(
-            {
-                "user_id": key[0],
-                "event_id": ids,
-                "cusum_hi": hi,
-                "cusum_lo": lo,
-                "alarm": alarms,
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_CUSUM_OUT,
-            stateStructType=_CUSUM_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_SPRT_STATE = StructType(
-    [
-        StructField("llr", LongType()),
-        StructField("n", LongType()),
-        StructField("s", LongType()),
-        StructField("dec_n", LongType()),
-        StructField("dec_llr", LongType()),
-    ]
-)
-_SPRT_OUT = StructType(
-    [
-        StructField("arm", LongType()),
-        StructField("n_total", LongType()),
-        StructField("s_total", LongType()),
-        StructField("llr_final_nano", LongType()),
-        StructField("n_at_decision", LongType()),
-        StructField("llr_at_decision_nano", LongType()),
-        StructField("decision", StringType()),
-    ]
-)
-
-
-def stateful_arm_sprt(
-    events: DataFrame,
-    inc_success: int = 510825624,
-    inc_failure: int = -125163143,
-    upper: int = 2944438979,
-    lower: int = -2944438979,
-    success_type: str = "purchase",
-    watermark: str = WATERMARK,
-) -> DataFrame:
-    """ST5d: streaming Wald SPRT — the batch `ab_sequential_sprt` LLR
-    recurrence carried across micro-batches in GroupState, which is the
-    form a sequential test actually WANTS to run in (the whole point is
-    deciding mid-stream, not at the nightly audit). Events must already
-    carry their `arm`; per arm the state is five longs (running LLR /
-    n / successes and the frozen first-crossing pair) — bounded state,
-    bit-exact against the batch query because every increment is an
-    integer literal (the same nano-scaled constants, so replays can
-    never wobble an ulp; the parity test compares with zero tolerance).
-
-    Same order-sensitive discipline as `stateful_user_cusum`: each
-    group-batch sorts by (ts, event_id) before folding, so parity with
-    the batch form holds when micro-batches arrive in event-time order
-    (the file-source test feeds them that way; an out-of-order
-    production feed would buffer on the watermark first). Once the
-    boundary is crossed the decision pair freezes — later events keep
-    updating totals (the audit trail) but can never un-decide."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        llr, n, s, dec_n, dec_llr = (
-            state.get if state.exists else (0, 0, 0, 0, 0)
-        )
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        for succ in (batch["event_type"] == success_type).to_numpy():
-            n += 1
-            if succ:
-                s += 1
-                llr += inc_success
-            else:
-                llr += inc_failure
-            if dec_n == 0 and (llr >= upper or llr <= lower):
-                dec_n, dec_llr = n, llr
-        state.update((int(llr), int(n), int(s), int(dec_n), int(dec_llr)))
-        decision = (
-            "continue"
-            if dec_n == 0
-            else ("accept_h1" if dec_llr >= upper else "accept_h0")
-        )
-        yield pd.DataFrame(
-            {
-                "arm": [key[0]],
-                "n_total": [n],
-                "s_total": [s],
-                "llr_final_nano": [llr],
-                "n_at_decision": [dec_n],
-                "llr_at_decision_nano": [dec_llr],
-                "decision": [decision],
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("arm")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_SPRT_OUT,
-            stateStructType=_SPRT_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def stream_cdc_apply(
-    changes: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    key: str,
-    seq_cols: list[str],
-    op_col: str,
-    payload_cols: list[str],
-    trigger_available_now: bool = True,
-):
-    """Streaming CDC materialization (r4) — the steady-state form of the
-    reference's one-shot migration: a change feed (insert/update/delete
-    rows) continuously folded into a parquet target via ``foreachBatch``
-    + the batch `apply_cdc` merge (operators/etl.py).
-
-    Per micro-batch: read the current target, merge the batch's changes
-    (per key, latest by ``seq_cols`` wins), stage the new target and
-    atomically swap it in (the rename-aside sequence `compact_table`
-    uses — a reader never observes a half-written table and no crash
-    point loses data). Replay safety is SEMANTIC idempotence, not a
-    batch-id ledger: `apply_cdc` is a per-key last-writer-wins merge, so
-    re-applying a replayed batch to an already-updated target changes
-    nothing — upserts land on their own values, deletes find nothing.
-    With a transactional table format the swap becomes MERGE INTO and
-    the plan is unchanged.
-
-    Full-target rewrite per batch is the honest no-table-format cost;
-    at 100 TB the target is partitioned and only partitions containing
-    changed keys are rewritten (or the format's merge-on-read takes
-    over). Returns the started StreamingQuery.
-    """
-    import os
-
-    from openmrs_patient_migration_script_spark.operators.etl import apply_cdc
-
-    out_cols = [key] + payload_cols
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if os.path.exists(os.path.join(target_dir, "_SUCCESS")):
-            target = spark.read.parquet(target_dir)
-        else:
-            target = batch_df.select(*out_cols).limit(0)
-        merged = apply_cdc(
-            target, batch_df, key, seq_cols, op_col, payload_cols
-        ).select(*out_cols)
-        tmp = target_dir.rstrip("/") + "__cdc_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = jpath.getFileSystem(conf)
-        old = jvm.org.apache.hadoop.fs.Path(target_dir.rstrip("/") + "__cdc_old")
-        if fs.exists(old):
-            fs.delete(old, True)
-        if fs.exists(jpath):
-            fs.rename(jpath, old)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jpath)
-        fs.delete(old, True)
-
-    writer = changes.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_ingest_dedup(
     batch_docs: DataFrame,
     index_df: DataFrame,
@@ -766,9 +103,9 @@ def stream_ingest_dedup(
     already-admitted read EXCLUDES the current batch id — so a replayed
     batch sees the identical prior-state, recomputes the identical
     admit set, and overwrites its own directory with identical bytes
-    (the `write_stream_idempotent` pattern with the self-exclusion the
-    grown-index read requires: without it, a replay would collide a
-    batch's docs with their own half-written admission).
+    (with a self-exclusion the grown-index read requires: without it, a
+    replay would collide a batch's docs with their own half-written
+    admission).
 
     State discovery walks ``out_dir`` through the Hadoop FileSystem API
     (resolved from the path's own scheme), so the admitted-so-far ledger
@@ -874,110 +211,12 @@ def stream_ingest_dedup(
     return writer.start()
 
 
-def distinct_users_windowed(
-    events: DataFrame, watermark: str = WATERMARK
-) -> DataFrame:
-    """ST9: EXACT distinct users per tumbling window via CHAINED stateful
-    operators — `dropDuplicates` on (window, user) feeding a windowed
-    count. Two stateful operators in one streaming plan (Spark 3.4+
-    append-mode chaining): the dedup state holds one row per (window,
-    user) and evicts with the watermark (the window column carries event
-    time), the downstream count state is one row per window. The
-    pattern's point at scale: exact distinct-count state is O(distinct
-    keys in flight), never O(events) — the stream twin of
-    `agg_distinct`'s map-side-combined exactness.
-    """
-    deduped = (
-        events.withWatermark("ts", watermark)
-        .select(F.window("ts", "1 hour").alias("w"), "user_id")
-        .dropDuplicates(["w", "user_id"])
-    )
-    return (
-        deduped.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_distinct_users"))
-        .select(F.col("w.start").alias("window_start"), "n_distinct_users")
-    )
-
-
-def stream_cms_maintain(
-    stream_df: DataFrame,
-    item_col: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 1024,
-    trigger_available_now: bool = True,
-):
-    """ST10 (r6): streaming Count-Min maintenance — the serving loop of
-    the CMS family (operators/sketches.py): each micro-batch's item
-    stream folds into its own ≤ depth×width cell table, persisted under
-    ``_batch_id=<id>`` with overwrite (the `stream_ingest_dedup`
-    exactly-once construction: a replayed batch rewrites identical
-    bytes, never double-counts), and the CURRENT sketch is the
-    cell-wise SUM across batch directories (`stream_cms_read`) — CMS
-    mergeability IS addition, so the maintained state needs no
-    read-modify-write and no state store beyond the directory layout.
-
-    At 100 TB/day: each micro-batch ships ≤ 4096 cells regardless of
-    volume; the reader folds B batch files into one 4096-cell table —
-    heavy-hitter serving reads KBs, never the stream."""
-    from openmrs_patient_migration_script_spark.operators.sketches import (
-        cms_build,
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(out_dir).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        target = f"{out_dir}/_batch_id={batch_id}"
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{target}/_SUCCESS")):
-            return  # replay → already durable and complete
-        cells = cms_build(batch_df, item_col, depth=depth, width=width)
-        cells.write.mode("overwrite").parquet(target)
-
-    writer = stream_df.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_cms_read(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Fold every persisted micro-batch cell table into the CURRENT
-    sketch: cell-wise addition by (row, bucket) — feed the result to
-    `cms_estimate` for point queries.
-
-    Reads only batch directories carrying a ``_SUCCESS`` marker (the
-    `admit_batch` ledger-walk rule, via the FileSystem API rather than a
-    path glob): a read concurrent with an in-flight or crashed
-    micro-batch must not fold a partially written cell table — the
-    marker, not the directory, is what `stream_cms_fold` commits."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    dirs = []
-    if fs.exists(hpath(out_dir)):
-        for st in fs.listStatus(hpath(out_dir)):
-            name = st.getPath().getName()
-            if name.startswith("_batch_id=") and fs.exists(
-                hpath(st.getPath(), "_SUCCESS")
-            ):
-                dirs.append(st.getPath().toString())
-    if not dirs:
-        return spark.createDataFrame([], "row INT, bucket BIGINT, cnt BIGINT")
-    cells = spark.read.parquet(*dirs)
-    return cells.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def _committed_index_versions(
     spark: SparkSession, out_dir: str, prefix: str = "_index_v="
 ):
     """(version, path) for every ``<prefix><id>`` snapshot carrying a
-    ``_SUCCESS`` marker — the `stream_cms_read` ledger-walk rule applied
-    to versioned index snapshots (ST11's components index and ST12's
+    ``_SUCCESS`` marker — a snapshot without the marker is in flight or
+    crashed and is never read. Applied to versioned index snapshots (ST11's components index and ST12's
     ANN bucket index share it via ``prefix``)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.operators.dedup import (
     fuzzy_dedup_pairs,
-    hamming_distance,
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -39,7 +38,7 @@ def test_simhash_identical_texts_collide(spark):
         .select(
             F.col("a.key").alias("key_a"),
             F.col("b.key").alias("key_b"),
-            hamming_distance(F.col("a.simhash"), F.col("b.simhash")).alias("hd"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hd"),
         )
     )
     hd = {(r["key_a"], r["key_b"]): r["hd"] for r in pairs.collect()}

@@ -1,9 +1,8 @@
-"""Storage layout & maintenance: compaction, clustering, dynamic pruning.
+"""Storage layout & maintenance: compaction and clustering.
 
 These tests make the 100 TB read-path claims *observable* at toy scale:
-file counts drop after compaction, parquet footer bands tighten after
-clustering, and the physical plan carries a runtime partition filter when
-a partitioned fact joins a filtered dim.
+file counts drop after compaction, and parquet footer bands tighten after
+clustering.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from openmrs_patient_migration_script_spark.operators.layout import (
     compact_table,
     rowgroup_bands,
     table_file_stats,
-    write_partitioned,
 )
 from openmrs_patient_migration_script_spark.sources.parquet import load_table
 
@@ -110,56 +108,3 @@ def test_cluster_by_range_tightens_rowgroup_bands(spark, tmp_path):
     assert len(hits) <= 2
 
 
-def test_zorder_skips_in_both_dimensions(spark, tmp_path):
-    from openmrs_patient_migration_script_spark.operators.layout import zorder_by
-
-    linear = str(tmp_path / "linear")
-    zordered = str(tmp_path / "zordered")
-    orders = load_table(spark, SF_SMOKE, "orders")
-    n_files = 16
-
-    cluster_by_range(orders, ["o_custkey"], n_files).write.parquet(linear)
-    zorder_by(orders, "o_custkey", "o_totalprice", n_files).write.parquet(zordered)
-
-    def hits(path, column, probe):
-        bands = rowgroup_bands(path, column)
-        return sum(1 for lo, hi in bands if lo <= probe <= hi), len(bands)
-
-    ck = orders.agg(F.expr("percentile_approx(o_custkey, 0.5)")).first()[0]
-    tp = orders.agg(F.expr("percentile_approx(o_totalprice, 0.5)")).first()[0]
-
-    # linear clustering: perfect on the leading column...
-    h, n = hits(linear, "o_custkey", ck)
-    assert h <= 2
-    # ...but useless on the second (every file spans the money range)
-    h, n = hits(linear, "o_totalprice", tp)
-    assert h >= n - 1
-
-    # z-order: a point probe on EITHER column skips most files
-    h_ck, n_z = hits(zordered, "o_custkey", ck)
-    h_tp, _ = hits(zordered, "o_totalprice", tp)
-    assert n_z >= 8
-    assert h_ck <= n_z // 2
-    assert h_tp <= n_z // 2
-
-
-def test_partitioned_fact_gets_dynamic_partition_pruning(spark, tmp_path):
-    """Join partitioned-fact ⋈ filtered-dim must prune fact partitions at
-    RUNTIME (the dim filter value is only known after scanning the dim) —
-    Catalyst's DPP inserts a dynamicpruning#... subquery into the fact scan.
-    At 100 TB this skips reading every non-matching date/region directory.
-    """
-    fact_path = str(tmp_path / "fact")
-    orders = load_table(spark, SF_SMOKE, "orders").withColumn(
-        "prio", F.substring("o_orderpriority", 1, 1)
-    )
-    write_partitioned(orders, fact_path, ["prio"])
-
-    fact = spark.read.parquet(fact_path)
-    dim = spark.createDataFrame(
-        [("1", "URGENT"), ("2", "HIGH"), ("3", "MEDIUM"), ("4", "LOW"), ("5", "NONE")],
-        "prio string, label string",
-    )
-    q = fact.join(dim.filter(F.col("label") == "URGENT"), "prio").groupBy("prio").count()
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()

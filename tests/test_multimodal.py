@@ -11,7 +11,6 @@ from openmrs_patient_migration_script_spark.operators.multimodal import (
     frame_sample,
     image_features,
     make_media_table,
-    resize_images,
 )
 from openmrs_patient_migration_script_spark.sources import load_table
 
@@ -66,16 +65,6 @@ def test_frame_sample_explodes_rows(spark):
     assert all(1 <= n <= 8 for n in per.values())
     firsts = frames.filter("frame_index = 0").select("frame_ts_s").distinct().collect()
     assert [r["frame_ts_s"] for r in firsts] == [0.0]
-
-
-def test_resize_preserves_payload_and_caps_side(spark):
-    m = _media(spark)
-    out = resize_images(m, max_side=64)
-    assert out.count() == m.count()
-    for r in out.limit(20).collect():
-        assert max(r["target_width"], r["target_height"]) <= 64
-        assert min(r["target_width"], r["target_height"]) >= 1
-        assert bytes(r["content"])  # payload passed through
 
 
 def _wav_bytes(sr=8000, n=4000, amp=16384, channels=1):
@@ -207,68 +196,6 @@ def test_real_decoder_unknown_format_fails_loud():
     # real r6 decoder never guesses at malformed containers)
     with pytest.raises(NotImplementedError, match="IHDR"):
         decode_media(b"\x89PNG\r\n\x1a\n....", "image/png")
-
-
-def test_read_media_dir_end_to_end_real_decode(spark, tmp_path):
-    """Files on disk → binaryFile scan → media schema → REAL decode:
-    a WAV and a BMP written to a directory come back with exact features,
-    and the byte-size filter drops oversized payloads before decode."""
-    from openmrs_patient_migration_script_spark.operators.multimodal import (
-        audio_features,
-        decode_media,
-        image_features,
-    )
-    from openmrs_patient_migration_script_spark.sources.files import read_media_dir
-
-    import numpy as np
-
-    wav = _wav_bytes(sr=8000, n=4000, amp=16384, channels=1)
-    bmp = _bmp_bytes(width=2, height=2, value=100)
-    png = _png_bytes(
-        np.full((3, 4, 3), 200, dtype=np.uint8), color_type=2, filters=4
-    )
-    (tmp_path / "clip.wav").write_bytes(wav)
-    (tmp_path / "pic.bmp").write_bytes(bmp)
-    (tmp_path / "pic2.png").write_bytes(png)
-    (tmp_path / "huge.bin").write_bytes(b"x" * 65536)
-
-    media = read_media_dir(spark, str(tmp_path), max_bytes=16384)
-    rows = {r["media_type"]: r for r in media.collect()}
-    assert set(rows) == {"audio/wav", "image/bmp", "image/png"}  # huge.bin filtered
-    assert rows["audio/wav"]["n_bytes"] == len(wav)
-
-    png_feat = image_features(
-        media.filter("media_type = 'image/png'"), decoder=decode_media
-    ).collect()[0]
-    assert (png_feat["width"], png_feat["height"]) == (4, 3)
-    assert abs(png_feat["mean_intensity"] - round(200 / 255.0, 6)) < 1e-6
-
-    audio = audio_features(
-        media.filter("media_type = 'audio/wav'"), decoder=decode_media
-    ).collect()[0]
-    assert (audio["sample_rate"], audio["n_samples"]) == (8000, 4000)
-
-    image = image_features(
-        media.filter("media_type = 'image/bmp'"), decoder=decode_media
-    ).collect()[0]
-    assert (image["width"], image["height"]) == (2, 2)
-    assert abs(image["mean_intensity"] - round(100 / 255.0, 6)) < 1e-6
-
-    # deterministic ids: re-reading the same directory yields the same ids
-    again = {r["media_id"] for r in read_media_dir(spark, str(tmp_path), max_bytes=16384).collect()}
-    assert again == {r["media_id"] for r in rows.values()}
-
-
-def test_read_media_dir_length_filter_is_pushed_down(spark, tmp_path):
-    """The byte-size cap must reach the binaryFile scan as a pushed
-    filter (oversized files are skipped without reading content) — a
-    plain post-scan Filter would still load every payload into memory."""
-    from openmrs_patient_migration_script_spark.sources.files import read_media_dir
-
-    (tmp_path / "x.bmp").write_bytes(b"BM" + b"\0" * 100)
-    df = read_media_dir(spark, str(tmp_path), max_bytes=1024)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LessThanOrEqual(length,1024)" in plan, plan
 
 
 def _bmp_from_gray(arr):
@@ -602,7 +529,7 @@ def test_png_through_image_features_and_ahash_plan(spark):
     )
 
     from openmrs_patient_migration_script_spark.operators.multimodal import (
-        ahash_image,
+        ahash_bmp,
         decode_media,
         image_features,
     )
@@ -625,4 +552,4 @@ def test_png_through_image_features_and_ahash_plan(spark):
     r = image_features(media, decoder=decode_media).collect()[0]
     assert (r["width"], r["height"]) == (16, 16)
     assert abs(r["mean_intensity"] - round(float(gray.mean()) / 255.0, 6)) < 1e-9
-    assert ahash_image(png) == ahash_image(bmp)
+    assert ahash_bmp(png) == ahash_bmp(bmp)

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.functions.python_exts import (
     ChunkSpans,
-    register_python_exts,
     vectorized_quality_score,
     weighted_mean,
 )
@@ -79,7 +78,7 @@ def test_pandas_udaf_weighted_mean(spark):
 
 
 def test_udtf_chunk_spans_via_sql_lateral(spark):
-    register_python_exts(spark)
+    spark.udtf.register("chunk_spans", ChunkSpans)
     spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "x y"), (3, "")], ["doc_id", "text"]
     ).createOrReplaceTempView("udtf_docs")
@@ -104,7 +103,7 @@ def test_udtf_direct_invocation(spark):
 
 
 def test_udtf_rejects_nonpositive_size(spark):
-    register_python_exts(spark)
+    spark.udtf.register("chunk_spans", ChunkSpans)
     spark.createDataFrame([(1, "a b c")], ["doc_id", "text"]).createOrReplaceTempView(
         "udtf_docs_bad"
     )

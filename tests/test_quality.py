@@ -434,43 +434,6 @@ def test_migration_certificate_clean_path_certifies(spark):
     assert row["n_mismatch"] > 0 and row["n_dup_keys"] > 0
 
 
-def test_observed_write_one_pass_metrics(spark, tmp_path):
-    """The Observation metrics collected DURING the write must equal a
-    separate recount of the written output — proving the audit ledger
-    needs no second scan."""
-    from pyspark.sql import functions as F
-
-    from openmrs_patient_migration_script_spark.operators.quality import (
-        observed_write,
-    )
-    from openmrs_patient_migration_script_spark.sources import load_table
-
-    o = load_table(spark, "/root/testdata/sf0.001", "orders").filter(
-        F.col("o_totalprice") > 0
-    )
-    path = str(tmp_path / "orders_out")
-    got = observed_write(
-        o,
-        path,
-        metrics={
-            "n_rows": F.count(F.lit(1)),
-            "n_null_status": F.sum(
-                F.when(F.col("o_orderstatus").isNull(), 1).otherwise(0)
-            ),
-            "sum_cents": F.sum(
-                F.round(F.col("o_totalprice") * 100).cast("long")
-            ),
-        },
-    )
-    back = spark.read.parquet(path)
-    assert got["n_rows"] == back.count()
-    assert got["n_null_status"] == 0
-    recount = back.agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-    ).collect()[0][0]
-    assert got["sum_cents"] == recount
-
-
 def test_blocking_quality_hand_computed(spark):
     """Hand-worked fixture: blocks {x: 2 a-rows × 1 b-row, y: 1 × 1} →
     candidates = 3 of 9; truth = 3 pairs of which the pair whose b-side

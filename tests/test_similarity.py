@@ -56,16 +56,6 @@ def test_ann_lsh_recall_against_exact(spark):
     assert recall >= 0.6, f"ANN recall {recall:.2f} below floor"
 
 
-def test_lsh_bucket_deterministic(spark):
-    emb, _ = _split(spark)
-    from openmrs_patient_migration_script_spark.operators.similarity import lsh_bucket
-
-    b1 = emb.select(lsh_bucket(F.col("embedding").cast("array<double>"), 4).alias("b"))
-    b2 = emb.select(lsh_bucket(F.col("embedding").cast("array<double>"), 4).alias("b"))
-    assert [r["b"] for r in b1.collect()] == [r["b"] for r in b2.collect()]
-    assert b1.agg(F.min("b"), F.max("b")).collect()[0] != (None, None)
-
-
 def test_ivf_recall_and_determinism(spark, sf_dir):
     from openmrs_patient_migration_script_spark.plans import QUERIES
 
@@ -229,37 +219,6 @@ def test_cosine_pairs_lsh_planted_near_dups(spark):
     assert not missed, f"LSH missed planted near-dup pairs: {missed}"
     for r in out:
         assert r.cos_sim >= 0.95
-
-
-def test_srp_hashed_matches_hof_lsh_bucket(spark):
-    """The vectorized SRP hasher (numpy matmul against the JVM-derived
-    weight matrix) must produce the same (table, bucket) assignments as
-    the HOF `lsh_bucket` form it replaced — the weights come from the
-    same xxhash64(p, d) parity, so any drift is a real bug (sub-ulp sign
-    flips at proj == 0 excepted; none occur on this fixture)."""
-    from pyspark.sql import functions as F2
-
-    from openmrs_patient_migration_script_spark.operators.similarity import (
-        _as_double,
-        lsh_bucket,
-        srp_hashed,
-    )
-
-    m, L = 3, 4
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    v = _as_double(F2.col("embedding"))
-    hof = emb.select(
-        "vec_id",
-        *[lsh_bucket(v, m, plane_offset=t * m).alias(f"b{t}") for t in range(L)],
-    ).collect()
-    want = {
-        (r.vec_id, t, r[f"b{t}"]) for r in hof for t in range(L)
-    }
-    got = {
-        (r.vec_id, r._tbl, r._bkt)
-        for r in srp_hashed(emb, "vec_id", m, L).collect()
-    }
-    assert got == want
 
 
 def test_kmeans_fit_improves_objective_and_feeds_ivf(spark):

@@ -1,102 +1,8 @@
-"""CSV/JSON file source/sink parity: exact roundtrips with pinned schemas
-and fail-loud malformed-row behavior (sources/files.py)."""
+"""Custom Python DataSource sources and sinks (sources/custom.py): the
+legacy-enrollment batch and streaming reader, and the manifest-committed
+destination sink."""
 
 from __future__ import annotations
-
-import pytest
-
-from openmrs_patient_migration_script_spark.sources import (
-    load_table,
-    read_csv,
-    read_json,
-    read_orc,
-    read_xml,
-    write_csv,
-    write_json,
-    write_orc,
-    write_xml,
-)
-
-
-def _rowset(df):
-    return {tuple(r) for r in df.collect()}
-
-
-@pytest.mark.parametrize("fmt", ["csv", "json", "orc", "xml"])
-def test_roundtrip_is_exact(spark, sf_dir, tmp_path, fmt):
-    # orders exercises long/string/double/timestamp columns
-    orig = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / f"orders_{fmt}")
-    if fmt == "csv":
-        write_csv(orig, path)
-        back = read_csv(spark, path, orig.schema)
-    elif fmt == "json":
-        write_json(orig, path)
-        back = read_json(spark, path, orig.schema)
-    elif fmt == "xml":
-        write_xml(orig, path)
-        back = read_xml(spark, path, orig.schema)
-    else:
-        write_orc(orig, path)
-        back = read_orc(spark, path, orig.schema)
-    assert back.schema == orig.schema
-    assert _rowset(back) == _rowset(orig)
-
-
-def test_orc_scan_keeps_pushdown_and_pruning(spark, sf_dir, tmp_path):
-    """ORC is a landing format: filters must reach the scan (PushedFilters)
-    and the read schema must shrink to the projection, same as parquet."""
-    orig = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(orig, path)
-    q = (
-        read_orc(spark, path, orig.schema)
-        .filter("o_totalprice > 100000.0")
-        .select("o_orderkey")
-    )
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = q._jdf.queryExecution().explainString(mode)
-    assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice" in plan
-    scan_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "o_orderkey" in scan_schema and "o_comment" not in scan_schema
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    orig = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_part")
-    write_csv(orig.select("o_orderkey", "o_totalprice", "o_orderstatus"), path,
-              partition_by=["o_orderstatus"])
-    import os
-
-    dirs = {d for d in os.listdir(path) if d.startswith("o_orderstatus=")}
-    assert {"o_orderstatus=F", "o_orderstatus=O", "o_orderstatus=P"} <= dirs
-
-
-def test_malformed_csv_fails_loud(spark, tmp_path):
-    p = tmp_path / "bad"
-    p.mkdir()
-    (p / "part.csv").write_text("k,v\n1,2\nnot_a_number,3\n")
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([StructField("k", LongType()), StructField("v", LongType())])
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_csv(spark, str(p), schema).collect()
-
-
-def test_malformed_xml_fails_loud(spark, tmp_path):
-    """FAILFAST must hold for the XML boundary too: a row whose typed
-    field can't parse is an error, not a silent NULL."""
-    p = tmp_path / "badxml"
-    p.mkdir()
-    (p / "part.xml").write_text(
-        "<rows><row><k>1</k><v>2</v></row>"
-        "<row><k>not_a_number</k><v>3</v></row></rows>"
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([StructField("k", LongType()), StructField("v", LongType())])
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_xml(spark, str(p), schema).collect()
 
 
 class TestPythonDataSource:
@@ -157,38 +63,6 @@ class TestPythonDataSource:
     def test_zero_rows_yields_empty_frame(self, spark):
         df = self._read(spark, rows=0, parts=4)
         assert df.count() == 0
-
-
-def test_read_text_corpus_line_and_wholefile_modes(spark, tmp_path):
-    """Raw text ingestion: line mode yields one row per line with
-    content-addressed ids stable across re-reads; whole-file mode yields
-    one row per file; glob filters; duplicate lines within a file
-    collapse to one id (exact-dedup-at-ingest, documented)."""
-    from openmrs_patient_migration_script_spark.sources.files import (
-        read_text_corpus,
-    )
-
-    (tmp_path / "a.txt").write_text("alpha doc\nbeta doc\nalpha doc\n")
-    (tmp_path / "b.txt").write_text("gamma doc\n")
-    (tmp_path / "skip.log").write_text("not a doc\n")
-
-    lines = read_text_corpus(spark, str(tmp_path), glob="*.txt")
-    rows = lines.collect()
-    assert {r.text for r in rows} == {"alpha doc", "beta doc", "gamma doc"}
-    assert len(rows) == 4  # the duplicate alpha line is two ROWS, one id
-    ids = {r.text: set() for r in rows}
-    for r in rows:
-        ids[r.text].add(r.doc_id)
-    assert all(len(s) == 1 for s in ids.values())
-    again = {(r.doc_id, r.text) for r in read_text_corpus(spark, str(tmp_path), glob="*.txt").collect()}
-    assert again == {(r.doc_id, r.text) for r in rows}
-
-    whole = read_text_corpus(spark, str(tmp_path), glob="*.txt", whole_files=True)
-    wrows = whole.collect()
-    assert len(wrows) == 2
-    by_file = {r.path.rsplit("/", 1)[-1]: r.text for r in wrows}
-    assert by_file["a.txt"] == "alpha doc\nbeta doc\nalpha doc\n"
-    assert by_file["b.txt"].startswith("gamma doc")
 
 
 class TestCustomStreamingSource:
@@ -377,44 +251,3 @@ class TestPythonDataSourceSink:
         assert sorted(glob.glob(os.path.join(dest, "manifest-*.json"))) == manifests_before
 
 
-def test_load_evolved_merges_schema_versions(spark, tmp_path):
-    """Schema-evolution read (sources/parquet.py::load_evolved): files
-    written under older schemas surface NULL for later-added columns;
-    the merged read sees the union; the target-schema contract coerces
-    and fails loud on a missing contract column."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from openmrs_patient_migration_script_spark.sources.parquet import load_evolved
-
-    path = str(tmp_path / "evolved")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.mode(
-        "append"
-    ).parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, name string, score double"
-    ).write.mode("append").parquet(path)
-
-    merged = load_evolved(spark, path)
-    rows = {r.id: (r.name, r.score) for r in merged.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-    contract = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    coerced = load_evolved(spark, path, target_schema=contract)
-    assert [f.name for f in coerced.schema.fields] == ["id", "score"]
-
-    bad = StructType([StructField("nope", StringType())])
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="nope"):
-        load_evolved(spark, path, target_schema=bad)

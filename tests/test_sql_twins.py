@@ -19,6 +19,10 @@ from openmrs_patient_migration_script_spark.operators.dedup import (
     minhash_signatures_sql,
     shingles_sql,
 )
+from openmrs_patient_migration_script_spark.operators.sampling import (
+    hash_bucket,
+    hash_bucket_sql,
+)
 from openmrs_patient_migration_script_spark.operators.similarity import (
     srp_hashed,
     srp_hashed_sql,
@@ -140,6 +144,27 @@ def test_srp_hashed_sql_matches_srp_kernels(spark, m, L):
     assert duck_bkts == spark_bkts and len(spark_bkts) == len(rows) * L
 
 
+#: every bucket count a declared oracle splits with
+@pytest.mark.parametrize("buckets", [2, 1000, 1_000_000])
+def test_hash_bucket_sql_matches_hash_bucket(spark, buckets):
+    rows = [(None, None), (0, ""), (1, "1"), (-7, "doc-7"), (2**40, "Zürich")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE keys (i BIGINT, s VARCHAR)")
+    con.executemany("INSERT INTO keys VALUES (?, ?)", rows)
+    duck = con.execute(
+        f"SELECT {hash_bucket_sql('i', buckets)}, {hash_bucket_sql('s', buckets)} FROM keys"
+    ).fetchall()
+    con.close()
+    df = spark.createDataFrame(rows, "i long, s string")
+    got = [
+        tuple(r)
+        for r in df.select(
+            hash_bucket(F.col("i"), buckets), hash_bucket(F.col("s"), buckets)
+        ).collect()
+    ]
+    assert got == duck and got[0] == (None, None)
+
+
 def _quality_rows(docs, duck_docs):
     exprs = quality_exprs(F.col("text"))
     sql = quality_exprs_sql()
@@ -180,13 +205,11 @@ def test_text_twins_match_kernels(docs, duck_docs, rows):
     assert duck_rows == spark_rows
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="with ANSI off, Spark's size(NULL) is -1 (spark.sql.legacy."
-    "sizeOfNull), so the kernels give NULL text n_tokens -1, stopword_ratio "
-    "1.0 and language scores -1; DuckDB's len(NULL) is NULL",
-)
 @pytest.mark.parametrize("rows", [_quality_rows, _langid_rows])
 def test_text_twins_match_kernels_on_null_text(docs, duck_docs, rows):
+    """NULL text gives NULL signals and a NULL language on both engines
+    (Spark's ``size(NULL)`` is -1 with ANSI off, so the kernels count with
+    ``array_size``)."""
     spark_rows, duck_rows = rows(docs, duck_docs)
     assert duck_rows[NULL_DOC] == spark_rows[NULL_DOC]
+    assert set(spark_rows[NULL_DOC][1:]) == {None}

@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.sources import load_table
 from openmrs_patient_migration_script_spark.streaming.pipelines import (
-    dedup_stream,
     read_events_stream,
-    session_counts,
-    sliding_counts,
-    stateful_user_totals,
     tumbling_counts,
 )
 
@@ -43,8 +39,8 @@ def _rows(df, cols):
 
 @pytest.mark.parametrize(
     "pipeline,mode",
-    [(tumbling_counts, "complete"), (sliding_counts, "complete")],
-    ids=["tumbling", "sliding"],
+    [(tumbling_counts, "complete")],
+    ids=["tumbling"],
 )
 def test_windowed_stream_matches_batch(spark, pipeline, mode):
     stream = pipeline(read_events_stream(spark, SF))
@@ -52,52 +48,6 @@ def test_windowed_stream_matches_batch(spark, pipeline, mode):
     batch = pipeline(load_table(spark, SF, "events"))
     cols = ["window_start", "event_type", "n_events", "sum_value"]
     assert _rows(spark.table(name), cols) == _rows(batch, cols)
-
-
-def test_session_stream_matches_batch(spark):
-    stream = session_counts(read_events_stream(spark, SF))
-    name = _run_to_memory(stream, "complete")
-    batch = session_counts(load_table(spark, SF, "events"))
-    cols = ["session_start", "user_id", "n_events", "last_ts"]
-    assert _rows(spark.table(name), cols) == _rows(batch, cols)
-
-
-def test_dedup_stream_one_row_per_key(spark):
-    stream = dedup_stream(read_events_stream(spark, SF))
-    name = _run_to_memory(stream, "append")
-    out = spark.table(name)
-    # exactly one survivor per (user_id, event_type), covering every key
-    # present in the batch table
-    batch_keys = (
-        load_table(spark, SF, "events").select("user_id", "event_type").distinct()
-    )
-    assert out.groupBy("user_id", "event_type").count().filter("count > 1").count() == 0
-    assert out.count() == batch_keys.count()
-
-
-def test_stateful_stream_totals_match_batch(spark):
-    stream = stateful_user_totals(read_events_stream(spark, SF))
-    name = _run_to_memory(stream, "update")
-    # final state per user (availableNow → single batch → one row per user)
-    out = spark.table(name)
-    batch = (
-        load_table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["last_ts"])
-        for r in out.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["last_ts"])
-        for r in batch.collect()
-    }
-    assert got == want
 
 
 @pytest.mark.slow
@@ -180,117 +130,13 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert dropped == 1
 
 
-def test_interval_join_stream_matches_batch(spark):
-    """ST6: the dual-readStream interval join must equal the batch interval
-    join row-for-row (both sides watermarked; availableNow to completion)."""
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        interval_join_streams,
-    )
-
-    def split(df):
-        p = df.filter(F.col("event_type") == "purchase")
-        v = df.filter(F.col("event_type") == "view")
-        return p, v
-
-    sp, sv = split(read_events_stream(spark, SF))
-    stream = interval_join_streams(sp, sv)
-    name = _run_to_memory(stream, "append")
-    bp, bv = split(load_table(spark, SF, "events"))
-    batch = interval_join_streams(bp, bv)  # same fn works on batch frames
-    cols = ["purchase_id", "view_id", "user_id", "purchase_ts", "view_ts"]
-    assert _rows(spark.table(name), cols) == _rows(batch, cols)
-
-
-def test_tws_stateful_totals_match_batch(spark):
-    """ST5b: transformWithStateInPandas (Spark 4 typed-state API, RocksDB
-    provider) produces the same per-user totals as the batch aggregate.
-
-    TWS's state protocol needs google.protobuf, which this environment
-    does not ship — skip (not fail) where absent; applyInPandasWithState
-    (ST5) remains the fully-tested stateful path."""
-    # the API itself must exist on this build — only the protobuf dep may
-    # skip; an API removal should FAIL, not silently skip
-    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
-
-    assert hasattr(PandasGroupedOpsMixin, "transformWithStateInPandas")
-    # certify the skip against the ACTUAL dependency, not a guess: the
-    # generated TWS state-protocol module is what needs google.protobuf
-    # (r9 audit: `import pyspark.sql.streaming.proto.StateMessage_pb2`
-    # raises ModuleNotFoundError('google') on this image, and installing
-    # packages is out of contract). If the environment ever gains
-    # protobuf, this import succeeds and the parity body below RUNS.
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-    except ModuleNotFoundError as exc:
-        pytest.skip(
-            f"TWS state protocol unusable on this image ({exc}); "
-            "applyInPandasWithState (ST5) is the tested stateful path"
-        )
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stateful_user_totals_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stateful_user_totals_tws(read_events_stream(spark, SF))
-        name = _run_to_memory(stream, "update")
-        got = {
-            r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-            for r in spark.table(name).collect()
-        }
-        batch = (
-            load_table(spark, SF, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        )
-        want = {r["user_id"]: (r["n"], round(r["t"], 6)) for r in batch.collect()}
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_foreachbatch_sink_is_idempotent(spark, tmp_path):
-    """Replaying the same epochs (fresh checkpoint, same input) must not
-    duplicate rows in the sink: the _batch_id directory probe makes the
-    second delivery a no-op."""
-    import glob
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        read_events_stream,
-        write_stream_idempotent,
-    )
-
-    out = str(tmp_path / "sink")
-    events = read_events_stream(spark, SF).select("event_id", "ts", "event_type")
-    q = write_stream_idempotent(events, out, str(tmp_path / "ckpt1"))
-    q.awaitTermination(120)
-    n1 = spark.read.option("pathGlobFilter", "*.parquet").parquet(out).count()
-    assert n1 > 0
-    dirs1 = set(glob.glob(f"{out}/_batch_id=*"))
-    # second run: NEW checkpoint → Spark replays the same availableNow
-    # batches with the same ids; the sink must not grow
-    q2 = write_stream_idempotent(events, out, str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
-    n2 = spark.read.option("pathGlobFilter", "*.parquet").parquet(out).count()
-    assert n2 == n1
-    assert set(glob.glob(f"{out}/_batch_id=*")) == dirs1
-
-
 def test_restart_resumes_from_checkpoint_exactly_once(spark, tmp_path):
     """Kill-and-restart contract: a second run against the SAME checkpoint
     must process only files that arrived after the first run — offsets come
     from the checkpoint, not the source listing — so the append-mode sink
     sees every input row exactly once across restarts. This is the
     recovery half of the exactly-once story (the idempotent-sink half is
-    test_foreachbatch_sink_is_idempotent)."""
+    the ``_batch_id``-per-directory writers' replay tests)."""
     src, ckpt, out = str(tmp_path / "in"), str(tmp_path / "ck"), str(tmp_path / "out")
     schema = "id long"
 
@@ -360,400 +206,6 @@ def test_streaming_agg_on_rocksdb_state_store(spark, tmp_path):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", saved)
-
-
-def test_stream_static_enrichment_matches_batch_and_holds_no_state(spark):
-    """ST7: per-micro-batch join against a static broadcast dim — result
-    parity with the batch twin, zero stateful operators (nothing buffers
-    across batches), and facts with no dim row survive (left join)."""
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        enrich_stream,
-    )
-
-    dim = (
-        load_table(spark, SF, "customer")
-        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
-        .filter(F.col("user_id") % 2 == 0)  # force unmatched keys
-    )
-    stream = enrich_stream(
-        read_events_stream(spark, SF).select("event_id", "user_id", "value"), dim
-    )
-    name = "mem_enrich_" + __import__("uuid").uuid4().hex[:8]
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    progress = q.recentProgress
-    assert progress and all(not p["stateOperators"] for p in progress)
-
-    batch = enrich_stream(
-        load_table(spark, SF, "events").select("event_id", "user_id", "value"), dim
-    )
-    cols = ["event_id", "user_id", "c_mktsegment"]
-    got = _rows(spark.table(name), cols)
-    assert got == _rows(batch, cols)
-    # left-join semantics: odd user_ids enriched with NULL, not dropped
-    assert any(r[2] is None for r in got)
-
-
-def test_foreachbatch_rewrites_incomplete_batch_dirs(spark, tmp_path):
-    """A batch directory without _SUCCESS is a crashed half-write — replay
-    must REWRITE it, not freeze it forever (the bare-existence-probe trap)."""
-    import os
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        write_stream_idempotent,
-    )
-
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # plant a half-written batch 0: directory exists, no _SUCCESS
-    half = os.path.join(out_dir, "_batch_id=0")
-    os.makedirs(half)
-    with open(os.path.join(half, "part-stale.parquet"), "w") as f:
-        f.write("debris")
-
-    stream = read_events_stream(spark, SF).select("event_id", "user_id")
-    q = write_stream_idempotent(stream, out_dir, ckpt)
-    q.awaitTermination(120)
-    assert os.path.exists(os.path.join(half, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(half, "part-stale.parquet"))
-    n = spark.read.parquet(os.path.join(out_dir, "_batch_id=0")).count()
-    assert n == load_table(spark, SF, "events").count()
-
-
-@pytest.mark.slow
-def test_stateful_ewma_carries_recurrence_across_batches(spark, tmp_path):
-    """ST5b: the EWMA recurrence must CONTINUE across micro-batches from
-    GroupState — two pinned batches (each user's earlier events, then the
-    rest) must reproduce the batch fold over the union exactly. A
-    state-reset bug would restart every user's series at batch 1 and
-    diverge on the later events."""
-    import os
-    from datetime import datetime
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from openmrs_patient_migration_script_spark.operators.timeseries import ewma
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stateful_user_ewma,
-    )
-
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    rows = [
-        (u, u * 100 + i, datetime(2024, 1, 1, 8 + i), float((u * 7 + i * 3) % 13) + 0.25)
-        for u in range(3)
-        for i in range(8)
-    ]
-    # batch 0 = each user's first 4 events, batch 1 = the rest (ts order
-    # respected across batches, so the union fold is well-defined)
-    early = [r for r in rows if r[1] % 100 < 4]
-    late = [r for r in rows if r[1] % 100 >= 4]
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([early, late]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):  # file source orders batches by mtime
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-
-    stream = stateful_user_ewma(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/f*")
-    )
-    name = _run_to_memory(stream, "update")
-    got = {
-        (r.user_id, r.event_id): r.ewma for r in spark.table(name).collect()
-    }
-    batch = ewma(
-        spark.createDataFrame(rows, schema), "user_id", ["ts", "event_id"], "value"
-    )
-    want = {(r.user_id, r.event_id): r.ewma for r in batch.collect()}
-    assert got == want  # bit-exact: same fold, same order
-    assert len(got) == len(rows)
-
-
-@pytest.mark.slow
-def test_stateful_cusum_matches_batch_fold_across_batches(spark, tmp_path):
-    """ST5c: streaming CUSUM must continue its int64 state across
-    micro-batches and agree with the batch `cusum` fold over the union
-    with NO tolerance — integer adds/maxes carry no rounding, so bit
-    equality is the contract, not an aspiration."""
-    import os
-    from datetime import datetime
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from openmrs_patient_migration_script_spark.operators.timeseries import cusum
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stateful_user_cusum,
-    )
-
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    # user 0 drifts high (alarm mid-series), user 1 stays in band, user 2
-    # drifts low — the shift spans the batch boundary on purpose
-    vals = {0: [50, 52, 75, 78, 76, 77, 79, 74], 1: [50] * 8,
-            2: [50, 49, 25, 22, 24, 21, 23, 26]}
-    rows = [
-        (u, u * 100 + i, datetime(2024, 1, 1, 8 + i), float(v) + 0.125)
-        for u, series in vals.items()
-        for i, v in enumerate(series)
-    ]
-    early = [r for r in rows if r[1] % 100 < 4]
-    late = [r for r in rows if r[1] % 100 >= 4]
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([early, late]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-
-    stream = stateful_user_cusum(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/f*"),
-        threshold=60.0,
-    )
-    name = _run_to_memory(stream, "update")
-    got = {
-        (r.user_id, r.event_id): (r.cusum_hi, r.cusum_lo, r.alarm)
-        for r in spark.table(name).collect()
-    }
-    batch = cusum(
-        spark.createDataFrame(rows, schema), "user_id", ["ts", "event_id"],
-        "value", target=50.0, slack=10.0, threshold=60.0,
-    )
-    want = {
-        (r.user_id, r.event_id): (r.cusum_hi, r.cusum_lo, r.alarm)
-        for r in batch.collect()
-    }
-    assert got == want
-    assert any(a for _, (_, _, a) in got.items()), "planted drift must alarm"
-    assert not any(a for (u, _), (_, _, a) in got.items() if u == 1)
-
-
-def test_stateful_pipeline_on_rocksdb_state_store(spark, tmp_path):
-    """State-backend portability: the GroupState pipeline must run
-    unchanged on the RocksDB state store provider — the backend a real
-    cluster uses once per-key state exceeds executor heap (the default
-    HDFSBackedStateStoreProvider keeps every version in memory). Conf is
-    read at query start, so it scopes to this test and restores after."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stateful_user_totals(read_events_stream(spark, SF))
-        name = _run_to_memory(stream, "update")
-        out = spark.table(name)
-        batch = (
-            load_table(spark, SF, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"))
-        )
-        got = {r["user_id"]: r["n_events"] for r in out.collect()}
-        want = {r["user_id"]: r["n_events"] for r in batch.collect()}
-        assert got == want
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-@pytest.mark.slow
-def test_stateful_sessions_event_time_timeout(spark, tmp_path):
-    """ST5c: EventTimeTimeout session closing — sessions must be emitted
-    by the TIMEOUT callback once the watermark passes last_ts + gap (not
-    by later data for the same key), must match the built-in
-    session_window aggregation over the same input, and the fired keys'
-    state must be REMOVED (the bounded-memory contract)."""
-    import os
-    from datetime import datetime, timedelta
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stateful_sessions_timeout,
-    )
-
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    base = datetime(2024, 1, 1, 8, 0)
-    rows = []
-    for u in range(3):
-        # session 1: three events 5 min apart; session 2: 40 min later
-        for i in range(3):
-            rows.append((u, base + timedelta(minutes=u + 5 * i), 1.0 + u + i))
-        rows.append((u, base + timedelta(minutes=u + 60), 100.0 + u))
-    # sentinel user far in the future: batch 2 and 3 push the watermark
-    # past every base session's last_ts + gap, firing the timeouts
-    sent1 = [(99, base + timedelta(days=1), 0.0)]
-    sent2 = [(99, base + timedelta(days=2), 0.0)]
-
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([rows, sent1, sent2]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-
-    stream = stateful_sessions_timeout(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/f*"),
-        gap_minutes=30,
-    )
-    name = _run_to_memory(stream, "append")
-    got = sorted(
-        (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
-        for r in spark.table(name).collect()
-        if r.user_id != 99
-    )
-
-    # session_window's end = last_ts + gap, so last event ts = end - gap
-    batch = (
-        spark.createDataFrame(rows, schema)
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .withColumn("last_ts", F.col("w.end") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    want = sorted(
-        (r.user_id, r.w.start, r.last_ts, r.n, r.s) for r in batch.collect()
-    )
-    assert got == want, (got, want)
-    assert len(got) == 6  # two closed sessions per base user
-
-
-@pytest.mark.slow
-def test_stream_cdc_apply_materializes_and_replays_idempotently(spark, tmp_path):
-    """Streaming CDC → parquet target: two micro-batches of
-    insert/update/delete changes fold into the target via foreachBatch +
-    apply_cdc with an atomic swap; re-running on the same checkpoint
-    changes nothing (no new batches), and the final target equals the
-    sequential batch application."""
-    import os
-    from datetime import datetime
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stream_cdc_apply,
-    )
-
-    schema = StructType(
-        [
-            StructField("client_id", LongType()),
-            StructField("op", StringType()),
-            StructField("op_ts", TimestampType()),
-            StructField("name", StringType()),
-            StructField("balance", DoubleType()),
-        ]
-    )
-    t0 = datetime(2024, 1, 1, 8)
-    b0 = [
-        (1, "insert", t0, "alice", 10.0),
-        (2, "insert", t0, "brian", 20.0),
-        (3, "insert", t0, "chiku", 30.0),
-    ]
-    t1 = datetime(2024, 1, 1, 9)
-    b1 = [
-        (2, "update", t1, "brian2", 25.0),
-        (3, "delete", t1, None, None),
-        (4, "insert", t1, "daudi", 40.0),
-        # late duplicate of an old insert: last-writer by op_ts must win
-        (2, "insert", t0, "brian", 20.0),
-    ]
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([b0, b1]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-
-    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
-
-    def run():
-        q = stream_cdc_apply(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/f*"),
-            target,
-            ckpt,
-            key="client_id",
-            seq_cols=["op_ts"],
-            op_col="op",
-            payload_cols=["name", "balance"],
-        )
-        q.awaitTermination(120)
-
-    run()
-    got = {
-        r.client_id: (r.name, r.balance)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        1: ("alice", 10.0),
-        2: ("brian2", 25.0),
-        4: ("daudi", 40.0),
-    }
-
-    run()  # same checkpoint: no new batches, target untouched
-    again = {
-        r.client_id: (r.name, r.balance)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert again == got
 
 
 def test_trending_topk_over_streamed_state_matches_batch(spark):
@@ -846,73 +298,6 @@ def test_stream_ingest_dedup_admits_once_across_batches(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {2, 5}
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_distinct_users_stream_chains_two_stateful_ops(spark, provider):
-    """ST9: the chained dropDuplicates→windowed-count plan must (a) match
-    the batch exact distinct count row-for-row and (b) actually run TWO
-    stateful operators in one streaming query — under BOTH state-store
-    providers: the default in-memory store AND RocksDB, the at-scale
-    backend (state spills to local disk; a 100 TB keyspace cannot live
-    in executor heap). r7 verdict gap: RocksDB was exercised for single
-    stateful operators but never for the chained two-operator pipeline,
-    whose state handoff (dedup eviction feeding the count state) is the
-    part a provider could plausibly break."""
-    import json
-
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        distinct_users_windowed,
-    )
-
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if provider == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        stream = distinct_users_windowed(read_events_stream(spark, SF))
-        name = "mem_" + uuid.uuid4().hex[:12]
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
-    assert not q.isActive
-    progress = [json.loads(str(p)) for p in q.recentProgress]
-    n_state_ops = max(
-        (len(p.get("stateOperators", [])) for p in progress), default=0
-    )
-    assert n_state_ops == 2, f"expected 2 chained stateful ops, saw {n_state_ops}"
-
-    from pyspark.sql import functions as F2
-
-    batch = (
-        load_table(spark, SF, "events")
-        .groupBy(F2.window("ts", "1 hour").alias("w"))
-        .agg(F2.count_distinct("user_id").alias("n_distinct_users"))
-        .select(F2.col("w.start").alias("window_start"), "n_distinct_users")
-    )
-    cols = ["window_start", "n_distinct_users"]
-    # append mode emits only watermark-closed windows: every emitted row
-    # must match the batch answer exactly, and all but the stream's final
-    # open window(s) must have been emitted
-    got = _rows(spark.table(name), cols)
-    want = _rows(batch, cols)
-    assert set(got) <= set(want)
-    assert len(got) >= len(want) - 2
-
-
 @pytest.mark.slow
 def test_stream_ingest_dedup_collapses_intra_batch_dups(spark, tmp_path):
     """ADVICE r5: near/exact duplicates arriving within the SAME
@@ -955,211 +340,3 @@ def test_stream_ingest_dedup_collapses_intra_batch_dups(spark, tmp_path):
     assert admitted == {11, 12}
 
 
-@pytest.mark.slow
-def test_stream_cms_maintain_merges_across_batches_and_replays(spark, tmp_path):
-    """ST10 (r6): the maintained streaming sketch (cell-wise sum across
-    micro-batch deltas) must equal the one-shot batch CMS of all data;
-    a replay on the same checkpoint rewrites nothing."""
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from openmrs_patient_migration_script_spark.operators.sketches import (
-        cms_build,
-        cms_estimate,
-    )
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stream_cms_maintain,
-        stream_cms_read,
-    )
-
-    schema = StructType([StructField("item", StringType())])
-    b0 = [(f"tok{i % 5}",) for i in range(200)]
-    b1 = [(f"tok{i % 5}",) for i in range(100)] + [("rare",)] * 2
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([b0, b1]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def run():
-        q = stream_cms_maintain(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/f*"),
-            "item",
-            out,
-            ckpt,
-        )
-        q.awaitTermination(120)
-
-    run()
-    whole = spark.createDataFrame(b0 + b1, schema)
-    want = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(whole, "item").collect()
-    }
-    got = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in stream_cms_read(spark, out).collect()
-    }
-    assert got == want
-    snapshot = sorted(
-        os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs
-    )
-    run()  # replay: no new batches, nothing rewritten
-    assert sorted(
-        os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs
-    ) == snapshot
-    probes = spark.createDataFrame([("tok0",), ("rare",)], ["item"])
-    est = {
-        r["item"]: r["cms_est"]
-        for r in cms_estimate(
-            stream_cms_read(spark, out), probes, "item"
-        ).collect()
-    }
-    assert est["tok0"] >= 60 and est["rare"] >= 2
-
-
-def test_stream_cms_read_ignores_uncommitted_batch_dirs(spark, tmp_path):
-    """ST10 edge: a `_batch_id=` directory WITHOUT a `_SUCCESS` marker
-    (in-flight or crashed micro-batch) must not be folded into the
-    read — the reader walks the FileSystem ledger like `admit_batch`,
-    not a path glob. A partial parquet in the uncommitted dir would
-    either corrupt counts or crash the read outright."""
-    import os
-
-    from openmrs_patient_migration_script_spark.operators.sketches import (
-        cms_build,
-    )
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stream_cms_read,
-    )
-
-    out = str(tmp_path / "out")
-    good = spark.createDataFrame([("a",)] * 3 + [("b",)], ["item"])
-    cms_build(good, "item").write.parquet(f"{out}/_batch_id=0")  # has _SUCCESS
-    # an uncommitted batch: cells written, then the _SUCCESS marker removed
-    bad = spark.createDataFrame([("a",)] * 100, ["item"])
-    cms_build(bad, "item").write.parquet(f"{out}/_batch_id=1")
-    os.remove(f"{out}/_batch_id=1/_SUCCESS")
-
-    want = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(good, "item").collect()
-    }
-    got = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in stream_cms_read(spark, out).collect()
-    }
-    assert got == want  # only the committed batch folded
-
-    # no committed batch at all -> empty sketch, correct schema
-    empty = stream_cms_read(spark, str(tmp_path / "nothing"))
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == ["row", "bucket", "cnt"]
-
-
-@pytest.mark.slow
-def test_stateful_sprt_matches_batch_decision(spark, tmp_path):
-    """ST5d parity: the GroupState SPRT must reproduce the batch
-    ab_sequential_sprt row exactly — including a boundary crossing that
-    happens INSIDE the first micro-batch and totals that keep counting
-    into the second — and a replay of the same files must not change
-    the decision (integer state cannot wobble)."""
-    import os
-    from datetime import datetime
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from openmrs_patient_migration_script_spark.plans import QUERIES
-    from openmrs_patient_migration_script_spark.streaming.pipelines import (
-        stateful_arm_sprt,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", StringType()),
-            StructField("props", StringType()),
-        ]
-    )
-    # user 1 -> md5 arm 0: six straight purchases cross the upper
-    # boundary at n=6 inside micro-batch 1; the two views in batch 2
-    # update totals but must not move the frozen decision. user 2 ->
-    # arm 1: ten views, stays 'continue'.
-    rows = []
-    for i in range(8):
-        rows.append(
-            (i, datetime(2024, 1, 1, 8, i), 1,
-             "purchase" if i < 6 else "view", "1.0", "{}")
-        )
-    for i in range(10):
-        rows.append(
-            (100 + i, datetime(2024, 1, 1, 8, i), 2, "view", "1.0", "{}")
-        )
-    early = [r for r in rows if (r[0] % 100) < 7]
-    late = [r for r in rows if (r[0] % 100) >= 7]
-    src = str(tmp_path / "src")
-    for i, chunk in enumerate([early, late]):
-        p = f"{src}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1000 + i * 100, 1000 + i * 100))
-
-    from openmrs_patient_migration_script_spark.operators.sampling import (
-        hash_bucket,
-    )
-
-    def armed(df):
-        return df.select(
-            (hash_bucket(F.col("user_id")) % 2).alias("arm"),
-            "ts",
-            "event_id",
-            "event_type",
-        )
-
-    stream = stateful_arm_sprt(
-        armed(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/f*")
-        )
-    )
-    name = _run_to_memory(stream, "update")
-    # update mode emits one row per arm per micro-batch: keep the last
-    got = {}
-    for r in spark.table(name).collect():
-        if r.arm not in got or r.n_total > got[r.arm].n_total:
-            got[r.arm] = r
-
-    # batch twin on the same rows, via the declared query on a parquet dir
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
-    batch_dir = tmp_path / "batch"
-    spark.createDataFrame(rows, schema).select(
-        "event_id", "ts", "user_id", "event_type",
-        F.col("value").cast("double").alias("value"), "props",
-    ).write.parquet(str(batch_dir / "events.parquet"))
-    want = {r.arm: r for r in
-            QUERIES["ab_sequential_sprt"](spark, str(batch_dir)).collect()}
-
-    for arm in (0, 1):
-        g, w = got[arm], want[arm]
-        for c in ("n_total", "s_total", "llr_final_nano",
-                  "n_at_decision", "llr_at_decision_nano", "decision"):
-            assert g[c] == w[c], f"arm {arm} {c}: stream {g[c]} != batch {w[c]}"
-    assert want[0].decision == "accept_h1" and want[0].n_at_decision == 6
-    assert want[1].decision == "continue"
