@@ -59,7 +59,7 @@ def deterministic_uuid_sql(cols_sql: str, namespace: str = "") -> str:
 MOD30_CHARSET = "0123456789ACDEFGHJKLMNPRTUVWXY"
 
 
-def _luhn_terms(id_col: Column, charset: str, double_odd_positions: bool) -> Column:
+def _luhn_terms(id_col: Column, double_odd_positions: bool) -> Column:
     """Sum of Luhn mod-N terms over ``id_col``, processed right-to-left.
 
     Position i (0-based from the RIGHT) is doubled when i is even
@@ -70,13 +70,13 @@ def _luhn_terms(id_col: Column, charset: str, double_odd_positions: bool) -> Col
     both. Everything is row-local HOF arithmetic — exact integers, no
     UDF, reproducible in any engine with list ops.
     """
-    n = len(charset)
+    n = len(MOD30_CHARSET)
     # split("") yields [""] and instr(cs, "") is 1, so empty elements must
     # be filtered or an empty id silently checksums like "0"
     chars = F.reverse(
         F.filter(F.split(F.upper(id_col), "(?!$)"), lambda c: c != F.lit(""))
     )
-    vals = F.transform(chars, lambda c: F.instr(F.lit(charset), c) - 1)
+    vals = F.transform(chars, lambda c: F.instr(F.lit(MOD30_CHARSET), c) - 1)
     parity = 0 if not double_odd_positions else 1
     doubled = F.zip_with(
         vals,
@@ -90,34 +90,34 @@ def _luhn_terms(id_col: Column, charset: str, double_odd_positions: bool) -> Col
     )
 
 
-def _has_invalid_char(id_col: Column, charset: str) -> Column:
-    """True when any character falls outside the charset (or the id is
+def _has_invalid_char(id_col: Column) -> Column:
+    """True when any character falls outside ``MOD30_CHARSET`` (or the id is
     empty) — the OpenMRS validator treats that as unverifiable, not as
     arithmetic input."""
     chars = F.filter(
         F.split(F.upper(id_col), "(?!$)"), lambda c: c != F.lit("")
     )
     return (F.size(chars) == 0) | F.exists(
-        chars, lambda c: F.instr(F.lit(charset), c) == 0
+        chars, lambda c: F.instr(F.lit(MOD30_CHARSET), c) == 0
     )
 
 
-def luhn_check_digit(id_col: Column | str, charset: str = MOD30_CHARSET) -> Column:
-    """The Luhn mod-N check CHARACTER for a bare identifier (the char a
-    generated OpenMRS identifier appends). N = len(charset). NULL when
-    the identifier contains out-of-charset characters (unverifiable
-    beats garbage arithmetic)."""
+def luhn_check_digit(id_col: Column | str) -> Column:
+    """The Luhn mod-30 check CHARACTER for a bare identifier (the char a
+    generated OpenMRS identifier appends). NULL when the identifier
+    contains out-of-charset characters (unverifiable beats garbage
+    arithmetic)."""
     col = F.col(id_col) if isinstance(id_col, str) else id_col
-    n = len(charset)
-    total = _luhn_terms(col, charset, double_odd_positions=False)
+    n = len(MOD30_CHARSET)
+    total = _luhn_terms(col, double_odd_positions=False)
     check = (F.lit(n) - (total % n)) % n
     return F.when(
-        ~_has_invalid_char(col, charset),
-        F.substring(F.lit(charset), (check + 1).cast("int"), 1),
+        ~_has_invalid_char(col),
+        F.substring(F.lit(MOD30_CHARSET), (check + 1).cast("int"), 1),
     )
 
 
-def luhn_valid(id_col: Column | str, charset: str = MOD30_CHARSET) -> Column:
+def luhn_valid(id_col: Column | str) -> Column:
     """True iff ``id_col``'s rightmost character is a correct Luhn mod-N
     check digit for the rest — the destination-side validation gate a
     migration runs on every inbound identifier. False (not an error) for
@@ -125,9 +125,9 @@ def luhn_valid(id_col: Column | str, charset: str = MOD30_CHARSET) -> Column:
     digit of an empty payload technically checksums, but the OpenMRS
     validator's >= 2 length floor is the right contract)."""
     col = F.col(id_col) if isinstance(id_col, str) else id_col
-    n = len(charset)
-    total = _luhn_terms(col, charset, double_odd_positions=True)
+    n = len(MOD30_CHARSET)
+    total = _luhn_terms(col, double_odd_positions=True)
     too_short = F.length(F.coalesce(col, F.lit(""))) < 2
     return F.when(
-        _has_invalid_char(col, charset) | too_short, F.lit(False)
+        _has_invalid_char(col) | too_short, F.lit(False)
     ).otherwise((total % n) == 0)

@@ -624,12 +624,14 @@ def corr_matrix(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     )
 
 
+_QUANTILE_MAX_LEVELS = 6  # histogram levels before selection gives up
+
+
 def exact_global_quantile(
     df: DataFrame,
     value_col: str,
     pct: int | None = None,
     n_buckets: int = 4096,
-    max_levels: int = 6,
     target_rank: int | None = None,
 ) -> int | None:
     """EXACT global order statistic WITHOUT a global sort — multi-level
@@ -671,7 +673,7 @@ def exact_global_quantile(
     else:
         target = -(-pct * n // 100)  # ceil(pct·n/100): the min qualifying rank
     below = 0
-    for _ in range(max_levels):
+    for _ in range(_QUANTILE_MAX_LEVELS):
         if lo == hi:
             return int(lo)
         width = (hi - lo + n_buckets) // n_buckets  # ceil; >= 1
@@ -700,6 +702,6 @@ def exact_global_quantile(
         if width == 1:
             return int(lo)
     raise RuntimeError(
-        f"quantile selection did not converge in {max_levels} levels "
-        f"(range {hi - lo + 1} at B={n_buckets}) — raise max_levels"
+        f"quantile selection did not converge in {_QUANTILE_MAX_LEVELS} levels "
+        f"(range {hi - lo + 1} at B={n_buckets}) — raise n_buckets"
     )

@@ -47,6 +47,9 @@ from openmrs_patient_migration_script_spark.operators.text import (
     quality_exprs,
 )
 
+# per-mille split weights over `hash_split`'s 1000 buckets
+_SPLITS = {"train": 900, "val": 50, "test": 50}
+
 
 def prepare_corpus(
     docs: DataFrame,
@@ -54,15 +57,14 @@ def prepare_corpus(
     text_col: str = "text",
     min_quality: float = 0.2,
     min_tokens: int = 12,
-    splits: dict[str, int] | None = None,
-    num_hashes: int = 16,
-    bands: int = 4,
     double_hash=None,
     hash_buckets: bool = True,
     max_repeated_pct: int | None = None,
 ) -> DataFrame:
     """Returns (key, predicted_lang, quality_score, split) for every kept
-    document. ``double_hash``/``hash_buckets`` pass through to the LSH
+    document. Near-duplicates are found with 16 MinHash rows in 4 bands,
+    and the split is 90 % train, 5 % val, 5 % test by content hash
+    (`_SPLITS`). ``double_hash``/``hash_buckets`` pass through to the LSH
     stage (the declared query uses the `dedup.md5_pair` double-hash +
     raw-struct bucket form so a SQL oracle can replay the banding join
     exactly; production keeps the xxhash64 defaults). The md5 family is
@@ -136,8 +138,6 @@ def prepare_corpus(
         survivors,
         "key",
         "text",
-        num_hashes=num_hashes,
-        bands=bands,
         double_hash=double_hash,
         hash_buckets=hash_buckets,
         materialize=True,
@@ -147,4 +147,4 @@ def prepare_corpus(
         F.col("node").isNull() | (F.col("cluster") == F.col("key"))
     )
     out = kept.select("key", "predicted_lang", "quality_score")
-    return hash_split(out, "key", splits or {"train": 900, "val": 50, "test": 50})
+    return hash_split(out, "key", _SPLITS)

@@ -56,63 +56,43 @@ def fuzzy_dedup_pairs(
     text_col: str,
     block_exprs: list,
     max_distance: int = 2,
-    block_mode: str = "all",
 ) -> DataFrame:
     """X2: near-duplicate pairs via blocking + Levenshtein.
 
     ``block_exprs`` are cheap expressions (e.g. prefix, length bucket,
     soundex) — candidate pairs are generated only *within* a block, turning
     the O(n²) comparison into O(Σ block²); at 100 TB the block key is the
-    shuffle key and block sizes bound the worst task.
-
-    ``block_mode``:
-    - ``"all"`` (default): one pass joining on the conjunction of ALL block
-      expressions — highest precision/lowest cost, lower recall (a pair must
-      agree on every key).
-    - ``"any"``: standard multi-pass blocking — one candidate pass per block
-      expression, pairs unioned and de-duplicated, so agreeing on ANY single
-      key is enough. Higher recall at the cost of one shuffle per pass.
+    shuffle key and block sizes bound the worst task. One pass joins on
+    the conjunction of ALL block expressions — highest precision and
+    lowest cost, at lower recall (a pair must agree on every key).
 
     Returns (key_a, key_b, dist) with key_a < key_b.
     """
-
-    def one_pass(exprs: list) -> DataFrame:
-        a = df.select(
-            F.col(key_col).alias("key_a"),
-            F.col(text_col).alias("text_a"),
-            *[e.alias(f"_blk{i}") for i, e in enumerate(exprs)],
+    a = df.select(
+        F.col(key_col).alias("key_a"),
+        F.col(text_col).alias("text_a"),
+        *[e.alias(f"_blk{i}") for i, e in enumerate(block_exprs)],
+    )
+    b = df.select(
+        F.col(key_col).alias("key_b"),
+        F.col(text_col).alias("text_b"),
+        *[e.alias(f"_blk{i}") for i, e in enumerate(block_exprs)],
+    )
+    on = [f"_blk{i}" for i in range(len(block_exprs))]
+    pairs = a.join(b, on=on, how="inner").filter(F.col("key_a") < F.col("key_b"))
+    # THRESHOLD levenshtein (r11): the 3-arg form runs the banded
+    # O(len * max_distance) DP with early abort instead of the full
+    # O(len^2) matrix, returning -1 past the threshold — ~2x on the
+    # sf0.1 fuzzy-name blocks at distance 1, byte-identical
+    # survivors (within the threshold the banded distance is exact).
+    return (
+        pairs.withColumn(
+            "dist",
+            F.levenshtein("text_a", "text_b", max_distance).cast("long"),
         )
-        b = df.select(
-            F.col(key_col).alias("key_b"),
-            F.col(text_col).alias("text_b"),
-            *[e.alias(f"_blk{i}") for i, e in enumerate(exprs)],
-        )
-        on = [f"_blk{i}" for i in range(len(exprs))]
-        pairs = a.join(b, on=on, how="inner").filter(F.col("key_a") < F.col("key_b"))
-        # THRESHOLD levenshtein (r11): the 3-arg form runs the banded
-        # O(len * max_distance) DP with early abort instead of the full
-        # O(len^2) matrix, returning -1 past the threshold — ~2x on the
-        # sf0.1 fuzzy-name blocks at distance 1, byte-identical
-        # survivors (within the threshold the banded distance is exact).
-        return (
-            pairs.withColumn(
-                "dist",
-                F.levenshtein("text_a", "text_b", max_distance).cast("long"),
-            )
-            .filter((F.col("dist") >= 0) & (F.col("dist") <= max_distance))
-            .select("key_a", "key_b", "dist")
-        )
-
-    if block_mode == "all" or len(block_exprs) == 1:
-        return one_pass(block_exprs)
-    if block_mode != "any":
-        raise ValueError(f"block_mode must be 'all' or 'any', got {block_mode!r}")
-    out = one_pass([block_exprs[0]])
-    for e in block_exprs[1:]:
-        out = out.unionByName(one_pass([e]))
-    # dist is a pure function of the pair, so distinct() on all three
-    # columns de-duplicates pairs found by multiple passes.
-    return out.distinct()
+        .filter((F.col("dist") >= 0) & (F.col("dist") <= max_distance))
+        .select("key_a", "key_b", "dist")
+    )
 
 
 def _shingles(text_col, n: int = 3):
@@ -175,14 +155,14 @@ def minhash_signatures(
     key_col: str,
     text_col: str,
     num_hashes: int = 16,
-    shingle_n: int = 3,
     double_hash=None,
 ) -> DataFrame:
     """X3 stage 1: per-document MinHash signature.
 
-    DataFrame-native: explode shingles once, then ``min(hash(shingle,
-    seed_i))`` per doc for each of the ``num_hashes`` seeds in ONE groupBy
-    (single shuffle). No MLlib, no UDFs — all JVM built-ins.
+    DataFrame-native: explode word-3-gram shingles once, then
+    ``min(hash(shingle, seed_i))`` per doc for each of the ``num_hashes``
+    seeds in ONE groupBy (single shuffle). No MLlib, no UDFs — all JVM
+    built-ins.
 
     The default hash family is seeded ``xxhash64`` (cheapest — the
     100 TB choice). ``double_hash(col) -> (h1, h2)`` instead derives all
@@ -193,7 +173,7 @@ def minhash_signatures(
     """
     sh = df.select(
         F.col(key_col).alias("key"),
-        F.explode(F.array_distinct(_shingles(F.col(text_col), shingle_n))).alias("shingle"),
+        F.explode(F.array_distinct(_shingles(F.col(text_col)))).alias("shingle"),
     )
     if double_hash is not None:
         h1, h2 = double_hash(F.col("shingle"))
@@ -278,7 +258,6 @@ def minhash_candidate_pairs(
     text_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 3,
     materialize: bool = True,
     double_hash=None,
     hash_buckets: bool = True,
@@ -301,9 +280,7 @@ def minhash_candidate_pairs(
             "and change the (rows, bands) recall trade the caller tuned"
         )
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        df, key_col, text_col, num_hashes, shingle_n, double_hash
-    )
+    sig = minhash_signatures(df, key_col, text_col, num_hashes, double_hash)
     if materialize:
         sig = sig.localCheckpoint(eager=True)
     buckets = _band_buckets(sig, num_hashes, bands, hash_buckets)
@@ -324,7 +301,6 @@ def minhash_pairs_against(
     text_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 3,
     double_hash=None,
     hash_buckets: bool = True,
     index_signatures: DataFrame | None = None,
@@ -351,7 +327,7 @@ def minhash_pairs_against(
     signed with different params, which would silently produce empty
     band joins). With it set, ``index_df`` may be None. The caller owns
     the hash-family contract: signatures persisted under one
-    double_hash/shingle_n must be probed with the same family.
+    double_hash must be probed with the same family.
 
     Scale: the join shuffles on (band, bucket) like the self-join; the
     index side's bucket table is signature-sized (#docs × bands rows),
@@ -379,11 +355,9 @@ def minhash_pairs_against(
         raise ValueError("provide index_df or index_signatures")
     else:
         sig_i = minhash_signatures(
-            index_df, key_col, text_col, num_hashes, shingle_n, double_hash
+            index_df, key_col, text_col, num_hashes, double_hash
         )
-    sig_b = minhash_signatures(
-        batch_df, key_col, text_col, num_hashes, shingle_n, double_hash
-    )
+    sig_b = minhash_signatures(batch_df, key_col, text_col, num_hashes, double_hash)
     bi = _band_buckets(sig_i, num_hashes, bands, hash_buckets).select(
         F.col("key").alias("index_key"), "band", "bucket"
     )
@@ -790,12 +764,14 @@ def repeated_span_stats(
     )
 
 
+_MAX_PARAS = 4096  # paragraphs per document that paragraph_dedup can address
+
+
 def paragraph_dedup(
     df: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
     para_tokens: int = 10,
-    max_paras: int = 4096,
 ) -> DataFrame:
     """Paragraph-level exact dedup — the CCNet preprocessing step
     (Wenzek et al., LREC 2020): split each document into paragraphs,
@@ -812,8 +788,8 @@ def paragraph_dedup(
     paragraph of the doc appeared earlier elsewhere).
 
     First-occurrence is the global min of the packed position
-    ``key·max_paras + pos`` per paragraph STRING (no hashing — exact
-    text identity), guarded in-plan by ``assert_true(pos < max_paras)``
+    ``key·4096 + pos`` per paragraph STRING (no hashing — exact
+    text identity), guarded in-plan by ``assert_true(pos < 4096)``
     so the packing cannot alias two occurrences.
 
     Scale: the explode is row-local; the first-occurrence agg is one
@@ -827,7 +803,7 @@ def paragraph_dedup(
     localCheckpointed, so the corpus scan + explode run once.
 
     ``key_col`` must be an integral type: the packed first-occurrence
-    address is ``key·max_paras + pos``, and Spark's implicit
+    address is ``key·4096 + pos``, and Spark's implicit
     string→double cast would turn a string key into NULL ``occ`` for
     EVERY row — ``kept`` would be NULL everywhere and all paragraphs
     silently dropped. Fail loud instead (the bloom_semi_join guard
@@ -847,8 +823,8 @@ def paragraph_dedup(
         F.explode(F.sequence(F.lit(0), F.col("_np") - 1)).alias("pos"),
     )
     guard = F.assert_true(
-        F.col("pos") < max_paras,
-        F.lit(f"paragraph_dedup: document exceeds {max_paras} paragraphs"),
+        F.col("pos") < _MAX_PARAS,
+        F.lit(f"paragraph_dedup: document exceeds {_MAX_PARAS} paragraphs"),
     )
     # assert_true is NULL whenever the check passes, so the filter keeps
     # every row and only exists to fail the job loudly on a violation
@@ -859,7 +835,7 @@ def paragraph_dedup(
         F.array_join(
             F.slice("_t", F.col("pos") * para_tokens + 1, para_tokens), " "
         ).alias("para"),
-        (F.col("key") * max_paras + F.col("pos")).cast("long").alias("occ"),
+        (F.col("key") * _MAX_PARAS + F.col("pos")).cast("long").alias("occ"),
     )
     # both the first-occurrence agg and the join-back consume `paras`;
     # without this the corpus scan + explode run twice (the
@@ -888,21 +864,23 @@ def paragraph_dedup(
     )
 
 
+_FS_MATCH, _FS_POSSIBLE = 4000, 1500  # fellegi_sunter_pairs' class thresholds
+
+
 def fellegi_sunter_pairs(
     a: DataFrame,
     b: DataFrame,
     key_col: str,
     block_cols: list[str],
     fields: list[dict],
-    t_match: int = 4000,
-    t_possible: int = 1500,
-    salt_blocks: int = 1,
 ) -> DataFrame:
     """Probabilistic record linkage — the Fellegi-Sunter model (JASA
     1969), the standard patient-matching decision rule: block candidate
     pairs on a cheap key, compare each field, and sum per-field
     log-likelihood-ratio weights (integer milli-units here, so the
-    score is exact and reassociation-free); classify by thresholds.
+    score is exact and reassociation-free); classify by thresholds: a
+    score of at least ``_FS_MATCH`` (4000) is a match, one of at least
+    ``_FS_POSSIBLE`` (1500) a possible match.
 
     ``fields``: list of dicts with keys
       - ``col``: column name present in both inputs,
@@ -912,13 +890,13 @@ def fellegi_sunter_pairs(
         partial-agreement middle level (string fields).
 
     Returns (key_a, key_b, pattern, score, match_class) for pairs at or
-    above ``t_possible``; ``pattern`` is one char per field —
+    above ``_FS_POSSIBLE``; ``pattern`` is one char per field —
     E(xact) / C(lose) / M(iss) — the agreement vector γ of the model.
 
     Scale: the block key is the ONLY shuffle key; the quadratic
     comparator is bounded by the largest block (same contract as
     `fuzzy_dedup_pairs`); weights and classification are row-local; the
-    ``t_possible`` cut happens before any further shuffle, so
+    ``_FS_POSSIBLE`` cut happens before any further shuffle, so
     non-matches (the overwhelming majority of candidate pairs at
     100 TB) never leave the comparator stage.
 
@@ -927,19 +905,8 @@ def fellegi_sunter_pairs(
     agreement never scores BELOW disagreement): suppressing 'C' to 'M'
     must only ever lower the score. Pathological inverted weights
     (w_miss > w_close) would let a suppressed pair score HIGHER as 'M'
-    and clear ``t_possible`` with the wrong pattern — validated
+    and clear ``_FS_POSSIBLE`` with the wrong pattern — validated
     fail-loud here rather than silently mis-patterned.
-
-    ``salt_blocks`` (r6): the hot-block lever. AQE's skew-join split
-    keys on shuffle BYTES, which misses linkage's failure mode — a
-    block of B rows is tiny on the wire but B² comparator pairs after
-    the join (the classic empty-postcode block), all in ONE task. With
-    ``salt_blocks > 1`` the blocked pair join runs through
-    `operators.skew.salted_join` (row-identical by construction):
-    ``a``'s rows scatter over N salts and ``b`` replicates N×, so the
-    hot block's quadratic fan-out splits across N tasks. Cost is the
-    b-side replication — engage it when block-size stats show
-    max(B)² · cost_per_pair ≫ a task's fair share, not by default.
     """
     for f in fields:
         if f.get("close") is not None and f["close"][1] < f["w_miss"]:
@@ -958,20 +925,12 @@ def fellegi_sunter_pairs(
     ]
     left = a.select(*sel_a, *[F.col(c).alias(f"_blk_{i}") for i, c in enumerate(block_cols)])
     right = b.select(*sel_b, *[F.col(c).alias(f"_blk_{i}") for i, c in enumerate(block_cols)])
-    blk_keys = [f"_blk_{i}" for i in range(len(block_cols))]
-    if salt_blocks > 1:
-        from openmrs_patient_migration_script_spark.operators.skew import (
-            salted_join,
-        )
-
-        pairs = salted_join(left, right, blk_keys, "inner", salts=salt_blocks)
-    else:
-        pairs = left.join(right, blk_keys)
+    pairs = left.join(right, [f"_blk_{i}" for i in range(len(block_cols))])
 
     # Exact-equality comparisons are ~free; Levenshtein dominates the
     # per-pair cost (probe: the comparator ran at-linear without this).
     # Sound short-circuit: a close field's edit distance only needs
-    # computing when the pair could still reach t_possible with the
+    # computing when the pair could still reach _FS_POSSIBLE with the
     # close weight — i.e. when the EXACT scores of the equality-only
     # fields plus this field's w_close plus every OTHER close field's
     # best case clears the threshold. When it can't, classifying the
@@ -1006,7 +965,7 @@ def fellegi_sunter_pairs(
                 v for c, v in close_best.items() if c != f["col"]
             )
             reachable = (
-                cheap_sum + F.lit(w_close + others_best) >= F.lit(t_possible)
+                cheap_sum + F.lit(w_close + others_best) >= F.lit(_FS_POSSIBLE)
             )
             lvl = lvl.when(
                 reachable & (F.levenshtein(fa, fb) <= max_d), F.lit("C")
@@ -1026,10 +985,10 @@ def fellegi_sunter_pairs(
         "key_b",
         F.concat(*levels).alias("pattern"),
         total.cast("long").alias("score"),
-    ).filter(F.col("score") >= t_possible)
+    ).filter(F.col("score") >= _FS_POSSIBLE)
     return scored.withColumn(
         "match_class",
-        F.when(F.col("score") >= t_match, F.lit("match")).otherwise(
+        F.when(F.col("score") >= _FS_MATCH, F.lit("match")).otherwise(
             F.lit("possible")
         ),
     )

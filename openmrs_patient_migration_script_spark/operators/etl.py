@@ -545,10 +545,9 @@ def scd2_lookup(
     dim_key: str,
     valid_from: str = "valid_from",
     valid_to: str = "valid_to",
-    how: str = "left",
 ) -> DataFrame:
     """E5c: point-in-time dimension lookup against an SCD2 table — each
-    fact row joins the dimension VERSION that was current at the fact's
+    fact row left-joins the dimension VERSION that was current at the fact's
     own timestamp (``valid_from <= ts < valid_to``, open-ended current
     version via NULL ``valid_to``). The consumer side of `merge_upsert` /
     `etl_scd2_delta`'s versioning: the join that makes historical
@@ -571,7 +570,7 @@ def scd2_lookup(
         & (facts[fact_ts] >= dim[valid_from])
         & (dim[valid_to].isNull() | (facts[fact_ts] < dim[valid_to]))
     )
-    return facts.join(dim, cond, how)
+    return facts.join(dim, cond, "left")
 
 
 def scd2_build(
@@ -579,7 +578,6 @@ def scd2_build(
     key_col: str,
     ts_col: str,
     payload_cols: list[str],
-    dedup_consecutive: bool = True,
 ) -> DataFrame:
     """E5d: build the SCD2 versioned dimension FROM its change log — the
     constructor complement of `etl_scd2_delta` (detect) and
@@ -588,7 +586,7 @@ def scd2_build(
     ``valid_from = change_ts``, ``valid_to = next change's ts`` (NULL on
     the current version) and a 1-based ``version`` ordinal.
 
-    ``dedup_consecutive`` drops a change whose payload null-safe-equals
+    It drops a change whose payload null-safe-equals
     the key's PREVIOUS change (replayed/no-op updates — a CDC feed full
     of heartbeat upserts would otherwise mint empty versions); interval
     stitching happens AFTER the drop, so the surviving version simply
@@ -605,18 +603,16 @@ def scd2_build(
 
     order = [F.col(ts_col), *[F.col(c) for c in payload_cols]]
     w = W.partitionBy(key_col).orderBy(*order)
-    out = changes
-    if dedup_consecutive:
-        same_prev = None
-        for c in payload_cols:
-            eq = F.col(c).eqNullSafe(F.lag(c).over(w))
-            same_prev = eq if same_prev is None else (same_prev & eq)
-        # first row per key: lag is NULL on every column -> eqNullSafe is
-        # False unless the payload itself is all-NULL; guard explicitly
-        first = F.lag(ts_col).over(w).isNull()
-        out = out.withColumn("_dup", same_prev & ~first).filter(
-            ~F.col("_dup")
-        ).drop("_dup")
+    same_prev = None
+    for c in payload_cols:
+        eq = F.col(c).eqNullSafe(F.lag(c).over(w))
+        same_prev = eq if same_prev is None else (same_prev & eq)
+    # first row per key: lag is NULL on every column -> eqNullSafe is
+    # False unless the payload itself is all-NULL; guard explicitly
+    first = F.lag(ts_col).over(w).isNull()
+    out = changes.withColumn("_dup", same_prev & ~first).filter(
+        ~F.col("_dup")
+    ).drop("_dup")
     w2 = W.partitionBy(key_col).orderBy(*order)
     return out.select(
         F.col(key_col),

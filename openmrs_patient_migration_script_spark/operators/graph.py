@@ -455,13 +455,17 @@ def triangle_count(
     return closed.agg(F.count("*").alias("n_triangles"))
 
 
+# pagerank's power iterations, damping (percent) and integer rank unit;
+# the unrolled DuckDB oracles of the declared queries read them too
+PAGERANK_N_ITER = 4
+PAGERANK_DAMPING_PCT = 85
+PAGERANK_SCALE = 10**9
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "key_a",
     dst: str = "key_b",
-    n_iter: int = 4,
-    damping_pct: int = 85,
-    scale: int = 10**9,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over the undirected pair graph — node
@@ -471,9 +475,10 @@ def pagerank(
     when a blocking key is over-merging).
 
     Returns (node, rank_scaled, rank): ``rank_scaled`` is the node's
-    rank after ``n_iter`` power iterations in units of 1/scale,
-    ``rank`` = rank_scaled/scale as a double. The recurrence is the
-    standard damped update, computed ENTIRELY in integer arithmetic:
+    rank after n_iter = 4 power iterations in units of 1/scale
+    (scale = 1e9), ``rank`` = rank_scaled/scale as a double. The
+    recurrence is the standard damped update (d = 85 %), computed
+    ENTIRELY in integer arithmetic:
 
         base      = scale div n_nodes                 (uniform init)
         contrib_u = r_u div outdeg_u                  (per directed edge)
@@ -515,8 +520,6 @@ def pagerank(
     same two shuffles per iteration; the per-node floor rides the seed
     rows instead of being a literal.
     """
-    if not (0 < damping_pct < 100):
-        raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
     e = _simple_edges(edges, src, dst)
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -531,7 +534,7 @@ def pagerank(
             F.lit(0).cast("long").alias("rank_scaled"),
             F.lit(0.0).alias("rank"),
         )
-    d = int(damping_pct)
+    d, scale = PAGERANK_DAMPING_PCT, PAGERANK_SCALE
     if seeds is None:
         base = scale // n_nodes
         # uniform teleport: every node starts at base and floors at
@@ -594,7 +597,7 @@ def pagerank(
         if broadcast_fits(n_nodes, seed_rows)
         else (lambda d: d)
     )
-    for i in range(n_iter):
+    for i in range(PAGERANK_N_ITER):
         contrib = sym.join(bc(ranks), "u").select(
             F.col("v").alias("node"),
             F.lit(None).cast("long").alias("outdeg"),
@@ -621,7 +624,7 @@ def pagerank(
         # count; lineage depth stays bounded at two join+agg layers.
         # LPA/sssp/k_core can't do this (their round output has 2-3
         # consumers; un-checkpointed they'd recompute per consumer).
-        if i % 2 == 1 or i == n_iter - 1:
+        if i % 2 == 1 or i == PAGERANK_N_ITER - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         F.col("u").alias("node"),
@@ -800,7 +803,6 @@ def common_neighbors(
     src: str = "key_a",
     dst: str = "key_b",
     max_degree: int | None = 1000,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """X9e: common-neighbor link prediction over an undirected pair graph
     — for every NON-edge pair at distance 2, how many neighbors the two
@@ -829,13 +831,9 @@ def common_neighbors(
     # broadcast gate (r11-opt, the `edge_support` rule): under the gate
     # the wedge join's probe side (the adjacency, 2·|E| rows), the
     # anti-join's edge set and both degree attaches broadcast; above it
-    # every join falls back to keyed shuffles unchanged. A caller that
-    # already knows the canonical edge count threads it via ``n_edges``
-    # (the `edge_support`/`ktruss` rule, r12: the gate then costs no
-    # sync count job); otherwise one local-block count over the fresh
-    # checkpoint decides.
-    if n_edges is None:
-        n_edges = e.count()  # sync over checkpoint blocks
+    # every join falls back to keyed shuffles unchanged. One local-block
+    # count over the fresh checkpoint decides.
+    n_edges = e.count()  # sync over checkpoint blocks
     bc = (
         F.broadcast
         if broadcast_fits(n_edges, e, extra_bytes=8)
@@ -1265,7 +1263,6 @@ def modularity(
     labels: DataFrame,
     src: str = "key_a",
     dst: str = "key_b",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """X9l (r6): exact Newman-Girvan modularity of a community
     assignment — the CERTIFICATION metric for `label_propagation` (and
@@ -1335,14 +1332,8 @@ def modularity(
     initial plan is the community-keyed LEFT join between
     #community-sized aggregates — AQE converts it at runtime once
     sizes are known."""
-    # ``assume_canonical``: skip the canonicalize+checkpoint when the
-    # caller certifies (src < dst, self-loop-free, distinct, already
-    # materialized) — the `edge_support` contract.
-    if assume_canonical:
-        canon = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    else:
-        # feeds m, degrees, intra counts
-        canon = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
+    # feeds m, degrees, intra counts
+    canon = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     lab = labels.select("node", "community").localCheckpoint(eager=True)
     m_df = canon.agg(F.count(F.lit(1)).cast("long").alias("m"))
 
@@ -1805,6 +1796,9 @@ def truss_decomposition(
     return result
 
 
+LOUVAIN_ROUNDS = 2  # local-move rounds per pass; the declared oracle reads it
+
+
 def louvain(
     edges: DataFrame,
     n_passes: int = 3,
@@ -2087,7 +2081,7 @@ def louvain(
         pass_moved = False
         last_ein = 0  # intra cross weight of the last ACCEPTED labels
         next_nodes = n_nodes  # community count of the last ACCEPTED labels
-        for _r in range(2):
+        for _r in range(LOUVAIN_ROUNDS):
             from pyspark.sql.window import Window as _W
 
             if _r == 0:

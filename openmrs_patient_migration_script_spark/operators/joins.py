@@ -35,7 +35,6 @@ def asof_join(
     right_ts: str,
     right_payload: list[str],
     right_id: str | None = None,
-    payload_prefix: str = "",
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
@@ -63,12 +62,12 @@ def asof_join(
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     if right_id is not None and right_id not in right_payload:
         raise ValueError("right_id must be one of right_payload")
-    carried = [payload_prefix + c for c in right_payload]
+    carried = list(right_payload)
     clobbered = set(carried) & set(left.columns)
     if clobbered:
         raise ValueError(
             f"carried payload columns {sorted(clobbered)} collide with left "
-            "columns and would silently overwrite them — set payload_prefix"
+            "columns and would silently overwrite them — rename them first"
         )
     r_dtypes = dict(right.dtypes)
     if tolerance_seconds is not None:
@@ -79,7 +78,7 @@ def asof_join(
 
     l_tag = left.withColumn("_side", F.lit(1))
     for c in right_payload:
-        l_tag = l_tag.withColumn(payload_prefix + c, F.lit(None).cast(r_dtypes[c]))
+        l_tag = l_tag.withColumn(c, F.lit(None).cast(r_dtypes[c]))
     if tolerance_seconds is not None:
         l_tag = l_tag.withColumn(
             "_match_ts", F.lit(None).cast(r_dtypes[right_ts])
@@ -94,7 +93,7 @@ def asof_join(
     r_cols = [
         *on,
         F.col(right_ts).alias("_ts"),
-        *[F.col(c).alias(payload_prefix + c) for c in right_payload],
+        *[F.col(c) for c in right_payload],
     ]
     if tolerance_seconds is not None:
         r_cols.append(F.col(right_ts).alias("_match_ts"))
@@ -116,7 +115,7 @@ def asof_join(
     # ascending-oracle convention
     if direction == "backward":
         sort_cols = [F.col("_ts"), F.col("_side")] + (
-            [] if right_id is None else [F.col(payload_prefix + right_id)]
+            [] if right_id is None else [F.col(right_id)]
         )
     else:
         # desc_nulls_first: a NULL left timestamp must sort BEFORE every
@@ -124,7 +123,7 @@ def asof_join(
         # plain desc puts nulls last, where they would absorb the
         # smallest right row's payload
         sort_cols = [F.col("_ts").desc_nulls_first(), F.col("_side")] + (
-            [] if right_id is None else [F.col(payload_prefix + right_id).desc()]
+            [] if right_id is None else [F.col(right_id).desc()]
         )
     w = (
         Window.partitionBy(*on)
@@ -353,7 +352,6 @@ def asof_join_nearest(
     right_ts: str,
     right_payload: list[str],
     right_id: str,
-    payload_prefix: str = "",
 ) -> DataFrame:
     """Nearest-direction as-of join (pandas ``merge_asof(direction=
     'nearest')`` parity): for every left row, the right row of the same
@@ -380,19 +378,19 @@ def asof_join_nearest(
     """
     if right_id not in right_payload:
         raise ValueError("right_id must be one of right_payload")
-    carried = [payload_prefix + c for c in right_payload]
+    carried = list(right_payload)
     clobbered = set(carried) & set(left.columns)
     if clobbered:
         raise ValueError(
             f"carried payload columns {sorted(clobbered)} collide with left "
-            "columns — set payload_prefix"
+            "columns — rename them first"
         )
     r_dtypes = dict(right.dtypes)
     carried = carried + ["_match_ts"]
 
     l_tag = left.withColumn("_side", F.lit(1))
     for c in right_payload:
-        l_tag = l_tag.withColumn(payload_prefix + c, F.lit(None).cast(r_dtypes[c]))
+        l_tag = l_tag.withColumn(c, F.lit(None).cast(r_dtypes[c]))
     l_tag = l_tag.withColumn(
         "_match_ts", F.lit(None).cast(r_dtypes[right_ts])
     ).withColumn("_ts", F.col(left_ts))
@@ -402,7 +400,7 @@ def asof_join_nearest(
         .select(
             *on,
             F.col(right_ts).alias("_ts"),
-            *[F.col(c).alias(payload_prefix + c) for c in right_payload],
+            *[F.col(c) for c in right_payload],
             F.col(right_ts).alias("_match_ts"),
         )
         .withColumn("_side", F.lit(0))
@@ -415,7 +413,7 @@ def asof_join_nearest(
     unioned = l_tag.select(*cols).unionByName(r_tag.select(*cols))
 
     w = Window.partitionBy(*on).orderBy(
-        F.col("_ts"), F.col("_side"), F.col(payload_prefix + right_id)
+        F.col("_ts"), F.col("_side"), F.col(right_id)
     )
     back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -436,7 +434,7 @@ def asof_join_nearest(
         F.col("_b__match_ts").isNotNull() | F.col("_f__match_ts").isNotNull()
     )
     out_cols = [F.col(c) for c in left.columns]
-    for c in [payload_prefix + p for p in right_payload]:
+    for c in right_payload:
         out_cols.append(
             F.when(
                 has_match,
@@ -452,23 +450,25 @@ def asof_join_nearest(
     return both.select(*out_cols)
 
 
-def bloom_build_words(
-    build: DataFrame, key_col: str, num_bits: int = 1 << 16, num_hashes: int = 3
-) -> list[int]:
+# bloom filter size (bits) and hash count of bloom_semi_join
+_BLOOM_BITS, _BLOOM_HASHES = 1 << 16, 3
+
+
+def bloom_build_words(build: DataFrame, key_col: str) -> list[int]:
     """Build a bloom filter over ``build[key_col]`` as a list of
-    ``num_bits/64`` longs — distributed: bit positions explode row-local
+    ``_BLOOM_BITS/64`` longs — distributed: bit positions explode row-local
     (seeded xxhash64, the Kirsch-Mitzenmacher trick is unnecessary at
     k=3), ``bit_or`` aggregates per word with map-side combine, and ONLY
-    the aggregated words (≤ num_bits/64 rows, e.g. 1024 for 2^16 bits)
+    the aggregated words (1024 rows for 2^16 bits)
     reach the driver — the same bounded-collect contract as the
     histogram cuts in operators/etl.py, and the same mechanism Spark's
     own AQE runtime filter uses (bloom_filter_agg → scalar subquery).
 
-    Size ``num_bits`` to the build-side key count (≈ 10 bits/key for
-    ~1% false positives); the false-positive rate only costs wasted
-    shuffle rows, never correctness — callers re-join exactly.
+    At ~6 500 build keys (≈ 10 bits/key) three hashes give ~2% false
+    positives; the false-positive rate only costs wasted shuffle rows,
+    never correctness — callers re-join exactly.
     """
-    m, k = num_bits, num_hashes
+    m, k = _BLOOM_BITS, _BLOOM_HASHES
     pos = build.select(
         F.explode(
             F.array(
@@ -494,17 +494,15 @@ def bloom_build_words(
     return words
 
 
-def bloom_might_contain(
-    words: list[int], col, num_bits: int = 1 << 16, num_hashes: int = 3
-):
+def bloom_might_contain(words: list[int], col):
     """Row-local membership test against `bloom_build_words` output —
-    all ``num_hashes`` bits must be set. Pure JVM expressions (literal
+    all ``_BLOOM_HASHES`` bits must be set. Pure JVM expressions (literal
     array + element_at + bitwise AND), so it pushes into the scan stage
     and whole-stage codegen."""
-    m = num_bits
+    m = _BLOOM_BITS
     arr = F.lit(words)
     checks = []
-    for i in range(num_hashes):
+    for i in range(_BLOOM_HASHES):
         p = F.pmod(F.xxhash64(col, F.lit(i)), F.lit(m))
         word = F.element_at(arr, (p / 64).cast("int") + 1)
         bit = F.call_function(
@@ -522,8 +520,6 @@ def bloom_semi_join(
     build: DataFrame,
     fact_key: str,
     build_key: str,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 3,
 ) -> DataFrame:
     """Semi join with an explicit bloom-filter pre-filter — the
     selective-dimension join at 100 TB: when the build side's keys are
@@ -551,10 +547,8 @@ def bloom_semi_join(
             f"bloom_semi_join: key dtypes differ ({fact_key}: {fact_type} "
             f"vs {build_key}: {build_type}) — cast to a common type first"
         )
-    words = bloom_build_words(build, build_key, num_bits, num_hashes)
-    pre = fact.filter(
-        bloom_might_contain(words, F.col(fact_key), num_bits, num_hashes)
-    )
+    words = bloom_build_words(build, build_key)
+    pre = fact.filter(bloom_might_contain(words, F.col(fact_key)))
     # left_semi already emits each fact row at most once — no distinct
     # (an extra Exchange) needed on the build side.
     return pre.join(

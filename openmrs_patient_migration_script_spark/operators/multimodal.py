@@ -437,13 +437,13 @@ def ahash_bmp(content: bytes, bits: int = 60) -> int:
     return out
 
 
-def fake_phash(content: bytes, bits: int = 60) -> int:
-    """Content-addressed stand-in fingerprint: the first ``bits`` of the
+def fake_phash(content: bytes) -> int:
+    """Content-addressed stand-in fingerprint: the first 60 bits of the
     payload md5. No perceptual structure (only byte-identical payloads
     collide), but pure SQL — which keeps the DECLARED pair-search query
     hash-checkable; the real aHash path is exercised on generated BMPs in
     tests."""
-    return int(hashlib.md5(content).hexdigest()[: bits // 4], 16)
+    return int(hashlib.md5(content).hexdigest()[:15], 16)
 
 
 def image_phash(media: DataFrame, phash_fn=fake_phash) -> DataFrame:
@@ -526,12 +526,11 @@ _VAD_SCHEMA = StructType(
 
 def audio_vad_segments(
     media: DataFrame,
-    threshold_db: float = -20.0,
     energies_fn=fake_frame_energies,
 ) -> DataFrame:
     """X8e: energy-gated voice-activity segmentation — each clip's
-    per-frame energy series thresholds into active/silent runs and every
-    ACTIVE run becomes one output segment (seg_idx, start/end frame,
+    per-frame energy series thresholds at -20 dB into active/silent runs
+    and every ACTIVE run becomes one output segment (seg_idx, start/end frame,
     length): the pre-transcription chunking step an audio training
     pipeline runs before shipping clips to an ASR model.
 
@@ -553,7 +552,7 @@ def audio_vad_segments(
                 seg = 0
                 run_start = None
                 for i, db in enumerate(energies + [float("-inf")]):
-                    active = db > threshold_db
+                    active = db > -20.0
                     if active and run_start is None:
                         run_start = i
                     elif not active and run_start is not None:
@@ -577,35 +576,36 @@ def audio_vad_segments(
     return media.mapInPandas(segment, schema=_VAD_SCHEMA)
 
 
-def energy_delta_fp(energies: list[float], bits: int = 60) -> int:
-    """Energy-delta audio fingerprint (Haitsma–Kalker-style, one band):
-    bit j asks "did frame (j+1) mod n get louder than frame j mod n?" —
-    a loudness-SHAPE signature that survives uniform gain changes
-    (adding a constant dB offset flips no bit) while distinct material
-    diverges in ~half the bits. Clips shorter than the bit budget wrap
+def energy_delta_fp(energies: list[float]) -> int:
+    """Energy-delta audio fingerprint (Haitsma–Kalker-style, one band,
+    60 bits): bit j asks "did frame (j+1) mod n get louder than frame
+    j mod n?" — a loudness-SHAPE signature that survives uniform gain
+    changes (adding a constant dB offset flips no bit) while distinct
+    material diverges in ~half the bits. Clips shorter than the bit budget wrap
     cyclically; the caller gates degenerate-short clips."""
     n = len(energies)
     if n == 0:
         return 0
     f = 0
-    for j in range(bits):
+    for j in range(60):
         if energies[(j + 1) % n] > energies[j % n]:
             f |= 1 << j
     return f
 
 
+_MIN_FRAMES = 8  # shortest clip audio_fingerprint fingerprints
+
+
 def audio_fingerprint(
     media: DataFrame,
     energies_fn=fake_frame_energies,
-    bits: int = 60,
-    min_frames: int = 8,
 ) -> DataFrame:
     """Per-clip audio fingerprint via Arrow-batched mapInPandas —
     (media_id, afp): per-frame energies (fake or real WAV RMS) folded
     into the `energy_delta_fp` bit signature where the bytes live (zero
     shuffles), ready for operators/dedup.py::simhash_pairs — the same
     banded Hamming search the image phash and text SimHash paths use.
-    Clips with fewer than ``min_frames`` frames are dropped: a 1-frame
+    Clips with fewer than 8 frames (``_MIN_FRAMES``) are dropped: a 1-frame
     clip fingerprints to 0, and a bucket of all-zero fingerprints would
     pair every short clip with every other (real systems gate on
     minimum duration for the same reason)."""
@@ -620,9 +620,9 @@ def audio_fingerprint(
             ids, fps = [], []
             for mid, c in zip(pdf["media_id"], pdf["content"]):
                 e = energies_fn(bytes(c))
-                if len(e) >= min_frames:
+                if len(e) >= _MIN_FRAMES:
                     ids.append(mid)
-                    fps.append(energy_delta_fp(e, bits))
+                    fps.append(energy_delta_fp(e))
             yield pd.DataFrame({"media_id": ids, "afp": fps})
 
     return media.mapInPandas(extract, schema=schema)

@@ -21,16 +21,20 @@ EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 LONG_NUM_RE = "[0-9]{3,}"
 
 
-def pseudonym(key_col, salt: str, length: int = 16) -> F.Column:
-    """Deterministic salted pseudonym: stable across runs and tables (same
-    key → same pseudonym, so joins still work on the de-identified data),
-    irreversible without the salt. NOT format-preserving by design."""
-    return F.substring(F.md5(F.concat_ws(":", F.lit(salt), key_col.cast("string"))), 1, length)
+def pseudonym(key_col, salt: str) -> F.Column:
+    """Deterministic salted 16-hex-char pseudonym: stable across runs and
+    tables (same key → same pseudonym, so joins still work on the
+    de-identified data), irreversible without the salt. NOT
+    format-preserving by design."""
+    return F.substring(
+        F.md5(F.concat_ws(":", F.lit(salt), key_col.cast("string"))), 1, 16
+    )
 
 
-def redact_digits(text_col, replacement: str = "#") -> F.Column:
-    """Mask every digit (identifier-bearing names, MRNs, phone fragments)."""
-    return F.regexp_replace(text_col, "[0-9]", replacement)
+def redact_digits(text_col) -> F.Column:
+    """Mask every digit with ``#`` (identifier-bearing names, MRNs, phone
+    fragments)."""
+    return F.regexp_replace(text_col, "[0-9]", "#")
 
 
 def band_value(value_col, width: int) -> F.Column:
@@ -519,7 +523,6 @@ def dp_quantile(
     n_buckets: int,
     salt: str,
     quantile_pcts: tuple[int, ...] = (25, 50, 75),
-    u_floor: int = -60,
 ) -> DataFrame:
     """Differentially private QUANTILE release via the EXPONENTIAL
     mechanism (McSherry & Talwar 2007) over the same bounded bucket
@@ -527,7 +530,7 @@ def dp_quantile(
     so a second engine replays the exact draw:
 
     - utility u(b) = -|cumcount(b) - target| with target =
-      (pct * n) div 100, clamped at ``u_floor`` (buckets further than
+      (pct * n) div 100, clamped at u_floor = -60 (buckets further than
       60 ranks from the target get the floor weight — a truncated
       exponential mechanism, still DP since clamping utilities cannot
       increase their sensitivity);
@@ -573,6 +576,7 @@ def dp_quantile(
         )
         .localCheckpoint(eager=True)  # one consumer per requested pct
     )
+    u_floor = -60
     outs = []
     for pct in quantile_pcts:
         target = F.expr(f"({pct} * n) div 100")

@@ -42,19 +42,18 @@ def stratified_hash_sample(
     key_col: str,
     strata_col: str,
     rates_permille: dict[str, int],
-    default_permille: int = 0,
-    buckets: int = 1000,
 ) -> DataFrame:
     """Keep rows whose hash bucket falls under their stratum's rate (per
     mille). E.g. ``{"en": 500, "zh": 100}`` keeps ~50% of English and ~10%
-    of Chinese rows — the standard language-rebalancing step of an LLM
-    data mix, deterministic end-to-end."""
-    threshold: Column = F.lit(default_permille)
+    of Chinese rows and drops every other stratum — the standard
+    language-rebalancing step of an LLM data mix, deterministic
+    end-to-end."""
+    threshold: Column = F.lit(0)
     for stratum, permille in sorted(rates_permille.items()):
         threshold = (
             F.when(F.col(strata_col) == stratum, F.lit(permille)).otherwise(threshold)
         )
-    bucket = hash_bucket(F.col(key_col), buckets)
+    bucket = hash_bucket(F.col(key_col), 1000)
     return df.withColumn("bucket", bucket).filter(F.col("bucket") < threshold)
 
 
@@ -62,19 +61,18 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, int],
-    buckets: int = 1000,
 ) -> DataFrame:
     """Assign every row to a named split by hash-bucket range, e.g.
     ``{"train": 900, "val": 50, "test": 50}`` (per-mille widths summing to
-    <= buckets; buckets beyond the widths land in an explicit "holdout"
+    <= 1000; buckets beyond the widths land in an explicit "holdout"
     split — never NULL, so a `split != 'train'` filter can't silently
     drop them). Content-addressed like `stratified_hash_sample`: the same
     key lands in the same split on every run, any partitioning, and across
     TABLES — so features and labels computed in separate jobs can never
     leak across the train/test boundary."""
-    if sum(splits.values()) > buckets:
-        raise ValueError(f"split widths {splits} exceed {buckets} buckets")
-    bucket = hash_bucket(F.col(key_col), buckets)
+    if sum(splits.values()) > 1000:
+        raise ValueError(f"split widths {splits} exceed 1000 buckets")
+    bucket = hash_bucket(F.col(key_col), 1000)
     edge = 0
     expr = None
     for name, width in splits.items():
@@ -102,13 +100,16 @@ def cap_per_group(
     )
 
 
+# hash buckets of the fractional keep thresholds (6-decimal fractions)
+_FRACTION_BUCKETS = 1_000_000
+
+
 def mixture_repeat(
     df: DataFrame,
     strata_col: str,
     key_col: str,
     weights: dict[str, float],
     total_multiplier: float = 1.0,
-    buckets: int = 1_000_000,
 ) -> DataFrame:
     """Weighted data mixing with explicit repetition — the up-sampling
     step `temperature_resample` deliberately refuses to do. Given target
@@ -165,12 +166,12 @@ def mixture_repeat(
     factors = factors.select(
         strata_col,
         F.floor("_r").cast("long").alias("_base"),
-        F.round((F.col("_r") - F.floor("_r")) * buckets, 0)
+        F.round((F.col("_r") - F.floor("_r")) * _FRACTION_BUCKETS, 0)
         .cast("long")
         .alias("_thr"),
     )
     n_copies = F.col("_base") + F.when(
-        hash_bucket(F.col(key_col), buckets) < F.col("_thr"), F.lit(1)
+        hash_bucket(F.col(key_col), _FRACTION_BUCKETS) < F.col("_thr"), F.lit(1)
     ).otherwise(F.lit(0))
     return (
         df.join(F.broadcast(factors), strata_col)
@@ -188,28 +189,26 @@ def balance_classes(
     df: DataFrame,
     label_col: str,
     key_col: str,
-    target_n: int | None = None,
 ) -> DataFrame:
     """Class balancing by downsampling to the MINORITY class size — the
     classification-training prep step `cap_per_group` (fixed cap) and
     `temperature_resample` (fractional rebalance) bracket but don't hit:
-    every label keeps exactly ``min(class sizes)`` rows (or ``target_n``
-    if given), chosen by content-addressed hash order so the kept set is
-    reproducible across runs and partitionings. The FULL row survives —
+    every label keeps exactly ``min(class sizes)`` rows, chosen by
+    content-addressed hash order so the kept set is reproducible across
+    runs and partitionings. The FULL row survives —
     the balanced output carries every input column, not a (key, label)
     projection, so callers keep their payloads.
 
-    When ``target_n`` is None the minority size is collected driver-side
+    The minority size is collected driver-side
     — ONE number off a partial-combined count agg (bounded metadata, the
     literal-cut-points pattern), which keeps the cap a LITERAL in the
     plan so WindowGroupLimit still prunes every partition to the cap
     before the shuffle; a column-valued cap would defeat that pruning.
     One shuffle on the label key.
     """
-    if target_n is None:
-        counts = df.groupBy(label_col).agg(F.count("*").alias("_n"))
-        row = counts.agg(F.min("_n").alias("_m")).collect()[0]
-        target_n = int(row["_m"]) if row["_m"] is not None else 0
+    counts = df.groupBy(label_col).agg(F.count("*").alias("_n"))
+    row = counts.agg(F.min("_n").alias("_m")).collect()[0]
+    target_n = int(row["_m"]) if row["_m"] is not None else 0
     if target_n <= 0:
         return df.limit(0)
     return cap_per_group(df, label_col, key_col, target_n)
@@ -221,7 +220,6 @@ def temperature_resample(
     key_col: str,
     alpha: float = 0.5,
     target_frac: float = 0.5,
-    buckets: int = 1_000_000,
 ) -> DataFrame:
     """Multinomial temperature resampling across strata: keep fractions
     chosen so the output mix follows ``p_s ∝ n_s^alpha`` (the standard
@@ -257,20 +255,23 @@ def temperature_resample(
             6,
         ).alias("_keep_frac"),
     )
-    # round-then-cast: `_keep_frac * buckets` can land a hair below the
-    # intended integer (round(249/1e6, 6) * 1e6 = 248.99999999999997), and
-    # a bare cast("long") TRUNCATES while DuckDB's CAST ROUNDS — a
+    # round-then-cast: `_keep_frac * _FRACTION_BUCKETS` can land a hair
+    # below the intended integer (round(249/1e6, 6) * 1e6 =
+    # 248.99999999999997), and a bare cast("long") TRUNCATES while DuckDB's CAST ROUNDS — a
     # one-bucket threshold disagreement that breaks oracle parity for any
     # stratum whose boundary bucket is populated. Rounding to the integer
     # first makes both engines agree exactly.
     return (
         df.join(F.broadcast(fractions), strata_col)
         .filter(
-            hash_bucket(F.col(key_col), buckets)
-            < F.round(F.col("_keep_frac") * buckets, 0).cast("long")
+            hash_bucket(F.col(key_col), _FRACTION_BUCKETS)
+            < F.round(F.col("_keep_frac") * _FRACTION_BUCKETS, 0).cast("long")
         )
         .drop("_keep_frac")
     )
+
+
+_MAX_WEIGHT = 16  # tickets per row: the largest weight weighted_sample takes
 
 
 def weighted_sample(
@@ -278,8 +279,6 @@ def weighted_sample(
     key_col: str,
     weight_col,
     k: int,
-    max_weight: int = 16,
-    buckets: int = 1_000_000_000,
 ) -> DataFrame:
     """Weighted random sampling without replacement — Efraimidis &
     Spirakis's A-ES ("Weighted random sampling with a reservoir", IPL
@@ -288,21 +287,22 @@ def weighted_sample(
     exactly as the MAX of w iid uniforms — so instead of float pow
     (whose cross-engine ulps make the selection boundary
     irreproducible), each item draws w integer "tickets"
-    (content-addressed: md5(key·max_weight + t)) and keeps the largest.
+    (content-addressed: md5(key·16 + t)) and keeps the largest.
     The scheme is then EXACT integer arithmetic end-to-end and an SQL
     oracle replays the very same sample.
 
     Returns (key, weight, ticket) for the k winners; ties break on the
     lower key (md5 collisions at 1e9 buckets are the only source).
 
-    Scale: the ticket explode is row-local and bounded by ``max_weight``
-    (assert_true in-plan — at 100 TB cap weights, don't explode them);
-    the top-k is one TakeOrderedAndProject, no global sort. P(selected)
+    Scale: the ticket explode is row-local and bounded by the maximum
+    weight 16 (assert_true in-plan — at 100 TB cap weights, don't
+    explode them); the top-k is one TakeOrderedAndProject, no global
+    sort. P(selected)
     is monotone in w with the exact A-ES law, unlike cheap
     "multiply-the-hash" heuristics which distort the tail.
 
     ``key_col`` must be integral: the ticket address is
-    ``md5(key·max_weight + t)``, and a string key would go NULL under
+    ``md5(key·16 + t)``, and a string key would go NULL under
     Spark's implicit cast — every ticket NULL, the "top-k" an
     arbitrary null-ordering sample. Fail loud instead.
     """
@@ -313,8 +313,8 @@ def weighted_sample(
     require_integral_key(df, key_col, "weighted_sample")
     w = F.col("weight")
     guard = F.assert_true(
-        (w >= 1) & (w <= max_weight),
-        F.lit(f"weighted_sample: weight outside [1, {max_weight}]"),
+        (w >= 1) & (w <= _MAX_WEIGHT),
+        F.lit(f"weighted_sample: weight outside [1, {_MAX_WEIGHT}]"),
     )
     base = df.select(
         F.col(key_col).alias("key"),
@@ -330,14 +330,14 @@ def weighted_sample(
         (
             F.conv(
                 F.substring(
-                    F.md5((F.col("key") * max_weight + F.col("_t")).cast("string")),
+                    F.md5((F.col("key") * _MAX_WEIGHT + F.col("_t")).cast("string")),
                     1,
                     8,
                 ),
                 16,
                 10,
             ).cast("long")
-            % buckets
+            % 1_000_000_000
         ).alias("_u"),
     )
     best = tickets.groupBy("key", "weight").agg(F.max("_u").alias("ticket"))

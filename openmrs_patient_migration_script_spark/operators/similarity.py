@@ -110,7 +110,7 @@ def cosine_topk(
     )
 
 
-_SRP_WEIGHTS_CACHE: dict[tuple[int, int, int], object] = {}
+_SRP_WEIGHTS_CACHE: dict[tuple[int, int, int, str], object] = {}
 
 
 def srp_weights(
@@ -120,11 +120,10 @@ def srp_weights(
     weight for dimension d is the parity of JVM ``xxhash64(p, d)`` —
     deterministic across runs, no stored model — computed once via a tiny
     (p, d) grid job and returned as numpy. The matrix is plane-count-sized
-    (KBs), safe to ship in task
-    closures — it is a MODEL constant, not data, and since xxhash64 is
-    session-independent the matrix is memoized per (dim, m, L) so repeat
-    calls (corpus + query side of the same search, re-runs in a bench
-    loop) pay zero jobs.
+    (KBs), safe to ship in task closures — it is a MODEL constant, not
+    data, and since xxhash64 is session-independent the matrix is
+    memoized per (dim, m, L, hash_mode) so repeat calls (corpus + query
+    side of the same search, re-runs in a bench loop) pay zero jobs.
 
     ``hash_mode="md5"`` derives the signs from ``md5(f"{p}:{d}")`` parity
     instead — the declared-form trick (dedup_minhash's): DuckDB can
@@ -647,10 +646,9 @@ def exact_rerank_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exactly score candidate id pairs against the corpus vectors and
-    keep cosine >= threshold — the shared re-rank tail of every pruned
-    pair path (`cosine_pairs_lsh`, the `cosine_pairs_blocked`
-    ``candidates=`` hook), so pruned and exact paths emit the identical
-    (key_a < key_b, 6dp cos_sim) contract from ONE scoring routine.
+    keep cosine >= threshold — the re-rank tail of the pruned pair path
+    (`cosine_pairs_lsh`), which emits the same (key_a < key_b, 6dp
+    cos_sim) contract as the exact `cosine_pairs_blocked` grid.
 
     ``candidates`` needs only (key_a, key_b); orientation is
     canonicalized and duplicates collapsed here, any approximate score
@@ -708,48 +706,42 @@ def exact_rerank_pairs(
     return paired.mapInPandas(rerank, schema=out_schema)
 
 
+_GRID_BLOCKS = 8  # the block count B of cosine_pairs_blocked's grid
+
+
 def cosine_pairs_blocked(
     corpus: DataFrame,
     threshold: float,
-    n_blocks: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """All (a < b) pairs with cosine >= threshold — EXACT and fully
     distributed (the scale-safe successor to `cosine_pairs_vectorized`,
     which collects the corpus into the task closure).
 
     Block-grid all-pairs: each vector lands in block ``xxhash64(id) mod B``
+    (B = 8)
     and is replicated to every unordered block pair it participates in
     (B rows per vector — shuffle volume n·B, never n²). Each of the
     B·(B+1)/2 grid cells scores its two blocks with one numpy matmul in
     `applyInPandas`; a pair (a, b) lives in exactly ONE cell — the
     (blk_a, blk_b) cell — so the pair space is partitioned, not
-    deduplicated. Max task memory is 2·(n/B)·d doubles: pick B so a block
-    fits an executor; work stays Θ(n²·d) because the exact-threshold
-    semantic is inherently quadratic.
+    deduplicated. Max task memory is 2·(n/B)·d doubles; work stays
+    Θ(n²·d) because the exact-threshold semantic is inherently quadratic.
 
-    At 100 TB pass ``candidates`` (any (key_a, key_b) pair source — an
-    LSH bucket join, an IVF cell join) and only those pairs are scored,
-    through the shared `exact_rerank_pairs` tail — work drops from
-    Θ(n²·d) to Θ(|candidates|·d) while the output contract (key_a <
-    key_b, 6dp cos_sim, >= threshold) stays byte-identical (pinned by
-    tests/test_similarity.py). Why no DEFAULT LSH candidates? Measured
-    on the sf0.1 fixture at the declared 0.4 threshold: SRP-LSH
-    (2 planes × 16 tables) retained 98.6% of all pairs as candidates
-    (no pruning — at low thresholds random hyperplanes can't separate)
-    and still MISSED 2/920 qualifying pairs. LSH pruning only wins at
-    near-dup thresholds (~0.9+) — `cosine_pairs_lsh`, or this hook.
+    Why no LSH candidates here? Measured on the sf0.1 fixture at the
+    declared 0.4 threshold: SRP-LSH (2 planes × 16 tables) retained
+    98.6% of all pairs as candidates (no pruning — at low thresholds
+    random hyperplanes can't separate) and still MISSED 2/920 qualifying
+    pairs. LSH pruning only wins at near-dup thresholds (~0.9+) — that
+    is `cosine_pairs_lsh`, which scores its candidates with
+    `exact_rerank_pairs` under the same output contract.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    if candidates is not None:
-        return exact_rerank_pairs(corpus, candidates, threshold, id_col, vec_col)
-
-    B = n_blocks
+    B = _GRID_BLOCKS
     # ship the RAW float32 arrays through the explode/shuffle and upcast
     # in numpy (float->double is exact): casting to array<double> first
     # would double the shuffled bytes for zero precision gain
@@ -846,9 +838,6 @@ def cosine_pairs_lsh(
         .filter(F.col("key_a") < F.col("key_b"))
         .select("key_a", "key_b")
     )
-    # the candidate generator feeds the shared exact re-rank tail, so
-    # this and the `cosine_pairs_blocked(candidates=...)` hook emit the
-    # same bytes from the same scoring routine by construction
     return exact_rerank_pairs(corpus, cand, threshold, id_col, vec_col)
 
 
@@ -887,17 +876,13 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    centroids=None,
 ) -> DataFrame:
     """ANN scale path #2: IVF (inverted-file) top-k — the cell-pruned
     counterpart of `ann_topk_lsh`.
 
     1. Coarse quantizer: ``n_cells`` deterministic seed centroids — the
        corpus rows with the smallest md5-bucket of their id (content-
-       addressed, so every run/cluster picks the same seeds) — or a
-       TRAINED quantizer via ``centroids=kmeans_fit(corpus, ...)`` (r3:
-       the distributed spherical-Lloyd trainer; same plan shape either
-       way).
+       addressed, so every run/cluster picks the same seeds).
     2. Assignment: every corpus vector goes to its nearest centroid cell —
        one numpy argmax per Arrow batch, a narrow mapInPandas projection.
     3. Probing: each query searches only its ``nprobe`` nearest cells; the
@@ -923,17 +908,17 @@ def ivf_topk(
         StructType,
     )
 
-    if centroids is not None:
-        # trained quantizer (kmeans_fit) — n_cells comes from the model
-        cent = np.array(centroids, dtype=np.float64)
-        n_cells = len(cent)
-    else:
-        cent = _seed_sample(
-            corpus, id_col, vec_col, n_cells, "ivf_topk", "IVF centroids"
-        )
+    cent = _seed_sample(
+        corpus, id_col, vec_col, n_cells, "ivf_topk", "IVF centroids"
+    )
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
 
     q_rows = queries.select(query_id_col, vec_col).collect()
+    if not q_rows:
+        # no query vectors -> no results (`cosine_topk_vectorized`'s guard)
+        return corpus.sparkSession.createDataFrame(
+            [], f"{query_id_col} long, {id_col} long, cos_sim double"
+        )
     q_ids = np.array([r[query_id_col] for r in q_rows])
     q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -1014,10 +999,10 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Distributed spherical k-means (Lloyd) refinement — the IVF coarse-
-    quantizer trainer `ivf_topk` points at. Returns the centroid matrix
-    as a list of lists (n_cells × dim), ready to pass to
-    ``ivf_topk(centroids=...)``.
+    """Distributed spherical k-means (Lloyd) refinement — a trained
+    coarse quantizer over the same md5-bucket seed rows `ivf_topk`
+    starts from. Returns the centroid matrix as a list of lists
+    (n_cells × dim).
 
     Per iteration, ONE job: an Arrow-batched ``mapInPandas`` assigns each
     batch to its nearest centroid (numpy argmax against the closure-shipped
@@ -1031,7 +1016,7 @@ def kmeans_fit(
     aggregate. Empty cells keep their previous centroid.
 
     Init = the same deterministic content-addressed seeds `ivf_topk`
-    uses, so an untrained call and a 0-iteration fit agree. Float partial
+    uses, so a 0-iteration fit returns `ivf_topk`'s quantizer. Float partial
     sums reassociate across partitionings, so convergence (pinned by
     test: the mean best-cosine objective is non-decreasing) rather than
     bit-identity is the contract — the standard k-means determinism story.
@@ -1279,6 +1264,11 @@ def pq_topk(
         cb.append(block / np.linalg.norm(block, axis=1, keepdims=True))
 
     q_rows = queries.select(query_id_col, vec_col).collect()
+    if not q_rows:
+        # no query vectors -> no results (`cosine_topk_vectorized`'s guard)
+        return corpus.sparkSession.createDataFrame(
+            [], f"{query_id_col} long, {id_col} long, cos_sim double"
+        )
     q_ids = [int(r[query_id_col]) for r in q_rows]
     q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
     q_full = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -1383,7 +1373,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_rows: int = 200_000,
-    keep: str = "min_id",
 ) -> DataFrame:
     """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", 2023): cluster the
@@ -1392,15 +1381,9 @@ def semantic_dedup(
     ``threshold`` — the paper's within-cluster greedy, which never
     compares across clusters. Returns (id, cell, n_dup_lower, kept):
     ``kept`` is the surviving subset, ``n_dup_lower`` the duplicate
-    count that made the drop decision.
-
-    ``keep`` picks the survivor priority inside a duplicate
-    neighborhood: ``"min_id"`` (deterministic id order — the declared
-    query's oracle-replayable default) or ``"far_centroid"`` (the
-    paper's §3 choice: keep LOW similarity to the cluster centroid —
-    survivors are the cluster's edge examples, which SemDeDup found
-    preserves more diversity than random/id order; ties on 6dp-int
-    centroid cosine break to the lower id).
+    count that made the drop decision. Priority inside a duplicate
+    neighborhood is id order (the lowest id survives), which the
+    declared query's oracle replays.
 
     Mechanics, all content-addressed so an SQL oracle replays them:
     the coarse quantizer is the md5-bucket-ordered seed rows (the IVF/PQ
@@ -1469,9 +1452,6 @@ def semantic_dedup(
         ]
     )
 
-    if keep not in ("min_id", "far_centroid"):
-        raise ValueError(f"keep must be min_id|far_centroid, got {keep!r}")
-
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > max_cluster_rows:
             raise ValueError(
@@ -1481,20 +1461,8 @@ def semantic_dedup(
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
         mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        if keep == "far_centroid":
-            # priority = ascending 6dp-int cosine to the OWN-cluster
-            # centroid (low similarity survives), id tie-break; rows
-            # re-sort so "lower index" below means "higher priority"
-            centroid = mat.mean(axis=0)
-            n = np.linalg.norm(centroid)
-            if n > 0:
-                centroid = centroid / n
-            cc = np.round(np.round(mat @ centroid, 6) * 1e6).astype(np.int64)
-            order = np.lexsort((pdf[id_col].to_numpy(), cc))
-            pdf = pdf.iloc[order].reset_index(drop=True)
-            mat = mat[order]
         ci = np.round(np.round(mat @ mat.T, 6) * 1e6).astype(np.int64)
-        # row j counts higher-priority rows i<j at/above threshold
+        # row j counts lower-id rows i<j at/above threshold
         dup = np.tril(ci >= t_int, -1).sum(axis=1).astype(np.int64)
         return pd.DataFrame(
             {
@@ -1513,7 +1481,6 @@ def knn_graph(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int = 8,
     candidates: DataFrame | None = None,
     candidates_materialized: bool = False,
 ) -> DataFrame:
@@ -1539,8 +1506,7 @@ def knn_graph(
     """
     pairs = (
         cosine_pairs_blocked(
-            corpus, threshold=-1.0, n_blocks=n_blocks,
-            id_col=id_col, vec_col=vec_col,
+            corpus, threshold=-1.0, id_col=id_col, vec_col=vec_col
         )
         if candidates is None
         else candidates

@@ -26,21 +26,20 @@ def salted_topk_per_key(
     key_cols: list[str],
     order_cols: list[Column],
     k: int,
-    salts: int = 16,
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
     """Top-k rows per key, skew-safe.
 
     Phase 1 ranks within (key, salt) — salt = hash of ``salt_cols``
-    (default: every non-key column) mod ``salts``, so the hot key's rows
-    spread over ``salts`` tasks; survivors per key: at most k x salts
-    rows. Phase 2 re-ranks the survivors per key. ``order_cols`` must be
-    a total order (include a tiebreaker) or the result is
-    nondeterministic — same contract as any top-k.
+    (default: every non-key column) mod 16, so the hot key's rows
+    spread over 16 tasks; survivors per key: at most k x 16 rows. Phase 2
+    re-ranks the survivors per key. ``order_cols`` must be a total order
+    (include a tiebreaker) or the result is nondeterministic — same
+    contract as any top-k.
     """
     if salt_cols is None:
         salt_cols = [c for c in df.columns if c not in key_cols]
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salts))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(16))
     w1 = Window.partitionBy(*key_cols, "_salt").orderBy(*order_cols)
     w2 = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return (

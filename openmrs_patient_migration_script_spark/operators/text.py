@@ -253,14 +253,12 @@ def language_id(
     df: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    markers: dict[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
     """Marker-token language ID: score = how many tokens appear in each
-    language's marker list; predicted = argmax with alphabetical tie-break.
-    Deterministic, all built-ins, narrow (no shuffle)."""
-    markers = markers or LANG_MARKERS
-    scores, _ = langid_exprs(F.col(text_col), markers)
-    langs = sorted(markers)
+    language's `LANG_MARKERS` list; predicted = argmax with alphabetical
+    tie-break. Deterministic, all built-ins, narrow (no shuffle)."""
+    scores, _ = langid_exprs(F.col(text_col))
+    langs = sorted(LANG_MARKERS)
     # Two-level projection: materialize the per-language score HOFs once,
     # then argmax over the score COLUMNS. The scores are referenced several
     # times by the greatest/when chain, so CollapseProject keeps the levels
@@ -293,20 +291,17 @@ def langid_argmax(score_cols: list[str], langs: list[str]) -> F.Column:
     return F.when(best.isNotNull(), pred)
 
 
-def langid_exprs(
-    text_col, markers: dict[str, tuple[str, ...]] | None = None
-) -> tuple[dict[str, F.Column], F.Column]:
+def langid_exprs(text_col) -> tuple[dict[str, F.Column], F.Column]:
     """(per-language score exprs, argmax-language expr) — the expression
     form of `language_id`, for join-free composition."""
-    markers = markers or LANG_MARKERS
     toks = tokens(text_col)
-    langs = sorted(markers)
+    langs = sorted(LANG_MARKERS)
 
     def marker_score(marker_list: tuple[str, ...]):
         arr = F.array(*[F.lit(x) for x in marker_list])
         return F.array_size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
-    scores = {lang: marker_score(markers[lang]) for lang in langs}
+    scores = {lang: marker_score(LANG_MARKERS[lang]) for lang in langs}
     best = F.greatest(*[scores[lang] for lang in langs])
     pred = F.lit(langs[-1])
     # first lang (alphabetically) whose score equals the max wins
@@ -336,20 +331,20 @@ def langid_exprs_sql() -> tuple[str, str]:
 
 
 def doc_fingerprint(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text", shingle_n: int = 3
+    df: DataFrame, key_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Document fingerprint = min hash over rolling word shingles (a
+    """Document fingerprint = min hash over rolling word 3-gram shingles (a
     winnowing-style representative), plus the distinct-shingle count.
 
     Uses md5 so the DuckDB oracle is byte-exact; at scale swap in
     `xxhash64` (8-byte fixed width beats a 32-char string through the
-    shuffle). Docs shorter than `shingle_n` tokens yield no fingerprint.
+    shuffle). Docs shorter than 3 tokens yield no fingerprint.
     """
     from openmrs_patient_migration_script_spark.operators.dedup import _shingles
 
     sh = df.select(
         F.col(key_col),
-        F.explode(_shingles(F.col(text_col), shingle_n)).alias("shingle"),
+        F.explode(_shingles(F.col(text_col))).alias("shingle"),
     )
     return sh.groupBy(key_col).agg(
         F.min(F.md5("shingle")).alias("fingerprint"),
@@ -358,17 +353,17 @@ def doc_fingerprint(
 
 
 def hashed_embedding(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text", dims: int = 64
+    df: DataFrame, key_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Feature-hashing text embedding (the hashing trick): token → bucket
-    via a stable hash, value = term frequency. Emitted SPARSE as
+    """Feature-hashing text embedding (the hashing trick): token → one of
+    64 buckets via a stable hash, value = term frequency. Emitted SPARSE as
     (key, bucket, tf) rows — at corpus scale the sparse form shuffles only
     non-zeros, and downstream cosine/ANN can consume it directly or
     pivot to dense arrays per key. md5-derived buckets keep the oracle
     exact; swap xxhash64 when cross-engine parity is not needed."""
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("token")), 1, 4), 16, 10).cast("long"),
-        F.lit(dims),
+        F.lit(64),
     )
     return (
         df.select(F.col(key_col), F.explode(tokens(F.col(text_col))).alias("token"))
@@ -381,24 +376,18 @@ def gopher_rules(
     df: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_mean_len: int = 3,
-    max_mean_len: int = 10,
-    alpha_ratio_pct: int = 80,
-    min_distinct_stopwords: int = 2,
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021 §A1.1 shape)
-    — the rule battery that gates web text into a training mix: word
-    count bounds, mean-word-length band, minimum alphabetic-word share,
-    minimum distinct-stopword presence. Returns one row per doc with the
+    — the rule battery that gates web text into a training mix: 20 to
+    100 000 words, a mean word length of 3 to 10, at least 80 % alphabetic
+    words, and at least 2 distinct stopwords. Returns one row per doc with the
     measured counts, each rule's boolean, and the overall ``passes``.
 
     Everything is row-local array arithmetic on ONE scan — zero
     shuffles, zero joins — and every rule comparison is INTEGER-only
     by construction (mean-length bounds compare ``sum_len`` against
     ``bound · n_words``; the alpha share compares ``100 · n_alpha``
-    against ``pct · n_words``), so there is no division, no float, and
+    against ``80 · n_words``), so there is no division, no float, and
     nothing for engines to disagree on.
     """
     toks = tokens(F.col(text_col))
@@ -411,12 +400,10 @@ def gopher_rules(
     n_alpha = F.size(F.filter(toks, lambda t: t.rlike("^[a-z]+$")))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
-    ok_count = (n_words >= min_words) & (n_words <= max_words)
-    ok_len = (sum_len >= F.lit(min_mean_len) * n_words) & (
-        sum_len <= F.lit(max_mean_len) * n_words
-    )
-    ok_alpha = F.lit(100) * n_alpha >= F.lit(alpha_ratio_pct) * n_words
-    ok_stop = n_stop >= min_distinct_stopwords
+    ok_count = (n_words >= 20) & (n_words <= 100_000)
+    ok_len = (sum_len >= F.lit(3) * n_words) & (sum_len <= F.lit(10) * n_words)
+    ok_alpha = F.lit(100) * n_alpha >= F.lit(80) * n_words
+    ok_stop = n_stop >= 2
     # size() emits int32; the oracle's len() is int64 — emit long so the
     # two engines agree at the value-hash layer, not just on column names.
     return df.select(
@@ -437,12 +424,11 @@ def hashed_linear_score(
     df: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    weight_scale: int = 1000,
 ) -> DataFrame:
     """Hashed linear text scorer — the fasttext-classifier SHAPE (hash
     every token into a weight table, average the weights, threshold)
     with content-addressed weights: w(token) = (md5-bucket mod
-    (2·scale+1)) - scale, i.e. an exact integer in [-scale, +scale]
+    2001) - 1000, i.e. an exact integer in [-1000, +1000]
     standing in for a learned weight row. Production swaps the hash
     expression for a broadcast-joined learned weight table (same plan
     with one BroadcastHashJoin added); everything downstream — and the
@@ -457,6 +443,7 @@ def hashed_linear_score(
     sign-split HALF_UP integer division (weights go negative), one final
     display division.
     """
+    weight_scale = 1000
     w_int = (
         F.pmod(
             F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10).cast("long"),
@@ -514,7 +501,6 @@ def pmi_collocations(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 5,
-    materialize_counts: bool = False,
 ) -> DataFrame:
     """Bigram PMI collocation mining — the word2phrase-style phrase-detection
     pass of a training-corpus pipeline (merge "new york"-like pairs before
@@ -535,12 +521,9 @@ def pmi_collocations(
       bigram table itself never reshuffles.
 
     The count tables feed multiple consumers (T, B, and the three join
-    sides), so the PURE plan (default) recomputes their corpus
-    aggregations from lineage — 5 parquet scans total, visible in
-    PLANS.md. Pass ``materialize_counts=True`` to localCheckpoint both
-    count tables: 2 corpus scans total, the right call on a real
-    cluster (kept off by default so the declared oracle-checked form
-    stays a pure plan).
+    sides), and the plan recomputes their corpus aggregations from
+    lineage — 5 parquet scans total, visible in PLANS.md — so that the
+    declared oracle-checked form stays a pure plan.
 
     Determinism: pmi is a fixed row-local double expression over exact
     long counts (single division chain, no reassociative float agg), so
@@ -567,9 +550,6 @@ def pmi_collocations(
     ucounts = df.select(F.explode(toks).alias("tok")).groupBy("tok").agg(
         F.count("*").alias("c")
     )
-    if materialize_counts:
-        bcounts = bcounts.localCheckpoint(eager=True)
-        ucounts = ucounts.localCheckpoint(eager=True)
     totals = ucounts.agg(F.sum("c").alias("t_tokens")).crossJoin(
         bcounts.agg(F.sum("c_ab").alias("t_bigrams"))
     )
@@ -605,12 +585,11 @@ def bm25_scores(
     query_terms: list[str],
     key_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 relevance of every document to a fixed query-term set — the
     lexical-retrieval scorer (Robertson/Lucene form, idf = ln(1 + (N-df+0.5)
-    /(df+0.5))) that complements the embedding similarity surface.
+    /(df+0.5)), Lucene's k1 = 1.2 and b = 0.75) that complements the
+    embedding similarity surface.
 
     Plan shape, chosen for 100 TB:
 
@@ -630,6 +609,7 @@ def bm25_scores(
     rounding-interval centers, so the final 6dp round is immune to
     float-add reassociation across partitions.
     """
+    k1, b = 1.2, 0.75
     toks = tokens(F.col(text_col))
     dl = df.select(F.col(key_col), F.size(toks).alias("dl"))
     stats = dl.agg(
@@ -948,7 +928,6 @@ def tfidf_cosine_pairs(
     threshold_num: int = 1,
     threshold_den: int = 2,
     max_df: int = 500,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """X6c (r6): sparse TF-IDF cosine document-similarity pairs — the
     text-side twin of `dedup_embedding`: pairwise cosine over the
@@ -974,7 +953,7 @@ def tfidf_cosine_pairs(
     replayed identically by the oracle. Scale: posting-list self-join
     shuffles on token (bounded df² fan-out per token), the pair agg
     shuffles on the pair key; both partial-combine."""
-    scored = tf_idf(df, key_col, text_col, n_docs=n_docs)
+    scored = tf_idf(df, key_col, text_col)
     w = (
         scored.filter(F.col("df") <= max_df)
         .select(
@@ -1304,27 +1283,23 @@ def _uni_wrap(piece: str) -> str:
     return us + (us + us).join(piece) + us
 
 
-def unigram_seed_vocab(
-    words: DataFrame,
-    max_piece_len: int = UNI_MAX_PIECE_LEN,
-    seed_size: int = UNI_SEED_SIZE,
-) -> list[tuple[str, int]]:
-    """Seed candidates for the unigram trainer: the ``seed_size`` most
-    frequent substrings (length 2..``max_piece_len``) of the word
+def unigram_seed_vocab(words: DataFrame) -> list[tuple[str, int]]:
+    """Seed candidates for the unigram trainer: the ``UNI_SEED_SIZE`` most
+    frequent substrings (length 2..``UNI_MAX_PIECE_LEN``) of the word
     vocabulary, corpus-frequency-weighted per OCCURRENCE (overlaps
     count — 'aaa' holds two 'aa's), ranked (count DESC, piece ASC).
 
     Scale: runs over the vocabulary, never the corpus (the BPE
     vocab-collapse shape); the explode fans each word to at most
-    ``len * (max_piece_len - 1)`` rows, and the result is a bounded
-    driver list (``seed_size`` rows, the TakeOrdered(1) collect class).
+    ``len * (UNI_MAX_PIECE_LEN - 1)`` rows, and the result is a bounded
+    driver list (``UNI_SEED_SIZE`` rows, the TakeOrdered(1) collect class).
     """
     subs = words.filter(F.length("word") >= 2).select(
         "freq",
         F.explode(
             F.expr(
                 "flatten(transform("
-                f"  filter(sequence(2, {max_piece_len}),"
+                f"  filter(sequence(2, {UNI_MAX_PIECE_LEN}),"
                 "          l -> l <= length(word)),"
                 "  l -> transform(sequence(1, length(word) - l + 1),"
                 "                 i -> substring(word, i, l))))"
@@ -1335,7 +1310,7 @@ def unigram_seed_vocab(
         subs.groupBy("piece")
         .agg(F.sum("freq").cast("long").alias("cnt"))
         .orderBy(F.desc("cnt"), "piece")
-        .limit(seed_size)
+        .limit(UNI_SEED_SIZE)
         .collect()
     )
     return [(r["piece"], int(r["cnt"])) for r in rows]
@@ -1353,30 +1328,24 @@ def unigram_segment_col(pieces: list[tuple[str, int]]):
     return F.split(F.btrim(enc, F.lit(us)), us + us)
 
 
-def unigram_em_rounds(
-    words: DataFrame,
-    n_rounds: int = UNI_EM_ROUNDS,
-    max_piece_len: int = UNI_MAX_PIECE_LEN,
-    seed_size: int = UNI_SEED_SIZE,
-    vocab_size: int = UNI_VOCAB_SIZE,
-):
+def unigram_em_rounds(words: DataFrame, n_rounds: int = UNI_EM_ROUNDS):
     """The unigram-LM EM loop over a (word, freq) vocabulary: yields
     (em_round, survivors) per round with ``survivors`` the pruned
     [(piece, usage_cnt)] ranked (usage DESC, piece ASC). Each E-step
     re-segments the RAW wrapped words (never the previous segmentation —
     EM re-explains the data under the current model), the M-step counts
-    freq-weighted piece usage, and pruning keeps the ``vocab_size``
+    freq-weighted piece usage, and pruning keeps the ``UNI_VOCAB_SIZE``
     best; pieces the new priorities starve to zero usage drop out, so a
-    round may return fewer than ``vocab_size`` survivors. Candidate and
-    survivor lists are bounded driver collects by contract
-    (``seed_size`` then ``vocab_size`` rows)."""
+    round may return fewer than ``UNI_VOCAB_SIZE`` survivors. Candidate
+    and survivor lists are bounded driver collects by contract
+    (``UNI_SEED_SIZE`` then ``UNI_VOCAB_SIZE`` rows)."""
     repr_df = words.select(
         F.regexp_replace("word", "(?s)(.)", BPE_US + "$1" + BPE_US).alias(
             "repr"
         ),
         "freq",
     )
-    cand = unigram_seed_vocab(words, max_piece_len, seed_size)
+    cand = unigram_seed_vocab(words)
     for r in range(1, n_rounds + 1):
         if not cand:
             return
@@ -1387,7 +1356,7 @@ def unigram_em_rounds(
             .groupBy("piece")
             .agg(F.sum("freq").cast("long").alias("usage_cnt"))
             .orderBy(F.desc("usage_cnt"), "piece")
-            .limit(vocab_size)
+            .limit(UNI_VOCAB_SIZE)
             .collect()
         )
         cand = [(s["piece"], int(s["usage_cnt"])) for s in survivors]
@@ -1400,9 +1369,6 @@ def unigram_train(
     docs: DataFrame,
     n_rounds: int = UNI_EM_ROUNDS,
     text_col: str = "text",
-    max_piece_len: int = UNI_MAX_PIECE_LEN,
-    seed_size: int = UNI_SEED_SIZE,
-    vocab_size: int = UNI_VOCAB_SIZE,
 ) -> list[tuple[int, int, str, int]]:
     """Train the unigram vocabulary on a document corpus: the per-round
     ledger [(em_round, rank, piece, usage_cnt)] — the final round's
@@ -1410,9 +1376,7 @@ def unigram_train(
     early on a corpus with no multi-char pieces."""
     words = bpe_word_vocab(docs, text_col)
     out = []
-    for r, cand in unigram_em_rounds(
-        words, n_rounds, max_piece_len, seed_size, vocab_size
-    ):
+    for r, cand in unigram_em_rounds(words, n_rounds):
         out += [(r, i + 1, p, c) for i, (p, c) in enumerate(cand)]
     return out
 

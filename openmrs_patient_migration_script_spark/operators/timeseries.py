@@ -18,23 +18,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+_GRID = "interval 1 hour"  # the step of the hourly grids below
+
+
+def _guard_grid_span(per_key: DataFrame, max_buckets: int) -> DataFrame:
+    """In-plan guard (assert_true): fails the job on a key whose hourly
+    grid would exceed ``max_buckets``, with zero extra passes over the
+    data. element_at(.., -1) is ANSI-safe here: obs_arr comes from a
+    groupBy collect_list, so every group has >= 1 element and the
+    negative index never falls out of bounds."""
+    span = F.expr(
+        "size(sequence(obs_arr[0].bucket, "
+        f"element_at(obs_arr, -1).bucket, {_GRID}))"
+    )
+    return per_key.where(
+        F.assert_true(
+            span <= max_buckets,
+            F.concat(
+                F.lit("grid would emit "),
+                span.cast("string"),
+                F.lit(" buckets for key "),
+                F.col("key").cast("string"),
+                F.lit(f" (> {max_buckets})"),
+            ),
+        ).isNull()
+    )
+
 
 def resample_ffill(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     value_col: str,
-    bucket: str = "hour",
-    interval: str = "interval 1 hour",
     max_buckets: int | None = 100_000,
 ) -> DataFrame:
-    """(key, bucket, value_sum, observed) on a dense per-key time grid;
+    """(key, bucket, value_sum, observed) on a dense per-key hourly grid;
     buckets with no events carry the previous observed value forward
     (NULL before the first observation). ``max_buckets`` fails loudly if
     one key would explode the grid (a data bug at 100 TB, not a workload)."""
     obs = df.groupBy(
         F.col(key_col).alias("key"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("bucket"),
+        F.date_trunc("hour", F.col(ts_col)).alias("bucket"),
     ).agg(F.round(F.sum(value_col), 6).alias("v"))
     # One further shuffle (key) gathers each key's sorted observation
     # array; the dense grid is then generated AND filled row-locally —
@@ -48,35 +72,15 @@ def resample_ffill(
         F.sort_array(F.collect_list(F.struct("bucket", "v"))).alias("obs_arr")
     )
     if max_buckets is not None:
-        # in-plan guard (assert_true): fails the job on a runaway key span
-        # with zero extra passes over the data
-        # element_at(.., -1) is ANSI-safe here: obs_arr comes from a
-        # groupBy collect_list, so every group has >= 1 element and the
-        # negative index never falls out of bounds.
-        span = F.expr(
-            "size(sequence(obs_arr[0].bucket, "
-            f"element_at(obs_arr, -1).bucket, {interval}))"
-        )
-        per_key = per_key.where(
-            F.assert_true(
-                span <= max_buckets,
-                F.concat(
-                    F.lit("grid would emit "),
-                    span.cast("string"),
-                    F.lit(" buckets for key "),
-                    F.col("key").cast("string"),
-                    F.lit(f" (> {max_buckets})"),
-                ),
-            ).isNull()
-        )
+        per_key = _guard_grid_span(per_key, max_buckets)
     filled = F.expr(
         f"""
         flatten(transform(obs_arr, (o, i) ->
           transform(
             sequence(o.bucket,
-                     coalesce(try_element_at(obs_arr, i + 2).bucket - {interval},
+                     coalesce(try_element_at(obs_arr, i + 2).bucket - {_GRID},
                               o.bucket),
-                     {interval}),
+                     {_GRID}),
             b -> struct(b AS bucket, o.v AS value_sum,
                         b = o.bucket AS observed))))
         """
@@ -91,11 +95,8 @@ def interpolate_linear(
     key_col: str,
     ts_col: str,
     value_col: str,
-    bucket: str = "hour",
-    interval: str = "interval 1 hour",
-    max_buckets: int | None = 100_000,
 ) -> DataFrame:
-    """(key, bucket, value_interp, observed) on a dense per-key time grid
+    """(key, bucket, value_interp, observed) on a dense per-key hourly grid
     with LINEAR interpolation between observations — the other half of the
     X15 regularization pair: `resample_ffill` carries the last value (the
     right call for state-like series), this ramps between neighbours (the
@@ -115,34 +116,19 @@ def interpolate_linear(
     bit-identical with no round() anywhere. Overflow margin: |vs| ≤ 1e10
     (per-bucket sums) × n ≤ 1e5 grid span = 1e15 < 2^63; the int64→double
     cast of the numerator rounds identically on both sides, so magnitude
-    beyond 2^53 costs ulps, never agreement.
+    beyond 2^53 costs ulps, never agreement. A key whose grid would span
+    more than 100 000 buckets fails the job in-plan.
     """
     obs = df.groupBy(
         F.col(key_col).alias("key"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("bucket"),
+        F.date_trunc("hour", F.col(ts_col)).alias("bucket"),
     ).agg(
         F.sum(F.round(F.col(value_col) * F.lit(1_000_000)).cast("long")).alias("vs")
     )
     per_key = obs.groupBy("key").agg(
         F.sort_array(F.collect_list(F.struct("bucket", "vs"))).alias("obs_arr")
     )
-    if max_buckets is not None:
-        span = F.expr(
-            "size(sequence(obs_arr[0].bucket, "
-            f"element_at(obs_arr, -1).bucket, {interval}))"
-        )
-        per_key = per_key.where(
-            F.assert_true(
-                span <= max_buckets,
-                F.concat(
-                    F.lit("grid would emit "),
-                    span.cast("string"),
-                    F.lit(" buckets for key "),
-                    F.col("key").cast("string"),
-                    F.lit(f" (> {max_buckets})"),
-                ),
-            ).isNull()
-        )
+    per_key = _guard_grid_span(per_key, 100_000)
     # Each observation expands into the half-open segment [self, next):
     # n = buckets between self and next; bucket j of the segment ramps
     # (n-j)/n of self's value to j/n of next's. The final observation has
@@ -172,9 +158,9 @@ def interpolate_linear(
                 try_element_at(obs_arr, i + 2).vs AS nvs,
                 size(sequence(o.bucket,
                               try_element_at(obs_arr, i + 2).bucket,
-                              {interval})) - 1 AS n)),
+                              {_GRID})) - 1 AS n)),
               s -> transform(
-                sequence(o.bucket, s.nb - {interval}, {interval}),
+                sequence(o.bucket, s.nb - {_GRID}, {_GRID}),
                 (b, j) -> struct(
                   b AS bucket,
                   cast(o.vs * (s.n - j) + s.nvs * j AS double)
@@ -442,13 +428,17 @@ def holt_linear(
     )
 
 
+_SCALE = 1_000_000  # the fixed-point factor of the exact integer kernels below
+_SEASON_WINDOW_MS = 43_200_000  # the ±12 h trend window of seasonal_decompose
+_MAX_GROUP_SIZE = 100_000  # rows per key that cusum and sequence_pattern gather
+
+
 def time_weighted_avg(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     tiebreak_col: str,
     value_col: str,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-key time-weighted average (TWAP): each observation's value is
     weighted by how long it HELD — the duration until the next
@@ -475,7 +465,7 @@ def time_weighted_avg(
     w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
     ms = F.unix_millis(F.col(ts_col))
     dur = (F.lead(ms).over(w) - ms).alias("_dur")
-    vs = F.round(F.col(value_col) * scale).cast("long").alias("_vs")
+    vs = F.round(F.col(value_col) * _SCALE).cast("long").alias("_vs")
     seg = df.select(F.col(key_col), vs, dur).filter(F.col("_dur").isNotNull())
     agg = seg.groupBy(key_col).agg(
         F.count("*").alias("n_segments"),
@@ -487,7 +477,7 @@ def time_weighted_avg(
         "n_segments",
         (
             F.col("num").cast("double")
-            / (F.col("den").cast("double") * F.lit(float(scale)))
+            / (F.col("den").cast("double") * F.lit(float(_SCALE)))
         ).alias("twap"),
     )
 
@@ -498,16 +488,14 @@ def seasonal_decompose(
     ts_col: str,
     id_col: str,
     value_col: str,
-    window_ms: int = 43_200_000,
-    scale: int = 10**6,
     emit_scaled: bool = False,
 ) -> DataFrame:
     """Classic seasonal-means decomposition per key:
 
         value = trend + seasonal + resid
 
-    with trend = the centered ±``window_ms`` time-RANGE mean, seasonal =
-    the per-(key, hour-of-day) mean of the DETRENDED series, and resid
+    with trend = the centered ±12 h (``_SEASON_WINDOW_MS``) time-RANGE
+    mean, seasonal = the per-(key, hour-of-day) mean of the DETRENDED series, and resid
     the exact remainder — the diurnal-profile split that makes anomaly
     thresholds season-aware (a 3am traffic level that is normal at 3am
     and an incident at noon). Returns (key, id, trend, seasonal, resid).
@@ -525,21 +513,21 @@ def seasonal_decompose(
     to #keys×24 rows (map-side combine) and joins back as a BROADCAST.
 
     ``emit_scaled`` returns the pre-display integer columns (_vs,
-    _trend6, _d, _seasonal6) instead of the /scale floats — the exact
+    _trend6, _d, _seasonal6) instead of the /1e6 floats — the exact
     substrate `seasonal_strength` aggregates without re-rounding.
     """
     ems = F.unix_millis(F.col(ts_col))
     base = df.select(
         F.col(key_col),
         F.col(id_col),
-        F.round(F.col(value_col) * scale).cast("long").alias("_vs"),
+        F.round(F.col(value_col) * _SCALE).cast("long").alias("_vs"),
         ems.alias("_ems"),
         F.hour(F.col(ts_col)).alias("_hod"),
     )
     w = (
         Window.partitionBy(key_col)
         .orderBy("_ems")
-        .rangeBetween(-window_ms, window_ms)
+        .rangeBetween(-_SEASON_WINDOW_MS, _SEASON_WINDOW_MS)
     )
     det = (
         base.withColumn("_s", F.sum("_vs").over(w))
@@ -573,9 +561,9 @@ def seasonal_decompose(
     return scaled.select(
         key_col,
         id_col,
-        (F.col("_trend6") / F.lit(float(scale))).alias("trend"),
-        (F.col("_seasonal6") / F.lit(float(scale))).alias("seasonal"),
-        ((F.col("_d") - F.col("_seasonal6")) / F.lit(float(scale))).alias("resid"),
+        (F.col("_trend6") / F.lit(float(_SCALE))).alias("trend"),
+        (F.col("_seasonal6") / F.lit(float(_SCALE))).alias("seasonal"),
+        ((F.col("_d") - F.col("_seasonal6")) / F.lit(float(_SCALE))).alias("resid"),
     )
 
 
@@ -585,8 +573,6 @@ def seasonal_strength(
     ts_col: str,
     id_col: str,
     value_col: str,
-    window_ms: int = 43_200_000,
-    scale: int = 10**6,
 ) -> DataFrame:
     """Seasonal-strength readout per key (Hyndman & Athanasopoulos, FPP:
     F_s = max(0, 1 − Var(resid)/Var(detrended)) over the
@@ -608,8 +594,7 @@ def seasonal_strength(
     plan (one data-sized RANGE-window Exchange, broadcast profile);
     the power sums add one key-keyed agg."""
     scaled = seasonal_decompose(
-        df, key_col, ts_col, id_col, value_col,
-        window_ms=window_ms, scale=scale, emit_scaled=True,
+        df, key_col, ts_col, id_col, value_col, emit_scaled=True
     )
     dec = "decimal(19,0)"
     r = F.col("_d") - F.col("_seasonal6")
@@ -650,8 +635,6 @@ def cusum(
     target: float,
     slack: float,
     threshold: float,
-    scale: int = 1_000_000,
-    max_group_size: int = 100_000,
 ) -> DataFrame:
     """Two-sided CUSUM changepoint detection per key (Page 1954) — the
     drift monitor for ingestion pipelines: a persistent shift of the
@@ -666,36 +649,36 @@ def cusum(
     it — same class as `ewma`, and the same plan: ONE shuffle gathers
     each key's sorted (order, value) array, a single `F.aggregate` fold
     walks it, posexplode restores rows. Bounded-group contract enforced
-    in-plan (`max_group_size` assert).
+    in-plan (an assert on 100 000 rows per key).
 
     Unlike ewma's float fold, EVERYTHING here is int64: values scale to
-    ``scale`` fixed-point on ingest and the recurrence is add/subtract/
+    1e6 fixed-point on ingest and the recurrence is add/subtract/
     max — exact, so the oracle replay (recursive CTE) matches to the
     bit with no IEEE-ordering argument needed. Returns (key,
     order_cols..., cusum_hi, cusum_lo, alarm) with the cusums descaled
     once (a single int64→double division, deterministic).
     """
-    t_hi = round((target + slack) * scale)
-    t_lo = round((target - slack) * scale)
-    h = round(threshold * scale)
+    t_hi = round((target + slack) * _SCALE)
+    t_lo = round((target - slack) * _SCALE)
+    h = round(threshold * _SCALE)
     zero = F.lit(0).cast("long")
     seq = F.sort_array(
         F.collect_list(
             F.struct(
                 *[F.col(c) for c in order_cols],
-                F.round(F.col(value_col) * scale).cast("long").alias("_vs"),
+                F.round(F.col(value_col) * _SCALE).cast("long").alias("_vs"),
             )
         )
     )
     per_key = df.groupBy(F.col(key_col)).agg(seq.alias("seq"))
     guard = F.assert_true(
-        F.size("seq") <= max_group_size,
+        F.size("seq") <= _MAX_GROUP_SIZE,
         F.concat(
             F.lit("cusum group for key "),
             F.col(key_col).cast("string"),
             F.lit(" has "),
             F.size("seq").cast("string"),
-            F.lit(f" rows (> {max_group_size})"),
+            F.lit(f" rows (> {_MAX_GROUP_SIZE})"),
         ),
     )
     per_key = per_key.where(guard.isNull())
@@ -718,7 +701,7 @@ def cusum(
     out = per_key.select(
         key_col, F.posexplode(F.arrays_zip(F.col("seq"), folded)).alias("i", "z")
     )
-    scale_d = F.lit(float(scale))
+    scale_d = F.lit(float(_SCALE))
     return out.select(
         key_col,
         *[F.col(f"z.seq.{c}").alias(c) for c in order_cols],
@@ -736,7 +719,6 @@ def sequence_pattern(
     type_col: str,
     code_map: dict[str, str],
     pattern: str,
-    max_group_size: int = 100_000,
 ) -> DataFrame:
     """MATCH_RECOGNIZE-lite: per-key detection of an ordered event pattern
     over the time-sorted event string. Each event maps to a single
@@ -752,11 +734,12 @@ def sequence_pattern(
     Returns (key, n_events, n_contig, has_subseq). Plan: ONE shuffle
     gathers each key's sorted codes (bytes per event: the code, the order
     key — not the full row); everything downstream is row-local. This is
-    the bounded-group shape (`agg_listagg`'s contract): ``max_group_size``
-    fails loudly in-plan. Engines with a real MATCH_RECOGNIZE (Flink,
-    Snowflake) compile to an NFA over the same per-key ordered stream;
-    for fixed finite patterns the string form is equivalent and runs as
-    whole-stage-codegen'd expressions instead of an interpreter.
+    the bounded-group shape (`agg_listagg`'s contract): a key with more
+    than 100 000 events fails loudly in-plan. Engines with a real
+    MATCH_RECOGNIZE (Flink, Snowflake) compile to an NFA over the same
+    per-key ordered stream; for fixed finite patterns the string form is
+    equivalent and runs as whole-stage-codegen'd expressions instead of
+    an interpreter.
     """
     for ch in pattern:
         if ch in "%_":
@@ -793,13 +776,13 @@ def sequence_pattern(
         )
     )
     guard = F.assert_true(
-        F.length("seq") <= max_group_size,
+        F.length("seq") <= _MAX_GROUP_SIZE,
         F.concat(
             F.lit("sequence for key "),
             F.col("key").cast("string"),
             F.lit(" has "),
             F.length("seq").cast("string"),
-            F.lit(f" events (> {max_group_size})"),
+            F.lit(f" events (> {_MAX_GROUP_SIZE})"),
         ),
     )
     per_key = per_key.where(guard.isNull())
@@ -871,20 +854,20 @@ def sessionize(
     )
 
 
+_N_MADS = 5  # robust deviations from the key's median residual that flag
+
+
 def seasonal_anomalies(
     df: DataFrame,
     key_col: str,
     ts_col: str,
     id_col: str,
     value_col: str,
-    n_mads: int = 5,
-    window_ms: int = 43_200_000,
-    scale: int = 10**6,
 ) -> DataFrame:
     """Season-aware anomaly flags — the loop `seasonal_decompose`'s
     docstring promises closed: a reading is anomalous when its RESIDUAL
-    (value minus trend minus diurnal profile) sits more than ``n_mads``
-    robust deviations from the key's typical residual. Flagging on the
+    (value minus trend minus diurnal profile) sits more than 5 robust
+    deviations (``_N_MADS``) from the key's typical residual. Flagging on the
     residual instead of the raw value is the whole point — 3am traffic
     that is normal at 3am never alarms, and the median/MAD threshold
     (50% breakdown) is not itself dragged by the outliers it hunts.
@@ -902,11 +885,9 @@ def seasonal_anomalies(
     back. Returns (key, id, resid, deviation, threshold) for flagged
     rows, descaled for display.
     """
-    dec = seasonal_decompose(
-        df, key_col, ts_col, id_col, value_col, window_ms=window_ms, scale=scale
-    )
+    dec = seasonal_decompose(df, key_col, ts_col, id_col, value_col)
     r6 = dec.select(
-        key_col, id_col, F.round(F.col("resid") * scale).cast("long").alias("_r6")
+        key_col, id_col, F.round(F.col("resid") * _SCALE).cast("long").alias("_r6")
     )
     meds = r6.groupBy(key_col).agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY _r6)")
@@ -923,13 +904,13 @@ def seasonal_anomalies(
     )
     return (
         dev.join(F.broadcast(mads), key_col)
-        .filter((F.col("_mad") > 0) & (F.col("_dev") > n_mads * F.col("_mad")))
+        .filter((F.col("_mad") > 0) & (F.col("_dev") > _N_MADS * F.col("_mad")))
         .select(
             key_col,
             id_col,
-            (F.col("_r6") / F.lit(float(scale))).alias("resid"),
-            (F.col("_dev") / F.lit(float(scale))).alias("deviation"),
-            (n_mads * F.col("_mad") / F.lit(float(scale))).alias("threshold"),
+            (F.col("_r6") / F.lit(float(_SCALE))).alias("resid"),
+            (F.col("_dev") / F.lit(float(_SCALE))).alias("deviation"),
+            (_N_MADS * F.col("_mad") / F.lit(float(_SCALE))).alias("threshold"),
         )
     )
 

@@ -2474,7 +2474,10 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_oracle(n_iter: int = 4) -> str:
+_MARKOV_ROUNDS = 4  # events_markov_stationary's power iterations
+
+
+def _markov_oracle() -> str:
     """Unrolled integer fixed-point power iteration (the `graph_pagerank`
     recipe): the transition matrix normalizes to 1e9-unit integer
     probabilities, the stationary vector iterates in exact integer
@@ -2502,7 +2505,7 @@ def _markov_oracle(n_iter: int = 4) -> str:
       SELECT DISTINCT src AS state, 1000000000 // ns.n_states AS pu
       FROM m, ns
     )"""
-    for i in range(1, n_iter + 1):
+    for i in range(1, _MARKOV_ROUNDS + 1):
         sql += f""",
     p{i} AS (
       SELECT m.dst AS state,
@@ -2513,7 +2516,7 @@ def _markov_oracle(n_iter: int = 4) -> str:
     sql += f"""
     SELECT state AS event_type, pu AS pi_units,
            round(pu / 1000000000.0, 6) AS pi
-    FROM p{n_iter}
+    FROM p{_MARKOV_ROUNDS}
     """
     return sql
 
@@ -2558,7 +2561,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(ns))
         .select("state", F.expr(f"{U} div n_states").cast("long").alias("pu"))
     )
-    for _ in range(4):
+    for _ in range(_MARKOV_ROUNDS):
         pi = (
             pi.join(m, pi["state"] == m["src"])
             .select(

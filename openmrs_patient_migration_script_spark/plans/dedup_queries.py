@@ -26,6 +26,12 @@ from openmrs_patient_migration_script_spark.operators.dedup import (
     shingles_sql,
     simhash,
 )
+from openmrs_patient_migration_script_spark.operators.graph import (
+    LOUVAIN_ROUNDS,
+    PAGERANK_DAMPING_PCT,
+    PAGERANK_N_ITER,
+    PAGERANK_SCALE,
+)
 from openmrs_patient_migration_script_spark.operators.similarity import srp_hashed_sql
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
@@ -356,7 +362,10 @@ def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(pairs, local_threshold=0)
 
 
-def _labelprop_oracle(n_iter: int = 3) -> str:
+_LPA_ROUNDS = 3  # graph_label_propagation's rounds, replayed by its oracle
+
+
+def _labelprop_oracle() -> str:
     """Unrolled synchronous-LPA replay: each round is a count CTE + a
     row_number argmax whose ORDER BY (cnt DESC, label ASC) is exactly the
     engine's max_by(label, (cnt, -label)) struct ordering."""
@@ -376,7 +385,7 @@ def _labelprop_oracle(n_iter: int = 3) -> str:
       UNION ALL SELECT key_b, key_a FROM pairs
     ),
     l0 AS (SELECT DISTINCT u AS node, u AS label FROM e)"""
-    for i in range(1, n_iter + 1):
+    for i in range(1, _LPA_ROUNDS + 1):
         sql += f""",
     c{i} AS (
       SELECT node, label, count(*) AS cnt FROM (
@@ -395,7 +404,7 @@ def _labelprop_oracle(n_iter: int = 3) -> str:
       ) WHERE rn = 1
     )"""
     sql += f"""
-    SELECT node, label AS community FROM l{n_iter}
+    SELECT node, label AS community FROM l{_LPA_ROUNDS}
     """
     return sql
 
@@ -418,7 +427,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = dedup_fuzzy(spark, sf_dir)
     # single-pass blocked join: unique per unordered pair by construction
-    return label_propagation(pairs, n_iter=3, assume_canonical=True)
+    return label_propagation(pairs, n_iter=_LPA_ROUNDS, assume_canonical=True)
 
 
 @query(
@@ -487,11 +496,12 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degree_assortativity(pairs, src="part_a", dst="part_b")
 
 
-def _pagerank_oracle(n_iter: int = 4, d: int = 85, scale: int = 10**9) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled fixed-point PageRank replay: every power iteration is a
     CTE chain of integer arithmetic (the same `div`/`//` semantics on
     both engines — non-negative operands, so trunc == floor), so the
     iterative algorithm is EXACTLY reproducible, not approximately."""
+    n_iter, d, scale = PAGERANK_N_ITER, PAGERANK_DAMPING_PCT, PAGERANK_SCALE
     sql = f"""
     WITH named AS (
       SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
@@ -1776,11 +1786,12 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _ppr_oracle(n_iter: int = 4, d: int = 85, scale: int = 10**9) -> str:
+def _ppr_oracle() -> str:
     """Unrolled personalized-PageRank replay: `_pagerank_oracle`'s CTE
     chain with the teleport floor concentrated on the seed set
     (custkey % 97 = 0) instead of uniform — the CASE floor and the
     seeded r0 are the only differences, everything stays integer."""
+    n_iter, d, scale = PAGERANK_N_ITER, PAGERANK_DAMPING_PCT, PAGERANK_SCALE
     seed = "deg.u % 97 = 0"
     sql = f"""
     WITH named AS (
@@ -1850,12 +1861,17 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(pairs, seeds=seeds)
 
 
-def _coreness_oracle(max_k: int = 3, rounds: int = 6) -> str:
+# graph_coreness's largest k and peel rounds per k, replayed by its oracle
+_CORENESS_MAX_K, _CORENESS_ROUNDS = 3, 6
+
+
+def _coreness_oracle() -> str:
     """Unrolled stacked-peel replay for `graph_coreness`: one peel chain
     per k (each CTE references only its predecessor — the `_kcore_oracle`
     planner rule), coreness = 1 + membership flags. The shared s0 prefix
     is referenced once per chain plus once for the node universe — a
     constant ×(max_k) re-expansion, not the exponential per-round one."""
+    max_k, rounds = _CORENESS_MAX_K, _CORENESS_ROUNDS
     sql = f"""
     WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
     e AS (
@@ -1928,7 +1944,9 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("key_a"),
         (F.col("c_custkey") * 3).alias("key_b"),
     )
-    return coreness(e2.unionByName(e3), max_k=3, n_rounds=6)
+    return coreness(
+        e2.unionByName(e3), max_k=_CORENESS_MAX_K, n_rounds=_CORENESS_ROUNDS
+    )
 
 
 @query(
@@ -2242,12 +2260,17 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _truss_decomp_oracle(max_k: int = 5, rounds: int = 3) -> str:
+# graph_truss_decomposition's largest k and peel rounds per k
+_TRUSS_MAX_K, _TRUSS_ROUNDS = 5, 3
+
+
+def _truss_decomp_oracle() -> str:
     """Chained unrolled support peels for `graph_truss_decomposition`:
     one `_ktruss_oracle`-style MATERIALIZED round chain per k, each
     chain starting from the PREVIOUS chain's survivor CTE (the nesting
     property the Spark operator exploits), memberships folded back onto
     e0 as left joins."""
+    max_k, rounds = _TRUSS_MAX_K, _TRUSS_ROUNDS
     arms = []
     for d in (1, 2, 3):
         arms.append(f"""
@@ -2349,7 +2372,9 @@ def graph_truss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = parts[0]
     for p in parts[1:]:
         edges = edges.unionByName(p)
-    return truss_decomposition(edges, max_k=5, n_rounds=3)
+    return truss_decomposition(
+        edges, max_k=_TRUSS_MAX_K, n_rounds=_TRUSS_ROUNDS
+    )
 
 
 @query(
@@ -2571,7 +2596,6 @@ def dedup_pair_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Louvain community detection (r11) --------------------------------------
 
 _LOUVAIN_PASSES = 3
-_LOUVAIN_ROUNDS = 2
 
 # Declared fixture: clique-blocks over customer keys — every same-block
 # pair (block = k // 10) is an edge, consecutive blocks share one bridge
@@ -2618,9 +2642,7 @@ def _louvain_qsum(lt: str) -> str:
     )"""
 
 
-def _louvain_ctes(
-    n_passes: int = _LOUVAIN_PASSES, rounds: int = _LOUVAIN_ROUNDS
-) -> str:
+def _louvain_ctes() -> str:
     """Unrolled Louvain replay (the `_bpe_learn_ctes` pattern): per pass,
     weighted degrees (self-loops twice); per ROUND within the pass, the
     community vote table kc (with explicit stay rows), sigma_tot/size
@@ -2628,6 +2650,7 @@ def _louvain_ctes(
     projected candidate ltq, the modularity guard ar, and the accept
     CASE lab; then the community contraction. Multi-consumer CTEs
     MATERIALIZED; the q chain threads every round of every pass."""
+    n_passes, rounds = _LOUVAIN_PASSES, LOUVAIN_ROUNDS
     sql = (
         "\n    WITH "
         + _LOUVAIN_EDGE_CTES.strip()

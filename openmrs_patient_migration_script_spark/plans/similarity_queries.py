@@ -30,6 +30,7 @@ from openmrs_patient_migration_script_spark.sources import load_table
 # against the full corpus — the production shape for batch ANN scoring.
 _QUERY_PRED = "vec_id % 50 = 0"
 _K = 5
+_DIM = 64  # the width of the fixture's embedding vectors
 
 
 def _split(spark: SparkSession, sf_dir: str):
@@ -120,9 +121,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # same oracle as sim_cosine_topk: both implementations must produce
 # identical rounded scores and tie-breaks
-def _mmr_prefix(k_cand: int = 10, k_sel: int = 5) -> str:
+_MMR_CANDIDATES = 10  # the MMR queries re-rank the exact top-10 down to _K
+
+
+def _mmr_prefix() -> str:
     """Shared CTE chain for the MMR oracles: candidates, integer pairwise
-    sims, and the unrolled greedy selection sel1..sel{k_sel}. Step 1 is
+    sims, and the unrolled greedy selection sel1..sel{_K}. Step 1 is
     the plain relevance argmax (no penalty — selected set empty); each
     later step anti-joins the running selection, takes the max penalty
     over it from the integer pairwise-sim table, and argmaxes
@@ -147,7 +151,7 @@ def _mmr_prefix(k_cand: int = 10, k_sel: int = 5) -> str:
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cos_sim DESC, vec_id) AS rn
         FROM scored
-      ) WHERE rn <= {k_cand}
+      ) WHERE rn <= {_MMR_CANDIDATES}
     ),
     vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     sims AS (
@@ -167,7 +171,7 @@ def _mmr_prefix(k_cand: int = 10, k_sel: int = 5) -> str:
       ) WHERE rn = 1
     ),
     sel1 AS (SELECT query_id, vec_id FROM s1)"""
-    for i in range(2, k_sel + 1):
+    for i in range(2, _K + 1):
         sql += f""",
     pen{i} AS (
       SELECT c.query_id, c.vec_id, c.cos_sim, c.rel_s,
@@ -195,24 +199,25 @@ def _mmr_prefix(k_cand: int = 10, k_sel: int = 5) -> str:
     return sql
 
 
-def _mmr_oracle(k_cand: int = 10, k_sel: int = 5) -> str:
+def _mmr_oracle() -> str:
     steps = "\n    UNION ALL ".join(
         f"SELECT query_id, {i} AS mmr_rank, vec_id, cos_sim, "
         f"score_s / 1000000.0 AS mmr_score FROM s{i}"
-        for i in range(1, k_sel + 1)
+        for i in range(1, _K + 1)
     )
-    return _mmr_prefix(k_cand, k_sel) + f"""
+    return _mmr_prefix() + f"""
     {steps}
     """
 
 
-def _mmr_certify_oracle(k_cand: int = 10, k_sel: int = 5) -> str:
+def _mmr_certify_oracle() -> str:
     """The diversity-vs-relevance ledger over the SAME unrolled greedy
     chain: per query, the 1e6-scaled relevance sums and max within-set
-    pairwise similarities of the plain top-{k_sel} vs the MMR-selected
-    {k_sel} — every number an exact BIGINT from the shared integer sim
+    pairwise similarities of the plain top-{_K} vs the MMR-selected
+    {_K} — every number an exact BIGINT from the shared integer sim
     table."""
-    return _mmr_prefix(k_cand, k_sel) + f""",
+    k_sel = _K
+    return _mmr_prefix() + f""",
     top AS (
       SELECT query_id, vec_id, rel_s FROM (
         SELECT query_id, vec_id, rel_s,
@@ -268,7 +273,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb, queries = _split(spark, sf_dir)
-    return mmr_rerank(emb, queries, k_candidates=10, k_select=5)
+    return mmr_rerank(emb, queries, k_candidates=_MMR_CANDIDATES, k_select=_K)
 
 
 @query("sim_cosine_topk_hof", oracle=ORACLES["sim_cosine_topk"])
@@ -445,7 +450,7 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_oracle(n_cells: int, n_iter: int, dim: int = 64) -> str:
+def _kmeans_oracle(n_cells: int, n_iter: int) -> str:
     """Unrolled-Lloyd oracle: replay every training iteration as a CTE
     pair (cosine-argmax assignment window → long-form centroid re-sum),
     then score the final assignment. Cosine against UN-normalized
@@ -453,7 +458,7 @@ def _kmeans_oracle(n_cells: int, n_iter: int, dim: int = 64) -> str:
     numpy's unit-centroid matmul to ulps (measured 1.7e-16 on the
     fixture); member vectors are unit-normalized once up front exactly as
     kmeans_fit normalizes X."""
-    dims = f"(SELECT unnest(generate_series(1, {dim})) AS d) dd(d)"
+    dims = f"(SELECT unnest(generate_series(1, {_DIM})) AS d) dd(d)"
     sql = f"""
     WITH vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     uv AS (
@@ -574,16 +579,16 @@ def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cell")
 
 
-def _fixed_centroids(k: int = 4, dim: int = 64) -> list[list[float]]:
-    """Deterministic decimal-exact centroid literals (3dp) — the same
+def _fixed_centroids() -> list[list[float]]:
+    """Four deterministic decimal-exact centroid literals (3dp) — the same
     values are embedded in the Spark call AND the oracle SQL text, so
     both engines score against bit-identical model constants."""
     import hashlib
 
     out = []
-    for c in range(k):
+    for c in range(4):
         row = []
-        for d in range(dim):
+        for d in range(_DIM):
             h = int(hashlib.md5(f"cent:{c}:{d}".encode()).hexdigest()[:6], 16)
             row.append(round((h % 2000 - 1000) / 1000.0, 3))
         out.append(row)
@@ -983,7 +988,7 @@ def sim_mmr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cosine_topk call the oracle still replays) and (b) passed into
     # mmr_rerank as its candidate set, skipping its internal second
     # full-corpus scan.
-    cands10 = cosine_topk_vectorized(emb, queries, k=10).localCheckpoint(
+    cands10 = cosine_topk_vectorized(emb, queries, k=_MMR_CANDIDATES).localCheckpoint(
         eager=True
     )
     w5 = Window.partitionBy("query_id").orderBy(
@@ -995,7 +1000,7 @@ def sim_mmr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", rel_s.alias("rel_s"))
     )
     mmr = mmr_rerank(
-        emb, queries, k_candidates=10, k_select=_K, candidates=cands10
+        emb, queries, k_candidates=_MMR_CANDIDATES, k_select=_K, candidates=cands10
     ).select("query_id", "vec_id", rel_s.alias("rel_s"))
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
 

@@ -1387,8 +1387,9 @@ def _bpe_learn_ctes(n_rounds: int = _BPE_MERGE_ROUNDS) -> str:
     return ",".join(parts)
 
 
-def _bpe_merge_oracle(n_rounds: int = _BPE_MERGE_ROUNDS) -> str:
+def _bpe_merge_oracle() -> str:
     """Merge-ledger readout over the shared learn CTEs."""
+    n_rounds = _BPE_MERGE_ROUNDS
     selects = [
         f"""
     SELECT {r}::BIGINT AS merge_round, sym_a, sym_b, pair_freq,
@@ -1399,11 +1400,12 @@ def _bpe_merge_oracle(n_rounds: int = _BPE_MERGE_ROUNDS) -> str:
     return _bpe_learn_ctes(n_rounds) + "\n    UNION ALL".join(selects)
 
 
-def _bpe_encode_oracle(n_rounds: int = _BPE_MERGE_ROUNDS) -> str:
+def _bpe_encode_oracle() -> str:
     """Per-document encode readout: re-derive the merges via the shared
     learn CTEs, then apply them doc-wide as nested literal replaces —
     space renders as an ordinary wrapped symbol no merge pattern can
     cross, so the doc-wide apply equals the per-word apply."""
+    n_rounds = _BPE_MERGE_ROUNDS
     # (?s) mirrors the engine's DOTALL wrap (operators/text.py): embedded
     # newlines wrap like any other symbol in both regex engines
     enc = (
@@ -1515,10 +1517,11 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_TRAIN_ROUNDS = 8
 
 
-def _bpe_train_oracle(n_rounds: int = _BPE_TRAIN_ROUNDS) -> str:
+def _bpe_train_oracle() -> str:
     """Merge-table readout over the shared learn CTEs: one row per
     executed round (an empty b{r} — merge-dry corpus — contributes no
     row, exactly like the engine loop's early stop)."""
+    n_rounds = _BPE_TRAIN_ROUNDS
     selects = [
         f"""
     SELECT {r}::BIGINT AS merge_rank, sym_a, sym_b, pair_freq
@@ -1634,7 +1637,7 @@ def _uni_nested_replaces(src: str, table: str, n_prios: int) -> str:
     return enc
 
 
-def _unigram_learn_ctes(n_rounds: int = _UNI_ROUNDS) -> str:
+def _unigram_learn_ctes() -> str:
     """The shared unrolled unigram-EM CTE chain (the `_bpe_learn_ctes`
     pattern): words -> wrapped ur0 -> seed substring candidates us0 ->
     per round (MaxMatch segmentation useg{r}, pruned survivor vocab
@@ -1642,6 +1645,7 @@ def _unigram_learn_ctes(n_rounds: int = _UNI_ROUNDS) -> str:
     text) with the PREVIOUS round's survivors in (length DESC, usage
     DESC, piece ASC) priority. All multi-consumer CTEs are
     MATERIALIZED."""
+    n_rounds = _UNI_ROUNDS
     syms = "string_split(trim(repr, chr(31)), chr(31)||chr(31))"
     parts = [
         f"""
@@ -1706,28 +1710,28 @@ def _unigram_learn_ctes(n_rounds: int = _UNI_ROUNDS) -> str:
     return ",".join(parts)
 
 
-def _unigram_train_oracle(n_rounds: int = _UNI_ROUNDS) -> str:
+def _unigram_train_oracle() -> str:
     """Per-round survivor-vocabulary readout over the shared EM CTEs."""
     selects = [
         f"""
     SELECT {r}::BIGINT AS em_round, vocab_rank::BIGINT AS vocab_rank,
            piece, length(piece)::BIGINT AS piece_len, usage_cnt
     FROM uv{r}"""
-        for r in range(1, n_rounds + 1)
+        for r in range(1, _UNI_ROUNDS + 1)
     ]
-    return _unigram_learn_ctes(n_rounds) + "\n    UNION ALL".join(selects)
+    return _unigram_learn_ctes() + "\n    UNION ALL".join(selects)
 
 
-def _unigram_encode_oracle(n_rounds: int = _UNI_ROUNDS) -> str:
+def _unigram_encode_oracle() -> str:
     """Per-document encode readout: re-derive the final vocabulary via
     the shared EM CTEs, then apply it doc-wide (spaces are ordinary
     wrapped symbols no space-free piece pattern can cross, so doc-wide
     equals per-word — the BPE encode argument)."""
     enc = _uni_nested_replaces(
-        _UNI_WRAP_SQL.format(src="lower(d.text)"), f"uv{n_rounds}", _UNI_VOCAB
+        _UNI_WRAP_SQL.format(src="lower(d.text)"), f"uv{_UNI_ROUNDS}", _UNI_VOCAB
     )
     return (
-        _unigram_learn_ctes(n_rounds)
+        _unigram_learn_ctes()
         + f""",
     enc AS (
       SELECT d.doc_id,

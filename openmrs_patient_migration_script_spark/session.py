@@ -55,6 +55,13 @@ def get_spark(
     os.environ["PYSPARK_SUBMIT_ARGS"] = merged_submit_args(
         mem, os.environ.get("PYSPARK_SUBMIT_ARGS")
     )
+    # Python workers import this package to run the functions it ships to
+    # them, and they inherit PYTHONPATH from the JVM, not the driver's
+    # sys.path: hand the package's location on before the JVM starts.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     if shuffle_partitions is None:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus_env) if cpus_env else len(os.sched_getaffinity(0))

@@ -46,10 +46,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def tumbling_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """ST1: 1-hour tumbling windows per event type."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
@@ -87,8 +87,6 @@ def stream_ingest_dedup(
     checkpoint_dir: str,
     key_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
     trigger_available_now: bool = True,
 ):
     """Streaming corpus-ingest dedup (r5) — the continuous form of
@@ -96,7 +94,8 @@ def stream_ingest_dedup(
     by micro-batch, each batch deduped against (a) the STATIC indexed
     corpus via exact content hash + `minhash_pairs_against` banding, and
     (b) everything this stream already ADMITTED in earlier batches, so
-    a near-dup arriving twice across micro-batches lands once.
+    a near-dup arriving twice across micro-batches lands once. Banding
+    is `minhash_candidate_pairs`' default 16 MinHash rows in 4 bands.
 
     Exactly-once by CONSTRUCTION, not a ledger: each batch's admitted
     docs write to ``_batch_id=<id>`` with overwrite, and the
@@ -133,9 +132,9 @@ def stream_ingest_dedup(
     # one-time static-index preparation (the whole point of the
     # index_signatures contract): signatures + content hashes are
     # computed here, at stream start, never again per micro-batch
-    static_sigs = minhash_signatures(
-        index_df, key_col, text_col, num_hashes
-    ).localCheckpoint(eager=True)
+    static_sigs = minhash_signatures(index_df, key_col, text_col).localCheckpoint(
+        eager=True
+    )
     static_hashes = (
         index_df.select(F.md5(F.col(text_col)).alias("_h"))
         .distinct()
@@ -174,7 +173,7 @@ def stream_ingest_dedup(
                 admitted_prior.select(F.md5(F.col(text_col)).alias("_h"))
             ).distinct()
             idx_sigs = idx_sigs.unionByName(
-                minhash_signatures(admitted_prior, key_col, text_col, num_hashes)
+                minhash_signatures(admitted_prior, key_col, text_col)
             )
         # intra-batch exact self-dedup: deterministic min-key winner per
         # content hash (two byte-identical docs in one batch land once)
@@ -189,15 +188,12 @@ def stream_ingest_dedup(
         fresh = hashed.join(idx_hashes, "_h", "left_anti").drop("_h")
         # intra-batch near-dup self-dedup: band the batch against itself
         # and drop the higher key of every candidate pair (deterministic)
-        self_pairs = minhash_candidate_pairs(
-            fresh, key_col, text_col, num_hashes=num_hashes, bands=bands
-        )
+        self_pairs = minhash_candidate_pairs(fresh, key_col, text_col)
         losers = self_pairs.select(F.col("key_b").alias(key_col)).distinct()
         fresh = fresh.join(losers, key_col, "left_anti")
         # near-dup vs the (grown) index: signatures-fast-path band join
         pairs = minhash_pairs_against(
-            None, fresh, key_col, text_col,
-            num_hashes=num_hashes, bands=bands, index_signatures=idx_sigs,
+            None, fresh, key_col, text_col, index_signatures=idx_sigs
         )
         dup_keys = pairs.select(F.col("batch_key").alias(key_col)).distinct()
         admitted = fresh.join(dup_keys, key_col, "left_anti")

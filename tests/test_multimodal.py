@@ -325,9 +325,7 @@ def test_vad_segments_real_wav_silence_tone_silence(spark):
     media = spark.createDataFrame([(1, bytearray(wav))], schema)
     segs = {
         (r.seg_idx): (r.start_frame, r.end_frame, r.n_frames)
-        for r in audio_vad_segments(
-            media, threshold_db=-20.0, energies_fn=wav_frame_energies
-        ).collect()
+        for r in audio_vad_segments(media, energies_fn=wav_frame_energies).collect()
     }
     assert segs == {1: (3, 6, 4), 2: (9, 11, 3)}
 

@@ -195,7 +195,7 @@ def test_salted_topk_equals_plain_topk(spark, kv, k):
     order = [F.desc("score"), F.col("rid")]
     got = {
         tuple(r)
-        for r in salted_topk_per_key(df, ["key"], order, k=k, salts=4).collect()
+        for r in salted_topk_per_key(df, ["key"], order, k=k).collect()
     }
     w = Window.partitionBy("key").orderBy(*order)
     want = {
@@ -820,7 +820,7 @@ def test_pagerank_matches_fixed_point_reference(spark, edge_list):
         [(a, b) for a, b in edge_list], "key_a int, key_b int"
     )
     got = {
-        r.node: r.rank_scaled for r in pagerank(edges, n_iter=4).collect()
+        r.node: r.rank_scaled for r in pagerank(edges).collect()
     }
 
     adj: dict[int, list[int]] = {}
