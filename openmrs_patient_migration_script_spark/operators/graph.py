@@ -266,6 +266,30 @@ def connected_components(
     )
 
 
+def connected_components_sql(suffix: str = "") -> str:
+    """DuckDB twin of ``connected_components`` over the CTE
+    ``pairs{suffix}`` (key_a, key_b): the CTEs ``edges{suffix}`` (the
+    symmetrized edges without a NULL endpoint), ``reach{suffix}`` (the
+    transitive closure, node → every label it reaches) and
+    ``labels{suffix}`` (node, cluster = min member). The caller's WITH
+    must be ``WITH RECURSIVE``."""
+    known = "key_a IS NOT NULL AND key_b IS NOT NULL"
+    return f"""edges{suffix} AS (
+      SELECT key_a AS a, key_b AS b FROM pairs{suffix} WHERE {known}
+      UNION ALL
+      SELECT key_b, key_a FROM pairs{suffix} WHERE {known}
+    ),
+    reach{suffix}(node, label) AS (
+      SELECT a, a FROM edges{suffix}
+      UNION
+      SELECT e.a, r.label FROM edges{suffix} e
+      JOIN reach{suffix} r ON r.node = e.b
+    ),
+    labels{suffix} AS (
+      SELECT node, min(label) AS cluster FROM reach{suffix} GROUP BY node
+    )"""
+
+
 def _with_centers(labels: DataFrame, sym: DataFrame) -> DataFrame:
     """Complete star-edge (node, cluster) labels with the centers: nodes
     that ARE their component's min emit no star edge, so they are

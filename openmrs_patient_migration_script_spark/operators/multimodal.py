@@ -481,6 +481,19 @@ def fake_frame_energies(content: bytes) -> list[float]:
     return out
 
 
+def fake_frame_energies_sql() -> str:
+    """DuckDB twin of ``fake_frame_energies`` over ``documents.text``: the
+    CTE ``frames`` (doc_id, i, db) — one row per frame."""
+    return """frames AS (
+      SELECT doc_id, i,
+             -(('0x' || substr(md5(text || ':' || i), 1, 4))::INTEGER % 6000)
+               / 100.0 AS db
+      FROM documents,
+           UNNEST(generate_series(
+             0, ('0x' || substr(md5(text), 15, 2))::INTEGER % 300)) AS t(i)
+    )"""
+
+
 def wav_frame_energies(content: bytes, frame_ms: int = 100) -> list[float]:
     """REAL per-frame RMS energies (dB) from a PCM WAV payload — the
     actual decode path for `audio_vad_segments`; stereo averages to mono

@@ -51,6 +51,18 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def token_counts_sql() -> str:
+    """DuckDB twin of ``token_counts(documents)``: the CTE ``vocab``
+    (token, cnt)."""
+    return """vocab AS (
+      SELECT token, count(*)::BIGINT AS cnt
+      FROM (SELECT unnest(string_split(lower(text), ' ')) AS token
+            FROM documents)
+      WHERE token <> ''
+      GROUP BY token
+    )"""
+
+
 def tf_idf(
     df: DataFrame,
     key_col: str = "doc_id",
@@ -95,6 +107,24 @@ def tf_idf(
             "tfidf"
         ),
     )
+
+
+def tf_idf_sql() -> str:
+    """DuckDB twin of the stages of ``tf_idf`` over ``documents``: the CTEs
+    ``toks`` (doc_id, token — empty tokens kept), ``tf`` (doc_id, token,
+    tf — empty tokens dropped, as `tokens` drops them), ``dfreq`` (token,
+    df) and ``n`` (n_docs); tfidf = round(tf * ln((1 + n_docs) / (1 +
+    df)), 6)."""
+    return """toks AS (
+      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+      FROM documents
+    ),
+    tf AS (
+      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
+      GROUP BY doc_id, token
+    ),
+    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)"""
 
 
 def keywords_topk(
@@ -805,6 +835,31 @@ def chunk_documents(
     )
 
 
+def chunk_documents_sql() -> str:
+    """DuckDB twin of ``chunk_documents(documents, chunk_tokens=64,
+    overlap=16)``: the CTEs ``t`` and ``s`` (its token arrays and window
+    starts) and ``chunks`` (key, chunk_id, chunk_text, n_chunk_tokens)."""
+    return """t AS (
+      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+    ),
+    s AS (
+      SELECT doc_id, toks,
+             unnest(generate_series(1, greatest(len(toks) - 16, 1), 48))
+               AS start,
+             generate_subscripts(
+               generate_series(1, greatest(len(toks) - 16, 1), 48), 1) - 1
+               AS chunk_id
+      FROM t
+    ),
+    chunks AS (
+      SELECT doc_id AS key, chunk_id,
+             array_to_string(toks[start : least(start + 63, len(toks))], ' ')
+               AS chunk_text,
+             least(start + 63, len(toks)) - start + 1 AS n_chunk_tokens
+      FROM s
+    )"""
+
+
 def pack_sequences(
     chunks: DataFrame,
     key_cols: list[str],
@@ -998,6 +1053,37 @@ def tfidf_cosine_pairs(
             F.col("num") / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))), 6
         ).alias("cos_sim"),
     )
+
+
+def tfidf_cosine_pairs_sql() -> str:
+    """DuckDB twin of ``tfidf_cosine_pairs(documents, "doc_id", "text",
+    threshold_num=1, threshold_den=2, max_df=100)`` over the CTEs of
+    `tf_idf_sql`: the CTEs ``w`` and ``wp`` (key, token, w — the 1e6-scaled
+    weights), ``norms`` (key, norm2), ``num`` (key_a, key_b, num) and
+    ``pairs`` (key_a, key_b, num, cos_sim — the pairs at cos >= 1/2)."""
+    return """w AS (
+      SELECT tf.doc_id AS key, tf.token,
+             CAST(round(round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)),
+                              6) * 1000000) AS BIGINT) AS w
+      FROM tf JOIN dfreq USING (token) CROSS JOIN n
+      WHERE dfreq.df <= 100
+    ),
+    wp AS (SELECT * FROM w WHERE w > 0),
+    norms AS (SELECT key, sum(w * w) AS norm2 FROM wp GROUP BY key),
+    num AS (
+      SELECT a.key AS key_a, b.key AS key_b, sum(a.w * b.w) AS num
+      FROM wp a JOIN wp b ON a.token = b.token AND a.key < b.key
+      GROUP BY 1, 2
+    ),
+    pairs AS (
+      SELECT key_a, key_b, CAST(num AS BIGINT) AS num,
+             round(num / (sqrt(na.norm2) * sqrt(nb.norm2)), 6) AS cos_sim
+      FROM num
+      JOIN norms na ON na.key = num.key_a
+      JOIN norms nb ON nb.key = num.key_b
+      WHERE 4 * num::HUGEINT * num::HUGEINT
+            >= na.norm2::HUGEINT * nb.norm2::HUGEINT
+    )"""
 
 
 def tf_idf_against(

@@ -567,6 +567,45 @@ def seasonal_decompose(
     )
 
 
+def seasonal_decompose_sql() -> str:
+    """DuckDB twin of ``seasonal_decompose(events, "user_id", "ts",
+    "event_id", "value", emit_scaled=True)``: the CTEs ``base``, ``tr``,
+    ``det`` and ``seas`` (the kernel's stages) and ``decomp`` (user_id,
+    event_id, trend6, d, seasonal6 — the 1e6-scaled trend, detrended
+    value and seasonal mean; resid = d - seasonal6)."""
+    return f"""base AS (
+      SELECT user_id, event_id,
+             CAST(round(value * {_SCALE}) AS BIGINT) AS vs,
+             epoch_ms(ts) AS ems, hour(ts) AS hod
+      FROM events
+    ),
+    tr AS (
+      SELECT *, sum(vs) OVER w AS s, count(*) OVER w AS n
+      FROM base
+      WINDOW w AS (PARTITION BY user_id ORDER BY ems
+                   RANGE BETWEEN {_SEASON_WINDOW_MS} PRECEDING
+                             AND {_SEASON_WINDOW_MS} FOLLOWING)
+    ),
+    det AS (
+      SELECT user_id, event_id, hod,
+             (2 * s + n) // (2 * n) AS trend6,
+             vs - ((2 * s + n) // (2 * n)) AS d
+      FROM tr
+    ),
+    seas AS (
+      SELECT user_id, hod,
+             CASE WHEN sum(d) >= 0
+                  THEN (2 * sum(d) + count(*)) // (2 * count(*))
+                  ELSE -((-2 * sum(d) + count(*)) // (2 * count(*))) END
+               AS seasonal6
+      FROM det GROUP BY 1, 2
+    ),
+    decomp AS (
+      SELECT det.user_id, det.event_id, trend6, d, seasonal6
+      FROM det JOIN seas ON det.user_id = seas.user_id AND det.hod = seas.hod
+    )"""
+
+
 def seasonal_strength(
     df: DataFrame,
     key_col: str,

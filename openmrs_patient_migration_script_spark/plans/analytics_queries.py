@@ -17,13 +17,60 @@ from openmrs_patient_migration_script_spark.operators.sampling import (
     hash_bucket_sql,
     stratified_hash_sample,
 )
+from openmrs_patient_migration_script_spark.operators.timeseries import (
+    seasonal_decompose_sql,
+)
 from openmrs_patient_migration_script_spark.plans.registry import query
+from openmrs_patient_migration_script_spark.plans.relational import (
+    ASOF_INPUTS_SQL,
+    asof_side,
+)
 from openmrs_patient_migration_script_spark.sources import load_table
 
 # per-language keep rates (per mille) for the declared sampling query — the
 # language-rebalancing shape of an LLM data mix. Keep in sync with the
 # oracle CASE below.
 SAMPLE_RATES: dict[str, int] = {"en": 500, "de": 250, "es": 250, "fr": 250, "zh": 100}
+
+
+# CTE ordered (user_id, event_id, v, rn): each user's events in time
+# order, the sequence the recursive smoothing oracles step through
+_ORDERED_EVENTS_SQL = """ordered AS (
+      SELECT user_id, event_id, value::DOUBLE AS v,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS rn
+      FROM events
+    )"""
+
+# CTE s3: every event with its user's first view, first click after it and
+# first purchase after that (NULL where the funnel stops)
+_FUNNEL_STAGES_SQL = """s1 AS (
+      SELECT user_id, event_type, ts,
+             min(CASE WHEN event_type = 'view' THEN ts END)
+               OVER (PARTITION BY user_id) AS first_view
+      FROM events
+    ),
+    s2 AS (
+      SELECT *,
+             min(CASE WHEN event_type = 'click' AND ts > first_view THEN ts END)
+               OVER (PARTITION BY user_id) AS first_click
+      FROM s1
+    ),
+    s3 AS (
+      SELECT *,
+             min(CASE WHEN event_type = 'purchase' AND ts > first_click
+                      THEN ts END)
+               OVER (PARTITION BY user_id) AS first_purchase
+      FROM s2
+    )"""
+
+# CTE units (user_id, arm, y): the A/B experiment units, one per user, arm
+# by user_id parity, y the user's total value in cents
+_AB_UNITS_SQL = """units AS (
+      SELECT user_id, user_id % 2 AS arm,
+             coalesce(sum(CAST(round(value * 100) AS BIGINT)), 0)::BIGINT AS y
+      FROM events GROUP BY user_id
+    )"""
 
 
 @query(
@@ -56,25 +103,8 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_events",
-    oracle="""
-    WITH s1 AS (
-      SELECT user_id, event_type, ts,
-             min(CASE WHEN event_type = 'view' THEN ts END)
-               OVER (PARTITION BY user_id) AS first_view
-      FROM events
-    ),
-    s2 AS (
-      SELECT *,
-             min(CASE WHEN event_type = 'click' AND ts > first_view THEN ts END)
-               OVER (PARTITION BY user_id) AS first_click
-      FROM s1
-    ),
-    s3 AS (
-      SELECT *,
-             min(CASE WHEN event_type = 'purchase' AND ts > first_click THEN ts END)
-               OVER (PARTITION BY user_id) AS first_purchase
-      FROM s2
-    )
+    oracle=f"""
+    WITH {_FUNNEL_STAGES_SQL}
     SELECT count(DISTINCT user_id) AS n_users,
            count(DISTINCT CASE WHEN first_view IS NOT NULL THEN user_id END)
              AS n_viewed,
@@ -656,13 +686,8 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_ewma",
-    oracle="""
-    WITH RECURSIVE ordered AS (
-      SELECT user_id, event_id, value::DOUBLE AS v,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_ORDERED_EVENTS_SQL},
     rec AS (
       SELECT user_id, event_id, rn, v AS s FROM ordered WHERE rn = 1
       UNION ALL
@@ -694,13 +719,8 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_holt_linear",
-    oracle="""
-    WITH RECURSIVE ordered AS (
-      SELECT user_id, event_id, value::DOUBLE AS v,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_ORDERED_EVENTS_SQL},
     rec AS (
       SELECT user_id, event_id, rn, v AS level, 0.0::DOUBLE AS trend
       FROM ordered WHERE rn = 1
@@ -775,38 +795,13 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal",
-    oracle="""
-    WITH base AS (
-      SELECT user_id, event_id,
-             CAST(round(value * 1000000) AS BIGINT) AS vs,
-             epoch_ms(ts) AS ems, hour(ts) AS hod
-      FROM events
-    ),
-    tr AS (
-      SELECT *, sum(vs) OVER w AS s, count(*) OVER w AS n
-      FROM base
-      WINDOW w AS (PARTITION BY user_id ORDER BY ems
-                   RANGE BETWEEN 43200000 PRECEDING AND 43200000 FOLLOWING)
-    ),
-    det AS (
-      SELECT user_id, event_id, hod, vs,
-             (2 * s + n) // (2 * n) AS trend6,
-             vs - ((2 * s + n) // (2 * n)) AS d
-      FROM tr
-    ),
-    seas AS (
-      SELECT user_id, hod,
-             CASE WHEN sum(d) >= 0
-                  THEN (2 * sum(d) + count(*)) // (2 * count(*))
-                  ELSE -((-2 * sum(d) + count(*)) // (2 * count(*))) END
-               AS seasonal6
-      FROM det GROUP BY 1, 2
-    )
-    SELECT det.user_id, det.event_id,
+    oracle=f"""
+    WITH {seasonal_decompose_sql()}
+    SELECT user_id, event_id,
            trend6 / 1000000.0 AS trend,
            seasonal6 / 1000000.0 AS seasonal,
            (d - seasonal6) / 1000000.0 AS resid
-    FROM det JOIN seas ON det.user_id = seas.user_id AND det.hod = seas.hod
+    FROM decomp
     """,
 )
 def ts_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,37 +959,9 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_anomaly_seasonal",
-    oracle="""
-    WITH base AS (
-      SELECT user_id, event_id,
-             CAST(round(value * 1000000) AS BIGINT) AS vs,
-             epoch_ms(ts) AS ems, hour(ts) AS hod
-      FROM events
-    ),
-    tr AS (
-      SELECT *, sum(vs) OVER w AS s, count(*) OVER w AS n
-      FROM base
-      WINDOW w AS (PARTITION BY user_id ORDER BY ems
-                   RANGE BETWEEN 43200000 PRECEDING AND 43200000 FOLLOWING)
-    ),
-    det AS (
-      SELECT user_id, event_id, hod,
-             vs - ((2 * s + n) // (2 * n)) AS d
-      FROM tr
-    ),
-    seas AS (
-      SELECT user_id, hod,
-             CASE WHEN sum(d) >= 0
-                  THEN (2 * sum(d) + count(*)) // (2 * count(*))
-                  ELSE -((-2 * sum(d) + count(*)) // (2 * count(*))) END
-               AS seasonal6
-      FROM det GROUP BY 1, 2
-    ),
-    resid AS (
-      SELECT det.user_id, det.event_id, (d - seasonal6) AS r6
-      FROM det JOIN seas ON det.user_id = seas.user_id
-                        AND det.hod = seas.hod
-    ),
+    oracle=f"""
+    WITH {seasonal_decompose_sql()},
+    resid AS (SELECT user_id, event_id, (d - seasonal6) AS r6 FROM decomp),
     meds AS (
       SELECT user_id, quantile_disc(r6, 0.5) AS med FROM resid GROUP BY 1
     ),
@@ -1622,13 +1589,8 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_conversion_rate",
-    oracle="""
-    WITH v AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
+    oracle=f"""
+    WITH {ASOF_INPUTS_SQL},
     attributed AS (
       SELECT view_id, view_hour, purchase_id FROM (
         SELECT v.event_id AS view_id, hour(v.ts) AS view_hour,
@@ -1657,16 +1619,8 @@ def funnel_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openmrs_patient_migration_script_spark.operators.joins import asof_join
 
     e = load_table(spark, sf_dir, "events")
-    views = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
+    views = asof_side(e, "view")
+    purchases = asof_side(e, "purchase")
     attributed = asof_join(
         views,
         purchases,
@@ -2398,13 +2352,8 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_holt_winters",
-    oracle="""
-    WITH RECURSIVE ordered AS (
-      SELECT user_id, event_id, value::DOUBLE AS v,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_ORDERED_EVENTS_SQL},
     seed AS (
       SELECT user_id,
              (((max(CASE WHEN rn = 1 THEN v END)
@@ -2853,11 +2802,7 @@ _BOOT_R = 200  # replicates; bounded-domain window (the dq_drift_ks rule)
 @query(
     "ab_bootstrap_ci",
     oracle=f"""
-    WITH units AS (
-      SELECT user_id, user_id % 2 AS arm,
-             coalesce(sum(CAST(round(value * 100) AS BIGINT)), 0)::BIGINT AS y
-      FROM events GROUP BY user_id
-    ),
+    WITH {_AB_UNITS_SQL},
     reps AS (
       SELECT u.user_id, u.arm, u.y, r.r,
              ('0x' || substr(md5(u.user_id::VARCHAR || ':' || r.r::VARCHAR),
@@ -3237,26 +3182,8 @@ def agg_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_time_to_convert",
-    oracle="""
-    WITH s1 AS (
-      SELECT user_id, event_type, ts,
-             min(CASE WHEN event_type = 'view' THEN ts END)
-               OVER (PARTITION BY user_id) AS first_view
-      FROM events
-    ),
-    s2 AS (
-      SELECT *,
-             min(CASE WHEN event_type = 'click' AND ts > first_view THEN ts END)
-               OVER (PARTITION BY user_id) AS first_click
-      FROM s1
-    ),
-    s3 AS (
-      SELECT *,
-             min(CASE WHEN event_type = 'purchase' AND ts > first_click
-                      THEN ts END)
-               OVER (PARTITION BY user_id) AS first_purchase
-      FROM s2
-    ),
+    oracle=f"""
+    WITH {_FUNNEL_STAGES_SQL},
     per_user AS (
       SELECT user_id, max(first_view) AS fv, max(first_click) AS fc,
              max(first_purchase) AS fp
@@ -3481,41 +3408,17 @@ def ab_ratio_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal_strength",
-    oracle="""
-    WITH base AS (
-      SELECT user_id, event_id,
-             CAST(round(value * 1000000) AS BIGINT) AS vs,
-             epoch_ms(ts) AS ems, hour(ts) AS hod
-      FROM events
-    ),
-    tr AS (
-      SELECT *, sum(vs) OVER w AS s, count(*) OVER w AS n
-      FROM base
-      WINDOW w AS (PARTITION BY user_id ORDER BY ems
-                   RANGE BETWEEN 43200000 PRECEDING AND 43200000 FOLLOWING)
-    ),
-    det AS (
-      SELECT user_id, event_id, hod,
-             vs - ((2 * s + n) // (2 * n)) AS d
-      FROM tr
-    ),
-    seas AS (
-      SELECT user_id, hod,
-             CASE WHEN sum(d) >= 0
-                  THEN (2 * sum(d) + count(*)) // (2 * count(*))
-                  ELSE -((-2 * sum(d) + count(*)) // (2 * count(*))) END
-               AS seasonal6
-      FROM det GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {seasonal_decompose_sql()},
     s AS (
-      SELECT det.user_id,
+      SELECT user_id,
              count(*)::BIGINT AS n_events,
              sum(d::HUGEINT) AS sd,
              sum(d::HUGEINT * d) AS sdd,
              sum((d - seasonal6)::HUGEINT) AS sr,
              sum((d - seasonal6)::HUGEINT * (d - seasonal6)) AS srr
-      FROM det JOIN seas ON det.user_id = seas.user_id AND det.hod = seas.hod
-      GROUP BY det.user_id
+      FROM decomp
+      GROUP BY user_id
     )
     SELECT user_id, n_events,
            CASE WHEN n_events::HUGEINT * sdd - sd * sd = 0 THEN 0.0
@@ -3556,11 +3459,7 @@ _POWER_Z = 2.801585
 @query(
     "ab_power_mde",
     oracle=f"""
-    WITH units AS (
-      SELECT user_id, user_id % 2 AS arm,
-             coalesce(sum(CAST(round(value * 100) AS BIGINT)), 0)::BIGINT AS y
-      FROM events GROUP BY user_id
-    ),
+    WITH {_AB_UNITS_SQL},
     s AS (
       SELECT arm, count(*)::BIGINT AS n, sum(y)::BIGINT AS sum_y,
              sum(y::HUGEINT * y)::BIGINT AS sum_yy

@@ -20,6 +20,9 @@ from openmrs_patient_migration_script_spark.operators.dedup import (
     minhash_signatures_sql,
     shingles_sql,
 )
+from openmrs_patient_migration_script_spark.operators.graph import (
+    connected_components_sql,
+)
 from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket_sql
 from openmrs_patient_migration_script_spark.operators.text import (
     STOPWORDS,
@@ -38,7 +41,7 @@ _MIN_TOKENS = 12
 _QUALITY = quality_exprs_sql()
 _SCORES, _CASE = langid_exprs_sql()
 
-# The corpus_prep stage chain up to the near-dup cluster labels `comp`,
+# The corpus_prep stage chain up to the near-dup cluster labels `labels`,
 # shared by the corpus_prep and corpus_dedup_funnel oracles.
 _PREP_CTES = f"""
     WITH RECURSIVE scored AS (
@@ -69,16 +72,7 @@ _PREP_CTES = f"""
       JOIN bands b ON a.band = b.band AND a.sig_str = b.sig_str
                   AND a.doc_id < b.doc_id
     ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    comp AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)"""
+    {connected_components_sql()}"""
 
 # the survivors: exact-dedup rows that are their near-dup cluster's minimum
 # (or in no cluster), with the split bucket b
@@ -88,8 +82,8 @@ _SURVIVORS = f"""
              {hash_bucket_sql("doc_id", 1000)} AS b
       FROM exact
     ) e
-    LEFT JOIN comp ON comp.node = e.doc_id
-    WHERE comp.node IS NULL OR comp.cluster = e.doc_id"""
+    LEFT JOIN labels ON labels.node = e.doc_id
+    WHERE labels.node IS NULL OR labels.cluster = e.doc_id"""
 
 _CORPUS_PREP_ORACLE = f"""{_PREP_CTES}
     SELECT e.doc_id AS key, e.predicted_lang, e.quality_score,
@@ -331,19 +325,7 @@ def corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE pairs AS (
       SELECT key_a, key_b FROM ({ORACLES["dedup_minhash"]}) mh
     ),
-    sym AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, r.label FROM sym s JOIN reach r ON r.node = s.b
-    ),
-    labels AS (
-      SELECT node, min(label) AS cluster FROM reach GROUP BY node
-    ),
+    {connected_components_sql()},
     removed AS (
       SELECT node AS doc_id FROM labels WHERE node <> cluster
     )

@@ -13,7 +13,7 @@ operators/dedup.py wired to the correctness gate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.operators.dedup import (
@@ -31,6 +31,7 @@ from openmrs_patient_migration_script_spark.operators.graph import (
     PAGERANK_DAMPING_PCT,
     PAGERANK_N_ITER,
     PAGERANK_SCALE,
+    connected_components_sql,
 )
 from openmrs_patient_migration_script_spark.operators.similarity import srp_hashed_sql
 from openmrs_patient_migration_script_spark.plans.registry import query
@@ -40,20 +41,53 @@ from openmrs_patient_migration_script_spark.sources import load_table
 # digits to letters so Levenshtein distance == number of differing digit
 # positions — fully deterministic and reproducible in ANSI SQL.
 _NAME_SQL = "translate(lpad(CAST(c_custkey AS VARCHAR), 9, '0'), '0123456789', 'abcdefghij')"
+# the 7-character name-prefix block of every fuzzy-name comparison
+_BLOCK_SQL = "substring(a.name, 1, 7) = substring(b.name, 1, 7)"
+# the CTE named (key, name) over customer, the SQL form of `named_customers`
+NAMED_SQL = f"""named AS (
+      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
+    )"""
+
+
+def _name() -> Column:
+    """The Spark form of `_NAME_SQL`."""
+    return F.translate(
+        F.lpad(F.col("c_custkey").cast("string"), 9, "0"),
+        "0123456789",
+        "abcdefghij",
+    )
+
+
+def named_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(key, name) per customer — the input of every fuzzy-name query."""
+    c = load_table(spark, sf_dir, "customer")
+    return c.select(F.col("c_custkey").alias("key"), _name().alias("name"))
+
+
+def _fuzzy_pairs_sql(suffix: str = "") -> str:
+    """SQL twin of `dedup_fuzzy` over the CTE ``named{suffix}``: the CTE
+    ``pairs{suffix}`` (key_a, key_b, dist)."""
+    return f"""pairs{suffix} AS (
+      SELECT a.key AS key_a, b.key AS key_b,
+             levenshtein(a.name, b.name) AS dist
+      FROM named{suffix} a JOIN named{suffix} b
+        ON {_BLOCK_SQL}
+       AND a.key < b.key
+      WHERE levenshtein(a.name, b.name) <= 1
+    )"""
+
+
+# the fuzzy-name pair graph the name-graph oracles start from: CTEs named
+# and pairs
+_FUZZY_PAIRS_SQL = f"""{NAMED_SQL},
+    {_fuzzy_pairs_sql()}"""
 
 
 @query(
     "dedup_fuzzy",
     oracle=f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    )
-    SELECT a.key AS key_a, b.key AS key_b,
-           levenshtein(a.name, b.name) AS dist
-    FROM named a JOIN named b
-      ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-     AND a.key < b.key
-    WHERE levenshtein(a.name, b.name) <= 1
+    WITH {_FUZZY_PAIRS_SQL}
+    SELECT key_a, key_b, dist FROM pairs
     """,
 )
 def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,17 +95,9 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's fuzzy patient-matching shape (SURVEY.md §2.3 J9). Candidates
     only within a name-prefix block: the block key is the shuffle key, so
     the O(n²) comparator is bounded by the largest block, not the table."""
-    c = load_table(spark, sf_dir, "customer")
-    named = c.select(
-        F.col("c_custkey").alias("key"),
-        F.translate(
-            F.lpad(F.col("c_custkey").cast("string"), 9, "0"),
-            "0123456789",
-            "abcdefghij",
-        ).alias("name"),
-    )
     return fuzzy_dedup_pairs(
-        named, "key", "name", [F.substring("name", 1, 7)], max_distance=1
+        named_customers(spark, sf_dir), "key", "name", [F.substring("name", 1, 7)],
+        max_distance=1,
     )
 
 
@@ -81,11 +107,11 @@ _JACCARD_MAX_DF = 50
 
 _CONTAIN_PCT = 80  # emit pairs where >= 80% of a's shingles appear in b
 
-
-@query(
-    "dedup_containment",
-    oracle=f"""
-    WITH {shingles_sql()},
+# the shingle inverted index of the declared pair-overlap queries: CTEs
+# sizes (doc_id, n_sh) and inter (key_a < key_b, inter_cnt — pairs that
+# share >= _JACCARD_MIN_SHARED shingles of document frequency <=
+# _JACCARD_MAX_DF), over `shingles_sql`
+_SHARED_SHINGLES_SQL = f"""{shingles_sql()},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     dfq AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle),
     shf AS (
@@ -93,20 +119,24 @@ _CONTAIN_PCT = 80  # emit pairs where >= 80% of a's shingles appear in b
       WHERE dfc <= {_JACCARD_MAX_DF}
     ),
     inter AS (
-      SELECT a.doc_id AS key_lo, b.doc_id AS key_hi, count(*) AS inter_cnt
+      SELECT a.doc_id AS key_a, b.doc_id AS key_b, count(*) AS inter_cnt
       FROM shf a JOIN shf b USING (shingle)
       WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2
       HAVING count(*) >= {_JACCARD_MIN_SHARED}
-    ),
+    )"""
+
+
+@query(
+    "dedup_containment",
+    oracle=f"""
+    WITH {_SHARED_SHINGLES_SQL},
     oriented AS (
-      SELECT key_lo AS key_a, key_hi AS key_b, inter_cnt,
-             sa.n_sh AS n_a
-      FROM inter JOIN sizes sa ON sa.doc_id = key_lo
+      SELECT key_a, key_b, inter_cnt, sa.n_sh AS n_a
+      FROM inter JOIN sizes sa ON sa.doc_id = key_a
       UNION ALL
-      SELECT key_hi AS key_a, key_lo AS key_b, inter_cnt,
-             sb.n_sh AS n_a
-      FROM inter JOIN sizes sb ON sb.doc_id = key_hi
+      SELECT key_b AS key_a, key_a AS key_b, inter_cnt, sb.n_sh AS n_a
+      FROM inter JOIN sizes sb ON sb.doc_id = key_b
     )
     SELECT key_a, key_b, inter_cnt, n_a::BIGINT AS n_a
     FROM oriented
@@ -142,20 +172,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH {shingles_sql()},
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    dfq AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle),
-    shf AS (
-      SELECT sh.doc_id, sh.shingle FROM sh JOIN dfq USING (shingle)
-      WHERE dfc <= {_JACCARD_MAX_DF}
-    ),
-    inter AS (
-      SELECT a.doc_id AS key_a, b.doc_id AS key_b, count(*) AS inter_cnt
-      FROM shf a JOIN shf b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING count(*) >= {_JACCARD_MIN_SHARED}
-    )
+    WITH {_SHARED_SHINGLES_SQL}
     SELECT key_a, key_b, inter_cnt,
            sa.n_sh + sb.n_sh - inter_cnt AS union_cnt
     FROM inter
@@ -282,27 +299,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    )
-    SELECT node, min(label) AS cluster FROM reach GROUP BY node
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
+    {connected_components_sql()}
+    SELECT node, cluster FROM labels
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,27 +321,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_components_star",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    )
-    SELECT node, min(label) AS cluster FROM reach GROUP BY node
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
+    {connected_components_sql()}
+    SELECT node, cluster FROM labels
     """,
 )
 def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,16 +351,7 @@ def _labelprop_oracle() -> str:
     row_number argmax whose ORDER BY (cnt DESC, label ASC) is exactly the
     engine's max_by(label, (cnt, -label)) struct ordering."""
     sql = f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH {_FUZZY_PAIRS_SQL},
     e AS (
       SELECT key_a AS u, key_b AS v FROM pairs
       UNION ALL SELECT key_b, key_a FROM pairs
@@ -496,32 +468,28 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degree_assortativity(pairs, src="part_a", dst="part_b")
 
 
-def _pagerank_oracle() -> str:
+def _pagerank_oracle(seed: str) -> str:
     """Unrolled fixed-point PageRank replay: every power iteration is a
     CTE chain of integer arithmetic (the same `div`/`//` semantics on
     both engines — non-negative operands, so trunc == floor), so the
-    iterative algorithm is EXACTLY reproducible, not approximately."""
+    iterative algorithm is EXACTLY reproducible, not approximately. The
+    teleport floor lands on the nodes where the SQL predicate ``seed``
+    (over ``deg.u``) holds: ``TRUE`` for uniform PageRank, a seed set for
+    the personalized form; everything stays integer."""
     n_iter, d, scale = PAGERANK_N_ITER, PAGERANK_DAMPING_PCT, PAGERANK_SCALE
     sql = f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH {_FUZZY_PAIRS_SQL},
     e AS (
       SELECT key_a AS u, key_b AS v FROM pairs
       UNION ALL SELECT key_b, key_a FROM pairs
     ),
     deg AS (SELECT u, count(*) AS outdeg FROM e GROUP BY u),
-    nn AS (SELECT count(*) AS n FROM deg),
+    ns AS (SELECT count(*) AS n FROM deg WHERE {seed}),
     r0 AS (
-      SELECT deg.u, deg.outdeg, CAST({scale} // nn.n AS BIGINT) AS r
-      FROM deg CROSS JOIN nn
+      SELECT deg.u, deg.outdeg,
+             CAST(CASE WHEN {seed} THEN {scale} // ns.n ELSE 0 END
+                  AS BIGINT) AS r
+      FROM deg CROSS JOIN ns
     )"""
     for i in range(1, n_iter + 1):
         sql += f""",
@@ -532,9 +500,11 @@ def _pagerank_oracle() -> str:
     inf{i} AS (SELECT node, sum(c) AS inflow FROM c{i} GROUP BY node),
     r{i} AS (
       SELECT deg.u, deg.outdeg,
-             CAST((({100 - d} * ({scale} // nn.n))
-                   + {d} * coalesce(inf{i}.inflow, 0)) // 100 AS BIGINT) AS r
-      FROM deg CROSS JOIN nn LEFT JOIN inf{i} ON inf{i}.node = deg.u
+             CAST(((CASE WHEN {seed}
+                         THEN {100 - d} * ({scale} // ns.n) ELSE 0 END)
+                   + {d} * coalesce(inf{i}.inflow, 0)) // 100
+                  AS BIGINT) AS r
+      FROM deg CROSS JOIN ns LEFT JOIN inf{i} ON inf{i}.node = deg.u
     )"""
     sql += f"""
     SELECT u AS node, r AS rank_scaled, r / {scale}.0 AS rank
@@ -543,7 +513,7 @@ def _pagerank_oracle() -> str:
     return sql
 
 
-@query("graph_pagerank", oracle=_pagerank_oracle())
+@query("graph_pagerank", oracle=_pagerank_oracle("TRUE"))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9d (r4): fixed-point PageRank over the fuzzy-pair graph
     (operators/graph.py::pagerank) — node centrality for duplicate-cluster
@@ -563,16 +533,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_triangles",
     oracle=f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    )
+    WITH {_FUZZY_PAIRS_SQL}
     SELECT count(*) AS n_triangles
     FROM pairs e1
     JOIN pairs e2 ON e2.key_a = e1.key_b
@@ -599,32 +560,11 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "etl_golden_record",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    clusters AS (
-      SELECT node, min(label) AS cluster FROM reach GROUP BY node
-    ),
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
+    {connected_components_sql()},
     members AS (
       SELECT cl.cluster, cl.node, c.c_acctbal
-      FROM clusters cl JOIN customer c ON c.c_custkey = cl.node
+      FROM labels cl JOIN customer c ON c.c_custkey = cl.node
     )
     SELECT cluster, node AS survivor_key,
            round(c_acctbal, 2) AS survivor_bal, n_members
@@ -706,16 +646,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_link_prediction",
     oracle=f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    e AS (
-      SELECT a.key AS u, b.key AS v
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH {_FUZZY_PAIRS_SQL},
+    e AS (SELECT key_a AS u, key_b AS v FROM pairs),
     sym AS (
       SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e
     ),
@@ -998,7 +930,7 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ELSE 'M' END AS l1,
              CASE WHEN a.nation = b.nation THEN 'E' ELSE 'M' END AS l2,
              CASE WHEN a.segment = b.segment THEN 'E' ELSE 'M' END AS l3
-      FROM a JOIN b ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
+      FROM a JOIN b ON {_BLOCK_SQL}
     ),
     s AS (
       SELECT key_a, key_b, l1 || l2 || l3 AS pattern,
@@ -1029,11 +961,7 @@ def link_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = load_table(spark, sf_dir, "customer")
-    name = F.translate(
-        F.lpad(F.col("c_custkey").cast("string"), 9, "0"),
-        "0123456789",
-        "abcdefghij",
-    )
+    name = _name()
     k = F.col("c_custkey")
     rega = c.select(
         k.cast("long").alias("rid"),
@@ -1136,6 +1064,80 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doubling_graph_sql(stride: bool) -> str:
+    """SQL twin of `_doubling_edges`, canonicalized: the CTEs ``mx`` (the
+    largest custkey) and ``e0`` (u < v, one row per undirected edge,
+    self-loops out)."""
+    arms = []
+    if stride:
+        for d in (1, 2, 3):
+            arms.append(f"""
+      SELECT c_custkey AS u, c_custkey + {d} AS v FROM customer, mx
+      WHERE c_custkey + {d} <= m
+        AND (c_custkey - 1 + {d}) // 20 = (c_custkey - 1) // 20""")
+    for f in (2, 3):
+        arms.append(f"""
+      SELECT c_custkey AS u, c_custkey * {f} AS v FROM customer, mx
+      WHERE c_custkey * {f} <= m""")
+    union = "\n      UNION ALL".join(arms)
+    return f"""mx AS (SELECT max(c_custkey) AS m FROM customer),
+    e0 AS MATERIALIZED (
+      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
+      FROM ({union}
+      ) WHERE u <> v
+    )"""
+
+
+def _doubling_edges(spark: SparkSession, sf_dir: str, stride: bool) -> DataFrame:
+    """The "doubling graph" over custkeys as (key_a, key_b): u—2u and
+    u—3u edges, degrees 0-4. ``stride`` adds the stride graph (u—u+d,
+    d <= 3, within groups of 20: triangle-rich interiors). One eager job
+    reads the largest custkey."""
+    c = load_table(spark, sf_dir, "customer")
+    mx = c.agg(F.max("c_custkey")).collect()[0][0]
+    parts = []
+    if stride:
+        for d in (1, 2, 3):
+            parts.append(
+                c.filter(
+                    (F.col("c_custkey") + d <= mx)
+                    & (
+                        F.expr(f"(c_custkey - 1 + {d}) div 20")
+                        == F.expr("(c_custkey - 1) div 20")
+                    )
+                ).select(
+                    F.col("c_custkey").alias("key_a"),
+                    (F.col("c_custkey") + d).alias("key_b"),
+                )
+            )
+    for m in (2, 3):
+        parts.append(
+            c.filter(F.col("c_custkey") * m <= mx).select(
+                F.col("c_custkey").alias("key_a"),
+                (F.col("c_custkey") * m).alias("key_b"),
+            )
+        )
+    edges = parts[0]
+    for part in parts[1:]:
+        edges = edges.unionByName(part)
+    return edges
+
+
+def _peel_round_sql(name: str, prev: str, k: int) -> str:
+    """One synchronous k-core peel round as the CTE ``name``: the edges of
+    the symmetrized edge CTE ``prev`` whose endpoints both keep degree
+    >= ``k`` (preceded by a comma)."""
+    return f""",
+    {name} AS (
+      SELECT u, v FROM (
+        SELECT u, v,
+               count(*) OVER (PARTITION BY u) AS du,
+               count(*) OVER (PARTITION BY v) AS dv
+        FROM {prev}
+      ) WHERE du >= {k} AND dv >= {k}
+    )"""
+
+
 def _kcore_oracle(k: int = 2, rounds: int = 6) -> str:
     """Unrolled synchronous peeling, ONE reference to the previous round
     per CTE: in a symmetrized edge list ``count(*) OVER (PARTITION BY
@@ -1145,31 +1147,11 @@ def _kcore_oracle(k: int = 2, rounds: int = 6) -> str:
     inlining re-expands the whole prefix per reference: 2^rounds planner
     blowup, measured minutes at six rounds vs 0.05 s for this form.)"""
     sql = f"""
-    WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
-    e AS (
-      SELECT c_custkey AS u, c_custkey * 2 AS v FROM customer, mx
-      WHERE c_custkey * 2 <= m
-      UNION ALL
-      SELECT c_custkey AS u, c_custkey * 3 AS v FROM customer, mx
-      WHERE c_custkey * 3 <= m
-    ),
-    canon AS (
-      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-      FROM e WHERE u <> v
-    ),
-    s0 AS (SELECT u, v FROM canon
-           UNION ALL SELECT v AS u, u AS v FROM canon)"""
+    WITH {_doubling_graph_sql(stride=False)},
+    s0 AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0)"""
     prev = "s0"
     for i in range(1, rounds + 1):
-        sql += f""",
-    s{i} AS (
-      SELECT u, v FROM (
-        SELECT u, v,
-               count(*) OVER (PARTITION BY u) AS du,
-               count(*) OVER (PARTITION BY v) AS dv
-        FROM {prev}
-      ) WHERE du >= {k} AND dv >= {k}
-    )"""
+        sql += _peel_round_sql(f"s{i}", prev, k)
         prev = f"s{i}"
     sql += f"""
     SELECT u AS node, count(*)::BIGINT AS core_deg FROM {prev} GROUP BY u"""
@@ -1192,43 +1174,15 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     are self-loops that would otherwise fabricate a deg-4 core."""
     from openmrs_patient_migration_script_spark.operators.graph import k_core
 
-    c = load_table(spark, sf_dir, "customer")
-    mx = c.agg(F.max("c_custkey")).collect()[0][0]
-    e2 = c.filter(F.col("c_custkey") * 2 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 2).alias("key_b"),
-    )
-    e3 = c.filter(F.col("c_custkey") * 3 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 3).alias("key_b"),
-    )
-    return k_core(e2.unionByName(e3), k=2, n_rounds=6)
+    return k_core(_doubling_edges(spark, sf_dir, stride=False), k=2, n_rounds=6)
 
 
 @query(
     "dedup_clusters_incremental",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    )
-    SELECT node, min(label) AS cluster FROM reach GROUP BY node
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
+    {connected_components_sql()}
+    SELECT node, cluster FROM labels
     """,
 )
 def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1269,16 +1223,7 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_bfs",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
     e AS (
       SELECT key_a AS u, key_b AS v FROM pairs
       UNION ALL SELECT key_b, key_a FROM pairs
@@ -1315,22 +1260,9 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_dist",
-    oracle="""
-    WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
-    e AS (
-      SELECT c_custkey AS u, c_custkey * 2 AS v FROM customer, mx
-      WHERE c_custkey * 2 <= m
-      UNION ALL
-      SELECT c_custkey AS u, c_custkey * 3 AS v FROM customer, mx
-      WHERE c_custkey * 3 <= m
-    ),
-    canon AS (
-      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-      FROM e WHERE u <> v
-    ),
-    sym AS (
-      SELECT u, v FROM canon UNION ALL SELECT v AS u, u AS v FROM canon
-    ),
+    oracle=f"""
+    WITH {_doubling_graph_sql(stride=False)},
+    sym AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     deg AS (SELECT u, count(*)::BIGINT AS d FROM sym GROUP BY u)
     SELECT CAST(length(bin(d)) - 1 AS INTEGER) AS deg_bin,
            CAST(2 ** (length(bin(d)) - 1) AS BIGINT) AS bin_lo,
@@ -1352,17 +1284,7 @@ def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus one (Spark conv(d,10,2), DuckDB bin(d)) — so no float log
     boundary can flip a bin. One degree agg + one bounded bin agg; at
     100 TB the output is ~64 rows regardless of graph size."""
-    c = load_table(spark, sf_dir, "customer")
-    mx = c.agg(F.max("c_custkey")).collect()[0][0]
-    e2 = c.filter(F.col("c_custkey") * 2 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 2).alias("key_b"),
-    )
-    e3 = c.filter(F.col("c_custkey") * 3 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 3).alias("key_b"),
-    )
-    edges = e2.unionByName(e3)
+    edges = _doubling_edges(spark, sf_dir, stride=False)
     canon = (
         edges.select(
             F.least("key_a", "key_b").alias("u"),
@@ -1400,18 +1322,12 @@ def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH lab AS (
       SELECT node, community FROM ({_labelprop_oracle()}) t
     ),
-    named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS u, b.key AS v
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    {_FUZZY_PAIRS_SQL},
     mm AS (SELECT count(*)::BIGINT AS m FROM pairs),
-    sym AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
+    sym AS (
+      SELECT key_a AS u, key_b AS v FROM pairs
+      UNION ALL SELECT key_b, key_a FROM pairs
+    ),
     deg AS (SELECT u, count(*)::BIGINT AS d FROM sym GROUP BY u),
     comm AS (
       SELECT lab.community,
@@ -1423,8 +1339,8 @@ def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra AS (
       SELECT la.community, count(*)::BIGINT AS intra_edges
       FROM pairs p
-      JOIN lab la ON p.u = la.node
-      JOIN lab lb ON p.v = lb.node
+      JOIN lab la ON p.key_a = la.node
+      JOIN lab lb ON p.key_b = lb.node
       WHERE la.community = lb.community
       GROUP BY la.community
     )
@@ -1464,16 +1380,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_sssp",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
     e AS (
       SELECT key_a AS u, key_b AS v,
              1 + (key_a + key_b) % 7 AS w FROM pairs
@@ -1786,59 +1693,7 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _ppr_oracle() -> str:
-    """Unrolled personalized-PageRank replay: `_pagerank_oracle`'s CTE
-    chain with the teleport floor concentrated on the seed set
-    (custkey % 97 = 0) instead of uniform — the CASE floor and the
-    seeded r0 are the only differences, everything stays integer."""
-    n_iter, d, scale = PAGERANK_N_ITER, PAGERANK_DAMPING_PCT, PAGERANK_SCALE
-    seed = "deg.u % 97 = 0"
-    sql = f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    e AS (
-      SELECT key_a AS u, key_b AS v FROM pairs
-      UNION ALL SELECT key_b, key_a FROM pairs
-    ),
-    deg AS (SELECT u, count(*) AS outdeg FROM e GROUP BY u),
-    ns AS (SELECT count(*) AS n FROM deg WHERE deg.u % 97 = 0),
-    r0 AS (
-      SELECT deg.u, deg.outdeg,
-             CAST(CASE WHEN {seed} THEN {scale} // ns.n ELSE 0 END
-                  AS BIGINT) AS r
-      FROM deg CROSS JOIN ns
-    )"""
-    for i in range(1, n_iter + 1):
-        sql += f""",
-    c{i} AS (
-      SELECT e.v AS node, (r{i - 1}.r // r{i - 1}.outdeg) AS c
-      FROM e JOIN r{i - 1} ON e.u = r{i - 1}.u
-    ),
-    inf{i} AS (SELECT node, sum(c) AS inflow FROM c{i} GROUP BY node),
-    r{i} AS (
-      SELECT deg.u, deg.outdeg,
-             CAST(((CASE WHEN {seed}
-                         THEN {100 - d} * ({scale} // ns.n) ELSE 0 END)
-                   + {d} * coalesce(inf{i}.inflow, 0)) // 100
-                  AS BIGINT) AS r
-      FROM deg CROSS JOIN ns LEFT JOIN inf{i} ON inf{i}.node = deg.u
-    )"""
-    sql += f"""
-    SELECT u AS node, r AS rank_scaled, r / {scale}.0 AS rank
-    FROM r{n_iter}
-    """
-    return sql
-
-
-@query("graph_ppr", oracle=_ppr_oracle())
+@query("graph_ppr", oracle=_pagerank_oracle("deg.u % 97 = 0"))
 def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9o (r8): personalized PageRank — the teleport mass lands only on
     a seed set (custkey % 97 = 0, the `graph_bfs` seed convention), so
@@ -1850,7 +1705,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer recurrence (floors ride the seed rows as a per-node column
     instead of a literal), same two node-keyed shuffles per iteration,
     and the unrolled oracle replays all four iterations bit-exactly —
-    the seeded CASE floor is the only delta from `_pagerank_oracle`."""
+    `_pagerank_oracle` with the seed set as its teleport predicate."""
     from openmrs_patient_migration_script_spark.operators.graph import pagerank
 
     pairs = dedup_fuzzy(spark, sf_dir)
@@ -1873,34 +1728,14 @@ def _coreness_oracle() -> str:
     constant ×(max_k) re-expansion, not the exponential per-round one."""
     max_k, rounds = _CORENESS_MAX_K, _CORENESS_ROUNDS
     sql = f"""
-    WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
-    e AS (
-      SELECT c_custkey AS u, c_custkey * 2 AS v FROM customer, mx
-      WHERE c_custkey * 2 <= m
-      UNION ALL
-      SELECT c_custkey AS u, c_custkey * 3 AS v FROM customer, mx
-      WHERE c_custkey * 3 <= m
-    ),
-    canon AS (
-      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-      FROM e WHERE u <> v
-    ),
-    s0 AS (SELECT u, v FROM canon
-           UNION ALL SELECT v AS u, u AS v FROM canon)"""
+    WITH {_doubling_graph_sql(stride=False)},
+    s0 AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0)"""
     final = {}
     for k in range(2, max_k + 1):
         prev = "s0"
         for i in range(1, rounds + 1):
             name = f"k{k}r{i}"
-            sql += f""",
-    {name} AS (
-      SELECT u, v FROM (
-        SELECT u, v,
-               count(*) OVER (PARTITION BY u) AS du,
-               count(*) OVER (PARTITION BY v) AS dv
-        FROM {prev}
-      ) WHERE du >= {k} AND dv >= {k}
-    )"""
+            sql += _peel_round_sql(name, prev, k)
             prev = name
         final[k] = prev
     member_joins = "".join(
@@ -1934,47 +1769,18 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain per k, each CTE referencing only its predecessor."""
     from openmrs_patient_migration_script_spark.operators.graph import coreness
 
-    c = load_table(spark, sf_dir, "customer")
-    mx = c.agg(F.max("c_custkey")).collect()[0][0]
-    e2 = c.filter(F.col("c_custkey") * 2 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 2).alias("key_b"),
-    )
-    e3 = c.filter(F.col("c_custkey") * 3 <= mx).select(
-        F.col("c_custkey").alias("key_a"),
-        (F.col("c_custkey") * 3).alias("key_b"),
-    )
     return coreness(
-        e2.unionByName(e3), max_k=_CORENESS_MAX_K, n_rounds=_CORENESS_ROUNDS
+        _doubling_edges(spark, sf_dir, stride=False),
+        max_k=_CORENESS_MAX_K,
+        n_rounds=_CORENESS_ROUNDS,
     )
 
 
 @query(
     "graph_components_size_dist",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    labels AS (
-      SELECT node, min(label) AS cluster FROM reach GROUP BY node
-    ),
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
+    {connected_components_sql()},
     sizes AS (
       SELECT cluster, count(*)::BIGINT AS cluster_size
       FROM labels GROUP BY cluster
@@ -2019,16 +1825,7 @@ def graph_components_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_edge_support",
     oracle=f"""
-    WITH named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH {_FUZZY_PAIRS_SQL},
     sym AS (
       SELECT key_a AS a, key_b AS b FROM pairs
       UNION ALL
@@ -2082,24 +1879,8 @@ def _ktruss_oracle(k: int = 4, rounds: int = 3) -> str:
     the `_kcore_oracle` planner lesson, cubed. A MATERIALIZED round is
     computed exactly once, the SQL mirror of the Spark loop's per-round
     localCheckpoint."""
-    arms = []
-    for d in (1, 2, 3):
-        arms.append(f"""
-      SELECT c_custkey AS u, c_custkey + {d} AS v FROM customer, mx
-      WHERE c_custkey + {d} <= m
-        AND (c_custkey - 1 + {d}) // 20 = (c_custkey - 1) // 20""")
-    for f in (2, 3):
-        arms.append(f"""
-      SELECT c_custkey AS u, c_custkey * {f} AS v FROM customer, mx
-      WHERE c_custkey * {f} <= m""")
-    union = "\n      UNION ALL".join(arms)
     sql = f"""
-    WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-      FROM ({union}
-      ) WHERE u <> v
-    )"""
+    WITH {_doubling_graph_sql(stride=True)}"""
     prev = "e0"
     for r in range(1, rounds + 1):
         sql += f""",
@@ -2149,32 +1930,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_ktruss_oracle` MATERIALIZED unrolled rounds."""
     from openmrs_patient_migration_script_spark.operators.graph import ktruss
 
-    c = load_table(spark, sf_dir, "customer")
-    mx = c.agg(F.max("c_custkey")).collect()[0][0]
-    parts = []
-    for d in (1, 2, 3):
-        parts.append(
-            c.filter(
-                (F.col("c_custkey") + d <= mx)
-                & (
-                    F.expr(f"(c_custkey - 1 + {d}) div 20")
-                    == F.expr("(c_custkey - 1) div 20")
-                )
-            ).select(
-                F.col("c_custkey").alias("key_a"),
-                (F.col("c_custkey") + d).alias("key_b"),
-            )
-        )
-    for m in (2, 3):
-        parts.append(
-            c.filter(F.col("c_custkey") * m <= mx).select(
-                F.col("c_custkey").alias("key_a"),
-                (F.col("c_custkey") * m).alias("key_b"),
-            )
-        )
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
+    edges = _doubling_edges(spark, sf_dir, stride=True)
     return ktruss(edges, k=4, n_rounds=3)
 
 
@@ -2271,24 +2027,8 @@ def _truss_decomp_oracle() -> str:
     property the Spark operator exploits), memberships folded back onto
     e0 as left joins."""
     max_k, rounds = _TRUSS_MAX_K, _TRUSS_ROUNDS
-    arms = []
-    for d in (1, 2, 3):
-        arms.append(f"""
-      SELECT c_custkey AS u, c_custkey + {d} AS v FROM customer, mx
-      WHERE c_custkey + {d} <= m
-        AND (c_custkey - 1 + {d}) // 20 = (c_custkey - 1) // 20""")
-    for f in (2, 3):
-        arms.append(f"""
-      SELECT c_custkey AS u, c_custkey * {f} AS v FROM customer, mx
-      WHERE c_custkey * {f} <= m""")
-    union = "\n      UNION ALL".join(arms)
     sql = f"""
-    WITH mx AS (SELECT max(c_custkey) AS m FROM customer),
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-      FROM ({union}
-      ) WHERE u <> v
-    )"""
+    WITH {_doubling_graph_sql(stride=True)}"""
     prev = "e0"
     final = {}
     for k in range(3, max_k + 1):
@@ -2346,32 +2086,7 @@ def graph_truss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         truss_decomposition,
     )
 
-    c = load_table(spark, sf_dir, "customer")
-    mx = c.agg(F.max("c_custkey")).collect()[0][0]
-    parts = []
-    for d in (1, 2, 3):
-        parts.append(
-            c.filter(
-                (F.col("c_custkey") + d <= mx)
-                & (
-                    F.expr(f"(c_custkey - 1 + {d}) div 20")
-                    == F.expr("(c_custkey - 1) div 20")
-                )
-            ).select(
-                F.col("c_custkey").alias("key_a"),
-                (F.col("c_custkey") + d).alias("key_b"),
-            )
-        )
-    for m in (2, 3):
-        parts.append(
-            c.filter(F.col("c_custkey") * m <= mx).select(
-                F.col("c_custkey").alias("key_a"),
-                (F.col("c_custkey") * m).alias("key_b"),
-            )
-        )
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
+    edges = _doubling_edges(spark, sf_dir, stride=True)
     return truss_decomposition(
         edges, max_k=_TRUSS_MAX_K, n_rounds=_TRUSS_ROUNDS
     )
@@ -2380,40 +2095,11 @@ def graph_truss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_components_stability",
     oracle=f"""
-    WITH RECURSIVE named AS (
-      SELECT c_custkey AS key, {_NAME_SQL} AS name FROM customer
-    ),
-    pairs_t AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named a JOIN named b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
+    WITH RECURSIVE {_FUZZY_PAIRS_SQL},
     named_y AS (SELECT * FROM named WHERE key % 200 >= 10),
-    pairs_y AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM named_y a JOIN named_y b
-        ON substring(a.name, 1, 7) = substring(b.name, 1, 7)
-       AND a.key < b.key
-      WHERE levenshtein(a.name, b.name) <= 1
-    ),
-    sym_t AS (SELECT key_a AS a, key_b AS b FROM pairs_t
-              UNION ALL SELECT key_b, key_a FROM pairs_t),
-    sym_y AS (SELECT key_a AS a, key_b AS b FROM pairs_y
-              UNION ALL SELECT key_b, key_a FROM pairs_y),
-    reach_t(node, label) AS (
-      SELECT a, a FROM sym_t
-      UNION
-      SELECT s.a, r.label FROM sym_t s JOIN reach_t r ON r.node = s.b
-    ),
-    reach_y(node, label) AS (
-      SELECT a, a FROM sym_y
-      UNION
-      SELECT s.a, r.label FROM sym_y s JOIN reach_y r ON r.node = s.b
-    ),
-    lab_t AS (SELECT node, min(label) AS cluster FROM reach_t GROUP BY node),
-    lab_y AS (SELECT node, min(label) AS cluster FROM reach_y GROUP BY node)
+    {_fuzzy_pairs_sql("_y")},
+    {connected_components_sql()},
+    {connected_components_sql("_y")}
     SELECT
       sum(CASE WHEN t.node IS NOT NULL AND y.node IS NOT NULL
                THEN 1 ELSE 0 END)::BIGINT AS n_common,
@@ -2422,7 +2108,7 @@ def graph_truss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS n_label_changed,
       sum(CASE WHEN y.node IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_new_nodes,
       sum(CASE WHEN t.node IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_gone_nodes
-    FROM lab_t t FULL JOIN lab_y y ON t.node = y.node
+    FROM labels t FULL JOIN labels_y y ON t.node = y.node
     """,
 )
 def graph_components_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2451,15 +2137,7 @@ def graph_components_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    c = load_table(spark, sf_dir, "customer")
-    named = c.select(
-        F.col("c_custkey").alias("key"),
-        F.translate(
-            F.lpad(F.col("c_custkey").cast("string"), 9, "0"),
-            "0123456789",
-            "abcdefghij",
-        ).alias("name"),
-    )
+    named = named_customers(spark, sf_dir)
     blocks = [F.substring("name", 1, 7)]
     pairs_t = fuzzy_dedup_pairs(named, "key", "name", blocks, max_distance=1)
     pairs_y = fuzzy_dedup_pairs(
@@ -2771,6 +2449,27 @@ def _louvain_ctes() -> str:
     return sql
 
 
+def _clique_block_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Louvain fixture as (key_a, key_b): planted clique-blocks over
+    customer keys (every same-block pair, block = k // 10) and one
+    bridge between consecutive blocks."""
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("k")
+    )
+    c2 = c.select(F.col("k").alias("k2"))
+    clique = c.join(
+        c2,
+        (F.col("k2") > F.col("k"))
+        & (F.expr("k div 10") == F.expr("k2 div 10")),
+    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
+    bridge = c.join(
+        c2,
+        (F.col("k2") == F.col("k") + 1)
+        & (F.expr("k div 10") != F.expr("k2 div 10")),
+    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
+    return clique.unionByName(bridge)
+
+
 @query(
     "graph_louvain",
     oracle=_louvain_ctes()
@@ -2804,21 +2503,7 @@ def graph_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
         louvain,
     )
 
-    c = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k")
-    )
-    c2 = c.select(F.col("k").alias("k2"))
-    clique = c.join(
-        c2,
-        (F.col("k2") > F.col("k"))
-        & (F.expr("k div 10") == F.expr("k2 div 10")),
-    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
-    bridge = c.join(
-        c2,
-        (F.col("k2") == F.col("k") + 1)
-        & (F.expr("k div 10") != F.expr("k2 div 10")),
-    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
-    return louvain(clique.unionByName(bridge), n_passes=_LOUVAIN_PASSES)
+    return louvain(_clique_block_edges(spark, sf_dir), n_passes=_LOUVAIN_PASSES)
 
 
 @query(
@@ -2923,22 +2608,8 @@ def graph_louvain_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         louvain,
     )
 
-    c = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k")
-    )
-    c2 = c.select(F.col("k").alias("k2"))
-    clique = c.join(
-        c2,
-        (F.col("k2") > F.col("k"))
-        & (F.expr("k div 10") == F.expr("k2 div 10")),
-    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
-    bridge = c.join(
-        c2,
-        (F.col("k2") == F.col("k") + 1)
-        & (F.expr("k div 10") != F.expr("k2 div 10")),
-    ).select(F.col("k").alias("key_a"), F.col("k2").alias("key_b"))
     _, ledger = louvain(
-        clique.unionByName(bridge),
+        _clique_block_edges(spark, sf_dir),
         n_passes=_LOUVAIN_PASSES,
         return_ledger=True,
     )

@@ -13,13 +13,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openmrs_patient_migration_script_spark.operators.graph import (
+    connected_components_sql,
+)
 from openmrs_patient_migration_script_spark.operators.multimodal import (
+    fake_frame_energies_sql,
     frame_sample,
     image_features,
     make_media_table,
 )
-from openmrs_patient_migration_script_spark.plans.registry import query
+from openmrs_patient_migration_script_spark.plans.registry import ORACLES, query
 from openmrs_patient_migration_script_spark.sources import load_table
+
+
+# every fingerprint of the CTE fp0 (key, f) re-ingested as a second
+# crawl (key + 1e6), and the pairs within Hamming distance 3: the tail of
+# the image and audio near-duplicate pair oracles
+_HAMMING_PAIRS_SQL = """fp AS (
+      SELECT key, f FROM fp0
+      UNION ALL SELECT key + 1000000, f FROM fp0
+    )
+    SELECT a.key AS key_a, b.key AS key_b,
+           CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
+    FROM fp a JOIN fp b ON a.key < b.key
+    WHERE bit_count(xor(a.f, b.f)) <= 3
+    """
 
 
 @query(
@@ -103,21 +121,13 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_phash_pairs",
-    oracle="""
+    oracle=f"""
     WITH fp0 AS (
       SELECT doc_id AS key,
              ('0x' || substr(md5(text), 1, 15))::BIGINT AS f
       FROM documents
     ),
-    fp AS (
-      SELECT key, f FROM fp0
-      UNION ALL SELECT key + 1000000, f FROM fp0
-    )
-    SELECT a.key AS key_a, b.key AS key_b,
-           CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-    FROM fp a JOIN fp b ON a.key < b.key
-    WHERE bit_count(xor(a.f, b.f)) <= 3
-    """,
+    {_HAMMING_PAIRS_SQL}""",
 )
 def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8e (r4): image near-duplicate pairs — perceptual fingerprints via
@@ -159,15 +169,8 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_vad_segments",
-    oracle="""
-    WITH frames AS (
-      SELECT doc_id, i,
-             -(('0x' || substr(md5(text || ':' || i), 1, 4))::INTEGER % 6000)
-               / 100.0 AS db
-      FROM documents,
-           UNNEST(generate_series(
-             0, ('0x' || substr(md5(text), 15, 2))::INTEGER % 300)) AS t(i)
-    ),
+    oracle=f"""
+    WITH {fake_frame_energies_sql()},
     flagged AS (
       SELECT doc_id, i, db > -20.0 AS active,
              CASE WHEN db > -20.0
@@ -209,15 +212,8 @@ def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_audio_pairs",
-    oracle="""
-    WITH frames AS (
-      SELECT doc_id, i,
-             -(('0x' || substr(md5(text || ':' || i), 1, 4))::INTEGER % 6000)
-               / 100.0 AS db
-      FROM documents,
-           UNNEST(generate_series(
-             0, ('0x' || substr(md5(text), 15, 2))::INTEGER % 300)) AS t(i)
-    ),
+    oracle=f"""
+    WITH {fake_frame_energies_sql()},
     arrs AS (
       SELECT doc_id, list(db ORDER BY i) AS e, count(*) AS n
       FROM frames GROUP BY 1
@@ -230,15 +226,7 @@ def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n >= 8
       GROUP BY 1
     ),
-    fp AS (
-      SELECT key, f FROM fp0
-      UNION ALL SELECT key + 1000000, f FROM fp0
-    )
-    SELECT a.key AS key_a, b.key AS key_b,
-           CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-    FROM fp a JOIN fp b ON a.key < b.key
-    WHERE bit_count(xor(a.f, b.f)) <= 3
-    """,
+    {_HAMMING_PAIRS_SQL}""",
 )
 def multimodal_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8f: audio near-duplicate pairs — the audio twin of
@@ -281,15 +269,8 @@ def multimodal_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_scene_cuts",
-    oracle="""
-    WITH frames AS (
-      SELECT doc_id, i,
-             -(('0x' || substr(md5(text || ':' || i), 1, 4))::INTEGER % 6000)
-               / 100.0 AS db
-      FROM documents,
-           UNNEST(generate_series(
-             0, ('0x' || substr(md5(text), 15, 2))::INTEGER % 300)) AS t(i)
-    ),
+    oracle=f"""
+    WITH {fake_frame_energies_sql()},
     d AS (
       SELECT doc_id AS media_id, i AS cut_frame,
              abs(db - lag(db) OVER (PARTITION BY doc_id ORDER BY i)) AS raw
@@ -319,32 +300,12 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE fp0 AS (
-      SELECT doc_id AS key,
-             ('0x' || substr(md5(text), 1, 15))::BIGINT AS f
-      FROM documents
+    oracle=f"""
+    WITH RECURSIVE pairs AS (
+      SELECT key_a, key_b FROM ({ORACLES["multimodal_phash_pairs"]}) ph
     ),
-    fp AS (
-      SELECT key, f FROM fp0
-      UNION ALL SELECT key + 1000000, f FROM fp0
-    ),
-    pairs AS (
-      SELECT a.key AS key_a, b.key AS key_b
-      FROM fp a JOIN fp b ON a.key < b.key
-      WHERE bit_count(xor(a.f, b.f)) <= 3
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    )
-    SELECT node, min(label) AS cluster FROM reach GROUP BY node
+    {connected_components_sql()}
+    SELECT node, cluster FROM labels
     """,
 )
 def multimodal_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

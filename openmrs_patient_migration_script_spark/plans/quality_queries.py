@@ -16,6 +16,10 @@ from openmrs_patient_migration_script_spark.operators.quality import (
     validate_rules,
 )
 from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket_sql
+from openmrs_patient_migration_script_spark.plans.dedup_queries import (
+    NAMED_SQL,
+    named_customers,
+)
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
 
@@ -40,6 +44,55 @@ def _profile_oracle_branch(col: str, numeric: bool) -> str:
            {mn} AS min_value,
            {mx} AS max_value
     FROM customer"""
+
+
+# the order-value histogram of the drift audits, pre-1998 reference vs
+# the rest: CTE g (bin, c_ref, c_cur) over the fixed bin domain -1..10
+_DRIFT_BINS_SQL = """binned AS (
+      SELECT least(greatest(CAST(floor((o_totalprice - 0.0) / 60000.0) AS BIGINT),
+                            -1), 10) AS bin,
+             o_orderdate < TIMESTAMP '1998-01-01' AS is_ref
+      FROM orders
+    ),
+    g0 AS (
+      SELECT bin,
+             count(*) FILTER (WHERE is_ref) AS c_ref,
+             count(*) FILTER (WHERE NOT is_ref) AS c_cur
+      FROM binned GROUP BY bin
+    ),
+    dom AS (SELECT CAST(range AS BIGINT) AS bin FROM range(-1, 11)),
+    g AS (
+      SELECT dom.bin, coalesce(g0.c_ref, 0)::BIGINT AS c_ref,
+             coalesce(g0.c_cur, 0)::BIGINT AS c_cur
+      FROM dom LEFT JOIN g0 USING (bin)
+    )"""
+
+
+def _diff_fixture_sql(dup_keys: bool) -> str:
+    """The reconciliation fixture: CTE b (the orders as the source, with
+    their hash bucket bk) and CTE tgt (the target: ~1% rows dropped, ~1%
+    price-shifted, ~1% extra shifted-key rows and, with ``dup_keys``, ~1%
+    duplicated keys)."""
+    dups = """
+      UNION ALL
+      SELECT o_orderkey, o_orderstatus, price, o_orderdate
+      FROM b WHERE bk % 101 = 3 AND bk % 97 <> 0""" if dup_keys else ""
+    return f"""b AS (
+      SELECT o_orderkey, o_orderstatus,
+             cast(o_totalprice AS DECIMAL(18,2)) AS price, o_orderdate,
+             {hash_bucket_sql("o_orderkey", 1000)}
+               AS bk
+      FROM orders
+    ),
+    tgt AS (
+      SELECT o_orderkey, o_orderstatus,
+             CASE WHEN bk % 89 = 1 THEN price + 1 ELSE price END AS price,
+             o_orderdate
+      FROM b WHERE bk % 97 <> 0
+      UNION ALL
+      SELECT o_orderkey + 1000000000, o_orderstatus, price, o_orderdate
+      FROM b WHERE bk % 83 = 2{dups}
+    )"""
 
 
 @query(
@@ -357,25 +410,8 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_drift_psi",
-    oracle="""
-    WITH binned AS (
-      SELECT least(greatest(CAST(floor((o_totalprice - 0.0) / 60000.0) AS BIGINT),
-                            -1), 10) AS bin,
-             o_orderdate < TIMESTAMP '1998-01-01' AS is_ref
-      FROM orders
-    ),
-    g0 AS (
-      SELECT bin,
-             count(*) FILTER (WHERE is_ref) AS c_ref,
-             count(*) FILTER (WHERE NOT is_ref) AS c_cur
-      FROM binned GROUP BY bin
-    ),
-    dom AS (SELECT CAST(range AS BIGINT) AS bin FROM range(-1, 11)),
-    g AS (
-      SELECT dom.bin, coalesce(g0.c_ref, 0) AS c_ref,
-             coalesce(g0.c_cur, 0) AS c_cur
-      FROM dom LEFT JOIN g0 USING (bin)
-    ),
+    oracle=f"""
+    WITH {_DRIFT_BINS_SQL},
     t AS (SELECT sum(c_ref) AS t_ref, sum(c_cur) AS t_cur FROM g)
     SELECT bin, c_ref, c_cur,
            round((p - q) * ln(p / q), 6) AS psi_term
@@ -416,22 +452,7 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dq_table_diff",
     oracle=f"""
-    WITH b AS (
-      SELECT o_orderkey, o_orderstatus,
-             cast(o_totalprice AS DECIMAL(18,2)) AS price, o_orderdate,
-             {hash_bucket_sql("o_orderkey", 1000)}
-               AS bk
-      FROM orders
-    ),
-    tgt AS (
-      SELECT o_orderkey, o_orderstatus,
-             CASE WHEN bk % 89 = 1 THEN price + 1 ELSE price END AS price,
-             o_orderdate
-      FROM b WHERE bk % 97 <> 0
-      UNION ALL
-      SELECT o_orderkey + 1000000000, o_orderstatus, price, o_orderdate
-      FROM b WHERE bk % 83 = 2
-    )
+    WITH {_diff_fixture_sql(dup_keys=False)}
     SELECT coalesce(s.o_orderkey, t.o_orderkey) AS o_orderkey,
            CASE WHEN s.o_orderkey IS NULL THEN 'extra_in_target'
                 WHEN t.o_orderkey IS NULL THEN 'missing_in_target'
@@ -777,25 +798,7 @@ def dq_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dq_migration_certificate",
     oracle=f"""
-    WITH b AS (
-      SELECT o_orderkey, o_orderstatus,
-             cast(o_totalprice AS DECIMAL(18,2)) AS price, o_orderdate,
-             {hash_bucket_sql("o_orderkey", 1000)}
-               AS bk
-      FROM orders
-    ),
-    tgt AS (
-      SELECT o_orderkey, o_orderstatus,
-             CASE WHEN bk % 89 = 1 THEN price + 1 ELSE price END AS price,
-             o_orderdate
-      FROM b WHERE bk % 97 <> 0
-      UNION ALL
-      SELECT o_orderkey + 1000000000, o_orderstatus, price, o_orderdate
-      FROM b WHERE bk % 83 = 2
-      UNION ALL
-      SELECT o_orderkey, o_orderstatus, price, o_orderdate
-      FROM b WHERE bk % 101 = 3 AND bk % 97 <> 0
-    ),
+    WITH {_diff_fixture_sql(dup_keys=True)},
     d AS (
       SELECT CASE WHEN s.o_orderkey IS NULL AND s_tag IS NULL
                     THEN 'extra_in_target'
@@ -937,13 +940,8 @@ def dq_migration_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_blocking_quality",
-    oracle="""
-    WITH named AS (
-      SELECT c_custkey AS key,
-             translate(lpad(CAST(c_custkey AS VARCHAR), 9, '0'),
-                       '0123456789', 'abcdefghij') AS name
-      FROM customer
-    ),
+    oracle=f"""
+    WITH {NAMED_SQL},
     a AS (SELECT key, name, substring(name, 1, 7) AS blk FROM named),
     b AS (
       SELECT key + 1000000 AS key,
@@ -993,13 +991,7 @@ def dq_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocking_quality,
     )
 
-    c = load_table(spark, sf_dir, "customer")
-    name = F.translate(
-        F.lpad(F.col("c_custkey").cast("string"), 9, "0"),
-        "0123456789",
-        "abcdefghij",
-    )
-    a = c.select(F.col("c_custkey").alias("key"), name.alias("name"))
+    a = named_customers(spark, sf_dir)
     b = a.select(
         (F.col("key") + 1000000).alias("key"),
         F.when(
@@ -1025,25 +1017,8 @@ def dq_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_drift_ks",
-    oracle="""
-    WITH binned AS (
-      SELECT least(greatest(CAST(floor((o_totalprice - 0.0) / 60000.0) AS BIGINT),
-                            -1), 10) AS bin,
-             o_orderdate < TIMESTAMP '1998-01-01' AS is_ref
-      FROM orders
-    ),
-    g0 AS (
-      SELECT bin,
-             count(*) FILTER (WHERE is_ref) AS c_ref,
-             count(*) FILTER (WHERE NOT is_ref) AS c_cur
-      FROM binned GROUP BY bin
-    ),
-    dom AS (SELECT CAST(range AS BIGINT) AS bin FROM range(-1, 11)),
-    g AS (
-      SELECT dom.bin, coalesce(g0.c_ref, 0)::BIGINT AS c_ref,
-             coalesce(g0.c_cur, 0)::BIGINT AS c_cur
-      FROM dom LEFT JOIN g0 USING (bin)
-    ),
+    oracle=f"""
+    WITH {_DRIFT_BINS_SQL},
     cum AS (
       SELECT bin, c_ref, c_cur,
              sum(c_ref) OVER (ORDER BY bin

@@ -951,15 +951,35 @@ def agg_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "join_asof",
-    oracle="""
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
+# the purchase (p) and view (v) events the as-of oracles attribute
+ASOF_INPUTS_SQL = """p AS (
+      SELECT event_id, user_id, ts, value FROM events
+      WHERE event_type = 'purchase'
     ),
     v AS (
       SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'view'
-    )
+    )"""
+
+
+def asof_side(e: DataFrame, kind: str, value: bool = False) -> DataFrame:
+    """The ``kind`` events of ``e`` as ({kind}_id, user_id, {kind}_ts, and
+    {kind}_value when ``value``): one side of an as-of join."""
+    cols = [
+        F.col("event_id").alias(f"{kind}_id"),
+        "user_id",
+        F.col("ts").alias(f"{kind}_ts"),
+    ]
+    if value:
+        cols.append(F.col("value").alias(f"{kind}_value"))
+    return e.filter(F.col("event_type") == kind).select(*cols)
+
+
+def _asof_oracle(tolerance: str) -> str:
+    """Oracle of the backward as-of join of each purchase to the latest
+    view of its user at or before it; ``tolerance`` is an extra join
+    predicate on the view's ts ('' for none)."""
+    return f"""
+    WITH {ASOF_INPUTS_SQL}
     SELECT purchase_id, user_id, purchase_ts, view_id, view_ts, view_value
     FROM (
       SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
@@ -968,9 +988,35 @@ def agg_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
              row_number() OVER (PARTITION BY p.event_id
                                 ORDER BY v.ts DESC, v.event_id DESC) AS rn
       FROM p LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
+                        {tolerance}
     ) WHERE rn = 1
-    """,
-)
+    """
+
+
+def _asof_backward(
+    spark: SparkSession, sf_dir: str, tolerance_seconds: float | None
+) -> DataFrame:
+    """The Spark side of `_asof_oracle`: `asof_join` of the purchases to
+    the views, with ``tolerance_seconds`` as its tolerance."""
+    from openmrs_patient_migration_script_spark.operators.joins import asof_join
+
+    e = load_table(spark, sf_dir, "events")
+    out = asof_join(
+        asof_side(e, "purchase"),
+        asof_side(e, "view", value=True),
+        on=["user_id"],
+        left_ts="purchase_ts",
+        right_ts="view_ts",
+        right_payload=["view_id", "view_ts", "view_value"],
+        right_id="view_id",
+        tolerance_seconds=tolerance_seconds,
+    )
+    return out.select(
+        "purchase_id", "user_id", "purchase_ts", "view_id", "view_ts", "view_value"
+    )
+
+
+@query("join_asof", oracle=_asof_oracle(""))
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: as-of join — for each purchase event, the latest 'view' event of
     the same user at-or-before the purchase (event attribution; the
@@ -978,54 +1024,12 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/joins.py::asof_join): ONE shuffle on user_id, linear in
     |purchases|+|views| — the equi+range+row_number oracle form would
     materialize every (purchase, earlier-view) pair first."""
-    from openmrs_patient_migration_script_spark.operators.joins import asof_join
-
-    e = load_table(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-        F.col("value").alias("view_value"),
-    )
-    out = asof_join(
-        purchases,
-        views,
-        on=["user_id"],
-        left_ts="purchase_ts",
-        right_ts="view_ts",
-        right_payload=["view_id", "view_ts", "view_value"],
-        right_id="view_id",
-    )
-    return out.select(
-        "purchase_id", "user_id", "purchase_ts", "view_id", "view_ts", "view_value"
-    )
+    return _asof_backward(spark, sf_dir, None)
 
 
 @query(
     "join_asof_tolerance",
-    oracle="""
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'view'
-    )
-    SELECT purchase_id, user_id, purchase_ts, view_id, view_ts, view_value
-    FROM (
-      SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-             v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS view_ts,
-             v.value AS view_value,
-             row_number() OVER (PARTITION BY p.event_id
-                                ORDER BY v.ts DESC, v.event_id DESC) AS rn
-      FROM p LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
-                        AND v.ts >= p.ts - INTERVAL 1 HOUR
-    ) WHERE rn = 1
-    """,
+    oracle=_asof_oracle("AND v.ts >= p.ts - INTERVAL 1 HOUR"),
 )
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8c (r4): as-of join with a staleness tolerance (pandas
@@ -1036,45 +1040,13 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local null-out after the carry. The oracle restricts the
     candidate pool instead — equivalent because if the NEAREST match is
     stale, every match is."""
-    from openmrs_patient_migration_script_spark.operators.joins import asof_join
-
-    e = load_table(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-        F.col("value").alias("view_value"),
-    )
-    out = asof_join(
-        purchases,
-        views,
-        on=["user_id"],
-        left_ts="purchase_ts",
-        right_ts="view_ts",
-        right_payload=["view_id", "view_ts", "view_value"],
-        right_id="view_id",
-        tolerance_seconds=3600,
-    )
-    return out.select(
-        "purchase_id", "user_id", "purchase_ts", "view_id", "view_ts", "view_value"
-    )
+    return _asof_backward(spark, sf_dir, 3600)
 
 
 @query(
     "join_asof_forward",
-    oracle="""
-    WITH v AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'purchase'
-    )
+    oracle=f"""
+    WITH {ASOF_INPUTS_SQL}
     SELECT view_id, user_id, view_ts, purchase_id, purchase_ts, purchase_value
     FROM (
       SELECT v.event_id AS view_id, v.user_id, v.ts AS view_ts,
@@ -1096,17 +1068,8 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openmrs_patient_migration_script_spark.operators.joins import asof_join
 
     e = load_table(spark, sf_dir, "events")
-    views = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
+    views = asof_side(e, "view")
+    purchases = asof_side(e, "purchase", value=True)
     out = asof_join(
         views,
         purchases,
@@ -2100,13 +2063,8 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_asof_nearest",
-    oracle="""
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'view'
-    )
+    oracle=f"""
+    WITH {ASOF_INPUTS_SQL}
     SELECT purchase_id, user_id, purchase_ts, view_id, view_ts, view_value,
            matched_dir
     FROM (
@@ -2140,17 +2098,8 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-        F.col("value").alias("view_value"),
-    )
+    purchases = asof_side(e, "purchase")
+    views = asof_side(e, "view", value=True)
     return asof_join_nearest(
         purchases,
         views,

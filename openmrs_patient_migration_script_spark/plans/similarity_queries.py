@@ -41,25 +41,57 @@ def _split(spark: SparkSession, sf_dir: str):
     return emb, queries
 
 
-@query(
-    "sim_cosine_topk",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE {_QUERY_PRED}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6) AS cos_sim
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.query_id
-    )
+def _topk_sql(k: int) -> str:
+    """The k best rows (cos_sim DESC, vec_id) per query_id of the CTE
+    ``scored`` (query_id, vec_id, cos_sim) — the SELECT that ends a top-k
+    oracle."""
+    return f"""
     SELECT query_id, vec_id, cos_sim FROM (
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cos_sim DESC, vec_id) AS rn
       FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    ) WHERE rn <= {k}
+    """
+
+
+# the query batch: CTE q (query_id, qe)
+_QUERIES_SQL = f"""q AS (
+      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
+      FROM embeddings WHERE {_QUERY_PRED}
+    )"""
+
+# CTE scored: each query of q with its exact rounded cosine to every
+# other vector
+_SCORED_SQL = """scored AS (
+      SELECT q.query_id, e.vec_id,
+             round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6)
+               AS cos_sim
+      FROM embeddings e CROSS JOIN q
+      WHERE e.vec_id <> q.query_id
+    )"""
+
+# CTE full_topk: the exact top _K (query_id, vec_id) of every query of q,
+# the reference a recall certificate compares a pruned ranking with
+_FULL_TOPK_SQL = f"""{_SCORED_SQL},
+    full_topk AS (SELECT query_id, vec_id FROM ({_topk_sql(_K)}) f)"""
+
+# the tail of an ANN oracle: the exact cosine re-rank (CTE scored) of the
+# candidates cand (query_id, vec_id) over vec (vec_id, v), then the top _K
+_RERANK_TOPK_SQL = f"""scored AS (
+      SELECT c.query_id, c.vec_id,
+             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
+      FROM cand c
+      JOIN vec qv ON qv.vec_id = c.query_id
+      JOIN vec cv ON cv.vec_id = c.vec_id
+    ){_topk_sql(_K)}"""
+
+
+@query(
+    "sim_cosine_topk",
+    oracle=f"""
+    WITH {_QUERIES_SQL},
+    {_SCORED_SQL}
+    {_topk_sql(_K)}""",
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: exact brute-force cosine top-k — numpy matmul per Arrow batch
@@ -88,19 +120,7 @@ _LSH_M, _LSH_L = 3, 8
       FROM buckets q JOIN buckets b USING (tbl, bkt)
       WHERE q.vec_id % 50 = 0 AND b.vec_id <> q.vec_id
     ),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      FROM cand c
-      JOIN vec qv ON qv.vec_id = c.query_id
-      JOIN vec cv ON cv.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, cos_sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    {_RERANK_TOPK_SQL}""",
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: multi-table sign-random-projection LSH + exact
@@ -133,25 +153,12 @@ def _mmr_prefix() -> str:
     (rel_s - pen) with the vec_id tie-break — the exact integer
     arithmetic the engine's greedy loop runs."""
     sql = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE {_QUERY_PRED}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6)
-               AS cos_sim
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.query_id
-    ),
+    WITH {_QUERIES_SQL},
+    {_SCORED_SQL},
     cand AS (
       SELECT query_id, vec_id, cos_sim,
              CAST(round(cos_sim * 1000000, 0) AS BIGINT) AS rel_s
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-      ) WHERE rn <= {_MMR_CANDIDATES}
+      FROM ({_topk_sql(_MMR_CANDIDATES)}) t
     ),
     vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     sims AS (
@@ -330,19 +337,7 @@ _IVF_CELLS, _IVF_NPROBE = 16, 8
       FROM probes p JOIN assign a USING (cell)
       WHERE a.vec_id <> p.query_id
     ),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      FROM cand c
-      JOIN vec qv ON qv.vec_id = c.query_id
-      JOIN vec cv ON cv.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, cos_sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    {_RERANK_TOPK_SQL}""",
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path #2: IVF — deterministic hash-seeded coarse centroids,
@@ -365,10 +360,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, queries, k=_K, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE)
 
 
-@query(
-    "embed_centroids",
-    oracle="""
-    WITH ex AS (
+# CTE ex (label, dim, sv): every embedding component with its vector's
+# label, 1e6-scaled to an exact BIGINT
+_LABELED_COMPONENTS_SQL = """ex AS (
       SELECT label, pos - 1 AS dim,
              cast(round(v * 1000000, 0) AS BIGINT) AS sv
       FROM (
@@ -376,7 +370,13 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                generate_subscripts(embedding, 1) AS pos
         FROM embeddings
       )
-    ),
+    )"""
+
+
+@query(
+    "embed_centroids",
+    oracle=f"""
+    WITH {_LABELED_COMPONENTS_SQL},
     a AS (
       SELECT label, dim, sum(sv) AS s, count(*) AS n FROM ex GROUP BY 1, 2
     )
@@ -691,19 +691,7 @@ _PQ_SUB_DIM = 16  # 64-dim fixture vectors / 4 subspaces
         FROM adc
       ) WHERE rn <= {_PQ_RERANK}
     ),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      FROM cand c
-      JOIN vec qv ON qv.vec_id = c.query_id
-      JOIN vec cv ON cv.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, cos_sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    {_RERANK_TOPK_SQL}""",
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path #3: product quantization
@@ -810,57 +798,7 @@ def _recall_oracle(exact_sql: str, ann_sql: str) -> str:
 
 @query(
     "sim_ann_recall",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE {_QUERY_PRED}
-    ),
-    scored_exact AS (
-      SELECT q.query_id, e.vec_id,
-             round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6)
-               AS cos_sim
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.query_id
-    ),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored_exact
-      ) WHERE rn <= {_K}
-    ),
-    vec AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    {srp_hashed_sql(_LSH_M, _LSH_L)},
-    cand AS (
-      SELECT DISTINCT qb.vec_id AS query_id, b.vec_id
-      FROM buckets qb JOIN buckets b USING (tbl, bkt)
-      WHERE qb.vec_id % 50 = 0 AND b.vec_id <> qb.vec_id
-    ),
-    scored_ann AS (
-      SELECT c.query_id, c.vec_id,
-             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      FROM cand c
-      JOIN vec qv ON qv.vec_id = c.query_id
-      JOIN vec cv ON cv.vec_id = c.vec_id
-    ),
-    ann AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored_ann
-      ) WHERE rn <= {_K}
-    )
-    SELECT exact.query_id,
-           count(*)::BIGINT AS n_exact,
-           coalesce(sum(CASE WHEN ann.vec_id IS NOT NULL THEN 1 ELSE 0 END),
-                    0)::BIGINT AS n_hits,
-           round(coalesce(sum(CASE WHEN ann.vec_id IS NOT NULL
-                                   THEN 1 ELSE 0 END), 0)
-                 / count(*)::DOUBLE, 6) AS recall
-    FROM exact
-    LEFT JOIN ann USING (query_id, vec_id)
-    GROUP BY exact.query_id
-    """,
+    oracle=_recall_oracle(ORACLES["sim_cosine_topk"], ORACLES["sim_ann_lsh"]),
 )
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4j (r6): ANN recall certification — per-query recall@k of the
@@ -889,14 +827,9 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_overlay(exact, ann)
 
 
-from openmrs_patient_migration_script_spark.plans.registry import (  # noqa: E402
-    ORACLES as _ORACLES,
-)
-
-
 @query(
     "sim_pq_recall",
-    oracle=_recall_oracle(_ORACLES["sim_cosine_topk"], _ORACLES["sim_ann_pq"]),
+    oracle=_recall_oracle(ORACLES["sim_cosine_topk"], ORACLES["sim_ann_pq"]),
 )
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4k (r6): PQ recall certification — the `sim_ann_recall` overlay
@@ -925,7 +858,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_ivf_recall",
-    oracle=_recall_oracle(_ORACLES["sim_cosine_topk"], _ORACLES["sim_ann_ivf"]),
+    oracle=_recall_oracle(ORACLES["sim_cosine_topk"], ORACLES["sim_ann_ivf"]),
 )
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4l (r6): IVF recall certification — completes the ANN-family
@@ -1031,16 +964,8 @@ def sim_mmr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_centroid_separation",
-    oracle="""
-    WITH ex AS (
-      SELECT label, pos - 1 AS dim,
-             cast(round(v * 1000000, 0) AS BIGINT) AS sv
-      FROM (
-        SELECT label, unnest(embedding::DOUBLE[]) AS v,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings
-      )
-    ),
+    oracle=f"""
+    WITH {_LABELED_COMPONENTS_SQL},
     s AS (SELECT label, dim, sum(sv)::BIGINT AS s FROM ex GROUP BY 1, 2),
     n AS (SELECT label, count(*)::BIGINT AS n_vectors FROM embeddings
           GROUP BY label),
@@ -1148,16 +1073,9 @@ def embed_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_radius_search",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE {_QUERY_PRED}
-    )
-    SELECT q.query_id, e.vec_id,
-           round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6)
-             AS cos_sim
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id
-      AND round(list_cosine_similarity(q.qe, e.embedding::DOUBLE[]), 6) >= 0.35
+    WITH {_QUERIES_SQL},
+    {_SCORED_SQL}
+    SELECT query_id, vec_id, cos_sim FROM scored WHERE cos_sim >= 0.35
     """,
 )
 def sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,12 +1116,7 @@ def sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings e CROSS JOIN q
       WHERE e.label <> q.q_label
     )
-    SELECT query_id, vec_id, cos_sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    {_topk_sql(_K)}""",
 )
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4r (r8): hard-negative mining — per query the top-k most similar
@@ -1330,6 +1243,26 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _topk_overlap(queries: DataFrame, full: DataFrame, other: DataFrame) -> DataFrame:
+    """(query_id, n_overlap): per query of ``queries``, how many of its
+    exact top-k neighbours (``full``) the ``other`` ranking also returns —
+    0 for a query they share none of."""
+    ov = (
+        full.select("query_id", "vec_id")
+        .join(other.select("query_id", "vec_id"), ["query_id", "vec_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return (
+        queries.select("query_id")
+        .join(ov, "query_id", "left")
+        .select(
+            "query_id",
+            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("n_overlap"),
+        )
+    )
+
+
 @query(
     "embed_matryoshka_eval",
     oracle=f"""
@@ -1338,18 +1271,7 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
              (embedding[1:16])::DOUBLE[] AS pe
       FROM embeddings WHERE {_QUERY_PRED}
     ),
-    full_topk AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_cosine_similarity(
-                            q.qe, e.embedding::DOUBLE[]), 6) DESC,
-                          e.vec_id) AS rn
-        FROM embeddings e CROSS JOIN q
-        WHERE e.vec_id <> q.query_id
-      ) WHERE rn <= {_K}
-    ),
+    {_FULL_TOPK_SQL},
     pref_topk AS (
       SELECT query_id, vec_id FROM (
         SELECT q.query_id, e.vec_id,
@@ -1395,29 +1317,13 @@ def embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", F.slice("embedding", 1, 16).alias("embedding")
     )
     pref = cosine_topk_vectorized(p_emb, p_q, k=_K)
-    ov = (
-        full.select("query_id", "vec_id")
-        .join(pref.select("query_id", "vec_id"), ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        queries.select("query_id")
-        .join(ov, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("n_overlap"),
-        )
-    )
+    return _topk_overlap(queries, full, pref)
 
 
 @query(
     "embed_quantize_recall",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE {_QUERY_PRED}
-    ),
+    WITH {_QUERIES_SQL},
     ex AS (
       SELECT vec_id, pos - 1 AS dim,
              cast(round(v * 1000000, 0) AS BIGINT) AS sv
@@ -1436,18 +1342,7 @@ def embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                    END * amax)::DOUBLE ORDER BY dim) AS re
       FROM ex JOIN a USING (dim) GROUP BY vec_id
     ),
-    full_topk AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_cosine_similarity(
-                            q.qe, e.embedding::DOUBLE[]), 6) DESC,
-                          e.vec_id) AS rn
-        FROM embeddings e CROSS JOIN q
-        WHERE e.vec_id <> q.query_id
-      ) WHERE rn <= {_K}
-    ),
+    {_FULL_TOPK_SQL},
     q8_topk AS (
       SELECT query_id, vec_id FROM (
         SELECT q.query_id, r.vec_id,
@@ -1534,20 +1429,7 @@ def embed_quantize_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r_emb = emb.select("vec_id", recon.alias("embedding"))
     q8 = cosine_topk_vectorized(r_emb, queries, k=_K)
-    ov = (
-        full.select("query_id", "vec_id")
-        .join(q8.select("query_id", "vec_id"), ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        queries.select("query_id")
-        .join(ov, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("n_overlap"),
-        )
-    )
+    return _topk_overlap(queries, full, q8)
 
 
 _MP_M, _MP_L = 3, 4
@@ -1571,19 +1453,7 @@ _MP_M, _MP_L = 3, 4
       FROM qprobes q JOIN buckets b USING (tbl, bkt)
       WHERE b.vec_id <> q.vec_id
     ),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim
-      FROM cand c
-      JOIN vec qv ON qv.vec_id = c.query_id
-      JOIN vec cv ON cv.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, cos_sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= {_K}
-    """,
+    {_RERANK_TOPK_SQL}""",
 )
 def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4v (r8): multi-probe LSH (Lv et al., VLDB 2007) — the memory

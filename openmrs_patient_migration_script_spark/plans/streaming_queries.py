@@ -20,6 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.plans.registry import query
+from openmrs_patient_migration_script_spark.plans.relational import (
+    ASOF_INPUTS_SQL,
+    asof_side,
+)
 from openmrs_patient_migration_script_spark.sources import load_table
 
 
@@ -208,13 +212,8 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_interval_join",
-    oracle="""
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'
-    )
+    oracle=f"""
+    WITH {ASOF_INPUTS_SQL}
     SELECT p.event_id AS purchase_id, v.event_id AS view_id, p.user_id,
            p.ts AS purchase_ts, v.ts AS view_ts
     FROM p JOIN v
@@ -230,11 +229,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     each side's join state to the interval width instead of buffering the
     streams forever."""
     e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
+    p = asof_side(e, "purchase")
     v = e.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user_id"),

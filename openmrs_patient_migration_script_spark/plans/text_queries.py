@@ -13,9 +13,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openmrs_patient_migration_script_spark.operators.dedup import shingles_sql
+from openmrs_patient_migration_script_spark.operators.graph import (
+    connected_components_sql,
+)
+from openmrs_patient_migration_script_spark.operators.sampling import hash_bucket_sql
 from openmrs_patient_migration_script_spark.operators.text import (
     LANG_MARKERS,
     STOPWORDS_SQL,
+    chunk_documents_sql,
     doc_fingerprint,
     langid_exprs_sql,
     language_id,
@@ -24,7 +29,10 @@ from openmrs_patient_migration_script_spark.operators.text import (
     quality_metrics,
     repetition_metrics,
     tf_idf,
+    tf_idf_sql,
+    tfidf_cosine_pairs_sql,
     token_counts,
+    token_counts_sql,
 )
 from openmrs_patient_migration_script_spark.plans.registry import query
 from openmrs_patient_migration_script_spark.sources import load_table
@@ -32,11 +40,9 @@ from openmrs_patient_migration_script_spark.sources import load_table
 
 @query(
     "text_tokens",
-    oracle="""
-    SELECT token, count(*) AS cnt
-    FROM (SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents)
-    WHERE token <> ''
-    GROUP BY token
+    oracle=f"""
+    WITH {token_counts_sql()}
+    SELECT token, cnt FROM vocab
     """,
 )
 def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,16 +53,8 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tfidf",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
-      GROUP BY doc_id, token
-    ),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
+    oracle=f"""
+    WITH {tf_idf_sql()}
     SELECT tf.doc_id, tf.token, tf.tf, dfreq.df,
            round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)), 6) AS tfidf
     FROM tf JOIN dfreq USING (token) CROSS JOIN n
@@ -73,17 +71,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_keywords",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
-      GROUP BY doc_id, token
-    ),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+    oracle=f"""
+    WITH {tf_idf_sql()},
     scored AS (
       SELECT tf.doc_id, tf.token, tf.tf, dfreq.df,
              round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)), 6)
@@ -263,24 +252,9 @@ def text_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_chunk",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    s AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 16, 1), 48))
-               AS start,
-             generate_subscripts(
-               generate_series(1, greatest(len(toks) - 16, 1), 48), 1) - 1
-               AS chunk_id
-      FROM t
-    )
-    SELECT doc_id AS key, chunk_id,
-           array_to_string(toks[start : least(start + 63, len(toks))], ' ')
-             AS chunk_text,
-           least(start + 63, len(toks)) - start + 1 AS n_chunk_tokens
-    FROM s
+    oracle=f"""
+    WITH {chunk_documents_sql()}
+    SELECT key, chunk_id, chunk_text, n_chunk_tokens FROM chunks
     """,
 )
 def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,24 +271,9 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_pack",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    s AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 16, 1), 48))
-               AS start,
-             generate_subscripts(
-               generate_series(1, greatest(len(toks) - 16, 1), 48), 1) - 1
-               AS chunk_id
-      FROM t
-    ),
-    c AS (
-      SELECT doc_id AS key, chunk_id,
-             least(start + 63, len(toks)) - start + 1 AS n
-      FROM s
-    ),
+    oracle=f"""
+    WITH {chunk_documents_sql()},
+    c AS (SELECT key, chunk_id, n_chunk_tokens AS n FROM chunks),
     h AS (
       SELECT key, chunk_id, n,
              md5(concat_ws(chr(31), key::VARCHAR, chunk_id::VARCHAR)) AS hv
@@ -322,7 +281,7 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     b AS (
       SELECT key, chunk_id, n, hv,
-             ('0x' || substr(md5(hv), 1, 8))::BIGINT % 32 AS bucket
+             {hash_bucket_sql("hv", 32)} AS bucket
       FROM h
     )
     SELECT key, chunk_id, bucket,
@@ -727,38 +686,10 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_cosine_pairs",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
-      GROUP BY doc_id, token
-    ),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-    w AS (
-      SELECT tf.doc_id AS key, tf.token,
-             CAST(round(round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)),
-                              6) * 1000000) AS BIGINT) AS w
-      FROM tf JOIN dfreq USING (token) CROSS JOIN n
-      WHERE dfreq.df <= 100
-    ),
-    wp AS (SELECT * FROM w WHERE w > 0),
-    norms AS (SELECT key, sum(w * w) AS norm2 FROM wp GROUP BY key),
-    num AS (
-      SELECT a.key AS key_a, b.key AS key_b, sum(a.w * b.w) AS num
-      FROM wp a JOIN wp b ON a.token = b.token AND a.key < b.key
-      GROUP BY 1, 2
-    )
-    SELECT key_a, key_b, CAST(num AS BIGINT) AS num,
-           round(num / (sqrt(na.norm2) * sqrt(nb.norm2)), 6) AS cos_sim
-    FROM num
-    JOIN norms na ON na.key = num.key_a
-    JOIN norms nb ON nb.key = num.key_b
-    WHERE 4 * num::HUGEINT * num::HUGEINT
-          >= na.norm2::HUGEINT * nb.norm2::HUGEINT
+    oracle=f"""
+    WITH {tf_idf_sql()},
+    {tfidf_cosine_pairs_sql()}
+    SELECT key_a, key_b, num, cos_sim FROM pairs
     """,
 )
 def text_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -784,17 +715,8 @@ def text_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tfidf_incremental",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
-      GROUP BY doc_id, token
-    ),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
+    oracle=f"""
+    WITH {tf_idf_sql()}
     SELECT tf.doc_id, tf.token, tf.tf, dfreq.df,
            round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)), 6) AS tfidf
     FROM tf JOIN dfreq USING (token) CROSS JOIN n
@@ -833,50 +755,11 @@ def text_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, token, count(*) AS tf FROM toks WHERE token <> ''
-      GROUP BY doc_id, token
-    ),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-    w AS (
-      SELECT tf.doc_id AS key, tf.token,
-             CAST(round(round(tf.tf * ln((1.0 + n.n_docs) / (1.0 + dfreq.df)),
-                              6) * 1000000) AS BIGINT) AS w
-      FROM tf JOIN dfreq USING (token) CROSS JOIN n
-      WHERE dfreq.df <= 100
-    ),
-    wp AS (SELECT * FROM w WHERE w > 0),
-    norms AS (SELECT key, sum(w * w) AS norm2 FROM wp GROUP BY key),
-    num AS (
-      SELECT a.key AS key_a, b.key AS key_b, sum(a.w * b.w) AS num
-      FROM wp a JOIN wp b ON a.token = b.token AND a.key < b.key
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT key_a, key_b
-      FROM num
-      JOIN norms na ON na.key = num.key_a
-      JOIN norms nb ON nb.key = num.key_b
-      WHERE 4 * num::HUGEINT * num::HUGEINT
-            >= na.norm2::HUGEINT * nb.norm2::HUGEINT
-    ),
-    edges AS (
-      SELECT key_a AS a, key_b AS b FROM pairs
-      UNION ALL
-      SELECT key_b, key_a FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    )
-    SELECT node, min(label) AS cluster FROM reach GROUP BY node
+    oracle=f"""
+    WITH RECURSIVE {tf_idf_sql()},
+    {tfidf_cosine_pairs_sql()},
+    {connected_components_sql()}
+    SELECT node, cluster FROM labels
     """,
 )
 def text_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -903,18 +786,12 @@ def text_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_zipf_fit",
-    oracle="""
-    WITH counts AS (
-      SELECT token, count(*)::BIGINT AS cnt
-      FROM (SELECT unnest(string_split(lower(text), ' ')) AS token
-            FROM documents)
-      WHERE token <> ''
-      GROUP BY token
-    ),
+    oracle=f"""
+    WITH {token_counts_sql()},
     top AS (
       SELECT cnt,
              row_number() OVER (ORDER BY cnt DESC, token) AS rank
-      FROM counts
+      FROM vocab
       QUALIFY rank <= 500
     ),
     sc AS (
@@ -1112,14 +989,8 @@ def text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_vocab_coverage",
-    oracle="""
-    WITH vocab AS (
-      SELECT token, count(*)::BIGINT AS cnt
-      FROM (SELECT unnest(string_split(lower(text), ' ')) AS token
-            FROM documents)
-      WHERE token <> ''
-      GROUP BY token
-    ),
+    oracle=f"""
+    WITH {token_counts_sql()},
     t AS (SELECT count(*)::BIGINT AS n_vocab, sum(cnt)::BIGINT AS n_occ
           FROM vocab),
     cum AS (

@@ -5,6 +5,8 @@ repeated shingles, double and edge spaces, empty and NULL text."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pytest
@@ -18,6 +20,10 @@ from openmrs_patient_migration_script_spark.operators.dedup import (
     minhash_signatures,
     minhash_signatures_sql,
     shingles_sql,
+)
+from openmrs_patient_migration_script_spark.operators.graph import (
+    connected_components,
+    connected_components_sql,
 )
 from openmrs_patient_migration_script_spark.operators.sampling import (
     hash_bucket,
@@ -34,6 +40,10 @@ from openmrs_patient_migration_script_spark.operators.text import (
     langid_exprs_sql,
     quality_exprs,
     quality_exprs_sql,
+)
+from openmrs_patient_migration_script_spark.operators.timeseries import (
+    seasonal_decompose,
+    seasonal_decompose_sql,
 )
 from openmrs_patient_migration_script_spark.plans import (
     dedup_queries,
@@ -213,3 +223,117 @@ def test_text_twins_match_kernels_on_null_text(docs, duck_docs, rows):
     spark_rows, duck_rows = rows(docs, duck_docs)
     assert duck_rows[NULL_DOC] == spark_rows[NULL_DOC]
     assert set(spark_rows[NULL_DOC][1:]) == {None}
+
+
+#: hand-made pair graphs: (name, [(key_a, key_b), ...])
+CC_EDGES = {
+    "path": [(1, 2), (2, 3), (3, 4)],
+    "two_components": [(5, 6), (1, 2), (6, 7)],
+    "reversed_duplicate": [(1, 2), (2, 1), (3, 2)],
+    "self_loop_only": [(4, 4), (1, 2)],
+    "null_endpoint": [(1, None), (2, 3), (None, 5)],
+}
+
+
+@pytest.mark.parametrize("local_threshold", [None, 0])
+@pytest.mark.parametrize("case", sorted(CC_EDGES))
+def test_connected_components_sql_matches_kernel(spark, case, local_threshold):
+    """The closure twin gives the kernel's labels on every tier (0 forces
+    the Small-Star/Large-Star rounds), a NULL endpoint linking nothing."""
+    rows = CC_EDGES[case]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pairs (key_a BIGINT, key_b BIGINT)")
+    con.executemany("INSERT INTO pairs VALUES (?, ?)", rows)
+    duck = set(
+        con.execute(
+            f"WITH RECURSIVE {connected_components_sql()} "
+            "SELECT node, cluster FROM labels"
+        ).fetchall()
+    )
+    con.close()
+    edges = spark.createDataFrame(rows, "key_a long, key_b long")
+    tiers = {} if local_threshold is None else {"local_threshold": local_threshold}
+    got = {tuple(r) for r in connected_components(edges, **tiers).collect()}
+    assert duck == got and got
+
+
+#: hand-made events: (user_id, event_id, ts, value)
+EVENTS = [
+    (1, 1, "2024-01-01 00:00:00", 1.5),  # a user with one event
+    (2, 2, "2024-01-01 05:00:00", 1.0),  # equal timestamps
+    (2, 3, "2024-01-01 05:00:00", 2.0),
+    (2, 4, "2024-01-01 07:30:00", 0.5),
+    # hour 3 sits far below its neighbours on two days: a negative
+    # detrended sum, so the seasonal mean rounds on its ELSE branch
+    (3, 5, "2024-01-01 01:00:00", 10.0),
+    (3, 6, "2024-01-01 03:00:00", 0.1),
+    (3, 7, "2024-01-01 05:00:00", 9.7),
+    (3, 8, "2024-01-02 01:00:00", 8.3),
+    (3, 9, "2024-01-02 03:00:00", 0.2),
+    (3, 10, "2024-01-02 16:00:00", 4.0),
+]
+
+
+def test_seasonal_decompose_sql_matches_kernel(spark):
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events "
+        "(user_id BIGINT, event_id BIGINT, ts TIMESTAMP, value DOUBLE)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", EVENTS)
+    duck = set(
+        con.execute(
+            f"WITH {seasonal_decompose_sql()} "
+            "SELECT user_id, event_id, trend6, d, seasonal6 FROM decomp"
+        ).fetchall()
+    )
+    con.close()
+    events = spark.createDataFrame(
+        EVENTS, "user_id long, event_id long, ts string, value double"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    scaled = seasonal_decompose(
+        events, "user_id", "ts", "event_id", "value", emit_scaled=True
+    )
+    got = {
+        tuple(r)
+        for r in scaled.select(
+            "user_id", "event_id", "_trend6", "_d", "_seasonal6"
+        ).collect()
+    }
+    assert duck == got and len(got) == len(EVENTS)
+    assert any(seasonal6 < 0 for *_, seasonal6 in got)
+
+
+PLANS = Path(__file__).resolve().parent.parent / (
+    "openmrs_patient_migration_script_spark/plans"
+)
+
+#: one line of each fragment that has one builder, with its copies in
+#: plans/: 1 where the builder lives there, 0 where it is a kernel's twin
+#: in operators/. Another copy is a pasted fragment that should compose
+#: the builder instead.
+SHARED_FRAGMENTS = {
+    "substring(a.name, 1, 7) = substring(b.name, 1, 7)": 1,  # fuzzy-name block
+    "reach(node, label)": 0,  # transitive closure
+    "(node, label) AS (": 0,
+    "WITH mx AS": 0,  # doubling graph
+    "mx AS (SELECT max(c_custkey) AS m FROM customer)": 1,
+    'F.max("c_custkey")).collect()': 1,
+    "RANGE BETWEEN 43200000 PRECEDING": 0,  # seasonal decomposition
+    "p AS ( SELECT event_id, user_id, ts": 1,  # as-of inputs
+    "v AS ( SELECT event_id, user_id, ts": 1,
+    "ORDER BY cos_sim DESC, vec_id) AS rn": 1,  # top-k tail
+    "round(list_cosine_similarity(qv.v, cv.v), 6) AS cos_sim": 1,
+}
+
+
+@pytest.mark.parametrize("fragment", sorted(SHARED_FRAGMENTS))
+def test_shared_fragment_has_one_copy(fragment):
+    """Whitespace-normalized, each shared fragment occurs in the plan
+    modules only where its builder is."""
+    copies = {
+        p.name: n
+        for p in sorted(PLANS.glob("*.py"))
+        if (n := " ".join(p.read_text().split()).count(fragment))
+    }
+    assert sum(copies.values()) == SHARED_FRAGMENTS[fragment], copies
