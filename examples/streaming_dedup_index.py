@@ -6,12 +6,12 @@ file, composing the two maintained-state pipelines:
     candidate-pair feed ──ST11──▶ persisted (node, cluster) index
     (connected_components_incremental over versioned snapshots)
     embedding feed ──ST12──▶ persisted (vec_id, _tbl, _bkt) ANN bucket
-    index (append-shaped srp_hashed folds over versioned snapshots)
+    index (one srp_hashed delta per batch, read as their union)
 
-All three are exactly-once BY CONSTRUCTION: each micro-batch writes its own
-overwrite-able directory keyed by batch id, so a replayed batch recomputes
-the identical bytes — demonstrated here by re-running each stream on its
-checkpoint and asserting nothing changed on disk.
+All three are exactly-once BY CONSTRUCTION: each micro-batch publishes its
+own overwrite-able directory keyed by batch id (commit.py), so a replayed
+batch recomputes the identical bytes — demonstrated here by re-running each
+stream on its checkpoint and asserting nothing changed on disk.
 
 Run:  python examples/streaming_dedup_index.py [workdir]
 """
@@ -28,6 +28,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from openmrs_patient_migration_script_spark.commit import read_union
 from openmrs_patient_migration_script_spark.operators.graph import (
     connected_components,
 )
@@ -36,6 +37,7 @@ from openmrs_patient_migration_script_spark.operators.similarity import (
     srp_hashed,
 )
 from openmrs_patient_migration_script_spark.streaming.pipelines import (
+    INGEST_PREFIX,
     stream_ann_buckets_maintain,
     stream_ann_buckets_read,
     stream_components_maintain,
@@ -85,11 +87,9 @@ def main() -> None:
         q.awaitTermination(120)
 
     run_ingest()
-    batch_dirs = [
-        str(d) for d in Path(admitted_dir).iterdir()
-        if d.name.startswith("_batch_id=") and (d / "_SUCCESS").exists()
-    ]
-    admitted = spark.read.parquet(*batch_dirs)
+    admitted = read_union(
+        spark, admitted_dir, INGEST_PREFIX, "doc_id BIGINT, text STRING"
+    )
     ids = sorted(r["doc_id"] for r in admitted.select("doc_id").collect())
     print(f"ST8 admitted {ids} (index dup and cross-batch dup dropped)")
     snap = _snapshot(admitted_dir)

@@ -142,9 +142,19 @@ def prepare_corpus(
         hash_buckets=hash_buckets,
         materialize=True,
     )
-    comp = connected_components(pairs)
-    kept = survivors.join(comp, survivors.key == comp.node, "left").filter(
-        F.col("node").isNull() | (F.col("cluster") == F.col("key"))
-    )
+    kept = _keep_cluster_minimum(survivors, pairs, "key")
     out = kept.select("key", "predicted_lang", "quality_score")
     return hash_split(out, "key", _SPLITS)
+
+
+def _keep_cluster_minimum(docs: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
+    """``docs`` less every document whose candidate-pair component
+    (``pairs``' key_a/key_b) holds a smaller key: one survivor per
+    near-duplicate cluster. Batch curation and streaming ingest both
+    remove near-duplicates by this rule."""
+    comp = connected_components(pairs)
+    return (
+        docs.join(comp, docs[key] == comp.node, "left")
+        .filter(F.col("node").isNull() | (F.col("cluster") == F.col(key)))
+        .drop("node", "cluster")
+    )

@@ -30,6 +30,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openmrs_patient_migration_script_spark.commit import (
+    hadoop_fs,
+    restore_aside,
+    swap_dir,
+)
+
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(file_count, total_bytes) of a parquet table's data files.
@@ -38,13 +44,9 @@ def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     hdfs:// and s3a:// paths, not just local disk), recursing through
     partition directories and skipping _SUCCESS/metadata sidecars.
     """
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
+    hpath, fs = hadoop_fs(spark, path)
     files, total = 0, 0
-    it = fs.listFiles(hpath, True)
+    it = fs.listFiles(hpath(path), True)
     while it.hasNext():
         status = it.next()
         name = status.getPath().getName()
@@ -75,15 +77,13 @@ def compact_table(
     column would scatter every directory across every task and regenerate
     the small-file problem being fixed).
 
-    The rewrite stages into ``<path>__compact_tmp``, renames the old table
-    aside, promotes the staged copy, then deletes the old data — a reader
-    never observes a HALF-WRITTEN table, and no point in the sequence can
-    lose data (a crash between the two renames leaves the table briefly
-    absent but fully recoverable from ``<path>__compact_old``). True
-    atomic swap is the transactional-commit step a table format
-    (Iceberg/Delta) or a metastore owns; the sizing and clustering logic
-    stays the same.
+    The rewrite stages into ``<path>__compact_tmp`` and publishes it with
+    `commit.swap_dir`, so a reader never observes a half-written table and
+    no crash point loses data. A run that finds the table missing after a
+    crash inside the swap first moves the old copy back
+    (`commit.restore_aside`).
     """
+    restore_aside(spark, path)
     files_before, total_bytes = table_file_stats(spark, path)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
 
@@ -97,20 +97,7 @@ def compact_table(
     else:
         df.repartition(n_files).write.mode("overwrite").parquet(tmp)
 
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    # rename-aside, promote, then delete: the old data survives every
-    # crash point (delete-then-rename would lose the table if the driver
-    # died between the two calls)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_old")
-    if fs.exists(old):  # debris from a previous crashed run
-        fs.delete(old, True)
-    fs.rename(jpath, old)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jpath)
-    fs.delete(old, True)
+    swap_dir(spark, tmp, path)
 
     files_after, _ = table_file_stats(spark, path)
     return files_before, files_after

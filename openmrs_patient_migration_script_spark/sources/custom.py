@@ -24,6 +24,11 @@ driver involvement. The generator yields plain tuples; Spark batches
 them through Arrow. A real connector would open its cursor/HTTP session
 inside `read()` (one connection per task, the same lifecycle as the
 JDBC source).
+
+The module has no write half. The one it had staged JSONL files with `os`
+calls inside the Python workers, which is correct only when every executor
+shares the driver's disk; the engine publishes what it writes through
+`commit.py`, on any Hadoop filesystem.
 """
 
 from __future__ import annotations
@@ -35,10 +40,7 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 _GENDERS = ("F", "M")
@@ -169,150 +171,3 @@ class LegacyEnrollmentDataSource(DataSource):
 
     def streamReader(self, schema) -> _EnrollmentStreamReader:
         return _EnrollmentStreamReader(self.options)
-
-
-class _StagedFile(WriterCommitMessage):
-    """Per-task commit message: which staged file this task wrote."""
-
-    def __init__(self, filename: str, n_rows: int):
-        self.filename = filename
-        self.n_rows = n_rows
-
-
-def _write_task_file(path: str, it) -> _StagedFile:
-    """Shared task-side write: rows → one uniquely-named JSONL file under
-    ``<path>/_staged/``. The file is INVISIBLE to readers until a driver
-    commit lists it in a manifest — the two-phase contract."""
-    import json
-    import os
-    import uuid
-
-    staged_dir = os.path.join(path, "_staged")
-    os.makedirs(staged_dir, exist_ok=True)
-    fname = f"task-{uuid.uuid4().hex}.jsonl"
-    n = 0
-    with open(os.path.join(staged_dir, fname), "w") as f:
-        for row in it:
-            f.write(json.dumps(row.asDict(), default=str) + "\n")
-            n += 1
-    return _StagedFile(fname, n)
-
-
-def _abort_staged(path: str, messages) -> None:
-    import os
-
-    for m in messages:
-        if m is None:
-            continue
-        try:
-            os.remove(os.path.join(path, "_staged", m.filename))
-        except OSError:
-            pass  # a task that failed before creating its file
-
-
-class _DestinationWriter(DataSourceWriter):
-    """Batch half of the destination sink: every task stages its file,
-    and ONE driver-side ``commit`` publishes the whole set in a single
-    manifest write — readers either see the entire batch or none of it
-    (the Python DataSource write API's two-phase commit, the same shape
-    a real OpenMRS insert batch needs around its transaction)."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    def write(self, iterator) -> _StagedFile:
-        return _write_task_file(self.path, iterator)
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-        import uuid
-
-        manifest = {
-            "files": sorted(m.filename for m in messages if m is not None),
-            "rows": sum(m.n_rows for m in messages if m is not None),
-        }
-        tmp = os.path.join(self.path, f"._manifest-{uuid.uuid4().hex}.tmp")
-        final = os.path.join(self.path, f"manifest-batch-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, final)  # atomic publish
-
-    def abort(self, messages) -> None:
-        _abort_staged(self.path, messages)
-
-
-class _DestinationStreamWriter(DataSourceStreamWriter):
-    """Streaming half: ``commit(messages, batchId)`` names the manifest
-    by batch id, so a replayed micro-batch (crash between sink commit
-    and checkpoint advance — Spark's at-least-once window) REWRITES the
-    same manifest instead of adding a second one: the committed file set
-    for a batch id is last-writer-wins and duplicates never become
-    visible. Exactly-once lands via idempotence — the same recipe as
-    streaming/pipelines.py's ``_batch_id``-per-directory writers,
-    expressed in the DataSource API."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    def write(self, iterator) -> _StagedFile:
-        return _write_task_file(self.path, iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        import json
-        import os
-
-        manifest = {
-            "files": sorted(m.filename for m in messages if m is not None),
-            "rows": sum(m.n_rows for m in messages if m is not None),
-        }
-        tmp = os.path.join(self.path, f"._manifest-{batchId}.tmp")
-        final = os.path.join(self.path, f"manifest-{batchId}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, final)  # atomic + idempotent per batch id
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_staged(self.path, messages)
-
-
-class DestinationSinkDataSource(DataSource):
-    """`format("destination_sink")` — the WRITE half of the custom
-    connector surface: a driver-less destination (the role OpenMRS's
-    MySQL plays in the reference, /root/reference/README.md:7-17) fed
-    through the Python DataSource write API with two-phase commit in
-    batch and batch-id-idempotent manifests in streaming. Committed data
-    = union of files listed in manifests; staged files without a
-    manifest entry are invisible (crash debris, cleaned by the next
-    compaction)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "destination_sink"
-
-    def writer(self, schema, overwrite: bool) -> _DestinationWriter:
-        return _DestinationWriter(self.options)
-
-    def streamWriter(self, schema, overwrite: bool) -> _DestinationStreamWriter:
-        return _DestinationStreamWriter(self.options)
-
-
-def read_committed_sink(spark, path: str, schema: str):
-    """Reader-side contract of the manifest protocol: load ONLY files
-    published by a manifest (staged-but-uncommitted files never appear).
-    Later manifests for the SAME batch id replace earlier ones by
-    construction (single file per id, atomic rename)."""
-    import json
-    import os
-
-    files: list[str] = []
-    for name in sorted(os.listdir(path)):
-        if name.startswith("manifest-") and name.endswith(".json"):
-            with open(os.path.join(path, name)) as f:
-                files.extend(
-                    os.path.join(path, "_staged", fn)
-                    for fn in json.load(f)["files"]
-                )
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).json(files)

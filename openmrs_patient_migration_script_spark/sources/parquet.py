@@ -29,25 +29,22 @@ def parquet_ts_unit(path: str, column: str = "ts") -> str:
     (path, mtime) — the harness has shipped `events.ts` as both
     TIMESTAMP(MICROS) and TIMESTAMP(NANOS) across testdata regenerations,
     and reading one as the other silently shifts every epoch by 1000x.
-    Keying the cache on the file's mtime means a rewritten file re-probes
-    instead of serving the stale unit for the process's lifetime.
+    Keying the cache on the mtime means a rewritten file or directory
+    re-probes instead of serving the stale unit for the process's
+    lifetime. A directory is probed through pyarrow's dataset discovery,
+    which skips ``_``/``.`` sidecars; an empty one reads as 'us'.
     """
-    target = path
-    if os.path.isdir(path):
-        names = sorted(
-            n for n in os.listdir(path) if n.endswith(".parquet") and not n.startswith("_")
-        )
-        if not names:
-            return "us"
-        target = os.path.join(path, names[0])
-    return _ts_unit_cached(target, os.path.getmtime(target), column)
+    return _ts_unit_cached(path, os.path.getmtime(path), column)
 
 
 @lru_cache(maxsize=64)
-def _ts_unit_cached(target: str, _mtime: float, column: str) -> str:
+def _ts_unit_cached(path: str, _mtime: float, column: str) -> str:
     import pyarrow.parquet as pq
 
-    return pq.ParquetFile(target).schema_arrow.field(column).type.unit
+    schema = pq.ParquetDataset(path).schema
+    if not schema.names:  # an empty directory
+        return "us"
+    return schema.field(column).type.unit
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

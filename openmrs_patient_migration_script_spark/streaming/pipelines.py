@@ -9,22 +9,33 @@ this module is the engine's streaming extension. Two kinds of pipeline:
   oracle a valid correctness check for the streaming logic. The watermark
   bounds window state, so Spark evicts it instead of holding every key.
 - ``foreachBatch`` index maintenance for continuous dedup
-  (``stream_ingest_dedup``, ST11 components, ST12 ANN buckets): each
-  micro-batch writes its own ``_batch_id``/``_index_v`` directory, so a
-  replayed batch rewrites identical bytes, and readers admit only
-  directories that carry a ``_SUCCESS`` marker.
+  (``stream_ingest_dedup``, ST11 components, ST12 ANN buckets): each is a
+  fold on `commit.batch_step`, which publishes every micro-batch in its
+  own directory, so a replayed batch rewrites identical bytes and readers
+  see only published batches. The admitted documents and the ANN buckets
+  are deltas (read as a union); the cluster index is a snapshot (read
+  the newest).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from openmrs_patient_migration_script_spark.commit import (
+    batch_step,
+    read_newest,
+    read_union,
+)
 from openmrs_patient_migration_script_spark.schemas import events_read_schema
 from openmrs_patient_migration_script_spark.sources.parquet import parquet_ts_unit
 
 WATERMARK = "10 minutes"
+
+# The directory prefix of each maintainer's published batches.
+INGEST_PREFIX = "_batch_id="
+COMPONENTS_PREFIX = "_index_v="
+ANN_PREFIX = "_ann_v="
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,6 +91,15 @@ def rank_topk_windows(window_counts: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
+def _start(stream: DataFrame, step, checkpoint_dir: str, available_now: bool):
+    writer = stream.writeStream.foreachBatch(step).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_ingest_dedup(
     batch_docs: DataFrame,
     index_df: DataFrame,
@@ -97,19 +117,10 @@ def stream_ingest_dedup(
     a near-dup arriving twice across micro-batches lands once. Banding
     is `minhash_candidate_pairs`' default 16 MinHash rows in 4 bands.
 
-    Exactly-once by CONSTRUCTION, not a ledger: each batch's admitted
-    docs write to ``_batch_id=<id>`` with overwrite, and the
-    already-admitted read EXCLUDES the current batch id — so a replayed
-    batch sees the identical prior-state, recomputes the identical
-    admit set, and overwrites its own directory with identical bytes
-    (with a self-exclusion the grown-index read requires: without it, a
-    replay would collide a batch's docs with their own half-written
-    admission).
-
-    State discovery walks ``out_dir`` through the Hadoop FileSystem API
-    (resolved from the path's own scheme), so the admitted-so-far ledger
-    works on HDFS/S3/ABFS exactly as on local disk — the 100 TB
-    deployment surface, not just the laptop one.
+    Each batch publishes its admitted docs as a delta under
+    ``<out_dir>/_batch_id=<id>`` through `commit.batch_step`, which makes
+    a replay rewrite identical bytes; `commit.read_union` with
+    `INGEST_PREFIX` reads everything admitted so far.
 
     Per micro-batch cost: the STATIC index pays shingle→minhash and
     content-hashing exactly ONCE, at stream start (signatures are
@@ -117,13 +128,25 @@ def stream_ingest_dedup(
     ``index_signatures`` fast path); each micro-batch signs only its
     own docs plus the previously-ADMITTED tail (delta-sized by
     construction — admitted docs are the survivors, a small fraction of
-    the feed). Near-dups arriving within the SAME micro-batch are also
-    collapsed (exact: min-key per content hash; near: min-key per
-    banded candidate pair) before admission — both rules deterministic,
-    so a replay still rewrites identical bytes. Returns the started
-    StreamingQuery.
+    the feed). Duplicates within the SAME micro-batch are removed by
+    batch curation's rules (`prepare_corpus`): one doc per content hash,
+    then one doc per connected component of candidate pairs, the
+    smallest key winning both. Returns the started StreamingQuery.
     """
+    return _start(
+        batch_docs,
+        _ingest_step(index_df, out_dir, key_col, text_col),
+        checkpoint_dir,
+        trigger_available_now,
+    )
+
+
+def _ingest_step(index_df: DataFrame, out_dir: str, key_col: str, text_col: str):
+    from openmrs_patient_migration_script_spark.operators.corpus import (
+        _keep_cluster_minimum,
+    )
     from openmrs_patient_migration_script_spark.operators.dedup import (
+        dedup_exact_keep_first,
         minhash_candidate_pairs,
         minhash_pairs_against,
         minhash_signatures,
@@ -141,32 +164,10 @@ def stream_ingest_dedup(
         .localCheckpoint(eager=True)
     )
 
-    def _hadoop(spark):
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(out_dir)
-        return jvm, path.getFileSystem(conf)
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm, fs = _hadoop(spark)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        target = f"{out_dir}/_batch_id={batch_id}"
-        if fs.exists(hpath(f"{target}/_SUCCESS")):
-            return  # replayed batch → already durable AND complete
-        prior_dirs = []
-        if fs.exists(hpath(out_dir)):
-            for st in fs.listStatus(hpath(out_dir)):
-                name = st.getPath().getName()
-                if (
-                    name.startswith("_batch_id=")
-                    and name != f"_batch_id={batch_id}"
-                    and fs.exists(hpath(st.getPath(), "_SUCCESS"))
-                ):
-                    prior_dirs.append(st.getPath().toString())
+    def admit(batch_df: DataFrame, prior: list[str]) -> DataFrame:
         idx_hashes, idx_sigs = static_hashes, static_sigs
-        if prior_dirs:
-            admitted_prior = spark.read.parquet(*prior_dirs).select(
+        if prior:
+            admitted_prior = batch_df.sparkSession.read.parquet(*prior).select(
                 F.col(key_col), F.col(text_col)
             )
             idx_hashes = idx_hashes.unionByName(
@@ -175,57 +176,22 @@ def stream_ingest_dedup(
             idx_sigs = idx_sigs.unionByName(
                 minhash_signatures(admitted_prior, key_col, text_col)
             )
-        # intra-batch exact self-dedup: deterministic min-key winner per
-        # content hash (two byte-identical docs in one batch land once)
-        w = Window.partitionBy("_h").orderBy(key_col)
-        hashed = (
-            batch_df.withColumn("_h", F.md5(F.col(text_col)))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        hashed = dedup_exact_keep_first(
+            batch_df.withColumn("_h", F.md5(F.col(text_col))), ["_h"], key_col
         )
         # exact vs index: content-hash anti-join (byte-identical re-crawls)
         fresh = hashed.join(idx_hashes, "_h", "left_anti").drop("_h")
-        # intra-batch near-dup self-dedup: band the batch against itself
-        # and drop the higher key of every candidate pair (deterministic)
-        self_pairs = minhash_candidate_pairs(fresh, key_col, text_col)
-        losers = self_pairs.select(F.col("key_b").alias(key_col)).distinct()
-        fresh = fresh.join(losers, key_col, "left_anti")
+        fresh = _keep_cluster_minimum(
+            fresh, minhash_candidate_pairs(fresh, key_col, text_col), key_col
+        )
         # near-dup vs the (grown) index: signatures-fast-path band join
         pairs = minhash_pairs_against(
             None, fresh, key_col, text_col, index_signatures=idx_sigs
         )
         dup_keys = pairs.select(F.col("batch_key").alias(key_col)).distinct()
-        admitted = fresh.join(dup_keys, key_col, "left_anti")
-        admitted.write.mode("overwrite").parquet(target)
+        return fresh.join(dup_keys, key_col, "left_anti")
 
-    writer = batch_docs.writeStream.foreachBatch(admit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _committed_index_versions(
-    spark: SparkSession, out_dir: str, prefix: str = "_index_v="
-):
-    """(version, path) for every ``<prefix><id>`` snapshot carrying a
-    ``_SUCCESS`` marker — a snapshot without the marker is in flight or
-    crashed and is never read. Applied to versioned index snapshots (ST11's components index and ST12's
-    ANN bucket index share it via ``prefix``)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    versions = []
-    if fs.exists(hpath(out_dir)):
-        for st in fs.listStatus(hpath(out_dir)):
-            name = st.getPath().getName()
-            if name.startswith(prefix) and fs.exists(
-                hpath(st.getPath(), "_SUCCESS")
-            ):
-                versions.append((int(name.split("=", 1)[1]), st.getPath().toString()))
-    return sorted(versions)
+    return batch_step(out_dir, INGEST_PREFIX, admit)
 
 
 def stream_components_maintain(
@@ -245,65 +211,48 @@ def stream_components_maintain(
     stars + today's pairs, |index| + |batch| edge rows, never the
     historical edge list.
 
-    State is a VERSIONED SNAPSHOT per micro-batch (``_index_v=<id>``,
-    overwrite), not read-modify-write in place: batch i reads the
-    newest committed version with id < i (self-exclusion), so a
-    REPLAYED batch sees the identical prior index, recomputes the
-    identical labels (the incremental == full-recompute invariant the
-    `dedup_clusters_incremental` oracle proves), and overwrites its own
-    directory with identical bytes — the `stream_ingest_dedup`
-    exactly-once construction. foreachBatch batch ids are sequential,
-    so version order IS fold order. `stream_components_read` serves the
-    newest committed snapshot.
+    The fold is read-modify-write, so each batch publishes a full
+    SNAPSHOT under ``<out_dir>/_index_v=<id>`` through
+    `commit.batch_step`: batch i folds into the newest snapshot published
+    before it, so a REPLAYED batch recomputes the identical labels (the
+    incremental == full-recompute invariant the
+    `dedup_clusters_incremental` oracle proves) and rewrites identical
+    bytes. `stream_components_read` serves the newest snapshot.
 
     At 100 TB/day the snapshot is node-sized (one row per node ever
     seen in a pair), a sliver of the pair stream; a deployment that
     must bound snapshot history adds retention on old ``_index_v``
     dirs — the read only ever touches the newest."""
+    return _start(
+        stream_edges,
+        _components_step(out_dir, src, dst),
+        checkpoint_dir,
+        trigger_available_now,
+    )
+
+
+def _components_step(out_dir: str, src: str, dst: str):
     from openmrs_patient_migration_script_spark.operators.graph import (
         connected_components,
         connected_components_incremental,
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-        target = f"{out_dir}/_index_v={batch_id}"
-        if fs.exists(hpath(f"{target}/_SUCCESS")):
-            return  # replay: already durable and complete
-        prior = [
-            (v, p)
-            for v, p in _committed_index_versions(spark, out_dir)
-            if v < batch_id
-        ]
+    def fold(batch_df: DataFrame, prior: list[str]) -> DataFrame:
         edges = batch_df.select(src, dst)
-        if prior:
-            index = spark.read.parquet(prior[-1][1])
-            new_index = connected_components_incremental(
-                index, edges, src=src, dst=dst
-            )
-        else:
-            new_index = connected_components(edges, src=src, dst=dst)
-        new_index.write.mode("overwrite").parquet(target)
+        if not prior:
+            return connected_components(edges, src=src, dst=dst)
+        index = batch_df.sparkSession.read.parquet(prior[-1])
+        return connected_components_incremental(index, edges, src=src, dst=dst)
 
-    writer = stream_edges.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return batch_step(out_dir, COMPONENTS_PREFIX, fold)
 
 
 def stream_components_read(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The CURRENT maintained (node, cluster) index: the newest
-    committed ``_index_v`` snapshot (committed = ``_SUCCESS`` present —
-    an in-flight or crashed fold is invisible to readers)."""
-    versions = _committed_index_versions(spark, out_dir)
-    if not versions:
-        return spark.createDataFrame([], "node BIGINT, cluster BIGINT")
-    return spark.read.parquet(versions[-1][1])
+    """The CURRENT maintained (node, cluster) index: the newest published
+    ``_index_v`` snapshot."""
+    return read_newest(
+        spark, out_dir, COMPONENTS_PREFIX, "node BIGINT, cluster BIGINT"
+    )
 
 
 def stream_ann_buckets_maintain(
@@ -318,71 +267,49 @@ def stream_ann_buckets_maintain(
     trigger_available_now: bool = True,
 ):
     """ST12 (r11): streaming maintenance of the ANN SRP BUCKET INDEX —
-    the r10 verdict's ask: ST11's versioned-snapshot pattern applied to
     the bucket table the promoted ANN path (`dedup_embedding_lsh`,
-    `sim_knn_graph_ann`, `ann_topk_lsh`) joins against, so the index a
-    query-time candidate join reads stays current as embeddings stream
-    in, without ever re-hashing the historical corpus.
+    `sim_knn_graph_ann`, `ann_topk_lsh`) joins against stays current as
+    embeddings stream in, without ever re-hashing the historical corpus.
 
     The fold is APPEND-SHAPED: SRP planes are a pure function of
     (dim, planes, tables, hash_mode) (`srp_weights` is content-addressed
     by construction), so an already-indexed vector's buckets NEVER
-    change and each micro-batch contributes exactly its own
-    `srp_hashed` rows unioned onto the prior snapshot. Batch i reads
-    the newest committed ``_ann_v`` with id < i (self-exclusion), so a
-    replayed batch re-derives the identical union and overwrites its
-    own directory with identical bytes — the ST11/`stream_ingest_dedup`
-    exactly-once construction; `stream_ann_buckets_read` serves the
-    newest committed snapshot. Maintained == one-shot `srp_hashed` over
-    the full corpus (runtime parity test), the incremental == full
-    invariant.
-
-    At 100 TB the snapshot is L rows per indexed vector (key, _tbl,
-    _bkt ints) — a sliver of the embedding stream; retention on old
-    ``_ann_v`` dirs bounds history, the read only touches the newest.
+    change. Each micro-batch therefore publishes only its own
+    `srp_hashed` rows, as a delta under ``<out_dir>/_ann_v=<id>``
+    through `commit.batch_step`, and `stream_ann_buckets_read` serves the
+    union of the deltas. A batch writes its own rows, never the history,
+    and a replay rewrites identical bytes. Maintained == one-shot
+    `srp_hashed` over the full corpus, the incremental == full
+    invariant. The index is L rows per indexed vector (key, _tbl, _bkt
+    ints) — a sliver of the embedding stream.
     """
+    return _start(
+        stream_embeddings,
+        _ann_step(out_dir, id_col, vec_col, num_planes, num_tables, hash_mode),
+        checkpoint_dir,
+        trigger_available_now,
+    )
+
+
+def _ann_step(
+    out_dir: str,
+    id_col: str,
+    vec_col: str,
+    num_planes: int,
+    num_tables: int,
+    hash_mode: str,
+):
     from openmrs_patient_migration_script_spark.operators.similarity import (
         srp_hashed,
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-        target = f"{out_dir}/_ann_v={batch_id}"
-        if fs.exists(hpath(f"{target}/_SUCCESS")):
-            return  # replay: already durable and complete
-        prior = [
-            (v, p)
-            for v, p in _committed_index_versions(spark, out_dir, "_ann_v=")
-            if v < batch_id
-        ]
-        batch_rows = srp_hashed(
-            batch_df, id_col, num_planes, num_tables, vec_col, hash_mode
-        )
-        if prior:
-            index = spark.read.parquet(prior[-1][1])
-            new_index = index.unionByName(batch_rows)
-        else:
-            new_index = batch_rows
-        new_index.write.mode("overwrite").parquet(target)
+    def delta(batch_df: DataFrame, _prior: list[str]) -> DataFrame:
+        return srp_hashed(batch_df, id_col, num_planes, num_tables, vec_col, hash_mode)
 
-    writer = stream_embeddings.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return batch_step(out_dir, ANN_PREFIX, delta)
 
 
 def stream_ann_buckets_read(spark: SparkSession, out_dir: str) -> DataFrame:
     """The CURRENT maintained (key, _tbl, _bkt) ANN bucket index: the
-    newest committed ``_ann_v`` snapshot (committed = ``_SUCCESS``
-    present — an in-flight or crashed fold is invisible)."""
-    versions = _committed_index_versions(spark, out_dir, "_ann_v=")
-    if not versions:
-        return spark.createDataFrame(
-            [], "vec_id BIGINT, _tbl INT, _bkt INT"
-        )
-    return spark.read.parquet(versions[-1][1])
+    union of every published ``_ann_v`` delta."""
+    return read_union(spark, out_dir, ANN_PREFIX, "vec_id BIGINT, _tbl INT, _bkt INT")

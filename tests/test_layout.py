@@ -55,6 +55,26 @@ def test_compact_table_bin_packs_small_files(spark, tmp_path):
     assert all(b <= a for a, b in zip(counts, counts[1:])), counts
 
 
+def test_compact_table_recovers_a_crash_between_its_renames(spark, tmp_path):
+    """A crash after the old table was renamed aside and before the staged
+    copy was promoted leaves the table only at ``<path>__compact_old``. A
+    re-run must move it back and compact it, losing no row."""
+    import os
+
+    path = str(tmp_path / "crashed")
+    orders = load_table(spark, SF_SMOKE, "orders").select("o_orderkey")
+    orders.repartition(8).write.parquet(path)
+    orders.write.parquet(path + "__compact_tmp")
+    os.rename(path, path + "__compact_old")
+
+    before, after = compact_table(spark, path)
+    assert (before, after) == (8, 1)
+    assert sorted(r[0] for r in spark.read.parquet(path).collect()) == sorted(
+        r[0] for r in orders.collect()
+    )
+    assert not os.path.exists(path + "__compact_old")
+
+
 def test_compact_partitioned_table_preserves_layout(spark, tmp_path):
     path = str(tmp_path / "part_fragmented")
     orders = load_table(spark, SF_SMOKE, "orders").withColumn(

@@ -1,6 +1,5 @@
-"""Custom Python DataSource sources and sinks (sources/custom.py): the
-legacy-enrollment batch and streaming reader, and the manifest-committed
-destination sink."""
+"""Custom Python DataSource sources (sources/custom.py): the
+legacy-enrollment batch and streaming reader."""
 
 from __future__ import annotations
 
@@ -153,101 +152,3 @@ class TestCustomStreamingSource:
         assert n_first == 400
         assert out.count() == 400
         assert out.select("client_id").distinct().count() == 400
-
-
-class TestPythonDataSourceSink:
-    """The WRITE half of the Python DataSource surface
-    (sources/custom.py::DestinationSinkDataSource): staged task files +
-    manifest publish = two-phase commit in batch, batch-id-idempotent
-    manifests in streaming."""
-
-    SCHEMA = "client_id bigint, full_name string"
-
-    def _register(self, spark):
-        from openmrs_patient_migration_script_spark.sources.custom import (
-            DestinationSinkDataSource,
-        )
-
-        spark.dataSource.register(DestinationSinkDataSource)
-
-    def test_batch_write_publishes_exactly_the_input(self, spark, tmp_path):
-        from openmrs_patient_migration_script_spark.sources.custom import (
-            read_committed_sink,
-        )
-
-        self._register(spark)
-        dest = str(tmp_path / "dest")
-        df = spark.createDataFrame(
-            [(i, f"client-{i}") for i in range(100)], self.SCHEMA
-        ).repartition(4)
-        df.write.format("destination_sink").option("path", dest).mode(
-            "append"
-        ).save()
-        back = read_committed_sink(spark, dest, self.SCHEMA)
-        assert {tuple(r) for r in back.collect()} == {
-            (i, f"client-{i}") for i in range(100)
-        }
-
-    def test_staged_without_manifest_is_invisible(self, spark, tmp_path):
-        """The two-phase contract: a task file that was staged but never
-        committed (crash debris) must NOT surface to readers."""
-        import os
-
-        from openmrs_patient_migration_script_spark.sources.custom import (
-            read_committed_sink,
-        )
-
-        self._register(spark)
-        dest = str(tmp_path / "dest")
-        spark.createDataFrame([(1, "a")], self.SCHEMA).write.format(
-            "destination_sink"
-        ).option("path", dest).mode("append").save()
-        with open(os.path.join(dest, "_staged", "task-orphan.jsonl"), "w") as f:
-            f.write('{"client_id": 999, "full_name": "ghost"}\n')
-        back = read_committed_sink(spark, dest, self.SCHEMA)
-        assert [tuple(r) for r in back.collect()] == [(1, "a")]
-
-    def test_stream_write_and_replay_is_exactly_once(self, spark, tmp_path):
-        """availableNow stream into the sink, then re-run with the SAME
-        checkpoint: no new batches fire, and a simulated replay of an
-        already-committed batch id rewrites its manifest instead of
-        duplicating it — the committed row set is stable."""
-        import glob
-        import os
-
-        from openmrs_patient_migration_script_spark.sources.custom import (
-            LegacyEnrollmentDataSource,
-            read_committed_sink,
-        )
-
-        self._register(spark)
-        spark.dataSource.register(LegacyEnrollmentDataSource)
-        dest, ckpt = str(tmp_path / "dest"), str(tmp_path / "ckpt")
-        os.makedirs(dest, exist_ok=True)
-
-        def run_once():
-            q = (
-                spark.readStream.format("legacy_enrollment")
-                .option("rows", 120)
-                .option("numPartitions", 3)
-                .load()
-                .selectExpr("client_id", "full_name")
-                .writeStream.format("destination_sink")
-                .option("path", dest)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_once()
-        first = {tuple(r) for r in read_committed_sink(spark, dest, self.SCHEMA).collect()}
-        assert len(first) == 120
-        manifests_before = sorted(glob.glob(os.path.join(dest, "manifest-*.json")))
-
-        run_once()  # same checkpoint: everything already processed
-        second = {tuple(r) for r in read_committed_sink(spark, dest, self.SCHEMA).collect()}
-        assert second == first
-        assert sorted(glob.glob(os.path.join(dest, "manifest-*.json"))) == manifests_before
-
-

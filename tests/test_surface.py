@@ -45,10 +45,6 @@ ROOT_FILES = ["bench.py", "__spark_entry__.py"]
 ROOT_DIRS = ["perfbench", "tools", "examples"]
 
 KEEP = {
-    "sources.custom.DestinationSinkDataSource":
-        "per-task staged files and one manifest per commit; the migration commit reuses it",
-    "sources.custom.read_committed_sink":
-        "reads what DestinationSinkDataSource committed; the migration commit reuses it",
     "sources.jdbc.read_jdbc_partitioned":
         "the reference's MySQL read path, named by examples/migration_runbook.py",
     "sources.jdbc.write_jdbc_append":

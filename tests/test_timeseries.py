@@ -635,12 +635,10 @@ def test_chunked_fold_operators_cross_default_chunk_boundary(spark):
 
 
 def test_interpolate_segment_binding_survives_optimizer(spark):
-    """Plan pin (r11 ADVICE): interpolate_linear's per-segment length
-    binding must keep inline `size(sequence(` occurrences at <= 3 in the
-    optimized plan (one once-per-segment binding + the two-part
-    max_buckets guard — the r11 fix took the TWO per-bucket inline
-    occurrences out of the inner lambda: the pre-fix plan carries 4, see
-    plans/r11/ts_interpolate_{before,after}.txt)."""
+    """Plan pin: interpolate_linear's per-segment length binding must keep
+    inline `size(sequence(` occurrences at <= 3 in the optimized plan (one
+    once-per-segment binding + the two-part max_buckets guard). Inlining the
+    length twice in the inner per-bucket lambda instead gives 4."""
     from openmrs_patient_migration_script_spark.operators.timeseries import (
         interpolate_linear,
     )
